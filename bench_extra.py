@@ -12,6 +12,12 @@ Usage::
 Session setup mirrors bench.py byte-for-byte (same shuffle partitions, same
 split-abundance confs, same table warm pass) so numbers are comparable to the
 driver's record.
+
+``python bench_extra.py --py-task-cost`` instead prints the fixed cost of a
+Python task: the median seconds of an identity ``mapInArrow`` over nproc and
+4×nproc partitions on ``local[nproc]``. Run it from outside the repository
+(``python /path/to/bench_extra.py --py-task-cost``), or the workers import
+the checkout instead of the shipped package zip.
 """
 
 from __future__ import annotations
@@ -32,9 +38,44 @@ def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def py_task_cost(passes: int) -> dict[str, float]:
+    """Median seconds of an identity ``mapInArrow`` over nproc and 4×nproc
+    partitions of a few rows each: the per-Python-task fixed cost."""
+    import statistics
+
+    import tsrollup
+    from tsrollup.session import get_spark
+
+    nproc = len(os.sched_getaffinity(0))
+    spark = get_spark("tsrollup-py-task-cost", master=f"local[{nproc}]")
+    spark.sparkContext.setLogLevel("ERROR")
+
+    def identity(batches):
+        # names the tsrollup module, so unpickling this in a worker imports
+        # tsrollup (and installs its zip patch), as every tsrollup UDF does
+        _ = tsrollup.__name__
+        yield from batches
+
+    out = {}
+    for parts in (nproc, 4 * nproc):
+        df = spark.range(16 * parts, numPartitions=parts) \
+            .mapInArrow(identity, "id long")
+        _noop(df)  # starts the workers
+        samples = []
+        for _ in range(passes):
+            t0 = time.perf_counter()
+            _noop(df)
+            samples.append(time.perf_counter() - t0)
+        out[f"{parts}_partitions_s"] = round(statistics.median(samples), 4)
+    spark.stop()
+    return out
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("queries", nargs="+")
+    ap.add_argument("queries", nargs="*")
+    ap.add_argument("--py-task-cost", action="store_true",
+                    help="time an identity mapInArrow instead of queries")
     ap.add_argument("--passes", type=int, default=2)
     ap.add_argument("--explain", default=None,
                     help="directory to dump .explain('formatted') per query")
@@ -43,6 +84,11 @@ def main() -> int:
     ap.add_argument("--no-warm", action="store_true",
                     help="skip the table warm pass (untimed first pass still runs)")
     args = ap.parse_args()
+    if args.py_task_cost:
+        print(json.dumps({"py_task_cost": py_task_cost(max(args.passes, 5))}))
+        return 0
+    if not args.queries:
+        ap.error("name at least one query, or pass --py-task-cost")
 
     import __spark_entry__ as entrymod
     from tsrollup.session import get_spark

@@ -165,3 +165,18 @@ def test_bucket_range_shards_disjointly(spark, sequences_path, tmp_path):
     with _pytest.raises(ValueError, match="bucket_range"):
         run_checkpointed(spark, sequences_path, root, n_buckets=4,
                          bucket_range=(2, 5))
+
+
+def test_one_lineage_file_per_commit(spark, sequences_path, tmp_path):
+    """Each committing call appends its lineage rows as one file, however
+    many buckets it completed."""
+    import os
+
+    root = str(tmp_path / "lin")
+    for shard in ((0, 3), (3, 4)):
+        run_checkpointed(spark, sequences_path, root, n_buckets=4,
+                         bucket_range=shard)
+    files = [f for f in os.listdir(os.path.join(root, "_lineage"))
+             if f.endswith(".parquet")]
+    assert len(files) == 2
+    assert completed_buckets(spark, root) == {0, 1, 2, 3}

@@ -9,6 +9,7 @@ the rows of ONE clean rollup of the full input — bit-for-bit.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 
 import pytest
@@ -471,6 +472,97 @@ class TestReadRealtime:
         got = read_realtime(spark, inp, root, tiers=TIERS)
         want = rollup_sequences(spark.read.parquet(inp), tiers=TIERS)
         assert _rows(got) == _rows(want)
+
+
+class TestPackedRealtimeReads:
+    """Decode-on-read of a packed store prunes by tier, keeps every stored
+    row, and the metadata commits stay one file each."""
+
+    def _store(self, spark, tmp_path, corpus):
+        inp = str(tmp_path / "inp")
+        root = str(tmp_path / "store")
+        _write_first_n(spark, corpus, inp, 40)
+        refresh_incremental(spark, inp, root, epoch=0, tiers=TIERS,
+                            compressed=True)
+        _write_first_n(spark, corpus, inp, 60)
+        return inp, root
+
+    @staticmethod
+    def _store_scans(df) -> list[str]:
+        """PartitionFilters of every scan of the store in the plan."""
+        from tsrollup.planaudit import formatted_plan
+
+        return [re.search(r"PartitionFilters: (.*)", sec).group(1)
+                for sec in formatted_plan(df).split("\n\n")
+                if "Scan parquet" in sec and "store/data" in sec]
+
+    def test_routed_read_scans_only_the_routed_tier(self, spark, tmp_path,
+                                                   corpus):
+        from tsrollup import BASE_WINDOW as W
+        from tsrollup.checkpoint import read_realtime
+        from tsrollup.rollup import read_routed, route_tier
+
+        inp, root = self._store(spark, tmp_path, corpus)
+        view = read_realtime(spark, inp, root, tiers=TIERS)
+        clean = rollup_sequences(spark.read.parquet(inp), tiers=TIERS)
+        for lo, hi, pts in ((0, 8 * W, 8), (4 * W, 68 * W, 16)):
+            tier = route_tier(hi - lo, pts, tiers=TIERS)
+            got = read_routed(view, lo, hi, pts, tiers=TIERS)
+            scans = self._store_scans(got)
+            assert len(scans) == 1, scans
+            assert re.search(rf"tier#\d+ = {tier}\b", scans[0]), scans
+            want = read_routed(clean, lo, hi, pts, tiers=TIERS)
+            assert _rows(got) == _rows(want) != []
+        assert {route_tier(8 * W, 8, tiers=TIERS),
+                route_tier(64 * W, 16, tiers=TIERS)} == set(TIERS)
+
+    def test_stored_tier_outside_tiers_is_still_served(self, spark,
+                                                       tmp_path, corpus):
+        from tsrollup.checkpoint import read_realtime
+        from tsrollup.rollup import decompress_rollup
+
+        inp, root = self._store(spark, tmp_path, corpus)
+        got = read_realtime(spark, inp, root, tiers={"1m": 1})
+        stored_1h = decompress_rollup(read_incremental(spark, root)) \
+            .filter("tier = '1h'")
+        assert _rows(got.filter("tier = '1h'")) == _rows(stored_1h) != []
+        want = rollup_sequences(spark.read.parquet(inp), tiers={"1m": 1})
+        assert _rows(got.filter("tier = '1m'")) == _rows(want)
+
+    def test_uncommitted_first_watermark_append_reads_empty(self, spark,
+                                                            tmp_path,
+                                                            corpus):
+        """A killed first watermark append leaves ``_watermarks/`` holding
+        only ``_temporary/``: no committed epoch, so the view is the fresh
+        rollup and the refresh re-runs the epoch."""
+        from tsrollup.checkpoint import epoch_ranges, read_realtime
+
+        inp = str(tmp_path / "inp")
+        root = str(tmp_path / "store")
+        _write_first_n(spark, corpus, inp, 40)
+        refresh_incremental(spark, inp, root, epoch=0, tiers=TIERS,
+                            compressed=True)
+        wm_dir = os.path.join(root, "_watermarks")
+        shutil.rmtree(wm_dir)
+        os.makedirs(os.path.join(wm_dir, "_temporary", "0"))
+        assert read_watermarks(spark, root) == {}
+        assert epoch_ranges(spark, root) == {}
+        got = read_realtime(spark, inp, root, tiers=TIERS)
+        want = rollup_sequences(spark.read.parquet(inp), tiers=TIERS)
+        assert _rows(got) == _rows(want)
+        assert refresh_incremental(spark, inp, root, epoch=0, tiers=TIERS,
+                                   compressed=True) == 40
+        assert read_watermarks(spark, root) != {}
+
+    def test_one_watermark_file_per_refresh(self, spark, tmp_path, corpus):
+        inp = str(tmp_path / "inp")
+        root = str(tmp_path / "store")
+        for e, n in enumerate((20, 40, 60)):
+            _write_first_n(spark, corpus, inp, n)
+            refresh_incremental(spark, inp, root, epoch=e, tiers=TIERS)
+        files = [f for f in os.listdir(os.path.join(root, "_watermarks"))
+                 if f.endswith(".parquet")]
+        assert len(files) == 3
 
 
 class TestRepairEpochs:

@@ -16,6 +16,11 @@ semantics allow, Arrow-vectorized pandas UDFs (mapInPandas / applyInPandas) for 
 per-window NumPy math, zero per-row Python anywhere.
 """
 
+from . import _zipcache
+
+# every Python worker that unpickles a tsrollup function imports this package
+_zipcache.install()
+
 __version__ = "0.1.0"
 
 TIERS = ("1m", "1h", "1d")

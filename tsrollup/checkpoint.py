@@ -24,6 +24,7 @@ parquet ⇄ Iceberg boundary is one config flag):
 
 from __future__ import annotations
 
+import functools
 import time
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -41,6 +42,20 @@ LINEAGE_SCHEMA = (
     "bucket int, status string, n_docs long, n_points long, "
     "run_id string, wall_time_sec double, completed_at string"
 )
+
+
+def _rows_df(spark: SparkSession, rows: list[tuple], schema: str
+             ) -> DataFrame:
+    """A few driver-side metadata rows as a one-partition DataFrame, so an
+    append of them writes one file. Built from an Arrow table it is a local
+    relation: a Python list would become a parallelized Python RDD, one
+    Python task per core to write and all of them in series once
+    coalesced."""
+    import pyarrow as pa
+
+    names = [f.split(" ")[0] for f in schema.split(", ")]
+    return spark.createDataFrame(pa.table(list(zip(*rows)), names=names),
+                                 schema).coalesce(1)
 
 
 def _bucket_col(n_buckets: int):
@@ -165,7 +180,7 @@ def run_checkpointed(spark: SparkSession, input_path: str, output_root: str,
              int(stats[b]["n_docs"]) if b in stats else 0,
              int(stats[b]["n_points"]) if b in stats else 0,
              run_id, wall, now) for b in pending]
-    write_table(spark.createDataFrame(rows, LINEAGE_SCHEMA),
+    write_table(_rows_df(spark, rows, LINEAGE_SCHEMA),
                 f"{output_root}/_lineage", mode="append")
     return pending
 
@@ -198,7 +213,8 @@ def _watermark_state(spark: SparkSession, output_root: str
     driver-side collect: one row per (source, epoch) — |sources| is small
     by contract (the mixture/per_source_stats argument)."""
     try:
-        wm = read_table(spark, f"{output_root}/_watermarks")
+        wm = read_table(spark, f"{output_root}/_watermarks",
+                        schema=WATERMARK_SCHEMA)
     except Exception as e:  # noqa: BLE001
         from .io import is_missing_table_error
 
@@ -372,7 +388,7 @@ def refresh_incremental(spark: SparkSession, input_path: str,
     now = time.strftime("%Y-%m-%dT%H:%M:%S")
     rows = [(r["source"], int(r["max_seq"]), int(r["n_docs"]),
              int(epoch), run_id, now) for r in stats]
-    write_table(spark.createDataFrame(rows, WATERMARK_SCHEMA),
+    write_table(_rows_df(spark, rows, WATERMARK_SCHEMA),
                 f"{output_root}/_watermarks", mode="append")
     return int(sum(r["n_docs"] for r in stats))
 
@@ -424,6 +440,16 @@ def read_realtime(spark: SparkSession, input_path: str, output_root: str,
       transient tail is always computed plain — nothing packs rows that
       were never at rest.
 
+    Tier pruning holds on packed stores too. Spark cannot push a filter
+    through the decode map, so the store is decoded in one branch per tier
+    of ``tiers``, each scanning only its tier's rows and tagged with the
+    tier as a literal, plus one untagged branch for any other stored tier
+    (no stored row is ever dropped). A tier predicate on top of the view
+    (:func:`~tsrollup.rollup.read_routed`,
+    :func:`~tsrollup.rollup.read_range`) folds to false on the other
+    tagged branches, and Spark drops their scan and decode: a routed read
+    decodes only the routed tier.
+
     ``window``/``tiers``/``seq`` must match the store's refresh
     parameters — they define the rows the store already holds.
     """
@@ -440,7 +466,16 @@ def read_realtime(spark: SparkSession, input_path: str, output_root: str,
     if "n_windows" in stored.columns:  # codec-packed store
         from .rollup import decompress_rollup
 
-        stored = decompress_rollup(stored)
+        tier = F.col("tier")
+        parts = [decompress_rollup(stored.filter(tier == t))
+                 .withColumn("tier", F.lit(t)) for t in tiers]
+        # null-safe, so a NULL tier is kept; the same filter again after
+        # the map lets a tier equality above the view fold it to false
+        other = ~functools.reduce(Column.__or__,
+                                  [tier.eqNullSafe(t) for t in tiers],
+                                  F.lit(False))
+        parts.append(decompress_rollup(stored.filter(other)).filter(other))
+        stored = functools.reduce(DataFrame.unionByName, parts)
     return stored.select(*fresh.columns).unionByName(fresh)
 
 
@@ -454,7 +489,8 @@ def epoch_ranges(spark: SparkSession, output_root: str
     epoch's rows contributed no docs to it. Bounded driver-side state —
     one entry per (source, epoch), both small by contract."""
     try:
-        wm = read_table(spark, f"{output_root}/_watermarks")
+        wm = read_table(spark, f"{output_root}/_watermarks",
+                        schema=WATERMARK_SCHEMA)
     except Exception as e:  # noqa: BLE001
         from .io import is_missing_table_error
 

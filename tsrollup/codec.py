@@ -252,36 +252,69 @@ def dod_encode_many(arrays: list[np.ndarray]) -> list[bytes]:
             for g, n in enumerate(sizes)]
 
 
-def dod_decode_many(blobs: list[bytes]) -> list[np.ndarray]:
-    """dod_decode over many blobs, vectorized across them."""
-    if not blobs:
-        return []
-    sizes = np.array([int(np.frombuffer(b[:4], np.uint32)[0]) for b in blobs],
-                     dtype=np.intp)
-    if (sizes == 0).any():
-        return [dod_decode(b) for b in blobs]
-    buf = np.concatenate([np.frombuffer(b, np.uint8, offset=4) for b in blobs])
+def _concat_blobs(blobs: list[bytes]) -> tuple[np.ndarray, np.ndarray]:
+    """(data, offsets) of blobs laid back to back, the Arrow binary layout."""
+    offsets = np.zeros(len(blobs) + 1, dtype=np.int64)
+    np.cumsum([len(b) for b in blobs], out=offsets[1:])
+    return np.frombuffer(b"".join(blobs), np.uint8), offsets
+
+
+def _blob_counts(data: np.ndarray, offsets: np.ndarray) -> np.ndarray:
+    """Value count of every blob: the u32 header at each blob's start."""
+    hdr = data[offsets[:-1, None] + np.arange(4)]
+    return np.ascontiguousarray(hdr).view("<u4").reshape(-1).astype(np.intp)
+
+
+def _gather(data: np.ndarray, starts: np.ndarray,
+            lens: np.ndarray) -> np.ndarray:
+    """Concatenation of the byte ranges ``[starts[i], starts[i] + lens[i])``."""
+    total = int(lens.sum())
+    if total == 0:
+        return np.empty(0, np.uint8)
+    idx = np.repeat(starts - _group_starts(lens), lens) + np.arange(total)
+    return data[idx]
+
+
+def dod_decode_flat(data: np.ndarray, offsets: np.ndarray) -> np.ndarray:
+    """Every dod blob of an Arrow-style binary column (uint8 ``data``, int64
+    ``offsets``) decoded into one flat int64 array, in blob order."""
+    sizes = _blob_counts(data, offsets)
     total = int(sizes.sum())
-    starts = _group_starts(sizes)
-    # varint-unpack ALL values at once (blob payloads sit back to back)
-    term = (buf & 0x80) == 0
-    ends = np.flatnonzero(term)[:total]
-    vstarts = np.empty(total, dtype=np.intp)
-    vstarts[0] = 0
-    vstarts[1:] = ends[:-1] + 1
-    consumed = int(ends[-1]) + 1
-    b = buf[:consumed].astype(np.uint64)
-    byte_counts = np.diff(np.append(vstarts, consumed))
-    pos_in_val = np.arange(consumed) - np.repeat(vstarts, byte_counts)
-    contrib = (b & _U64(0x7F)) << (pos_in_val.astype(np.uint64) * _U64(7))
-    w = _unzigzag(np.bitwise_or.reduceat(contrib, vstarts))
+    if total == 0:
+        return np.empty(0, np.int64)
+    # the payloads minus the 4-byte headers: exactly ``total`` varints
+    lens = np.diff(offsets) - 4
+    buf = _gather(data, offsets[:-1] + 4, lens)
+    if not (buf & 0x80).any():  # every varint is one byte
+        w = _unzigzag(buf)
+    else:
+        ends = np.flatnonzero((buf & 0x80) == 0)
+        vstarts = np.empty(total, dtype=np.intp)
+        vstarts[0] = 0
+        vstarts[1:] = ends[:-1] + 1
+        pos = np.arange(buf.shape[0]) - np.repeat(vstarts, np.diff(
+            np.append(vstarts, buf.shape[0])))
+        contrib = ((buf & 0x7F).astype(np.uint64)
+                   << (pos.astype(np.uint64) * _U64(7)))
+        w = _unzigzag(np.bitwise_or.reduceat(contrib, vstarts))
     # segmented double-cumsum reconstruction: D[s+i]=Σ_{1..i} w, X=x0+Σ D
+    sizes = sizes[sizes > 0]
+    starts = _group_starts(sizes)
     w0 = w.copy()
     w0[starts] = 0
     D = _seg_cumsum_i64(w0, starts, sizes)
     X = _seg_cumsum_i64(D, starts, sizes)
     X += np.repeat(w[starts], sizes)
-    return [X[s:s + n].copy() for s, n in zip(starts, sizes)]
+    return X
+
+
+def dod_decode_many(blobs: list[bytes]) -> list[np.ndarray]:
+    """dod_decode over many blobs, vectorized across them."""
+    if not blobs:
+        return []
+    data, offsets = _concat_blobs(blobs)
+    flat = dod_decode_flat(data, offsets)
+    return np.split(flat, np.cumsum(_blob_counts(data, offsets))[:-1])
 
 
 def gorilla_encode_many(arrays: list[np.ndarray]) -> list[bytes]:
@@ -324,41 +357,42 @@ def gorilla_encode_many(arrays: list[np.ndarray]) -> list[bytes]:
     return out
 
 
-def gorilla_decode_many(blobs: list[bytes]) -> list[np.ndarray]:
-    """gorilla_decode over many blobs, vectorized across them."""
-    if not blobs:
-        return []
-    sizes = np.array([int(np.frombuffer(b[:4], np.uint32)[0]) for b in blobs],
-                     dtype=np.intp)
-    if (sizes == 0).any() or sizes.sum() == sizes.shape[0]:
-        return [gorilla_decode(b) for b in blobs]
-    starts = _group_starts(sizes)
-    firsts = np.concatenate([np.frombuffer(b, np.uint64, count=1, offset=4)
-                             for b in blobs])
-    ctrl = np.concatenate([
-        np.frombuffer(b, np.uint8, count=int(n) - 1, offset=12)
-        for b, n in zip(blobs, sizes)])
-    payload = np.concatenate([
-        np.frombuffer(b, np.uint8, offset=12 + int(n) - 1)
-        for b, n in zip(blobs, sizes)])
-    nz = (ctrl & 0x80) != 0
+def gorilla_decode_flat(data: np.ndarray, offsets: np.ndarray) -> np.ndarray:
+    """Every gorilla blob of an Arrow-style binary column (uint8 ``data``,
+    int64 ``offsets``) decoded into one flat float64 array, in blob order."""
+    sizes = _blob_counts(data, offsets)
+    nz = sizes > 0
+    sizes, heads, tails = sizes[nz], offsets[:-1][nz], offsets[1:][nz]
+    total = int(sizes.sum())
+    if total == 0:
+        return np.empty(0, np.float64)
+    firsts = np.ascontiguousarray(data[heads[:, None] + 4 + np.arange(8)])
+    nctrl = sizes - 1
+    ctrl = _gather(data, heads + 12, nctrl)
+    payload = _gather(data, heads + 12 + nctrl, tails - (heads + 12 + nctrl))
     tzb = ((ctrl >> 4) & 0x07).astype(np.intp)
-    m = np.where(nz, (ctrl & 0x0F).astype(np.intp) + 1, 0)
+    m = np.where((ctrl & 0x80) != 0, (ctrl & 0x0F).astype(np.intp) + 1, 0)
     bmat = np.zeros((ctrl.shape[0], 8), dtype=np.uint8)
     col = np.arange(8)[None, :]
     keep = (col >= tzb[:, None]) & (col < (tzb[:, None] + m[:, None]))
     bmat[keep] = payload[: keep.sum()]
-    xors = bmat.reshape(-1).view(np.uint64)
-    total = int(sizes.sum())
+    starts = _group_starts(sizes)
     u = np.empty(total, dtype=np.uint64)
-    u[starts] = firsts
     nonstart = np.ones(total, dtype=bool)
     nonstart[starts] = False
-    u[nonstart] = xors
+    u[nonstart] = bmat.reshape(-1).view(np.uint64)
+    u[starts] = firsts.view(np.uint64).reshape(-1)
     # segmented XOR scan: S[i] = G[i] ^ G[group_start-1]
     G = np.bitwise_xor.accumulate(u)
     off = np.zeros(sizes.shape[0], dtype=np.uint64)
     off[1:] = G[starts[1:] - 1]
-    S = G ^ np.repeat(off, sizes)
-    V = S.view(np.float64)
-    return [V[s:s + n].copy() for s, n in zip(starts, sizes)]
+    return (G ^ np.repeat(off, sizes)).view(np.float64)
+
+
+def gorilla_decode_many(blobs: list[bytes]) -> list[np.ndarray]:
+    """gorilla_decode over many blobs, vectorized across them."""
+    if not blobs:
+        return []
+    data, offsets = _concat_blobs(blobs)
+    flat = gorilla_decode_flat(data, offsets)
+    return np.split(flat, np.cumsum(_blob_counts(data, offsets))[:-1])

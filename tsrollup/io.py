@@ -67,16 +67,22 @@ def is_missing_table_error(e: Exception) -> bool:
 
 
 def read_table(spark: SparkSession, ident: str,
-               base_path: str | None = None) -> DataFrame:
+               base_path: str | None = None,
+               schema: str | None = None) -> DataFrame:
     """``ident`` is a path (parquet) or a catalog table name (iceberg).
     ``base_path`` (parquet only) keeps partition-directory columns when
-    reading a subtree of a partitioned layout."""
+    reading a subtree of a partitioned layout. ``schema`` (parquet only)
+    declares the columns instead of inferring them from the files: no
+    inference job, and a directory holding no committed file yet (only
+    ``_temporary/`` from a killed first write) reads as empty."""
     if table_format() == "iceberg":
         _require_iceberg(spark)
         return spark.read.format("iceberg").load(ident)
     r = spark.read
     if base_path is not None:
         r = r.option("basePath", base_path)
+    if schema is not None:
+        r = r.schema(schema)
     return r.parquet(ident)
 
 

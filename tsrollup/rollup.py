@@ -26,10 +26,7 @@ Skew: heavy ``source`` partitions are balanced by ``salted_repartition`` on
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -228,7 +225,7 @@ def rollup_compressed(df: DataFrame, window: int = BASE_WINDOW,
     has_mask = "gap_mask" in df.columns
     cols = ["doc_id", "tokens", "source"] + (["gap_mask"] if has_mask else [])
 
-    def run(batches) -> Iterator[pd.DataFrame]:
+    def run(batches):
         import pyarrow as pa
 
         for rb in batches:
@@ -277,36 +274,58 @@ def rollup_compressed(df: DataFrame, window: int = BASE_WINDOW,
     return df.select(*cols).mapInArrow(run, COMPRESSED_SCHEMA)
 
 
+def _binary_buffers(col) -> tuple[np.ndarray, np.ndarray]:
+    """(data bytes, int64 offsets) of an Arrow binary column — the blobs are
+    read in place, never materialized as one Python bytes object each."""
+    import pyarrow as pa
+
+    large = pa.types.is_large_binary(col.type)
+    _, offs, data = col.buffers()
+    offsets = np.frombuffer(offs, np.int64 if large else np.int32,
+                            count=len(col) + 1, offset=col.offset
+                            * (8 if large else 4)).astype(np.int64)
+    if data is None:
+        return np.empty(0, np.uint8), offsets
+    return np.frombuffer(data, np.uint8), offsets
+
+
 def decompress_rollup(df: DataFrame) -> DataFrame:
     """Unpack codec-packed tier rows back to the flat ROLLUP_SCHEMA; exact
-    inverse of rollup_compressed (codec round-trips are bit-exact)."""
-    from .codec import dod_decode_many, gorilla_decode_many
+    inverse of rollup_compressed (codec round-trips are bit-exact).
 
-    out_cols = [c.split(" ")[0] for c in ROLLUP_SCHEMA.split(", ")]
+    Executes as ``mapInArrow``: each packed column is decoded straight from
+    its Arrow offsets and data buffers into one flat array per batch, and
+    the per-row columns are repeated with one Arrow ``take``."""
+    from .codec import dod_decode_flat, gorilla_decode_flat
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
+    names = [c.split(" ")[0] for c in ROLLUP_SCHEMA.split(", ")]
+    packed = ("doc_id", "source", "tier", "n_windows") + _INT_FIELDS \
+        + _FLOAT_FIELDS + ("band_energy",)
+
+    def run(batches):
+        import pyarrow as pa
+
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            nws = pdf["n_windows"].values.astype(np.intp)
-            data: dict[str, object] = {
-                "doc_id": np.repeat(pdf["doc_id"].values, nws),
-                "source": np.repeat(pdf["source"].values, nws),
-                "tier": np.repeat(pdf["tier"].values, nws),
-            }
+            nws = rb.column("n_windows").to_numpy(zero_copy_only=False)
+            rows = pa.array(np.repeat(np.arange(rb.num_rows), nws))
+            arrs = [rb.column(c).take(rows) for c in ("doc_id", "source",
+                                                      "tier")]
             for f in _INT_FIELDS:
-                data[f] = np.concatenate(dod_decode_many(list(pdf[f].values)))
-            data["min"] = data["min"].astype(np.int32)
-            data["max"] = data["max"].astype(np.int32)
+                v = dod_decode_flat(*_binary_buffers(rb.column(f)))
+                arrs.append(pa.array(v.astype(np.int32) if f in ("min", "max")
+                                     else v))
             for f in _FLOAT_FIELDS:
-                data[f] = np.concatenate(
-                    gorilla_decode_many(list(pdf[f].values)))
-            be = np.concatenate(
-                gorilla_decode_many(list(pdf["band_energy"].values)))
-            data["band_energy"] = list(be.reshape(-1, N_BANDS))
-            yield pd.DataFrame(data)[out_cols]
+                arrs.append(pa.array(
+                    gorilla_decode_flat(*_binary_buffers(rb.column(f)))))
+            be = gorilla_decode_flat(*_binary_buffers(rb.column("band_energy")))
+            arrs.append(pa.ListArray.from_arrays(
+                pa.array(np.arange(0, be.shape[0] + 1, N_BANDS,
+                                   dtype=np.int32)), pa.array(be)))
+            yield pa.RecordBatch.from_arrays(arrs, names)
 
-    return df.mapInPandas(run, ROLLUP_SCHEMA)
+    return df.select(*packed).mapInArrow(run, ROLLUP_SCHEMA)
 
 
 def salted_repartition(df: DataFrame, buckets: int = 64,
@@ -589,7 +608,13 @@ def read_routed(rolled: DataFrame, start_pos: int, end_pos: int,
     and row groups for free (the zorder_layout/write_bucketed layouts
     compose here); windows are tagged by their START position, so a
     window straddling ``start_pos`` from before is excluded — the
-    half-open bucket convention the tiers are built on."""
+    half-open bucket convention the tiers are built on.
+
+    The pruning also holds on the real-time view of a codec-packed store:
+    :func:`~tsrollup.checkpoint.read_realtime` tags each tier's decode
+    branch with a literal tier, so the tier predicate drops every other
+    tier's scan and decode (the minute tier is never read for a day-tier
+    answer)."""
     if end_pos <= start_pos:
         raise ValueError("need end_pos > start_pos")
     t = route_tier(end_pos - start_pos, max_points, window, tiers)
