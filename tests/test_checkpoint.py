@@ -180,3 +180,27 @@ def test_one_lineage_file_per_commit(spark, sequences_path, tmp_path):
              if f.endswith(".parquet")]
     assert len(files) == 2
     assert completed_buckets(spark, root) == {0, 1, 2, 3}
+
+
+def test_read_lineage_ignores_killed_later_append(spark, sequences_path,
+                                                  tmp_path):
+    """Committed lineage files plus the ``_temporary/`` a killed LATER
+    append leaves behind read back exactly the committed rows: the
+    uncommitted task file is never counted."""
+    import os
+    import shutil
+
+    root = str(tmp_path / "killed")
+    run_checkpointed(spark, sequences_path, root, n_buckets=4,
+                     bucket_range=(0, 2))
+    committed = sorted(tuple(r) for r in read_lineage(spark, root).collect())
+    assert [r[0] for r in committed] == [0, 1]
+    lin = os.path.join(root, "_lineage")
+    attempt = os.path.join(lin, "_temporary", "0", "_temporary",
+                           "attempt_0")
+    os.makedirs(attempt)
+    part = next(f for f in os.listdir(lin) if f.endswith(".parquet"))
+    shutil.copy(os.path.join(lin, part), os.path.join(attempt, part))
+    got = sorted(tuple(r) for r in read_lineage(spark, root).collect())
+    assert got == committed
+    assert completed_buckets(spark, root) == {0, 1}

@@ -9,13 +9,22 @@ unit tests pin the MG merge rule itself (bounded size, survival guarantee).
 
 from __future__ import annotations
 
+import hashlib
 import random
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from tsrollup.sketches import _mg_partition, heavy_hitters
+from tsrollup.sketches import _mg_partition_hashed, heavy_hitters
+
+
+def _h(word):
+    """A stable int64 key per word, standing in for xxhash64 — most of
+    them are above 2**53, so the string re-encoding must be exact."""
+    return int.from_bytes(hashlib.md5(word.encode()).digest()[:8], "little",
+                          signed=True)
 
 
 def _exact(df, num, den):
@@ -27,9 +36,13 @@ def _exact(df, num, den):
 
 
 class TestMGPartition:
+    """The hashed sketch pass: int64 ``h`` batches in, summary keys back as
+    the hashes' exact decimal strings."""
+
     def _run(self, batches, k):
-        out = list(_mg_partition(k)(iter(
-            pd.DataFrame({"word": b}) for b in batches)))
+        out = list(_mg_partition_hashed(k)(iter(
+            pd.DataFrame({"h": np.array([_h(w) for w in b], dtype=np.int64)})
+            for b in batches)))
         assert len(out) == 1
         pdf = out[0]
         marker = pdf[pdf.word.isna()]
@@ -51,13 +64,14 @@ class TestMGPartition:
         random.shuffle(stream)
         summary, total = self._run(
             [stream[i:i + 100] for i in range(0, 1000, 100)], k=8)
-        assert "HH" in summary and total == 1000
+        assert str(_h("HH")) in summary and total == 1000
 
     def test_exact_when_under_capacity(self, spark):
         # fewer distinct keys than k: no decrement ever fires and the
         # summary holds EXACT counts
         summary, _ = self._run([["a", "b", "a"], ["a", "c"]], k=10)
-        assert summary == {"a": 3, "b": 1, "c": 1}
+        assert summary == {str(_h("a")): 3, str(_h("b")): 1,
+                           str(_h("c")): 1}
 
 
 class TestHeavyHitters:

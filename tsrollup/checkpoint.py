@@ -25,14 +25,18 @@ parquet ⇄ Iceberg boundary is one config flag):
 from __future__ import annotations
 
 import functools
+import os
+import shutil
 import time
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import BASE_WINDOW, TIER_FACTOR
-from .io import read_table, write_table
-from .rollup import rollup_compressed, rollup_sequences
+from .io import is_missing_table_error, read_table, table_format, write_table
+from .rollup import (apply_retention, decompress_rollup, is_packed,
+                     rollup_compressed, rollup_sequences)
 
 # wall_time_sec is the wall clock of the COMMITTING CALL (all its pending
 # buckets roll up in one single-scan job), recorded identically on each of
@@ -62,49 +66,53 @@ def _bucket_col(n_buckets: int):
     return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
 
 
-def read_lineage(spark: SparkSession, output_root: str) -> DataFrame:
-    """Empty lineage ONLY when the store genuinely doesn't exist yet (first
-    run). Any other read failure — permissions, storage blip, corrupt files —
-    re-raises: treating it as 'no lineage' would silently mark every bucket
-    pending, i.e. one full input rescan + rewrite of every partition plus
-    duplicate 'done' rows, with no signal that resume state was lost."""
-    from .io import is_missing_table_error, read_table
+def _rolled(df: DataFrame, window: int, tiers: dict[str, int],
+            packed: bool, n_buckets: int) -> DataFrame:
+    """``df`` rolled up in the store's mode (codec-packed or plain rows),
+    tagged with its hash bucket. The bucket is recomputed from doc_id after
+    the rollup (the map drops helper columns): one cheap hash per output
+    row, and the scan stays single-pass."""
+    rollup = rollup_compressed if packed else rollup_sequences
+    return rollup(df, window, tiers).withColumn("bucket",
+                                                _bucket_col(n_buckets))
 
+
+def _require_local_parquet(output_root: str, what: str, commit: str) -> None:
+    """``what`` walks or renames store directories, so it needs a
+    local-filesystem parquet store; object stores and Iceberg catalogs are
+    rejected up front rather than half-rewritten."""
+    if "://" in output_root or table_format() == "iceberg":
+        raise NotImplementedError(
+            f"{what} needs a local-filesystem parquet store; on object "
+            f"stores / Iceberg catalogs the equivalent is a {commit} "
+            "snapshot commit (not implemented)")
+
+
+def _read_log(spark: SparkSession, ident: str, schema: str) -> DataFrame:
+    """A metadata log (lineage, watermarks) read with its declared schema.
+
+    Empty ONLY when the log genuinely doesn't exist yet (first run) — or
+    holds no committed file yet: a killed first append leaves only
+    ``_temporary/``, which the declared schema reads as no rows. Any other
+    failure — permissions, storage blip, corrupt files (raised by the first
+    action) — propagates: treating it as 'no log' would silently mark every
+    bucket pending or every epoch uncommitted, i.e. one full input rescan
+    and rewrite with no signal that resume state was lost."""
     try:
-        return read_table(spark, f"{output_root}/_lineage")
-    except Exception as e:
-        msg = str(e)
-        # is_missing_table_error checks the structured error condition
-        # (getCondition/getErrorClass) before falling back to the message
+        return read_table(spark, ident, schema=schema)
+    except Exception as e:  # noqa: BLE001
         if is_missing_table_error(e):
-            return spark.createDataFrame([], LINEAGE_SCHEMA)
-        # UNABLE_TO_INFER_SCHEMA is ambiguous: a killed FIRST commit leaves
-        # _lineage holding only _temporary/ (genuinely "no lineage yet"),
-        # but the same error fires when committed lineage FILES were lost
-        # while data partitions survive — silently treating that as
-        # first-run would rescan the full input and duplicate 'done' rows.
-        # Distinguish via the filesystem: recover only if the dir holds no
-        # committed (non-underscore/dot) entries.
-        if "UNABLE_TO_INFER_SCHEMA" in msg and _is_uncommitted_dir(
-                spark, f"{output_root}/_lineage"):
-            return spark.createDataFrame([], LINEAGE_SCHEMA)
+            # from an empty RDD, not an empty list: a list becomes a Python
+            # RDD that runs one Python task per core on every read
+            return spark.createDataFrame(spark.sparkContext.emptyRDD(),
+                                         schema)
         raise
 
 
-def _is_uncommitted_dir(spark: SparkSession, ident: str) -> bool:
-    """True iff ``ident`` is missing or contains only temporary/hidden
-    entries (``_``/``.`` prefixes) — checked through the Hadoop FileSystem
-    API so any scheme Spark can read (file://, s3a://, …) works."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(ident)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        return True
-    for status in fs.listStatus(path):
-        name = status.getPath().getName()
-        if not name.startswith(("_", ".")):
-            return False
-    return True
+def read_lineage(spark: SparkSession, output_root: str) -> DataFrame:
+    """The lineage log, one row per completed bucket (see :func:`_read_log`
+    for when it reads empty and when it raises)."""
+    return _read_log(spark, f"{output_root}/_lineage", LINEAGE_SCHEMA)
 
 
 def completed_buckets(spark: SparkSession, output_root: str) -> set[int]:
@@ -139,8 +147,6 @@ def run_checkpointed(spark: SparkSession, input_path: str, output_root: str,
     unranged concurrent runs would duplicate work — same deterministic
     bytes, wasted scans).
     """
-    from .io import read_table, write_table
-
     done = completed_buckets(spark, output_root)
     pending = [b for b in range(n_buckets) if b not in done]
     if bucket_range is not None:
@@ -157,11 +163,7 @@ def run_checkpointed(spark: SparkSession, input_path: str, output_root: str,
     src = read_table(spark, input_path) \
         .withColumn("_bucket", _bucket_col(n_buckets))
     part = src.filter(F.col("_bucket").isin(pending)).drop("_bucket")
-    out = (rollup_compressed(part, window, tiers) if compressed
-           else rollup_sequences(part, window, tiers))
-    # bucket recomputed from doc_id post-rollup (the map drops helper cols);
-    # one cheap hash per output row, and the scan stays single-pass
-    out = out.withColumn("bucket", _bucket_col(n_buckets))
+    out = _rolled(part, window, tiers, compressed, n_buckets)
     write_table(out, f"{output_root}/data", mode="overwrite",
                 partition_by=("bucket", "tier"), dynamic_overwrite=True)
     wall = time.time() - t0
@@ -212,21 +214,20 @@ def _watermark_state(spark: SparkSession, output_root: str
     """(per-source high-water marks, committed epoch ids). Bounded
     driver-side collect: one row per (source, epoch) — |sources| is small
     by contract (the mixture/per_source_stats argument)."""
-    try:
-        wm = read_table(spark, f"{output_root}/_watermarks",
-                        schema=WATERMARK_SCHEMA)
-    except Exception as e:  # noqa: BLE001
-        from .io import is_missing_table_error
-
-        if is_missing_table_error(e):
-            return {}, set()
-        raise
-    rows = wm.select("source", "max_seq", "epoch").collect()
     marks: dict[str, int] = {}
-    for r in rows:
-        marks[r["source"]] = max(marks.get(r["source"], -1),
-                                 int(r["max_seq"]))
-    return marks, {int(r["epoch"]) for r in rows}
+    epochs: set[int] = set()
+    for src_name, max_seq, e in _watermark_rows(spark, output_root):
+        marks[src_name] = max(marks.get(src_name, -1), max_seq)
+        epochs.add(e)
+    return marks, epochs
+
+
+def _watermark_rows(spark: SparkSession, output_root: str
+                    ) -> list[tuple[str, int, int]]:
+    """(source, max_seq, epoch) of every watermark row, collected once."""
+    wm = _read_log(spark, f"{output_root}/_watermarks", WATERMARK_SCHEMA)
+    return [(r["source"], int(r["max_seq"]), int(r["epoch"]))
+            for r in wm.select("source", "max_seq", "epoch").collect()]
 
 
 def read_watermarks(spark: SparkSession, output_root: str) -> dict[str, int]:
@@ -363,25 +364,19 @@ def refresh_incremental(spark: SparkSession, input_path: str,
     try:
         existing = read_table(spark, f"{output_root}/data")
     except Exception as e:  # noqa: BLE001
-        from .io import is_missing_table_error
-
         if not is_missing_table_error(e):
             raise
         existing = None
     if existing is not None:
-        was_packed = "n_windows" in existing.columns
+        was_packed = is_packed(existing)
         if was_packed != compressed:
             raise ValueError(
                 f"store at {output_root} holds "
                 f"{'packed' if was_packed else 'plain'} epochs but this "
                 f"refresh asked for compressed={compressed} — one store, "
                 "one mode")
-    delta = src.filter(s > thr)
-    rolled = (rollup_compressed(delta, window, tiers) if compressed
-              else rollup_sequences(delta, window, tiers))
-    out = rolled \
-        .withColumn("bucket", _bucket_col(n_buckets)) \
-        .withColumn("epoch", F.lit(int(epoch)))
+    out = _rolled(src.filter(s > thr), window, tiers, compressed,
+                  n_buckets).withColumn("epoch", F.lit(int(epoch)))
     write_table(out, f"{output_root}/data", mode="overwrite",
                 partition_by=("epoch", "bucket", "tier"),
                 dynamic_overwrite=True)
@@ -463,9 +458,7 @@ def read_realtime(spark: SparkSession, input_path: str, output_root: str,
     stored = read_incremental(spark, output_root) \
         .filter(F.col("epoch").isin(*[int(e) for e in committed])) \
         .drop("epoch", "bucket")
-    if "n_windows" in stored.columns:  # codec-packed store
-        from .rollup import decompress_rollup
-
+    if is_packed(stored):
         tier = F.col("tier")
         parts = [decompress_rollup(stored.filter(tier == t))
                  .withColumn("tier", F.lit(t)) for t in tiers]
@@ -487,20 +480,12 @@ def epoch_ranges(spark: SparkSession, output_root: str
     strictly raises the source's max), so epoch e covers
     ``prev_max < seq <= max_seq(source, e)``. A source absent from an
     epoch's rows contributed no docs to it. Bounded driver-side state —
-    one entry per (source, epoch), both small by contract."""
-    try:
-        wm = read_table(spark, f"{output_root}/_watermarks",
-                        schema=WATERMARK_SCHEMA)
-    except Exception as e:  # noqa: BLE001
-        from .io import is_missing_table_error
-
-        if is_missing_table_error(e):
-            return {}
-        raise
+    one entry per (source, epoch), both small by contract. Every committed
+    epoch has at least one watermark row, so the keys are exactly the
+    committed epoch ids."""
     per_src: dict[str, list[tuple[int, int]]] = {}
-    for r in wm.select("source", "max_seq", "epoch").collect():
-        per_src.setdefault(r["source"], []).append(
-            (int(r["max_seq"]), int(r["epoch"])))
+    for src_name, max_seq, e in _watermark_rows(spark, output_root):
+        per_src.setdefault(src_name, []).append((max_seq, e))
     out: dict[int, dict[str, tuple[int, int]]] = {}
     for src_name, pairs in per_src.items():
         lo = -1
@@ -548,20 +533,15 @@ def repair_epochs(spark: SparkSession, input_path: str, output_root: str,
     provenance was folded; repair before compacting). Returns the number
     of docs in the repaired epochs after repair.
     """
-    import os
-    import shutil
-
-    from .io import table_format
-
-    if "://" in output_root or table_format() == "iceberg":
-        raise NotImplementedError(
-            "stale-partition pruning needs a local-filesystem parquet "
-            "store; on object stores / Iceberg catalogs the equivalent is "
-            "a REPLACE-partition snapshot commit (not implemented)")
+    _require_local_parquet(output_root, "stale-partition pruning",
+                           "REPLACE-partition")
     epochs = sorted({int(e) for e in epochs})
     if not epochs:
         raise ValueError("no epochs requested")
-    _, committed = _watermark_state(spark, output_root)
+    # one read of the watermark log serves both the committed-epoch check
+    # and the per-epoch ranges
+    ranges = epoch_ranges(spark, output_root)
+    committed = set(ranges)
     bad = [e for e in epochs if e not in committed]
     if bad:
         raise ValueError(
@@ -575,27 +555,22 @@ def repair_epochs(spark: SparkSession, input_path: str, output_root: str,
             f"store at {output_root} was compacted (physical epochs "
             f"{sorted(physical)} != committed {sorted(committed)}) — "
             "per-epoch provenance is folded; repair before compacting")
-    packed = "n_windows" in existing.columns
-    ranges = epoch_ranges(spark, output_root)
+    packed = is_packed(existing)
     s = seq if seq is not None else doc_seq()
     src = read_table(spark, input_path)
     assign = None
-    for e in epochs:
-        for src_name, (lo, hi) in sorted(ranges.get(e, {}).items()):
+    for e in epochs:  # each committed epoch has >= 1 range
+        for src_name, (lo, hi) in sorted(ranges[e].items()):
             cond = (F.col("source") == src_name) & (s > lo) & (s <= hi)
             assign = (F.when(cond, e) if assign is None
                       else assign.when(cond, e))
-    if assign is None:  # committed epochs always have >=1 watermark row
-        raise ValueError(f"no watermark ranges found for epochs {epochs}")
     docs = src.withColumn("_repair_epoch", assign).filter(
         F.col("_repair_epoch").isNotNull())
     parts = []
     for e in epochs:  # few epochs by contract — one bounded loop
         d = docs.filter(F.col("_repair_epoch") == e).drop("_repair_epoch")
-        rolled = (rollup_compressed(d, window, tiers) if packed
-                  else rollup_sequences(d, window, tiers))
-        parts.append(rolled.withColumn("bucket", _bucket_col(n_buckets))
-                           .withColumn("epoch", F.lit(e)))
+        parts.append(_rolled(d, window, tiers, packed, n_buckets)
+                     .withColumn("epoch", F.lit(e)))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -663,16 +638,8 @@ def compact_epochs(spark: SparkSession, output_root: str,
 
     Returns the number of rows in the compacted store.
     """
-    import os
-    import shutil
-
-    from .io import table_format
-
-    if "://" in output_root or table_format() == "iceberg":
-        raise NotImplementedError(
-            "directory-swap compaction needs a local-filesystem parquet "
-            "store; on object stores / Iceberg catalogs the equivalent is "
-            "a REPLACE TABLE snapshot commit (not implemented)")
+    _require_local_parquet(output_root, "directory-swap compaction",
+                           "REPLACE TABLE")
     data = f"{output_root}/data"
     tmp = f"{output_root}/data.compact"
     old = f"{output_root}/data.old"
@@ -731,9 +698,6 @@ def apply_retention_to_store(spark: SparkSession, output_root: str,
     and untouched tiers' files are never opened (partition pruning on the
     tier directory key — plan-guarded in tests/test_plans.py).
     """
-    from .io import read_table, write_table
-    from .rollup import apply_retention
-
     assert all(n >= 1 for n in keep_windows.values()), \
         "retention must keep ≥1 window (an emptied partition would not be " \
         "replaced by a dynamic overwrite)"
@@ -762,8 +726,6 @@ def apply_retention_to_store(spark: SparkSession, output_root: str,
 def read_rollup(spark: SparkSession, output_root: str) -> DataFrame:
     """Read back the full rolled-up dataset (all buckets, partition-pruned on
     bucket/tier predicates for free)."""
-    from .io import read_table
-
     return read_table(spark, f"{output_root}/data",
                       base_path=f"{output_root}/data").drop("bucket")
 

@@ -39,16 +39,6 @@ def _shingles_of(w: Column, n: int) -> Column:
         F.transform(idx, lambda i: F.array_join(F.slice(w, i + 1, n), " ")))
 
 
-def staged_shingles(df: DataFrame, n: int = 3,
-                    text_col: str = "text") -> DataFrame:
-    """(doc_id, _sh: array<string>) with the word split STAGED as a column
-    before the shingle transform — measured 4× over inlining the split into
-    the lambda (which re-splits the text per shingle element; the same
-    O(n)→O(n²) staging trap documented on znorm/softmax)."""
-    return (df.select("doc_id", F.split(F.col(text_col), " ").alias("_w"))
-            .select("doc_id", _shingles_of(F.col("_w"), n).alias("_sh")))
-
-
 def word_shingles(df: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
     """Exploded form (doc_id, shingle) — for the shared-shingle pair join.
 
@@ -184,7 +174,9 @@ def minhash_signatures(df: DataFrame, k: int = 8, n: int = 3,
     runs the whole hash chain in generated code (measured 1.4 s vs 2.2 s
     at sf1.0, bit-identical; feeds lsh_pairs and dedup_cluster too).
     explode_outer keeps the (doc_id, NULL…) row the HOF form emitted for
-    docs with fewer than ``n`` words (min over an empty group is NULL).
+    a doc whose text is NULL (split(NULL) is a NULL array). A doc shorter
+    than ``n`` words still emits one truncated shingle, because
+    ``_shingles_of`` clamps its bound at 0.
 
     md5 economy: one 128-bit digest yields TWO disjoint 60-bit hashes
     (hex slices [1..15] and [16..30]), so k signatures cost ⌈k/2⌉ md5
@@ -295,15 +287,13 @@ def near_dup_clusters(edges: DataFrame, nodes: DataFrame | None = None,
     starts at v, each round becomes min(label(v), min over neighbors'
     labels), converging in O(component diameter) rounds. Near-dup
     components are tiny, star-ish clusters (diameter ≲ 3 — a dup cluster IS
-    mutual similarity), so the round count stays small; for adversarial
-    long-path graphs use ``star_contract_components`` (same output
-    contract, O(log n) large-star/small-star alternations — Kiveris et
-    al., SoCC'14). Each round is
-    one join + one groupBy on the (small) label table; the edge list is
-    materialized ONCE up front (localCheckpoint) so the per-round lineage
-    stays flat and the upstream similarity pipeline (LSH banding, md5) is
-    never recomputed; labels are re-checkpointed each round for the same
-    reason. Convergence is detected by an aggregate over the propagation
+    mutual similarity), so the round count stays small; the pointer jump
+    in each round (label ← label[label]) cuts a long path to
+    O(log diameter) rounds. Each round is one join + one groupBy on the
+    (small) label table; the edge list is materialized ONCE up front
+    (localCheckpoint) so the per-round lineage stays flat and the upstream
+    similarity pipeline (LSH banding, md5) is never recomputed; labels are
+    re-checkpointed each round for the same reason. Convergence is detected by an aggregate over the propagation
     delta (one tiny action per round), not by comparing snapshots.
 
     ``reliable_checkpoints=True`` switches the per-round materialization
@@ -392,8 +382,8 @@ def near_dup_clusters(edges: DataFrame, nodes: DataFrame | None = None,
         else:
             raise RuntimeError(
                 f"near_dup_clusters did not converge in {max_iter} rounds — "
-                "component diameter exceeds the bound; raise max_iter or use "
-                "a star-contraction variant for this graph")
+                "component diameter exceeds the bound; raise max_iter for "
+                "this graph")
     finally:
         spark.conf.set(conf_key, str(sess_parts))
     out = labels.select(F.col("u").alias("doc_id"),
@@ -406,98 +396,6 @@ def near_dup_clusters(edges: DataFrame, nodes: DataFrame | None = None,
     # cluster size as a window count on the one cluster_rep exchange —
     # the earlier sizes-groupBy + join-back referenced `out` twice
     # (recomputing the nodes join per branch) and paid two more exchanges
-    from pyspark.sql import Window
-
-    return out.select(
-        "doc_id", "cluster_rep",
-        F.count("*").over(Window.partitionBy("cluster_rep"))
-        .cast("long").alias("cluster_sz"))
-
-
-def star_contract_components(edges: DataFrame, nodes: DataFrame | None = None,
-                             src: str = "doc_a", dst: str = "doc_b",
-                             max_iter: int = 60,
-                             reliable_checkpoints: bool = False) -> DataFrame:
-    """Connected components by LARGE-STAR / SMALL-STAR alternation
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the adversarial-graph twin of ``near_dup_clusters``: min-
-    label propagation needs O(component diameter) rounds, which is fine for
-    star-ish dup clusters but degenerates on long-path graphs; star
-    contraction converges in O(log n) alternations regardless of shape.
-    Same output contract as near_dup_clusters: (doc_id, cluster_rep,
-    cluster_sz), cluster_rep = component minimum, singletons via ``nodes``.
-
-    Per round (each a groupBy + a join on the shrinking edge list):
-      large-star(u): m = min(Γ(u) ∪ {u}); emit (v, m) for v ∈ Γ(u), v > u
-      small-star(u): over edges v ≤ u: m = min(N(u) ∪ {u});
-                     emit (v, m) for v ∈ N(u) ∪ {u}, v ≠ m
-    The fixpoint is a forest of depth-1 stars rooted at component minima.
-    Convergence = the canonical edge set stops changing (size + checksum,
-    one tiny action per round)."""
-    def _pin(df: DataFrame) -> DataFrame:
-        if reliable_checkpoints:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
-    e = _pin(edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-             .filter(F.col("u") != F.col("v")))
-
-    def _fingerprint(ed: DataFrame):
-        r = ed.agg(
-            F.count("*").alias("n"),
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h")
-        ).collect()[0]
-        return (r["n"], str(r["h"]))
-
-    def _large_star(ed: DataFrame) -> DataFrame:
-        sym = ed.union(ed.select(F.col("v").alias("u"),
-                                 F.col("u").alias("v")))
-        mins = (sym.groupBy("u").agg(F.min("v").alias("_mv"))
-                .select("u", F.least("u", "_mv").alias("_m")))
-        return (sym.join(mins, "u")
-                .filter(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("u"), F.col("_m").alias("v"))
-                .filter(F.col("u") != F.col("v"))
-                .distinct())
-
-    def _small_star(ed: DataFrame) -> DataFrame:
-        # direct every edge large→small, group at the large end
-        d = ed.select(F.greatest("u", "v").alias("u"),
-                      F.least("u", "v").alias("v"))
-        mins = d.groupBy("u").agg(F.min("v").alias("_m"))
-        relink = (d.join(mins, "u")
-                  .select(F.col("v").alias("u"), F.col("_m").alias("v")))
-        root = mins.select(F.col("u"), F.col("_m").alias("v"))
-        return (relink.union(root)
-                .filter(F.col("u") != F.col("v"))
-                .distinct())
-
-    fp = _fingerprint(e)
-    for _ in range(max_iter):
-        e = _pin(_small_star(_large_star(e)))
-        nfp = _fingerprint(e)
-        if nfp == fp:
-            break
-        fp = nfp
-    else:
-        raise RuntimeError(
-            f"star_contract_components did not converge in {max_iter} "
-            "alternations")
-    # fixpoint edges are (member, root) star links; roots self-label
-    labels = (e.select(F.col("u").alias("doc_id"),
-                       F.col("v").alias("cluster_rep"))
-              .union(e.select(F.col("v").alias("doc_id"),
-                              F.col("v").alias("cluster_rep")))
-              .groupBy("doc_id").agg(F.min("cluster_rep").alias("cluster_rep")))
-    out = labels
-    if nodes is not None:
-        out = (nodes.select("doc_id").join(labels, "doc_id", "left")
-               .select("doc_id",
-                       F.coalesce("cluster_rep", "doc_id")
-                       .alias("cluster_rep")))
-    # window count on one cluster_rep exchange (same rationale as the
-    # near_dup_clusters tail: the sizes-groupBy + join-back shape
-    # referenced `out` twice and paid two more exchanges)
     from pyspark.sql import Window
 
     return out.select(

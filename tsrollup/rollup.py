@@ -31,7 +31,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import BASE_WINDOW, N_BANDS, TIER_FACTOR
-from .kernels import derive_stats, gap_fill
+from .kernels import (batch_tier_chain, batch_window_partials, derive_stats,
+                      gap_fill)
 
 ROLLUP_SCHEMA = (
     "doc_id string, source string, tier string, window_start long, "
@@ -45,12 +46,6 @@ ROLLUP_SCHEMA = (
 _OUT_COLS = ("doc_id", "source", "tier", "window_start", "count", "sum",
              "sumsq", "min", "max", "mean", "var", "spec_energy", "spec_mass",
              "spec_centroid")
-
-
-def _new_acc() -> dict[str, list]:
-    acc: dict[str, list] = {c: [] for c in _OUT_COLS}
-    acc["band_energy"] = []
-    return acc
 
 
 def _arrow_list_views(col) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -115,6 +110,50 @@ def _acc_record_batch(acc: dict[str, list]):
     return pa.RecordBatch.from_arrays(arrs, list(_OUT_COLS) + ["band_energy"])
 
 
+def _map_docs(df: DataFrame, window: int, tiers: dict[str, int],
+              assemble, schema: str) -> DataFrame:
+    """The front end both rollup maps share: ``mapInArrow`` over the pruned
+    doc columns (doc_id, tokens, source[, gap_mask]) running, per Arrow
+    batch, gap-fill → base-window partials → tier chain over the batch's
+    non-empty docs. ``assemble(chain, doc_ids, sources)`` then builds the
+    map's own output RecordBatch (None: nothing to emit)."""
+    has_mask = "gap_mask" in df.columns
+    cols = ["doc_id", "tokens", "source"] + (["gap_mask"] if has_mask else [])
+
+    def run(batches):
+        for rb in batches:
+            filled, keep = _arrow_gap_filled_docs(rb, has_mask)
+            if not filled:
+                continue
+            base, nw = batch_window_partials(filled, window)
+            out = assemble(
+                batch_tier_chain(base, nw, tiers),
+                rb.column("doc_id").to_numpy(zero_copy_only=False)[keep],
+                rb.column("source").to_numpy(zero_copy_only=False)[keep])
+            if out is not None:
+                yield out
+
+    return df.select(*cols).mapInArrow(run, schema)
+
+
+def _assemble_points(chain, doc_ids, srcs):
+    """One flat ROLLUP_SCHEMA row per (doc, tier, window)."""
+    acc: dict[str, list] = {c: [] for c in _OUT_COLS + ("band_energy",)}
+    for tier, (p, tnw) in chain.items():
+        d = derive_stats(p)
+        total = int(tnw.sum())
+        acc["doc_id"].append(np.repeat(doc_ids, tnw))
+        acc["source"].append(np.repeat(srcs, tnw))
+        acc["tier"].append(np.repeat(tier, total))
+        for f in ("window_start", "count", "sum", "sumsq", "min",
+                  "max", "spec_energy", "spec_mass"):
+            acc[f].append(p[f])
+        for f in ("mean", "var", "spec_centroid"):
+            acc[f].append(d[f])
+        acc["band_energy"].append(p["band_energy"])
+    return _acc_record_batch(acc)
+
+
 def rollup_sequences(df: DataFrame, window: int = BASE_WINDOW,
                      tiers: dict[str, int] = TIER_FACTOR) -> DataFrame:
     """Zero-shuffle rollup of a doc-per-row sequences table.
@@ -128,39 +167,7 @@ def rollup_sequences(df: DataFrame, window: int = BASE_WINDOW,
     row. Measured 3.2× faster end-to-end than the mapInPandas form at equal
     pinned cores; values are bit-identical (same kernels, same floats).
     """
-    from .kernels import batch_tier_chain, batch_window_partials
-
-    has_mask = "gap_mask" in df.columns
-    cols = ["doc_id", "tokens", "source"] + (["gap_mask"] if has_mask else [])
-    pruned = df.select(*cols)
-
-    def run(batches):
-        for rb in batches:
-            filled, keep = _arrow_gap_filled_docs(rb, has_mask)
-            if not filled:
-                continue
-            base, nw = batch_window_partials(filled, window)
-            chain = batch_tier_chain(base, nw, tiers)
-            doc_ids = rb.column("doc_id").to_numpy(zero_copy_only=False)[keep]
-            srcs = rb.column("source").to_numpy(zero_copy_only=False)[keep]
-            acc = _new_acc()
-            for tier, (p, tnw) in chain.items():
-                d = derive_stats(p)
-                total = int(tnw.sum())
-                acc["doc_id"].append(np.repeat(doc_ids, tnw))
-                acc["source"].append(np.repeat(srcs, tnw))
-                acc["tier"].append(np.repeat(tier, total))
-                for f in ("window_start", "count", "sum", "sumsq", "min",
-                          "max", "spec_energy", "spec_mass"):
-                    acc[f].append(p[f])
-                for f in ("mean", "var", "spec_centroid"):
-                    acc[f].append(d[f])
-                acc["band_energy"].append(p["band_energy"])
-            out = _acc_record_batch(acc)
-            if out is not None:
-                yield out
-
-    return pruned.mapInArrow(run, ROLLUP_SCHEMA)
+    return _map_docs(df, window, tiers, _assemble_points, ROLLUP_SCHEMA)
 
 
 def rollup_grouped(df: DataFrame, window: int = BASE_WINDOW,
@@ -212,6 +219,52 @@ _INT_FIELDS = ("window_start", "count", "sum", "sumsq", "min", "max")
 _FLOAT_FIELDS = ("mean", "var", "spec_energy", "spec_mass", "spec_centroid")
 
 
+def is_packed(df: DataFrame) -> bool:
+    """True iff ``df`` holds codec-packed rows (:data:`COMPRESSED_SCHEMA`)
+    rather than flat rollup points."""
+    return "n_windows" in df.columns
+
+
+def _assemble_packed(chain, doc_ids, srcs):
+    """One COMPRESSED_SCHEMA row per (doc, tier), partials codec-packed."""
+    import pyarrow as pa
+
+    from .codec import dod_encode_many, gorilla_encode_many
+
+    meta: dict[str, list] = {"doc_id": [], "source": [], "tier": [],
+                             "n_windows": []}
+    blobs: dict[str, list[np.ndarray]] = {
+        f: [] for f in _INT_FIELDS + _FLOAT_FIELDS + ("band_energy",)}
+    for tier, (p, tnw) in chain.items():
+        d = derive_stats(p)
+        ends = np.cumsum(tnw)
+        starts = ends - tnw
+        meta["doc_id"].append(doc_ids)
+        meta["source"].append(srcs)
+        meta["tier"].append(np.repeat(tier, tnw.shape[0]))
+        meta["n_windows"].append(tnw.astype(np.int32))
+        for f in _INT_FIELDS:
+            arr = p[f].astype(np.int64)
+            blobs[f].extend(arr[s:e] for s, e in zip(starts, ends))
+        for f in _FLOAT_FIELDS:
+            arr = d[f] if f in d else p[f]
+            blobs[f].extend(arr[s:e] for s, e in zip(starts, ends))
+        flat_be = p["band_energy"].reshape(-1)
+        blobs["band_energy"].extend(
+            flat_be[s * N_BANDS:e * N_BANDS] for s, e in zip(starts, ends))
+    names = list(meta.keys())
+    arrs = [pa.array(np.concatenate(meta[k])) if k != "n_windows"
+            else pa.array(np.concatenate(meta[k]), type=pa.int32())
+            for k in names]
+    for f in _INT_FIELDS:
+        names.append(f)
+        arrs.append(pa.array(dod_encode_many(blobs[f]), type=pa.binary()))
+    for f in _FLOAT_FIELDS + ("band_energy",):
+        names.append(f)
+        arrs.append(pa.array(gorilla_encode_many(blobs[f]), type=pa.binary()))
+    return pa.RecordBatch.from_arrays(arrs, names)
+
+
 def rollup_compressed(df: DataFrame, window: int = BASE_WINDOW,
                       tiers: dict[str, int] = TIER_FACTOR) -> DataFrame:
     """Rollup with at-rest compression, still ZERO shuffle: one output row per
@@ -219,59 +272,7 @@ def rollup_compressed(df: DataFrame, window: int = BASE_WINDOW,
     int partials (window_start is monotone → ~1 byte/point), stream-split
     Gorilla XOR for the float aggregates (north_star compression requirement).
     """
-    from .codec import dod_encode_many, gorilla_encode_many
-    from .kernels import batch_tier_chain, batch_window_partials
-
-    has_mask = "gap_mask" in df.columns
-    cols = ["doc_id", "tokens", "source"] + (["gap_mask"] if has_mask else [])
-
-    def run(batches):
-        import pyarrow as pa
-
-        for rb in batches:
-            filled, keep = _arrow_gap_filled_docs(rb, has_mask)
-            if not filled:
-                continue
-            base, nw = batch_window_partials(filled, window)
-            chain = batch_tier_chain(base, nw, tiers)
-            doc_ids = rb.column("doc_id").to_numpy(zero_copy_only=False)[keep]
-            srcs = rb.column("source").to_numpy(zero_copy_only=False)[keep]
-            meta: dict[str, list] = {"doc_id": [], "source": [], "tier": [],
-                                     "n_windows": []}
-            blobs: dict[str, list[np.ndarray]] = {
-                f: [] for f in _INT_FIELDS + _FLOAT_FIELDS + ("band_energy",)}
-            for tier, (p, tnw) in chain.items():
-                d = derive_stats(p)
-                ends = np.cumsum(tnw)
-                starts = ends - tnw
-                meta["doc_id"].append(doc_ids)
-                meta["source"].append(srcs)
-                meta["tier"].append(np.repeat(tier, tnw.shape[0]))
-                meta["n_windows"].append(tnw.astype(np.int32))
-                for f in _INT_FIELDS:
-                    arr = p[f].astype(np.int64)
-                    blobs[f].extend(arr[s:e] for s, e in zip(starts, ends))
-                for f in _FLOAT_FIELDS:
-                    arr = d[f] if f in d else p[f]
-                    blobs[f].extend(arr[s:e] for s, e in zip(starts, ends))
-                flat_be = p["band_energy"].reshape(-1)
-                blobs["band_energy"].extend(
-                    flat_be[s * N_BANDS:e * N_BANDS] for s, e in zip(starts, ends))
-            names = list(meta.keys())
-            arrs = [pa.array(np.concatenate(meta[k])) if k != "n_windows"
-                    else pa.array(np.concatenate(meta[k]), type=pa.int32())
-                    for k in names]
-            for f in _INT_FIELDS:
-                names.append(f)
-                arrs.append(pa.array(dod_encode_many(blobs[f]),
-                                     type=pa.binary()))
-            for f in _FLOAT_FIELDS + ("band_energy",):
-                names.append(f)
-                arrs.append(pa.array(gorilla_encode_many(blobs[f]),
-                                     type=pa.binary()))
-            yield pa.RecordBatch.from_arrays(arrs, names)
-
-    return df.select(*cols).mapInArrow(run, COMPRESSED_SCHEMA)
+    return _map_docs(df, window, tiers, _assemble_packed, COMPRESSED_SCHEMA)
 
 
 def _binary_buffers(col) -> tuple[np.ndarray, np.ndarray]:
@@ -637,8 +638,6 @@ def apply_retention(rolled: DataFrame,
     DELETE on the (tier, window_start) metadata, so no data file outside the
     horizon is ever rewritten.
     """
-    from pyspark.sql import Window
-
     rk = F.row_number().over(
         Window.partitionBy("doc_id", "tier").orderBy(F.desc("window_start")))
     out = rolled.withColumn("_rk", rk)

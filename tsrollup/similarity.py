@@ -75,33 +75,6 @@ def cosine_topk_for_queries(df: DataFrame, queries: DataFrame, k: int = 5,
             .select("qid", "id", "cos_sim", "rank"))
 
 
-def srp_signature(df: DataFrame, n_planes: int = 8, dim: int = 32,
-                  id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Sign-random-projection signature: plane p's direction for component c is
-    ±1 from an md5-derived bit — deterministic, model-free, no stored model.
-    sig bit p = 1 iff Σ_c v[c]·dir(p,c) > 0.
-
-    Implemented as ONE matmul per Arrow batch in a vectorized pandas UDF: the
-    declarative alternative (n_planes folds over dim-literal arrays) builds an
-    expression tree that takes longer to codegen-compile than the job runs.
-    ``dim`` must equal the embedding dimension; vectors are truncated to
-    ``dim`` so a mismatch can't silently fold all rows into one bucket."""
-    from pyspark.sql.functions import pandas_udf
-
-    planes = np.array([[1.0 if _plane_dir(p, c) else -1.0
-                        for p in range(n_planes)]
-                       for c in range(dim)])  # (dim, n_planes)
-    weights = (1 << np.arange(n_planes)).astype(np.int64)
-
-    @pandas_udf("int")
-    def bucket(v: pd.Series) -> pd.Series:
-        x = np.stack([np.asarray(a[:dim], dtype=np.float64) for a in v])
-        return pd.Series(((x @ planes) > 0) @ weights)
-
-    return df.select(F.col(id_col).alias("id"),
-                     bucket(F.col(vec_col)).alias("srp_bucket"))
-
-
 def _plane_dir(p: int, c: int) -> bool:
     """Deterministic ±1 via md5 — stable across engines and runs."""
     import hashlib

@@ -211,11 +211,21 @@ def hll_estimate(regs: DataFrame, group_cols: list[str],
     return agg.select(*group_cols,
                       (F.lit(num) / s.cast("double")).alias("hll_est"),
                       "n_hit", s.alias("s_scaled"))
+
+
 def _mg_partition_hashed(k: int):
-    """:func:`_mg_partition` over a pre-hashed int64 ``h`` column — the
-    heavy_hitters sketch-pass fast path (see the call site for why the
-    summary re-encodes hashes as strings). Same per-batch Misra-Gries
-    merge rule, same (word NULL, cnt = rows) marker row."""
+    """Per-partition Misra-Gries summarizer for mapInPandas — the
+    heavy_hitters sketch pass: consumes batches of a single pre-hashed
+    int64 ``h`` column, keeps ≤ ``k`` counters, and emits the surviving
+    (word, cnt) rows — ``word`` the hash re-encoded as a string (see the
+    call site for why) — plus one marker row (word NULL, cnt = rows
+    processed) so the caller learns N without a second scan.
+
+    Batches merge via the mergeable-summaries rule: add the batch's exact
+    counts, then if more than ``k`` counters remain, subtract the
+    (k+1)-th largest value from all and drop the non-positive — the total
+    decrement stays ≤ N/(k+1), which is the survival guarantee.
+    """
     def run(batches: Iterator) -> Iterator:
         import numpy as np
         import pandas as pd
@@ -233,40 +243,6 @@ def _mg_partition_hashed(k: int):
                 m = int(np.partition(counts, -(k + 1))[-(k + 1)])
                 summary = {w: c - m for w, c in summary.items() if c > m}
         rows = [(str(w), c) for w, c in summary.items()]
-        rows.append((None, total))
-        yield pd.DataFrame(rows, columns=["word", "cnt"])
-
-    return run
-
-
-def _mg_partition(k: int):
-    """Per-partition Misra-Gries summarizer for mapInPandas: consumes
-    batches of a single ``word`` column, keeps ≤ ``k`` counters, and emits
-    the surviving (word, cnt) rows plus one marker row (word NULL,
-    cnt = rows processed) so the caller learns N without a second scan.
-
-    Batches merge via the mergeable-summaries rule: add the batch's exact
-    counts, then if more than ``k`` counters remain, subtract the
-    (k+1)-th largest value from all and drop the non-positive — the total
-    decrement stays ≤ N/(k+1), which is the survival guarantee.
-    """
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        summary: dict[str, int] = {}
-        total = 0
-        for pdf in batches:
-            vc = pdf["word"].value_counts()
-            total += int(vc.sum())
-            for w, c in vc.items():
-                summary[w] = summary.get(w, 0) + int(c)
-            if len(summary) > k:
-                counts = np.fromiter(summary.values(), dtype=np.int64,
-                                     count=len(summary))
-                m = int(np.partition(counts, -(k + 1))[-(k + 1)])
-                summary = {w: c - m for w, c in summary.items() if c > m}
-        rows = list(summary.items())
         rows.append((None, total))
         yield pd.DataFrame(rows, columns=["word", "cnt"])
 
@@ -373,6 +349,8 @@ def heavy_hitters(df: DataFrame, threshold_num: int = 1,
     return (exploded
             .withColumn("h", F.xxhash64("word"))
             .join(F.broadcast(cand_df), "h")
+            # keyed on the real string, never on h: collided words must
+            # recount separately
             .groupBy("word")
             .agg(F.count("*").cast("long").alias("n_occ"))
             .filter(F.col("n_occ") * den > F.lit(n_corpus) * num)
