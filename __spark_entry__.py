@@ -23,7 +23,7 @@ from collections.abc import Callable
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -54,7 +54,7 @@ def _fact(spark: SparkSession, sf_dir: str, table: str,
     fixtures arrive as one single-row-group file per table (row groups are
     the parquet split atom, so maxPartitionBytes can't subdivide them), and
     without the guard every pre-shuffle operator — shingle explode, md5,
-    conv position explode, pandas_udf matmuls — runs on ONE core of 32.
+    conv position explode, Arrow UDF matmuls — runs on ONE core of 32.
     At 100 TB the guard is a structural no-op (see io.scan_min_parallel).
     Dimension tables (nation/region/customer/...) stay unwrapped: they ride
     broadcast joins where an extra exchange is pure loss. The split-count
@@ -143,7 +143,7 @@ GROUP BY doc_id, (p // {span})
 # ------------------------------------------------------------ queries -------
 
 def q_rollup_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Base-tier tumbling rollup (engine mapInPandas path, zero shuffle).
+    """Base-tier tumbling rollup (engine mapInArrow path, zero shuffle).
     ≙ pooling window aggregates, reference models_keras.py:59-63."""
     from tsrollup.rollup import rollup_sequences
 
@@ -1155,7 +1155,7 @@ def q_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-hit tie-break) and pytest-pinned against an independent
     Fraction-arithmetic reference; the sequential cross-bucket dependence
     has no SQL analog, so this is rows-only by the documented
-    convention. Pure mapInPandas, zero shuffle."""
+    convention. Pure mapInArrow, zero shuffle."""
     from tsrollup.features import lttb
 
     return lttb(_tokenized(spark, sf_dir), n_out=32)
@@ -1170,7 +1170,7 @@ def q_matrix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters (TSFEDL/models_keras.py:59-63). Oracle projection m=4 over the
     first 64 tokens (same convention as the window=4 spectral oracle);
     realistic windows are pinned against the brute-force reference in
-    tests/test_features.py. Pure mapInPandas — zero shuffle, one int64
+    tests/test_features.py. Pure mapInArrow — zero shuffle, one int64
     Gram matmul per doc; the DuckDB oracle reproduces d² via per-delta
     sliding sums and the tie-break via an encoded (d²·128+j) arg-min."""
     from tsrollup.features import matrix_profile
@@ -1797,7 +1797,7 @@ def q_wfdb_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     events quantize to 12-bit ADC via DECIMAL arithmetic (floor(value×10),
     clamped — float ×10 would misquantize 3.1 to 30), per-user samples
     order JVM-side (sort_array ∘ collect_list, ONE exchange), pack212 →
-    unpack212 run as two chained Arrow-batched pandas UDFs (the binary blob
+    unpack212 run as two chained Arrow UDFs (the binary blob
     crosses a real operator boundary), and the decoded stream's aggregates
     (sum/min/max/first + position-weighted checksum, all int64-exact) must
     equal what DuckDB computes from the quantization directly — the
@@ -1805,8 +1805,9 @@ def q_wfdb_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     mismatches. Per-series state is one record's samples (MIT-BIH:
     650k samples = 1.3 MB packed), the same bound the streaming ring
     buffer documents; at 100 TB parallelism is per-series."""
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
+    from tsrollup.arrowbuf import binary_buffers, list_views
     from tsrollup.wfdb import pack212, unpack212
 
     ev = _fact(spark, sf_dir, "events")
@@ -1822,22 +1823,24 @@ def q_wfdb_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.transform("_s", lambda s: s["adc"]).alias("_adc"),
                       F.size("_s").cast("long").alias("n_samples")))
 
-    @pandas_udf("binary")
-    def _pack(arrs: pd.Series) -> pd.Series:
-        return arrs.map(
-            lambda a: pack212(np.asarray(a, dtype=np.int64)))
+    @arrow_udf("binary")
+    def _pack(arrs: pa.Array) -> pa.Array:
+        flat, offs, _ = list_views(arrs)
+        return pa.array([pack212(flat[offs[i]:offs[i + 1]])
+                         for i in range(len(arrs))], pa.binary())
 
-    @pandas_udf("struct<sum_adc:long,min_adc:long,max_adc:long,"
-                "first_adc:long,pos_checksum:long>")
-    def _unpack_stats(blobs: pd.Series, ns: pd.Series) -> pd.DataFrame:
-        rows = []
-        for blob, n in zip(blobs, ns):
-            a = unpack212(bytes(blob), int(n))
-            rows.append((int(a.sum()), int(a.min()), int(a.max()),
-                         int(a[0]),
-                         int((a * np.arange(1, a.size + 1)).sum())))
-        return pd.DataFrame(rows, columns=[
-            "sum_adc", "min_adc", "max_adc", "first_adc", "pos_checksum"])
+    @arrow_udf("struct<sum_adc:long,min_adc:long,max_adc:long,"
+               "first_adc:long,pos_checksum:long>")
+    def _unpack_stats(blobs: pa.Array, ns: pa.Array) -> pa.Array:
+        data, offs = binary_buffers(blobs)
+        st = np.empty((len(ns), 5), dtype=np.int64)
+        for i, n in enumerate(ns.to_pylist()):
+            a = unpack212(data[offs[i]:offs[i + 1]], n)
+            st[i] = (a.sum(), a.min(), a.max(), a[0],
+                     (a * np.arange(1, a.size + 1)).sum())
+        return pa.StructArray.from_arrays(
+            [pa.array(c) for c in st.T],
+            ["sum_adc", "min_adc", "max_adc", "first_adc", "pos_checksum"])
 
     packed = series.select("user_id", "n_samples",
                            _pack("_adc").alias("_blob"))
@@ -2507,7 +2510,7 @@ def q_per_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal decode + features: REAL payloads (PNG/PCM16-WAV/MPNG, pure
-    stdlib+NumPy codecs in tsrollup.media_codecs) decoded inside mapInPandas,
+    stdlib+NumPy codecs in tsrollup.media_codecs) decoded inside mapInArrow,
     then frame-sample / per-channel stats / strided thumbnail (rows-only
     check — binary decode has no SQL analog)."""
     from tsrollup.multimodal import MEDIA_SCHEMA, extract_features, generate_media

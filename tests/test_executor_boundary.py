@@ -1,0 +1,69 @@
+"""Guard: Arrow is the one batch format between Spark and the package's
+Python workers.
+
+Walks the AST of every ``tsrollup/*.py`` module and ``__spark_entry__.py``
+and fails on any reference to a pandas executor API (``mapInPandas``,
+``pandas_udf``, ``applyInPandas``). The stateful streaming operators are
+the one exception: PySpark 4.1 has no Arrow form of
+``applyInPandasWithState``, so its two calls in ``streaming.py`` stay, each
+with a one-line comment giving the reason on the line above.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+PANDAS_APIS = {"mapInPandas", "pandas_udf", "applyInPandas"}
+STATEFUL = "applyInPandasWithState"
+
+
+def _sources() -> list[Path]:
+    return sorted(ROOT.glob("tsrollup/*.py")) + [ROOT / "__spark_entry__.py"]
+
+
+def _refs(tree: ast.AST) -> list[tuple[str, int]]:
+    """(name, line) of every Name, Attribute and imported alias in ``tree``
+    — a call, a decorator or an import of an API all count. The line is the
+    one holding the name itself (the end of a dotted chain)."""
+    out = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            out.append((node.id, node.lineno))
+        elif isinstance(node, ast.Attribute):
+            out.append((node.attr, node.end_lineno))
+        elif isinstance(node, ast.alias):
+            out.append((node.name.rsplit(".", 1)[-1], node.lineno))
+    return out
+
+
+def test_guard_sees_every_form():
+    src = ("from pyspark.sql.functions import pandas_udf\n"
+           "@F.pandas_udf('long')\ndef f(s): return s\n"
+           "df.mapInPandas(f, 's long')\n"
+           "df.groupBy('k').applyInPandas(f, 's long')\n")
+    assert sorted({n for n, _ in _refs(ast.parse(src))} & PANDAS_APIS) \
+        == sorted(PANDAS_APIS)
+
+
+def test_no_pandas_executor_api():
+    bad = [f"{p.relative_to(ROOT)}:{line} {name}"
+           for p in _sources()
+           for name, line in _refs(ast.parse(p.read_text()))
+           if name in PANDAS_APIS]
+    assert not bad, bad
+
+
+def test_only_the_commented_stateful_calls_remain():
+    found = []
+    for p in _sources():
+        lines = p.read_text().splitlines()
+        for name, line in _refs(ast.parse(p.read_text())):
+            if name != STATEFUL:
+                continue
+            above = lines[line - 2].strip()
+            assert above.startswith("#") and "Arrow" in above, \
+                f"{p.name}:{line} needs a one-line reason comment above"
+            found.append(p.name)
+    assert found == ["streaming.py", "streaming.py"], found

@@ -12,17 +12,16 @@ from __future__ import annotations
 import hashlib
 import random
 
-import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from tsrollup.sketches import _mg_partition_hashed, heavy_hitters
+from tsrollup.sketches import _mg, heavy_hitters
 
 
 def _h(word):
     """A stable int64 key per word, standing in for xxhash64 — most of
-    them are above 2**53, so the string re-encoding must be exact."""
+    them are above 2**53, so the keys must cross the boundary as int64."""
     return int.from_bytes(hashlib.md5(word.encode()).digest()[:8], "little",
                           signed=True)
 
@@ -35,19 +34,24 @@ def _exact(df, num, den):
                   if r["count"] * den > n * num), n
 
 
+def _summary(out):
+    """(counters, total) of ``_mg``'s one output batch."""
+    assert len(out) == 1
+    rows = out[0].to_pylist()
+    totals = [r["cnt"] for r in rows if r["h"] is None]
+    assert len(totals) == 1
+    return {r["h"]: r["cnt"] for r in rows if r["h"] is not None}, totals[0]
+
+
 class TestMGPartition:
-    """The hashed sketch pass: int64 ``h`` batches in, summary keys back as
-    the hashes' exact decimal strings."""
+    """The per-partition pass: batches of int64 ``h`` keys in, the exact
+    int64 keys back as counters."""
 
     def _run(self, batches, k):
-        out = list(_mg_partition_hashed(k)(iter(
-            pd.DataFrame({"h": np.array([_h(w) for w in b], dtype=np.int64)})
-            for b in batches)))
-        assert len(out) == 1
-        pdf = out[0]
-        marker = pdf[pdf.word.isna()]
-        items = pdf[pdf.word.notna()]
-        return dict(zip(items.word, items.cnt)), int(marker.cnt.iloc[0])
+        return _summary(list(_mg(k)(iter(
+            pa.RecordBatch.from_arrays(
+                [pa.array([_h(w) for w in b], pa.int64())], ["h"])
+            for b in batches))))
 
     def test_bounded_size_and_total(self, spark):
         stream = [f"w{i % 50}" for i in range(1000)]
@@ -64,14 +68,13 @@ class TestMGPartition:
         random.shuffle(stream)
         summary, total = self._run(
             [stream[i:i + 100] for i in range(0, 1000, 100)], k=8)
-        assert str(_h("HH")) in summary and total == 1000
+        assert _h("HH") in summary and total == 1000
 
     def test_exact_when_under_capacity(self, spark):
         # fewer distinct keys than k: no decrement ever fires and the
         # summary holds EXACT counts
         summary, _ = self._run([["a", "b", "a"], ["a", "c"]], k=10)
-        assert summary == {str(_h("a")): 3, str(_h("b")): 1,
-                           str(_h("c")): 1}
+        assert summary == {_h("a"): 3, _h("b"): 1, _h("c"): 1}
 
 
 class TestHeavyHitters:
@@ -142,17 +145,18 @@ class TestHeavyHitters:
 
 class TestMGMerge:
     def test_weighted_merge_preserves_markers_and_heavies(self, spark):
-        from tsrollup.sketches import _mg_merge
-        # two partition summaries: markers 600 + 400; "HH" residual
+        # two partition summaries: totals 600 + 400; "HH" residual
         # 80+70 > (600+400)/(8+1) must survive the merged cut
-        p1 = pd.DataFrame({"word": ["HH", "x1", "x2", "x3", "x4", None],
-                           "cnt": [80, 9, 8, 7, 6, 600]})
-        p2 = pd.DataFrame({"word": ["HH", "y1", "y2", "y3", "y4", "y5",
-                                    "y6", "y7", "y8", None],
-                           "cnt": [70, 5, 5, 5, 5, 5, 5, 5, 5, 400]})
-        out = list(_mg_merge(8)(iter([p1, p2])))[0]
-        marker = out[out.word.isna()]
-        items = dict(zip(out[out.word.notna()].word,
-                         out[out.word.notna()].cnt))
-        assert int(marker.cnt.iloc[0]) == 1000
-        assert len(items) <= 8 and "HH" in items
+        def part(words, cnts):
+            return pa.RecordBatch.from_arrays(
+                [pa.array([None if w is None else _h(w) for w in words],
+                          pa.int64()), pa.array(cnts, pa.int64())],
+                ["h", "cnt"])
+
+        p1 = part(["HH", "x1", "x2", "x3", "x4", None],
+                  [80, 9, 8, 7, 6, 600])
+        p2 = part(["HH", "y1", "y2", "y3", "y4", "y5", "y6", "y7", "y8",
+                   None], [70, 5, 5, 5, 5, 5, 5, 5, 5, 400])
+        items, total = _summary(list(_mg(8)(iter([p1, p2]))))
+        assert total == 1000
+        assert len(items) <= 8 and _h("HH") in items

@@ -47,7 +47,7 @@ def test_mpng_roundtrip():
 
 def test_feature_schema_and_shapes(spark, media_df):
     """Full REAL path: generate_media payloads are genuine PNG/WAV/MPNG bytes
-    decoded by decode_media inside the mapInPandas UDF."""
+    decoded by decode_media inside the mapInArrow map."""
     from tsrollup.multimodal import THUMB, extract_features
 
     out = extract_features(media_df).toPandas()

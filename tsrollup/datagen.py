@@ -24,6 +24,8 @@ import os
 import numpy as np
 import pyarrow as pa
 
+from .arrowbuf import rows_df
+
 VOCAB = 50257  # GPT-2-ish vocab bound for clipping
 SOURCES = ("web", "books", "code", "wiki", "news", "forums", "papers", "legal")
 
@@ -142,11 +144,11 @@ def write_sequences_spark(spark, path: str, seed: int = 42, n_docs: int = 200,
         b += 1
 
     def gen(batches):
-        for pdf in batches:
-            for s, n in zip(pdf["seed"], pdf["n"]):
-                yield generate_batch(int(s), int(n), **kw).to_pandas()
+        for rb in batches:
+            for r in rb.to_pylist():
+                yield from generate_batch(r["seed"], r["n"], **kw).to_batches()
 
-    (spark.createDataFrame(plan, "seed int, n int")
+    (rows_df(spark, plan, "seed int, n int")
      .repartition(len(plan))
-     .mapInPandas(gen, SEQUENCES_DDL)
+     .mapInArrow(gen, SEQUENCES_DDL)
      .write.mode("overwrite").parquet(path))

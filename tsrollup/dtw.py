@@ -22,7 +22,7 @@ Scale shape — the three-scan UCR-style exact prune, never all-pairs:
 
 1. **LB scan** (full corpus, one pass): per doc × query, the LB_Keogh
    lower bound from the query's precomputed band envelope — vectorized
-   NumPy inside ``mapInPandas``, slim (qid, doc_id, lb) rows out, tokens
+   NumPy inside ``mapInArrow``, slim (qid, doc_id, lb) rows out, tokens
    never duplicated across queries.
 2. **seed fetch**: the k best-by-LB candidates per query (window rank over
    the slim LB rows) are broadcast-joined back to the corpus for their
@@ -58,9 +58,11 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .arrowbuf import fixed_rows
 
 _INF = np.int64(1) << 60
 
@@ -174,27 +176,25 @@ def dtw_knn(df: DataFrame, queries: DataFrame, k: int = 5, r: int = 8,
                .filter(F.size("toks") >= length) \
                .localCheckpoint(eager=False)
 
-    def lb_scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            docs = pdf["doc_id"].to_numpy()
-            mats = np.stack([np.asarray(t[:length], dtype=np.int64)
-                             for t in pdf["toks"].to_numpy()])  # (P, L)
+    def lb_scan(batches: Iterator[pa.RecordBatch]
+                ) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            nd = rb.num_rows
+            mats = fixed_rows(rb.column("toks"), length, np.int64)  # (P, L)
             # (Q, P, L) envelope excess — vectorized over docs AND queries
             over = np.maximum(mats[None, :, :] - U[:, None, :], 0)
             under = np.maximum(Lo[:, None, :] - mats[None, :, :], 0)
             lb = (over * over + under * under).sum(axis=2)  # (Q, P)
-            yield pd.DataFrame({
-                "qi": np.repeat(np.arange(nq), len(docs)).astype(np.int32),
-                "doc_id": np.tile(docs, nq),
-                "lb": lb.reshape(-1).astype(np.int64),
-            })
+            yield pa.RecordBatch.from_arrays([
+                pa.array(np.repeat(np.arange(nq, dtype=np.int32), nd)),
+                rb.column("doc_id").take(pa.array(np.tile(np.arange(nd), nq))),
+                pa.array(lb.reshape(-1).astype(np.int64)),
+            ], ["qi", "doc_id", "lb"])
 
     # same rationale: the LB table feeds the seed window, the survivor
     # filter and the final ranking — pin so the NumPy envelope scan runs
     # once per invocation, not once per referencing job
-    lb_df = corpus.mapInPandas(lb_scan, "qi int, doc_id string, lb long") \
+    lb_df = corpus.mapInArrow(lb_scan, "qi int, doc_id string, lb long") \
                   .localCheckpoint(eager=False)
 
     def exact(cand_ids: DataFrame) -> DataFrame:
@@ -202,19 +202,17 @@ def dtw_knn(df: DataFrame, queries: DataFrame, k: int = 5, r: int = 8,
         ids back to the corpus for tokens, one vectorized DP batch."""
         fetched = corpus.join(F.broadcast(cand_ids), "doc_id")
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                qi = pdf["qi"].to_numpy()
-                cand = np.stack([np.asarray(t[:length], dtype=np.int64)
-                                 for t in pdf["toks"].to_numpy()])
+        def run(batches: Iterator[pa.RecordBatch]
+                ) -> Iterator[pa.RecordBatch]:
+            for rb in batches:
+                qi = rb.column("qi").to_numpy()
+                cand = fixed_rows(rb.column("toks"), length, np.int64)
                 d2 = _dtw_batch(qvecs[qi], cand, r)
-                yield pd.DataFrame({"qi": qi.astype(np.int32),
-                                    "doc_id": pdf["doc_id"].to_numpy(),
-                                    "dtw_d2": d2})
+                yield pa.RecordBatch.from_arrays(
+                    [rb.column("qi"), rb.column("doc_id"), pa.array(d2)],
+                    ["qi", "doc_id", "dtw_d2"])
 
-        return fetched.mapInPandas(run, "qi int, doc_id string, dtw_d2 long")
+        return fetched.mapInArrow(run, "qi int, doc_id string, dtw_d2 long")
 
     by_lb = Window.partitionBy("qi").orderBy("lb", "doc_id")
     seeds = lb_df.withColumn("n", F.row_number().over(by_lb)) \
@@ -259,21 +257,17 @@ def dtw_knn_brute(df: DataFrame, queries: DataFrame, k: int = 5, r: int = 8,
                        F.col(tokens_col).alias("toks")) \
                .filter(F.size("toks") >= length)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            docs = pdf["doc_id"].to_numpy()
-            cand = np.stack([np.asarray(t[:length], dtype=np.int64)
-                             for t in pdf["toks"].to_numpy()])
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            cand = fixed_rows(rb.column("toks"), length, np.int64)
             for qi in range(nq):
                 q = np.broadcast_to(qvecs[qi], cand.shape).copy()
-                yield pd.DataFrame({
-                    "qi": np.full(len(docs), qi, dtype=np.int32),
-                    "doc_id": docs,
-                    "dtw_d2": _dtw_batch(q, cand, r)})
+                yield pa.RecordBatch.from_arrays([
+                    pa.array(np.full(rb.num_rows, qi, dtype=np.int32)),
+                    rb.column("doc_id"), pa.array(_dtw_batch(q, cand, r))],
+                    ["qi", "doc_id", "dtw_d2"])
 
-    d = corpus.mapInPandas(run, "qi int, doc_id string, dtw_d2 long")
+    d = corpus.mapInArrow(run, "qi int, doc_id string, dtw_d2 long")
     by_d = Window.partitionBy("qi").orderBy("dtw_d2", "doc_id")
     qid_entries: list = []
     for i in range(nq):

@@ -41,9 +41,11 @@ from __future__ import annotations
 from collections.abc import Iterator, Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .arrowbuf import row_slices
 
 #: default SAX breakpoints in token-value space (word-length tokens cluster
 #: around 3-8; three integer breakpoints give a 4-letter alphabet a..d)
@@ -271,6 +273,30 @@ def source_drift_tv(df: DataFrame, group_col: str = "source",
 
 # ------------------------------------------------------------- LTTB ---------
 
+def _map_series(df: DataFrame, tokens_col: str, per_doc,
+                schema: str) -> DataFrame:
+    """``mapInArrow`` over (doc_id, tokens): ``per_doc(y)`` maps each
+    non-empty doc's int64 series to its output columns after doc_id, as
+    equal-length arrays (None: no rows), and doc_id is repeated onto them
+    with one Arrow ``take``."""
+    names = [c.split(" ")[0] for c in schema.split(", ")]
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            outs = [(i, per_doc(y)) for i, y in
+                    zip(*row_slices(rb.column(tokens_col), np.int64))]
+            outs = [(i, o) for i, o in outs if o is not None]
+            if not outs:
+                continue
+            rows = np.concatenate([np.full(len(o[0]), i) for i, o in outs])
+            yield pa.RecordBatch.from_arrays(
+                [rb.column("doc_id").take(pa.array(rows))]
+                + [pa.array(np.concatenate(c))
+                   for c in zip(*(o for _, o in outs))], names)
+
+    return df.select("doc_id", tokens_col).mapInArrow(run, schema)
+
+
 def lttb_indices(y: np.ndarray, n_out: int) -> np.ndarray:
     """Largest-Triangle-Three-Buckets selection (Steinarsson 2013) over one
     integer series, made fully DETERMINISTIC: position index is x, the
@@ -326,7 +352,7 @@ def lttb(df: DataFrame, n_out: int = 32,
     (M4 keeps extremes per pixel; LTTB keeps the max-triangle-area shape).
 
     Scale shape: the series is already one row (the engine's data model),
-    so this is a pure ``mapInPandas`` — zero shuffle, embarrassingly
+    so this is a pure ``mapInArrow`` — zero shuffle, embarrassingly
     parallel per doc. Inside a batch the bucket math is vectorized NumPy
     per doc (the doc loop is per-SERIES, not per-element — the same grain
     as the rollup kernels). Selection is integer-exact (see
@@ -339,35 +365,14 @@ def lttb(df: DataFrame, n_out: int = 32,
     """
     if n_out < 3:
         raise ValueError("n_out must be >= 3")
-    pruned = df.select("doc_id", tokens_col)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids, ks, poss, vals = [], [], [], []
-            for doc_id, toks in zip(pdf["doc_id"].to_numpy(),
-                                    pdf[tokens_col].to_numpy()):
-                if toks is None:  # NULL array: nothing to select
-                    continue
-                y = np.asarray(toks, dtype=np.int64)
-                if not len(y):
-                    continue
-                idx = lttb_indices(y, n_out)
-                ids.append(np.repeat(doc_id, len(idx)))
-                ks.append(np.arange(len(idx), dtype=np.int32))
-                poss.append(idx.astype(np.int32))
-                vals.append(y[idx].astype(np.int32))
-            if not ids:
-                continue
-            yield pd.DataFrame({
-                "doc_id": np.concatenate(ids),
-                "k": np.concatenate(ks),
-                "pos": np.concatenate(poss),
-                "val": np.concatenate(vals)})
+    def select(y):
+        idx = lttb_indices(y, n_out)
+        return (np.arange(len(idx), dtype=np.int32), idx.astype(np.int32),
+                y[idx].astype(np.int32))
 
-    return pruned.mapInPandas(
-        run, "doc_id string, k int, pos int, val int")
+    return _map_series(df, tokens_col, select,
+                       "doc_id string, k int, pos int, val int")
 
 
 def matrix_profile_ref(y: np.ndarray, m: int,
@@ -418,7 +423,7 @@ def matrix_profile(df: DataFrame, m: int = 16, max_positions: int = 256,
     convention as the window=4 spectral oracle; realistic window sizes are
     pinned against :func:`matrix_profile_ref` in pytest.
 
-    Scale shape: a doc is one row, so this is a pure ``mapInPandas`` — zero
+    Scale shape: a doc is one row, so this is a pure ``mapInArrow`` — zero
     shuffle, embarrassingly parallel, constant row amplification (≤ w rows
     out per doc). Inside a batch each doc is one vectorized NumPy pass: the
     w×w distance matrix comes from ONE int64 Gram matmul via
@@ -440,56 +445,37 @@ def matrix_profile(df: DataFrame, m: int = 16, max_positions: int = 256,
     if excl < 1:
         raise ValueError("excl must be >= 1 (0 would match a window to "
                          "itself at distance 0 everywhere)")
-    pruned = df.select("doc_id", tokens_col)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def profile(y):
         from numpy.lib.stride_tricks import sliding_window_view
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids, poss, d2s, js = [], [], [], []
-            for doc_id, toks in zip(pdf["doc_id"].to_numpy(),
-                                    pdf[tokens_col].to_numpy()):
-                if toks is None:
-                    continue
-                y = np.asarray(toks[:max_positions], dtype=np.int64)
-                nw = len(y) - m + 1
-                if nw <= excl:  # no window has a non-trivial neighbor
-                    continue
-                w = sliding_window_view(y, m)  # (nw, m) view, zero-copy
-                g = w @ w.T  # int64 Gram — exact
-                ss = np.diagonal(g)
-                d = ss[:, None] + ss[None, :] - 2 * g
-                # mask the trivial-match band |i-j| < excl with a sentinel
-                # above any real d² (max token ~few hundred ⇒ d² ≪ 2^62)
-                i_idx = np.arange(nw)
-                band = np.abs(i_idx[:, None] - i_idx[None, :]) < excl
-                d[band] = np.int64(2) ** 62
-                j = d.argmin(axis=1)  # first hit == smallest j on ties
-                best = d[i_idx, j]
-                # a window can still lack ANY valid neighbor when the band
-                # covers its whole row (nw <= 2*excl puts interior windows
-                # inside every exclusion zone) — drop sentinel rows, the
-                # exact complement of the SQL oracle's inner join
-                ok = best < np.int64(2) ** 62
-                if not ok.any():
-                    continue
-                nk = int(ok.sum())
-                ids.append(np.repeat(doc_id, nk))
-                poss.append(i_idx[ok].astype(np.int32))
-                d2s.append(best[ok])
-                js.append(j[ok].astype(np.int32))
-            if not ids:
-                continue
-            yield pd.DataFrame({
-                "doc_id": np.concatenate(ids),
-                "pos": np.concatenate(poss),
-                "mp_d2": np.concatenate(d2s),
-                "mp_j": np.concatenate(js)})
+        y = y[:max_positions]
+        nw = len(y) - m + 1
+        if nw <= excl:  # no window has a non-trivial neighbor
+            return None
+        w = sliding_window_view(y, m)  # (nw, m) view, zero-copy
+        g = w @ w.T  # int64 Gram — exact
+        ss = np.diagonal(g)
+        d = ss[:, None] + ss[None, :] - 2 * g
+        # mask the trivial-match band |i-j| < excl with a sentinel
+        # above any real d² (max token ~few hundred ⇒ d² ≪ 2^62)
+        i_idx = np.arange(nw)
+        band = np.abs(i_idx[:, None] - i_idx[None, :]) < excl
+        d[band] = np.int64(2) ** 62
+        j = d.argmin(axis=1)  # first hit == smallest j on ties
+        best = d[i_idx, j]
+        # a window can still lack ANY valid neighbor when the band
+        # covers its whole row (nw <= 2*excl puts interior windows
+        # inside every exclusion zone) — drop sentinel rows, the
+        # exact complement of the SQL oracle's inner join
+        ok = best < np.int64(2) ** 62
+        if not ok.any():
+            return None
+        return (i_idx[ok].astype(np.int32), best[ok],
+                j[ok].astype(np.int32))
 
-    return pruned.mapInPandas(
-        run, "doc_id string, pos int, mp_d2 long, mp_j int")
+    return _map_series(df, tokens_col, profile,
+                       "doc_id string, pos int, mp_d2 long, mp_j int")
 
 
 def ks_drift(df: DataFrame, group_col: str = "source",

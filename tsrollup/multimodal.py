@@ -2,8 +2,8 @@
 
 A 100 TB training-data pipeline carries media as ``binary`` payload columns
 with a typed metadata struct; decode/feature-extract/resize/frame-sample run
-as Arrow-batched pandas UDFs over ``mapInPandas`` so payload bytes never cross
-a per-row Python boundary one row at a time.
+inside one ``mapInArrow`` batch at a time, so payload bytes never cross a
+per-row Python boundary.
 
 ``decode_media`` is a REAL decoder for the formats stdlib can express:
 PNG (zlib inflate + full five-filter unfiltering), PCM16 WAV, and MPNG
@@ -27,9 +27,12 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (BinaryType, IntegerType, StringType,
                                StructField, StructType)
+
+from .arrowbuf import arrow_schema, rows_batch
 
 MEDIA_SCHEMA = StructType([
     StructField("media_id", StringType()),
@@ -103,13 +106,14 @@ def extract_features(df: DataFrame, frame_stride: int = 2,
                      decoder=decode_media) -> DataFrame:
     """decode → (frame-sample for video) → per-channel mean/std → strided
     thumbnail, one Arrow batch at a time. The shuffle-free scale path: media
-    rows are independent, so this is a pure mapInPandas over the scan."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    rows are independent, so this is a pure mapInArrow over the scan."""
+    out_schema = arrow_schema(FEATURE_SCHEMA)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
             rows = []
-            for i in range(len(pdf)):
-                meta = pdf["meta"].values[i]
-                payload = pdf["payload"].values[i]
+            for r in rb.to_pylist():
+                payload, meta = r["payload"], r["meta"]
                 arr = decoder(payload, meta)
                 n_sampled = 0
                 if meta["fmt"] in ("video", "mpng"):
@@ -123,18 +127,13 @@ def extract_features(df: DataFrame, frame_stride: int = 2,
                 std = flat.std(axis=0)
                 thumb = (_resize_strided(arr).astype(np.float64).ravel()
                          if arr.ndim == 3 else np.zeros(0))
-                rows.append({
-                    "media_id": pdf["media_id"].values[i],
-                    "kind": pdf["kind"].values[i],
-                    "n_bytes": len(payload),
-                    "mean": mean, "std": std, "thumb": thumb,
-                    "n_frames_sampled": n_sampled,
-                })
+                rows.append((r["media_id"], r["kind"], len(payload), mean,
+                             std, thumb, n_sampled))
             if rows:
-                yield pd.DataFrame(rows)
+                yield rows_batch(rows, out_schema)
 
     return df.select("media_id", "kind", "payload", "meta") \
-             .mapInPandas(run, FEATURE_SCHEMA)
+             .mapInArrow(run, FEATURE_SCHEMA)
 
 
 def generate_media(seed: int, n: int, real: bool = True) -> pd.DataFrame:

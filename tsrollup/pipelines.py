@@ -40,6 +40,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 
+from .arrowbuf import row_slices
+
 PIPELINE_SCHEMA = ("doc_id string, f_mean double, f_var double, f_min double, "
                    "f_max double, f_last double, f_len int")
 
@@ -283,50 +285,11 @@ def run_pipeline(x: np.ndarray, pipeline: str) -> np.ndarray:
 def pipeline_features(df: DataFrame, pipeline: str = "ohshulih",
                       tokens_col: str = "tokens") -> DataFrame:
     """Per-doc global stats of the pipeline's output sequence (the engine twin
-    of the reference model's feature vector). mapInArrow with zero-copy
-    list-buffer slicing (same pattern as rollup_sequences) + batched scans;
-    per-doc stats keep np.mean/np.var float semantics so the output
-    bit-matches run_pipeline."""
-    from .rollup import _arrow_list_views
-
-    spec = ARCH_SPECS[pipeline]
-
-    def run(batches):
-        import pyarrow as pa
-
-        for rb in batches:
-            flat, offs, valid = _arrow_list_views(rb.column(tokens_col))
-            flat = flat.astype(np.float64, copy=False)
-            doc_ids = rb.column("doc_id").to_numpy(zero_copy_only=False)
-            xs: list[np.ndarray] = []
-            ids: list[str] = []
-            for i in range(rb.num_rows):
-                if not valid[i] or offs[i + 1] == offs[i]:
-                    continue
-                xs.append(flat[offs[i]:offs[i + 1]])
-                ids.append(doc_ids[i])
-            if not xs:
-                continue
-            hs = _run_spec(xs, spec, xs)
-            keep = [i for i, h in enumerate(hs) if h.shape[0]]
-            n = len(keep)
-            if not n:
-                continue
-            stats = np.empty((n, 5))
-            lens = np.empty(n, dtype=np.int32)
-            for j, i in enumerate(keep):
-                h = hs[i]
-                stats[j] = (h.mean(), h.var(), h.min(), h.max(), h[-1])
-                lens[j] = h.shape[0]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.asarray([ids[i] for i in keep], dtype=object)),
-                 pa.array(stats[:, 0]), pa.array(stats[:, 1]),
-                 pa.array(stats[:, 2]), pa.array(stats[:, 3]),
-                 pa.array(stats[:, 4]), pa.array(lens, type=pa.int32())],
-                ["doc_id", "f_mean", "f_var", "f_min", "f_max", "f_last",
-                 "f_len"])
-
-    return df.select("doc_id", tokens_col).mapInArrow(run, PIPELINE_SCHEMA)
+    of the reference model's feature vector): the one-architecture case of
+    :func:`pipeline_features_multi`, whose per-doc stats keep
+    np.mean/np.var float semantics so the output bit-matches
+    run_pipeline."""
+    return pipeline_features_multi(df, (pipeline,), tokens_col).drop("arch")
 
 
 def pipeline_features_multi(df: DataFrame, pipelines: tuple[str, ...] = PIPELINES,
@@ -336,10 +299,8 @@ def pipeline_features_multi(df: DataFrame, pipelines: tuple[str, ...] = PIPELINE
     over the same in-memory sequences, emitting an ``arch`` column — one
     corpus scan for the whole zoo instead of one scan per architecture
     (25 scans ≈ 25 full corpus reads at 100 TB). Per-(doc, arch) values are
-    bit-identical to ``pipeline_features(df, arch)`` since both run the same
-    interpreter on the same float64 views."""
-    from .rollup import _arrow_list_views
-
+    the same whether an architecture runs alone or with the zoo: every spec
+    is interpreted on the same float64 views."""
     archs = sorted(pipelines)
     specs = {a: ARCH_SPECS[a] for a in archs}
 
@@ -347,35 +308,26 @@ def pipeline_features_multi(df: DataFrame, pipelines: tuple[str, ...] = PIPELINE
         import pyarrow as pa
 
         for rb in batches:
-            flat, offs, valid = _arrow_list_views(rb.column(tokens_col))
-            flat = flat.astype(np.float64, copy=False)
-            doc_ids = rb.column("doc_id").to_numpy(zero_copy_only=False)
-            xs: list[np.ndarray] = []
-            ids: list[str] = []
-            for i in range(rb.num_rows):
-                if not valid[i] or offs[i + 1] == offs[i]:
-                    continue
-                xs.append(flat[offs[i]:offs[i + 1]])
-                ids.append(doc_ids[i])
+            rows, xs = row_slices(rb.column(tokens_col), np.float64)
             if not xs:
                 continue
-            out_ids, out_arch = [], []
+            out_rows, out_arch = [], []
             stats_rows, len_rows = [], []
             for arch in archs:
                 hs = _run_spec(list(xs), specs[arch], xs)
                 for i, h in enumerate(hs):
                     if not h.shape[0]:
                         continue
-                    out_ids.append(ids[i])
+                    out_rows.append(rows[i])
                     out_arch.append(arch)
                     stats_rows.append((h.mean(), h.var(), h.min(), h.max(),
                                        h[-1]))
                     len_rows.append(h.shape[0])
-            if not out_ids:
+            if not out_rows:
                 continue
             stats = np.asarray(stats_rows)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(np.asarray(out_ids, dtype=object)),
+                [rb.column("doc_id").take(pa.array(out_rows)),
                  pa.array(np.asarray(out_arch, dtype=object)),
                  pa.array(stats[:, 0]), pa.array(stats[:, 1]),
                  pa.array(stats[:, 2]), pa.array(stats[:, 3]),

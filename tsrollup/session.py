@@ -1,8 +1,9 @@
 """SparkSession factory with the engine's tuned defaults.
 
-AQE on (runtime coalesce + skew handling), Arrow exchange on for the pandas
-UDF paths, shuffle partitions sized for the local harness. On a real cluster
-the same builder is used from spark-submit; only master/partitions change.
+AQE on (runtime coalesce + skew handling), Arrow for the driver's pandas
+conversions and 2048-row executor batches, shuffle partitions sized for the
+local harness. On a real cluster the same builder is used from spark-submit;
+only master/partitions change.
 """
 
 from __future__ import annotations

@@ -15,9 +15,12 @@ hyperplanes are md5-derived (deterministic, no stored model).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
+
+from .arrowbuf import fixed_rows, rows_array, rows_df
 
 
 def _as_double(col) -> Column:
@@ -36,6 +39,13 @@ def _norm(a) -> Column:
 
 def cosine(a, b) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def _unit_rows(x: np.ndarray) -> np.ndarray:
+    """Rows of ``x`` scaled to unit L2 norm; an all-zero row stays zero."""
+    nrm = np.sqrt(np.einsum("ij,ij->i", x, x))
+    nrm[nrm == 0.0] = 1.0
+    return x / nrm[:, None]
 
 
 def cosine_topk_pairs(df: DataFrame, k: int = 10,
@@ -171,23 +181,19 @@ def _srp_candidates(df: DataFrame, n_planes: int | None, dim: int,
     if n_planes is None:
         n_planes = _derive_n_planes(df, n_hint, target_bucket)
 
-    from pyspark.sql.functions import pandas_udf
-
     total = bands * n_planes
     planes = np.array([[1.0 if _plane_dir(p, c) else -1.0
                         for p in range(total)]
                        for c in range(dim)])
     weights = (1 << np.arange(n_planes)).astype(np.int64)
 
-    @pandas_udf("struct<vn: array<double>, bks: array<long>>")
-    def vn_buckets(v: pd.Series) -> pd.DataFrame:
-        x = np.stack([np.asarray(a[:dim], dtype=np.float64) for a in v])
+    @arrow_udf("struct<vn: array<double>, bks: array<long>>")
+    def vn_buckets(v: pa.Array) -> pa.Array:
+        x = fixed_rows(v, dim, np.float64)
         bits = (x @ planes) > 0
-        bk = bits.reshape(len(v), bands, n_planes) @ weights
-        nrm = np.sqrt(np.einsum("ij,ij->i", x, x))
-        nrm[nrm == 0.0] = 1.0
-        vn = x / nrm[:, None]
-        return pd.DataFrame({"vn": list(vn), "bks": list(bk)})
+        bk = bits.reshape(len(x), bands, n_planes) @ weights
+        return pa.StructArray.from_arrays(
+            [rows_array(_unit_rows(x)), rows_array(bk)], ["vn", "bks"])
 
     e = (df.select(F.col(id_col).alias("id"),
                    vn_buckets(F.col(vec_col)).alias("_s"))
@@ -305,8 +311,8 @@ def save_ivf_centroids(spark, centroids: np.ndarray, ident: str) -> None:
 
     rows = [(int(i), [float(x) for x in c])
             for i, c in enumerate(np.asarray(centroids, dtype=np.float64))]
-    df = spark.createDataFrame(rows, "cell int, centroid array<double>")
-    write_table(df.coalesce(1), ident, mode="overwrite")
+    write_table(rows_df(spark, rows, "cell int, centroid array<double>"),
+                ident, mode="overwrite")
 
 
 def load_ivf_centroids(spark, ident: str) -> np.ndarray | None:
@@ -366,22 +372,18 @@ def ivf_topk_for_queries(df: DataFrame, queries: DataFrame, k: int = 5,
     volume per query is ~nprobe/n_centroids of the corpus, so n_centroids
     scales with corpus size exactly like the LSH plane count."""
     from pyspark.sql import Window
-    from pyspark.sql.functions import pandas_udf
 
     if centroids is None:
         centroids = train_ivf_centroids(df, n_centroids, dim, n_hint=n_hint,
                                         id_col=id_col, vec_col=vec_col)
     cent = np.asarray(centroids, dtype=np.float64)
 
-    @pandas_udf("struct<vn: array<double>, cell: int>")
-    def assign(v: pd.Series) -> pd.DataFrame:
-        x = np.stack([np.asarray(a[:dim], dtype=np.float64) for a in v])
-        nrm = np.sqrt(np.einsum("ij,ij->i", x, x))
-        nrm[nrm == 0.0] = 1.0
-        vn = x / nrm[:, None]
-        return pd.DataFrame({"vn": list(vn),
-                             "cell": (vn @ cent.T).argmax(axis=1)
-                             .astype(np.int32)})
+    @arrow_udf("struct<vn: array<double>, cell: int>")
+    def assign(v: pa.Array) -> pa.Array:
+        vn = _unit_rows(fixed_rows(v, dim, np.float64))
+        cell = (vn @ cent.T).argmax(axis=1).astype(np.int32)
+        return pa.StructArray.from_arrays(
+            [rows_array(vn), pa.array(cell)], ["vn", "cell"])
 
     scan = (df.select(F.col(id_col).alias("id"),
                       assign(F.col(vec_col)).alias("_s"))
@@ -400,19 +402,12 @@ def ivf_topk_for_queries(df: DataFrame, queries: DataFrame, k: int = 5,
         cells = np.argsort(-(cent @ qvn))[:nprobe]
         qvecs.append((r["qid"], qvn.tolist()))
         probes.extend((r["qid"], int(c)) for c in cells)
-    from pyspark.sql.types import (ArrayType, DoubleType, IntegerType,
-                                   StructField, StructType)
-
     # probe/query frames keep the CALLER's id type (string keys etc.) —
     # hardcoding "qid long" would break every non-long id_col
-    id_type = df.schema[id_col].dataType
+    id_type = df.schema[id_col].dataType.simpleString()
     spark = df.sparkSession
-    probe_df = spark.createDataFrame(
-        probes, StructType([StructField("qid", id_type),
-                            StructField("cell", IntegerType())]))
-    qvec_df = spark.createDataFrame(
-        qvecs, StructType([StructField("qid", id_type),
-                           StructField("qvn", ArrayType(DoubleType()))]))
+    probe_df = rows_df(spark, probes, f"qid {id_type}, cell int")
+    qvec_df = rows_df(spark, qvecs, f"qid {id_type}, qvn array<double>")
 
     cand = (scan.join(F.broadcast(probe_df), "cell")
             .filter(F.col("id") != F.col("qid"))
@@ -432,7 +427,7 @@ def pca_moments(df: DataFrame, vec_col: str = "embedding",
                                                           np.ndarray]:
     """Exact corpus moments for PCA — (n, Σx, Σxxᵀ) — via Arrow-batched
     partials: one (n, sum[dim], outer[dim·dim]) row per batch, tree-combined
-    before the driver sees anything (mapInPandas partial → coalesce(fan_in)
+    before the driver sees anything (mapInArrow partial → coalesce(fan_in)
     → partition-sum → collect ≤ fan_in rows; the MLlib treeAggregate shape
     for Gramians). Per-batch outer products are one BLAS ``XᵀX`` — no
     per-row Python. At 10^12 rows the partial count is #batches, collapsed
@@ -446,28 +441,31 @@ def pca_moments(df: DataFrame, vec_col: str = "embedding",
     tolerance-grade operator family, like the ANN recall paths)."""
     schema = "n long, s array<double>, o array<double>"
 
-    def partial(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)[:, :dim]
-            yield pd.DataFrame({"n": [len(X)], "s": [X.sum(axis=0).tolist()],
-                                "o": [(X.T @ X).ravel().tolist()]})
+    def moments_row(n, s, o):
+        return pa.RecordBatch.from_arrays(
+            [pa.array([n], pa.int64()), rows_array(s[None]),
+             rows_array(o.reshape(1, -1))], ["n", "s", "o"])
 
-    partials = df.select(vec_col).mapInPandas(partial, schema)
+    def partial(it):
+        for rb in it:
+            X = fixed_rows(rb.column(vec_col), dim, np.float64)
+            yield moments_row(len(X), X.sum(axis=0), X.T @ X)
+
+    partials = df.select(vec_col).mapInArrow(partial, schema)
 
     def combine(it):
         n, s, o = 0, np.zeros(dim), np.zeros(dim * dim)
-        for pdf in it:
-            for _, r in pdf.iterrows():
-                n += int(r["n"])
-                s += np.asarray(r["s"])
-                o += np.asarray(r["o"])
+        for rb in it:
+            n += int(rb.column("n").to_numpy().sum())
+            ss = fixed_rows(rb.column("s"), dim, np.float64)
+            os_ = fixed_rows(rb.column("o"), dim * dim, np.float64)
+            for si, oi in zip(ss, os_):  # in row order: bit-stable sums
+                s += si
+                o += oi
         if n:
-            yield pd.DataFrame({"n": [n], "s": [s.tolist()],
-                                "o": [o.tolist()]})
+            yield moments_row(n, s, o)
 
-    rows = partials.coalesce(fan_in).mapInPandas(combine, schema).collect()
+    rows = partials.coalesce(fan_in).mapInArrow(combine, schema).collect()
     if not rows:
         # empty corpus: surface the designed pca_fit guard instead of a
         # cryptic np reshape error from summing zero partials
@@ -516,19 +514,15 @@ def pca_fit(df: DataFrame, vec_col: str = "embedding", dim: int = 64,
 def pca_project(df: DataFrame, model: dict, vec_col: str = "embedding",
                 out_col: str = "proj") -> DataFrame:
     """Project an embedding column through a fitted PCA model — one
-    Arrow-batched pandas UDF doing a single ``(X−μ)Wᵀ`` BLAS matmul per
-    batch (the model rides the closure; Spark broadcasts it with the
-    serialized UDF). Adds ``out_col`` array<double> of length k."""
-    from pyspark.sql.functions import pandas_udf
-
+    Arrow UDF doing a single ``(X−μ)Wᵀ`` BLAS matmul per batch (the model
+    rides the closure; Spark broadcasts it with the serialized UDF). Adds
+    ``out_col`` array<double> of length k."""
     mean = np.asarray(model["mean"], dtype=np.float64)
     comps = np.asarray(model["components"], dtype=np.float64)
     dim = mean.shape[0]
 
-    @pandas_udf("array<double>")
-    def proj(v: pd.Series) -> pd.Series:
-        X = np.stack(v.to_numpy()).astype(np.float64)[:, :dim]
-        Y = (X - mean) @ comps.T
-        return pd.Series(list(Y))
+    @arrow_udf("array<double>")
+    def proj(v: pa.Array) -> pa.Array:
+        return rows_array((fixed_rows(v, dim, np.float64) - mean) @ comps.T)
 
     return df.withColumn(out_col, proj(F.col(vec_col)))

@@ -62,6 +62,7 @@ from collections.abc import Iterator
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from tsrollup.arrowbuf import rows_df
 from tsrollup.dedup import _h60
 from tsrollup.text import words
 
@@ -213,70 +214,50 @@ def hll_estimate(regs: DataFrame, group_cols: list[str],
                       "n_hit", s.alias("s_scaled"))
 
 
-def _mg_partition_hashed(k: int):
-    """Per-partition Misra-Gries summarizer for mapInPandas — the
-    heavy_hitters sketch pass: consumes batches of a single pre-hashed
-    int64 ``h`` column, keeps ≤ ``k`` counters, and emits the surviving
-    (word, cnt) rows — ``word`` the hash re-encoded as a string (see the
-    call site for why) — plus one marker row (word NULL, cnt = rows
-    processed) so the caller learns N without a second scan.
+def _mg(k: int):
+    """Misra-Gries summarizer for mapInArrow, both levels of the
+    heavy_hitters sketch pass: batches of int64 ``h`` keys, each row one
+    occurrence (the per-partition pass), or with a ``cnt`` column a
+    summary to merge, where a NULL ``h`` carries a processed-row total.
+    Keeps ≤ ``k`` counters and emits them as (h, cnt) rows plus one
+    (NULL, N) row, so the caller learns N without a second scan.
 
     Batches merge via the mergeable-summaries rule: add the batch's exact
     counts, then if more than ``k`` counters remain, subtract the
     (k+1)-th largest value from all and drop the non-positive — the total
-    decrement stays ≤ N/(k+1), which is the survival guarantee.
+    decrement stays ≤ N/(k+1), which is the survival guarantee, through
+    the partition pass and the merge alike.
     """
     def run(batches: Iterator) -> Iterator:
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
         summary: dict[int, int] = {}
         total = 0
-        for pdf in batches:
-            vc = pdf["h"].value_counts()
-            total += int(vc.sum())
-            for w, c in vc.items():
-                summary[w] = summary.get(w, 0) + int(c)
+        for rb in batches:
+            h = rb.column("h")
+            valid = h.is_valid().to_numpy(zero_copy_only=False)
+            if "cnt" in rb.schema.names:
+                cnt = rb.column("cnt").to_numpy()
+                total += int(cnt[~valid].sum())
+            else:
+                cnt = np.ones(rb.num_rows, dtype=np.int64)
+                total += rb.num_rows
+            keys, inv = np.unique(h.fill_null(0).to_numpy()[valid],
+                                  return_inverse=True)
+            sums = np.zeros(keys.shape[0], dtype=np.int64)
+            np.add.at(sums, inv, cnt[valid])
+            for w, c in zip(keys.tolist(), sums.tolist()):
+                summary[w] = summary.get(w, 0) + c
             if len(summary) > k:
                 counts = np.fromiter(summary.values(), dtype=np.int64,
                                      count=len(summary))
                 m = int(np.partition(counts, -(k + 1))[-(k + 1)])
                 summary = {w: c - m for w, c in summary.items() if c > m}
-        rows = [(str(w), c) for w, c in summary.items()]
-        rows.append((None, total))
-        yield pd.DataFrame(rows, columns=["word", "cnt"])
-
-    return run
-
-
-def _mg_merge(k: int):
-    """Weighted Misra-Gries merge for mapInPandas: consumes (word, cnt)
-    summary rows (word NULL = a partition's processed-row marker), sums
-    counts per word, applies the same (k+1)-th-largest decrement whenever
-    more than ``k`` counters accumulate, and re-emits the merged summary
-    plus one combined marker. Mergeable-summaries guarantee: the merged
-    summary's total decrement stays ≤ N/(k+1), so global heavy items
-    still survive."""
-    def run(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        summary: dict[str, int] = {}
-        total = 0
-        for pdf in batches:
-            marker = pdf["word"].isna()
-            total += int(pdf.loc[marker, "cnt"].sum())
-            for w, c in zip(pdf.loc[~marker, "word"],
-                            pdf.loc[~marker, "cnt"]):
-                summary[w] = summary.get(w, 0) + int(c)
-            if len(summary) > k:
-                counts = np.fromiter(summary.values(), dtype=np.int64,
-                                     count=len(summary))
-                m = int(np.partition(counts, -(k + 1))[-(k + 1)])
-                summary = {w: c - m for w, c in summary.items() if c > m}
-        rows = list(summary.items())
-        rows.append((None, total))
-        yield pd.DataFrame(rows, columns=["word", "cnt"])
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(list(summary) + [None], pa.int64()),
+             pa.array(list(summary.values()) + [total], pa.int64())],
+            ["h", "cnt"])
 
     return run
 
@@ -329,23 +310,18 @@ def heavy_hitters(df: DataFrame, threshold_num: int = 1,
     # 3.4 s on the bigram row at 2x sf1.0). A hash collision only MERGES
     # two counters — counts never shrink, so the MG survival bound still
     # covers every true heavy item, and the exact recount (pass 2, on the
-    # real strings) discards any collision-inflated candidate. The tiny
-    # (<= k+1 rows/partition) summaries re-encode the hash as a STRING:
-    # pandas widens a nullable int64 column to float64, which silently
-    # corrupts 64-bit hashes above 2^53 — strings round-trip exactly.
+    # real strings) discards any collision-inflated candidate.
     hashed = exploded.select(F.xxhash64("word").alias("h"))
-    summary = hashed.mapInPandas(_mg_partition_hashed(k),
-                                 "word string, cnt long")
-    merged = summary.repartition(1).mapInPandas(
-        _mg_merge(k), "word string, cnt long")
+    summary = hashed.mapInArrow(_mg(k), "h long, cnt long")
+    merged = summary.repartition(1).mapInArrow(_mg(k), "h long, cnt long")
     rows = merged.collect()  # bounded: <= k + 1 rows
-    n_corpus = sum(r.cnt for r in rows if r.word is None)
-    cand = sorted({int(r.word) for r in rows if r.word is not None})
+    n_corpus = sum(r.cnt for r in rows if r.h is None)
+    cand = sorted(r.h for r in rows if r.h is not None)
     spark = df.sparkSession
     if not cand or n_corpus == 0:
-        return spark.createDataFrame(
-            [], "word string, n_occ long, n_corpus long, share double")
-    cand_df = spark.createDataFrame([(h,) for h in cand], "h long")
+        return rows_df(spark, [],
+                       "word string, n_occ long, n_corpus long, share double")
+    cand_df = rows_df(spark, [(h,) for h in cand], "h long")
     return (exploded
             .withColumn("h", F.xxhash64("word"))
             .join(F.broadcast(cand_df), "h")

@@ -207,6 +207,7 @@ def stream_stateful_rolling(events: DataFrame, window_n: int = 4,
 
     return (events
             .groupBy("user_id")
+            # pandas: PySpark 4.1 has no Arrow form of the stateful group API
             .applyInPandasWithState(update, ROLLING_OUT_SCHEMA,
                                     ROLLING_STATE_SCHEMA, "append", timeout))
 
@@ -515,6 +516,7 @@ def stream_cusum(events: DataFrame, target: float = 50.0,
 
     return (events
             .groupBy("user_id", "event_type")
+            # pandas: PySpark 4.1 has no Arrow form of the stateful group API
             .applyInPandasWithState(update, CUSUM_OUT_SCHEMA,
                                     CUSUM_STATE_SCHEMA, "append", timeout))
 

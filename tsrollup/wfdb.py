@@ -19,7 +19,7 @@ WFDB formats (the ``header(5)``/``signal(5)``/``annot(5)`` man pages):
   AUX(63, byte-count + even-padded string); EOF = zero word.
 
 Spark-first shape: ``spark.read.format("binaryFile")`` scans the record
-directory; each ``.dat`` decodes INSIDE one ``mapInPandas`` batch (the heavy
+directory; each ``.dat`` decodes INSIDE one ``mapInArrow`` batch (the heavy
 12-bit unpack is vectorized NumPy over the whole buffer — no per-sample
 Python), emitting one row per (record, channel) with the ADC array. Headers
 are metadata-sized (one short text row per record) and join the blob scan
@@ -36,6 +36,8 @@ from dataclasses import dataclass
 from typing import Iterator
 
 import numpy as np
+
+from .arrowbuf import arrow_schema, rows_batch
 
 # public WFDB annotation codes (ecgcodes.h mnemonics, PhysioNet spec)
 ANN_SYMBOL = {1: "N", 2: "L", 3: "R", 4: "a", 5: "V", 6: "F", 7: "J",
@@ -315,7 +317,7 @@ ANN_SCHEMA = ("record string, pos long, code int, symbol string, sub int, "
 
 def read_wfdb_signals(spark, path: str):
     """Distributed WFDB read: one output row per (record, channel) with the
-    full ADC array. ``.dat`` blobs stream through ``mapInPandas`` (one
+    full ADC array. ``.dat`` blobs stream through ``mapInArrow`` (one
     vectorized unpack per record — no per-sample Python); the
     metadata-sized header rows broadcast onto the blob scan, so nothing
     big ever shuffles. ``mv`` physical units are one exact IEEE division
@@ -330,25 +332,21 @@ def read_wfdb_signals(spark, path: str):
            .select(F.regexp_extract("path", _STEM, 1).alias("record"),
                    F.col("content").alias("_dat")))
     joined = dat.join(F.broadcast(hea), "record")
+    schema = arrow_schema(SIGNALS_SCHEMA)
 
     def _decode(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
+        for rb in batches:
             rows = []
-            for rec, hea_b, dat_b in zip(pdf["record"], pdf["_hea"],
-                                         pdf["_dat"]):
-                h, sig = decode_record(bytes(hea_b), bytes(dat_b))
+            for r in rb.to_pylist():
+                h, sig = decode_record(r["_hea"], r["_dat"])
                 for ch, spec in enumerate(h.signals):
-                    rows.append((rec, ch, h.fs, spec.gain, spec.baseline,
-                                 spec.units, spec.description, h.n_samples,
-                                 sig[:, ch].tolist()))
+                    rows.append((r["record"], ch, h.fs, spec.gain,
+                                 spec.baseline, spec.units, spec.description,
+                                 h.n_samples, sig[:, ch]))
             if rows:
-                yield pd.DataFrame(rows, columns=[
-                    "record", "channel", "fs", "gain", "baseline", "units",
-                    "description", "n_samples", "adc"])
+                yield rows_batch(rows, schema)
 
-    return joined.mapInPandas(_decode, SIGNALS_SCHEMA)
+    return joined.mapInArrow(_decode, SIGNALS_SCHEMA)
 
 
 def read_wfdb_annotations(spark, path: str, ext: str = "atr"):
@@ -361,23 +359,21 @@ def read_wfdb_annotations(spark, path: str, ext: str = "atr"):
            .option("pathGlobFilter", f"*.{ext}").load(path)
            .select(F.regexp_extract("path", _STEM, 1).alias("record"),
                    F.col("content").alias("_atr")))
+    schema = arrow_schema(ANN_SCHEMA)
 
     def _decode(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
+        for rb in batches:
             rows = []
-            for rec, buf in zip(pdf["record"], pdf["_atr"]):
+            for r in rb.to_pylist():
                 for t, code, sub, chn, num, aux in decode_annotations(
-                        bytes(buf)):
-                    rows.append((rec, t, code, ANN_SYMBOL.get(code, "?"),
-                                 sub, chn, num, aux))
+                        r["_atr"]):
+                    rows.append((r["record"], t, code,
+                                 ANN_SYMBOL.get(code, "?"), sub, chn, num,
+                                 aux))
             if rows:
-                yield pd.DataFrame(rows, columns=[
-                    "record", "pos", "code", "symbol", "sub", "chn", "num",
-                    "aux"])
+                yield rows_batch(rows, schema)
 
-    return atr.mapInPandas(_decode, ANN_SCHEMA)
+    return atr.mapInArrow(_decode, ANN_SCHEMA)
 
 
 def read_mit_bih(spark, path: str,
