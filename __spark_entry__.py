@@ -32,7 +32,9 @@ W0 = 16  # base window for document-token rollups (docs are short)
 
 # ------------------------------------------------------------ helpers -------
 
-_SCAN_PARTS: dict[str, int] = {}
+# path → (io.listing_fingerprint, split count): a rewritten fixture
+# changes the fingerprint and is probed again
+_SCAN_PARTS: dict[str, tuple[tuple, int]] = {}
 
 # unique (or near-unique) key per fact table for the widening exchange's
 # hash spread — high cardinality, deterministic, never derived from rand()
@@ -58,12 +60,14 @@ def _fact(spark: SparkSession, sf_dir: str, table: str,
     At 100 TB the guard is a structural no-op (see io.scan_min_parallel).
     Dimension tables (nation/region/customer/...) stay unwrapped: they ride
     broadcast joins where an extra exchange is pure loss. The split-count
-    probe (~0.1 s of driver-side RDD conversion) is memoized per path —
-    fixture layouts don't change within a session."""
-    from tsrollup.io import parquet_split_atoms, scan_min_parallel
+    probe (~0.1 s of driver-side RDD conversion) is memoized per path and
+    listing fingerprint, the rule ``io.read_table`` memoizes schemas by, so
+    a fixture rewritten within a session is probed again."""
+    from tsrollup.io import (listing_fingerprint, parquet_split_atoms,
+                             read_parquet, scan_min_parallel)
 
     path = f"{sf_dir}/{table}.parquet"
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     if not widen:
         # scan→aggregate / window-first queries opt OUT: their map-side
         # partial aggregation (or their first keyed exchange) already
@@ -72,8 +76,11 @@ def _fact(spark: SparkSession, sf_dir: str, table: str,
         # +0.1–0.8 s per row at sf1.0); the heavy pre-shuffle compute the
         # guard exists for isn't there
         return df
-    n = _SCAN_PARTS.get(path)
-    if n is None:
+    fp = listing_fingerprint(path)
+    hit = _SCAN_PARTS.get(path)
+    if hit is not None and fp is not None and hit[0] == fp:
+        n = hit[1]
+    else:
         n = df.rdd.getNumPartitions()
         # clamp by the ROW-GROUP count: nominal size-based splits whose byte
         # range holds no row-group start read nothing, so a one-row-group
@@ -84,7 +91,8 @@ def _fact(spark: SparkSession, sf_dir: str, table: str,
             path, cap=max(64, spark.sparkContext.defaultParallelism))
         if atoms is not None:
             n = min(n, atoms)
-        _SCAN_PARTS[path] = n
+        if fp is not None:
+            _SCAN_PARTS[path] = (fp, n)
     # hash-spread on the table's unique key, not round-robin: round-robin
     # pays a per-input-partition local sort (sortBeforeRepartition) that
     # runs on the scan's few real tasks — the serial bottleneck again
@@ -390,6 +398,7 @@ def q_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sequences table streamed through readStream → the same mapInArrow
     kernels → an exactly-once parquet sink (availableNow); the sink contents
     must hash-match the batch SQL oracle."""
+    from tsrollup.io import read_parquet
     from tsrollup.streaming import stream_rollup_sequences
 
     base = _scratch(sf_dir, "stream")
@@ -405,7 +414,7 @@ def q_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     if q.isActive:  # never read a sink mid-flight — fail loudly instead
         q.stop()
         raise TimeoutError("stream_rollup did not finish within 600s")
-    return _rollup_cols(spark.read.parquet(sink))
+    return _rollup_cols(read_parquet(spark, sink))
 
 
 def q_gapfill_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -737,10 +746,12 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Star join with broadcast dims (customer⋈orders⋈lineitem⋈nation)."""
+    from tsrollup.io import read_parquet
+
     li = _fact(spark, sf_dir, "lineitem")
     o = _fact(spark, sf_dir, "orders")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    c = read_parquet(spark, f"{sf_dir}/customer.parquet")
+    n = read_parquet(spark, f"{sf_dir}/nation.parquet")
     price = F.col("l_extendedprice").cast("decimal(18,2)")
     disc = F.col("l_discount").cast("decimal(4,2)")
     rev = price * (F.lit(1).cast("decimal(3,0)") - disc)
@@ -2168,6 +2179,7 @@ def q_tier_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     form joined two lazily derived frames: raw scan + kernels twice per
     query; the round-4 form rebuilt the store every call.) Write is
     tmp→rename so a killed run can't leave a partial store."""
+    from tsrollup.io import read_parquet
     from tsrollup.rollup import reaggregate_tier, rollup_sequences
 
     src = f"{sf_dir}/documents.parquet"
@@ -2187,7 +2199,7 @@ def q_tier_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         rollup_sequences(_tokenized(spark, sf_dir), window=W0,
                          tiers={"w": 1}).write.mode("overwrite").parquet(tmp)
         os.replace(tmp, store)
-    base = spark.read.parquet(store)
+    base = read_parquet(spark, store)
     parent = reaggregate_tier(base, "w4", 4, window=W0)
     c = base.select("doc_id",
                     F.col("window_start").alias("ws"),
@@ -2570,6 +2582,7 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as _pd
 
+    from tsrollup.io import read_parquet
     from tsrollup.streaming import stream_hll_actives
 
     base = _scratch(sf_dir, "streamhll")
@@ -2597,7 +2610,7 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     if q.isActive:  # never read a sink mid-flight — fail loudly instead
         q.stop()
         raise TimeoutError("stream_hll did not finish within 600s")
-    return spark.read.parquet(sink).filter(F.col("bucket_ts") <= hi)
+    return read_parquet(spark, sink).filter(F.col("bucket_ts") <= hi)
 
 
 def q_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:

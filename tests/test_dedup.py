@@ -3,6 +3,8 @@ surface through Jaccard and LSH, SimHash distance tracks similarity."""
 
 from __future__ import annotations
 
+import random
+
 import pandas as pd
 import pytest
 
@@ -98,6 +100,54 @@ def test_lsh_bucket_cap_excludes_dup_clusters(spark):
     assert not any(a < 12 and b < 12 for a, b in got)
 
 
+# ---- near_dup_clusters --------------------------------------------------
+
+def _planted():
+    return ([(1, 2), (2, 3), (3, 4), (10, 11)], [1, 2, 3, 4, 10, 11, 20, 21])
+
+
+def _random_graph(rng):
+    """A random sparse graph plus one long path (diameter stress)."""
+    nodes = list(range(60))
+    edges = [tuple(sorted(rng.sample(nodes, 2))) for _ in range(40)]
+    path = rng.sample(nodes, 12)
+    return edges + [tuple(sorted(p)) for p in zip(path, path[1:])], nodes
+
+
+def _path30():
+    rng = random.Random(99)
+    nodes = list(range(80))
+    edges = [tuple(sorted(rng.sample(nodes, 2))) for _ in range(50)]
+    path = rng.sample(nodes, 30)  # diameter 29
+    return edges + [tuple(sorted(p)) for p in zip(path, path[1:])], nodes
+
+
+def _no_edges():
+    return [], [0, 1, 2, 3, 4]
+
+
+def _union_find_rows(edges, nodes):
+    """Reference ``(doc_id, cluster_rep, cluster_sz)`` rows, sorted."""
+    from collections import Counter
+
+    parent = {x: x for e in edges for x in e}
+    parent.update({x: x for x in nodes or ()})
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    rep = {x: find(x) for x in parent}
+    size = Counter(rep.values())
+    return sorted((x, rep[x], size[rep[x]]) for x in rep)
+
+
 def test_near_dup_clusters_planted_components(spark):
     """Connected components over a planted edge graph: a 4-node PATH
     (1-2, 2-3, 3-4 — diameter 3, forces >1 propagation round), a pair
@@ -137,51 +187,16 @@ def test_near_dup_clusters_random_graphs_match_union_find(spark):
     """Property: on random edge graphs (including long paths and multi-way
     merges), min-label propagation must reproduce a reference union-find's
     components exactly — reps, membership, and sizes."""
-    import random
-
     from tsrollup.dedup import near_dup_clusters
 
     rng = random.Random(1234)
     for trial in range(3):
-        n = 60
-        nodes = list(range(n))
-        edges = []
-        # random sparse graph + one long deliberate path (diameter stress)
-        for _ in range(40):
-            a, b = rng.sample(nodes, 2)
-            edges.append((min(a, b), max(a, b)))
-        path = rng.sample(nodes, 12)
-        edges += [(min(a, b), max(a, b))
-                  for a, b in zip(path, path[1:])]
-
-        # reference union-find
-        parent = list(range(n))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        want_rep = {x: find(x) for x in nodes}
-        want_sz: dict[int, int] = {}
-        for x in nodes:
-            want_sz[want_rep[x]] = want_sz.get(want_rep[x], 0) + 1
-
+        edges, nodes = _random_graph(rng)
         edf = spark.createDataFrame(
             pd.DataFrame(edges, columns=["doc_a", "doc_b"]))
         ndf = spark.createDataFrame(pd.DataFrame({"doc_id": nodes}))
-        got = near_dup_clusters(edf, ndf).toPandas()
-        assert len(got) == n, trial
-        for _, r in got.iterrows():
-            assert r["cluster_rep"] == want_rep[r["doc_id"]], \
-                (trial, r["doc_id"])
-            assert r["cluster_sz"] == want_sz[want_rep[r["doc_id"]]], \
-                (trial, r["doc_id"])
+        got = sorted(map(tuple, near_dup_clusters(edf, ndf).collect()))
+        assert got == _union_find_rows(edges, nodes), trial
 
 
 def test_near_dup_clusters_reliable_checkpoints(spark, tmp_path):
@@ -204,43 +219,89 @@ def test_near_dup_clusters_matches_union_find(spark):
     random graph, including a LONG PATH (the shape min-label propagation
     is slowest on): cluster_rep is the component minimum and cluster_sz
     the component size."""
-    import random
-    from collections import Counter
-
     from tsrollup.dedup import near_dup_clusters
 
-    rng = random.Random(99)
-    n = 80
-    nodes = list(range(n))
-    edges = [(min(a, b), max(a, b))
-             for a, b in (rng.sample(nodes, 2) for _ in range(50))]
-    # a 30-node path through shuffled ids: diameter 29
-    path = rng.sample(nodes, 30)
-    edges += [(min(a, b), max(a, b)) for a, b in zip(path, path[1:])]
-
-    parent = list(range(n))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {x: find(x) for x in nodes}
-    size = Counter(want.values())
-
+    edges, nodes = _path30()
     edf = spark.createDataFrame(pd.DataFrame(edges, columns=["doc_a", "doc_b"]))
     ndf = spark.createDataFrame(pd.DataFrame({"doc_id": nodes}))
-    got = near_dup_clusters(edf, ndf).toPandas() \
-        .set_index("doc_id").sort_index()
-    assert got.index.tolist() == nodes
-    for x in nodes:
-        assert got.loc[x, "cluster_rep"] == want[x], x
-        assert got.loc[x, "cluster_sz"] == size[want[x]], x
+    got = sorted(map(tuple, near_dup_clusters(edf, ndf).collect()))
+    assert [r[0] for r in got] == nodes
+    assert got == _union_find_rows(edges, nodes)
+
+
+FIXPOINT, DRIVER = -1, 1 << 30  # budgets that force each branch
+
+
+def _run_branch(spark, monkeypatch, budget, edf, ndf, **kw):
+    """Sorted rows of ``near_dup_clusters`` under ``budget``, asserting the
+    branch the budget selects is the one that ran."""
+    import tsrollup.dedup as dd
+
+    ran = []
+    drv, fix = dd._driver_labels, dd._fixpoint_labels
+
+    def spy_drv(*a):
+        out = drv(*a)
+        ran.append("driver" if out is not None else "fallback")
+        return out
+
+    def spy_fix(*a):
+        ran.append("fixpoint")
+        return fix(*a)
+
+    monkeypatch.setattr(dd, "DRIVER_FINISH_EDGES", budget)
+    monkeypatch.setattr(dd, "_driver_labels", spy_drv)
+    monkeypatch.setattr(dd, "_fixpoint_labels", spy_fix)
+    rows = sorted(tuple(r) for r in
+                  dd.near_dup_clusters(edf, ndf, **kw).collect())
+    assert ran == (["fixpoint"] if budget == FIXPOINT else ["driver"]), ran
+    return rows
+
+
+@pytest.mark.parametrize("graph", [_planted,
+                                   lambda: _random_graph(random.Random(1234)),
+                                   _path30, _no_edges],
+                         ids=["planted", "random", "path30", "no_edges"])
+def test_near_dup_clusters_driver_finish_matches_fixpoint(
+        spark, monkeypatch, tmp_path, graph):
+    """Both branches give the same rows, equal to a reference union-find:
+    with and without ``nodes``, and with reliable checkpoints."""
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    edges, nodes = graph()
+    edf = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    ndf = spark.createDataFrame([(x,) for x in nodes], "doc_id long")
+    for with_nodes, reliable in ((True, False), (False, False), (True, True)):
+        want = _union_find_rows(edges, nodes if with_nodes else None)
+        for budget in (FIXPOINT, DRIVER):
+            got = _run_branch(spark, monkeypatch, budget, edf,
+                              ndf if with_nodes else None,
+                              reliable_checkpoints=reliable)
+            assert got == want, (budget, with_nodes, reliable)
+    if not edges:  # every node a singleton
+        assert {r[2] for r in want} == {1}
+
+
+def test_near_dup_clusters_driver_finish_string_ids(spark, monkeypatch):
+    """String ids label by the same order on the driver as in Spark."""
+    edges = [("b", "c"), ("a", "é"), ("c", "z"), ("B", "é")]
+    edf = spark.createDataFrame(edges, "doc_a string, doc_b string")
+    rows = [_run_branch(spark, monkeypatch, b, edf, None)
+            for b in (FIXPOINT, DRIVER)]
+    assert rows[0] == rows[1] == _union_find_rows(edges, None)
+
+
+def test_near_dup_clusters_null_ids_take_the_fixpoint(spark, monkeypatch):
+    """A NULL id fails the driver finish's check, so the fixpoint runs."""
+    import tsrollup.dedup as dd
+
+    edf = spark.createDataFrame([(1, 2), (2, None)], "doc_a long, doc_b long")
+    ran = []
+    fix = dd._fixpoint_labels
+    monkeypatch.setattr(dd, "DRIVER_FINISH_EDGES", DRIVER)
+    monkeypatch.setattr(dd, "_fixpoint_labels",
+                        lambda *a: ran.append(1) or fix(*a))
+    dd.near_dup_clusters(edf).collect()
+    assert ran == [1]
 
 
 def test_contamination_matches_planted_probe(spark):

@@ -87,12 +87,14 @@ def rows_batch(rows: list[tuple], schema: pa.Schema) -> pa.RecordBatch:
         schema=schema)
 
 
-def rows_df(spark: SparkSession, rows: list[tuple], schema: str
+def rows_df(spark: SparkSession, rows: list[tuple] | pa.Table, schema: str
             ) -> DataFrame:
-    """A few driver-side rows as a one-partition DataFrame, so an append of
-    them writes one file. Built from an Arrow table it is a local relation:
-    a Python list would become a parallelized Python RDD, one Python task
-    per core to write and all of them in series once coalesced."""
-    batch = rows_batch(rows, arrow_schema(schema))
-    return spark.createDataFrame(pa.Table.from_batches([batch]),
-                                 schema).coalesce(1)
+    """Driver-side rows (tuples, or an Arrow table of the schema's columns)
+    as a one-partition DataFrame, so an append of them writes one file.
+    Built from an Arrow table it is a local relation: a Python list would
+    become a parallelized Python RDD, one Python task per core to write
+    and all of them in series once coalesced."""
+    arrow = arrow_schema(schema)
+    tbl = (rows.cast(arrow) if isinstance(rows, pa.Table)
+           else pa.Table.from_batches([rows_batch(rows, arrow)]))
+    return spark.createDataFrame(tbl, schema).coalesce(1)

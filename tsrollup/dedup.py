@@ -301,29 +301,120 @@ def near_dup_clusters(edges: DataFrame, nodes: DataFrame | None = None,
     loss mid-fixpoint fails the job) to reliable ``checkpoint`` into the
     session's ``sc.setCheckpointDir`` location — the right setting for a
     1000-executor run where losing a node mid-iteration must not restart
-    the whole similarity pipeline. Local/bench runs keep the default."""
+    the whole similarity pipeline. Local/bench runs keep the default.
 
-    def _pin(df: DataFrame) -> DataFrame:
-        if reliable_checkpoints:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
+    Driver finish: a graph of at most ``DRIVER_FINISH_EDGES`` edges (the
+    count the round sizing measures anyway) skips the fixpoint. Its pinned
+    edges are collected once and labelled in NumPy (:func:`_min_labels`),
+    and the labels come back as a local relation into the same tail. The
+    labels are the fixpoint's exactly (the minimum id of each component),
+    so the rows are identical; ``max_iter`` bounds only the fixpoint. Ids
+    that are not integers or strings, or NULL ids, take the fixpoint."""
 
-    def _pin_lazy(df: DataFrame) -> DataFrame:
-        # checkpoint-on-first-action: the NEXT action both computes and
-        # persists the frame, so pin+measure (and pin+convergence-check
-        # below) cost ONE job instead of two — on a small graph the
-        # fixpoint is driver/job-latency bound, and each merged barrier
-        # is a full scheduler round trip saved
+    def _pin(df: DataFrame, eager: bool = True) -> DataFrame:
+        # eager=False is checkpoint-on-first-action: the NEXT action both
+        # computes and persists the frame, so pin+measure (and pin+
+        # convergence-check below) cost ONE job instead of two — on a
+        # small graph the fixpoint is driver/job-latency bound, and each
+        # merged barrier is a full scheduler round trip saved
         if reliable_checkpoints:
-            return df.checkpoint(eager=False)
-        return df.localCheckpoint(eager=False)
+            return df.checkpoint(eager=eager)
+        return df.localCheckpoint(eager=eager)
     # checkpoint the DIRECTED edge list first, THEN mirror it: a union of
     # two selects over the un-materialized edge DAG would execute the whole
     # upstream similarity pipeline twice (the two union branches share no
     # exchange), and the checkpoint would store every edge in both
     # directions — materialize once, mirror the stored rows (the count
     # below is the materializing action)
-    e = _pin_lazy(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
+    e = _pin(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")),
+             eager=False)
+    n_edges = e.count()
+    labels = _driver_labels(e) if n_edges <= DRIVER_FINISH_EDGES else None
+    if labels is None:
+        labels = _fixpoint_labels(e, n_edges, max_iter, _pin)
+    out = labels.select(F.col("u").alias("doc_id"),
+                        F.col("label").alias("cluster_rep"))
+    if nodes is not None:
+        out = (nodes.select("doc_id").join(out, "doc_id", "left")
+               .select("doc_id",
+                       F.coalesce("cluster_rep", "doc_id")
+                       .alias("cluster_rep")))
+    # cluster size as a window count on the one cluster_rep exchange —
+    # the earlier sizes-groupBy + join-back referenced `out` twice
+    # (recomputing the nodes join per branch) and paid two more exchanges
+    from pyspark.sql import Window
+
+    return out.select(
+        "doc_id", "cluster_rep",
+        F.count("*").over(Window.partitionBy("cluster_rep"))
+        .cast("long").alias("cluster_sz"))
+
+
+# the largest edge list near_dup_clusters labels on the driver: 2^21 edges
+# are 32 MB of int64 ids, and the NumPy pass holds a few arrays of that
+# size, well inside a default driver heap next to Spark's own
+DRIVER_FINISH_EDGES = 1 << 21
+
+
+def _driver_labels(e: DataFrame) -> DataFrame | None:
+    """``(u, label)`` of the pinned edges ``e`` computed on the driver, or
+    None when the ids are not integers or strings (whose NumPy order is not
+    provably Spark's) or hold a NULL — those take the fixpoint."""
+    import pyarrow as pa
+    from pyspark.sql.types import IntegralType, StringType
+
+    from .arrowbuf import rows_df
+
+    t = e.schema["u"].dataType
+    if (e.schema["v"].dataType != t
+            or not (isinstance(t, IntegralType) or t == StringType())):
+        return None
+    tbl = e.toArrow()
+    if tbl.column("u").null_count or tbl.column("v").null_count:
+        return None
+    u = tbl.column("u").to_numpy(zero_copy_only=False)
+    v = tbl.column("v").to_numpy(zero_copy_only=False)
+    ids, lab = _min_labels(u, v)
+    typ = tbl.schema.field("u").type
+    ids = pa.array(ids, type=typ)
+    return rows_df(e.sparkSession,
+                   pa.table({"u": ids, "label": ids.take(pa.array(lab))}),
+                   f"u {t.simpleString()}, label {t.simpleString()}")
+
+
+def _min_labels(u, v):
+    """Connected components of the edges ``u[i]``–``v[i]``: the sorted
+    distinct ids, and for each the index (into them) of its component's
+    minimum id. Vectorized hook-and-shortcut: every round hooks the larger
+    of each edge's two root labels onto the smaller (``np.minimum.at``),
+    then pointer-jumps every label to its root, until all edges agree.
+    Labels only fall and always name a node of the component, so at the
+    fixed point each component carries its minimum index — the minimum id,
+    since ``ids`` are sorted."""
+    import numpy as np
+
+    ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = inv[:len(u)], inv[len(u):]
+    lab = np.arange(len(ids))
+    while True:
+        la, lb = lab[a], lab[b]
+        diff = la != lb
+        if not diff.any():
+            return ids, lab
+        la, lb = la[diff], lb[diff]
+        np.minimum.at(lab, np.maximum(la, lb), np.minimum(la, lb))
+        while True:
+            nxt = lab[lab]
+            if np.array_equal(nxt, lab):
+                break
+            lab = nxt
+
+
+def _fixpoint_labels(e: DataFrame, n_edges: int, max_iter: int,
+                     pin) -> DataFrame:
+    """``near_dup_clusters``' distributed min-label fixpoint over the pinned
+    directed edges ``e`` (``u``, ``v``): ``(u, label)`` for every node.
+    ``pin(df, eager)`` materializes a round the way the caller chose."""
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     # scale-ADAPTIVE round partitioning: every per-round frame is
     # edge/node-sized, so the fixpoint's shuffles are sized from the
@@ -337,13 +428,12 @@ def near_dup_clusters(edges: DataFrame, nodes: DataFrame | None = None,
     spark = e.sparkSession
     conf_key = "spark.sql.shuffle.partitions"
     sess_parts = int(spark.conf.get(conf_key))
-    n_edges = e.count()
     round_parts = max(1, min(sess_parts, -(-2 * n_edges // 100_000)))
     try:
         spark.conf.set(conf_key, str(round_parts))
-        labels = _pin(sym.groupBy("u")
-                      .agg(F.min("v").alias("_nbr"))
-                      .select("u", F.least("u", "_nbr").alias("label")))
+        labels = pin(sym.groupBy("u")
+                     .agg(F.min("v").alias("_nbr"))
+                     .select("u", F.least("u", "_nbr").alias("label")))
         for _ in range(max_iter):
             # neighbor minimum under current labels
             prop = (sym.join(labels.select(F.col("u").alias("v"),
@@ -373,7 +463,7 @@ def near_dup_clusters(edges: DataFrame, nodes: DataFrame | None = None,
                                    | (F.col("label")
                                       > F.coalesce("_ll", F.col("label"))))
                                   .alias("_chg")))
-            new_labels = _pin_lazy(new_labels)
+            new_labels = pin(new_labels, eager=False)
             changed = new_labels.agg(
                 F.sum(F.col("_chg").cast("int")).alias("c")).collect()[0]["c"]
             labels = new_labels.drop("_chg")
@@ -386,22 +476,7 @@ def near_dup_clusters(edges: DataFrame, nodes: DataFrame | None = None,
                 "this graph")
     finally:
         spark.conf.set(conf_key, str(sess_parts))
-    out = labels.select(F.col("u").alias("doc_id"),
-                        F.col("label").alias("cluster_rep"))
-    if nodes is not None:
-        out = (nodes.select("doc_id").join(out, "doc_id", "left")
-               .select("doc_id",
-                       F.coalesce("cluster_rep", "doc_id")
-                       .alias("cluster_rep")))
-    # cluster size as a window count on the one cluster_rep exchange —
-    # the earlier sizes-groupBy + join-back referenced `out` twice
-    # (recomputing the nodes join per branch) and paid two more exchanges
-    from pyspark.sql import Window
-
-    return out.select(
-        "doc_id", "cluster_rep",
-        F.count("*").over(Window.partitionBy("cluster_rep"))
-        .cast("long").alias("cluster_sz"))
+    return labels
 
 
 def contamination_matches(docs: DataFrame, probes: DataFrame, n: int = 8,

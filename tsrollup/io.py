@@ -66,6 +66,85 @@ def is_missing_table_error(e: Exception) -> bool:
     return any(t in msg for t in _MISSING_TABLE_TAGS)
 
 
+def _listed(name: str) -> bool:
+    """Spark's file-listing rule (``HadoopFSUtils.shouldFilterOutPathName``):
+    names starting ``_`` or ``.`` are hidden, except ``_`` names holding
+    ``=`` (partition directories) and the parquet summary files. A
+    streaming sink's ``_spark_metadata`` log counts too: it decides which
+    of the sink's files a batch read lists."""
+    if name.startswith(("_metadata", "_common_metadata", "_spark_metadata")):
+        return True
+    return not ((name.startswith("_") and "=" not in name)
+                or name.startswith(".") or name.endswith("._COPYING_"))
+
+
+def listing_fingerprint(ident: str) -> tuple | None:
+    """The sorted ``(path, st_size, st_mtime_ns)`` of every file Spark lists
+    for the local path ``ident`` (a file, or a directory walked with
+    :func:`_listed`), or None when there is nothing to vouch for: a
+    non-``file:`` scheme, a glob, a missing path or an empty listing. Two
+    equal fingerprints mean Spark sees the same files, so anything derived
+    from the listing alone (an inferred schema, a split count) still
+    holds."""
+    from urllib.parse import urlparse
+
+    url = urlparse(ident)
+    if url.scheme not in ("", "file") or any(c in ident for c in "*?[{"):
+        return None
+    path = url.path if url.scheme else ident
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return ((path, st.st_size, st.st_mtime_ns),)
+        out = []
+        for d, dirs, files in os.walk(path, followlinks=True):
+            dirs[:] = [x for x in dirs if _listed(x)]
+            for f in files:
+                if _listed(f):
+                    p = os.path.join(d, f)
+                    st = os.stat(p)
+                    out.append((p, st.st_size, st.st_mtime_ns))
+    except OSError:  # missing, or a writer raced the walk
+        return None
+    return tuple(sorted(out)) or None
+
+
+# the session confs that change what parquet schema inference returns for
+# the same files; a memo hit also needs these unchanged
+_INFER_CONFS = ("spark.sql.parquet.mergeSchema",
+                "spark.sql.parquet.binaryAsString",
+                "spark.sql.parquet.int96AsTimestamp",
+                "spark.sql.parquet.inferTimestampNTZ.enabled",
+                "spark.sql.sources.partitionColumnTypeInference.enabled",
+                "spark.sql.caseSensitive")
+
+# (path, base_path) → ((inference confs, listing fingerprint), schema); one
+# entry per path, so a store that changes every step does not grow it
+_SCHEMAS: dict = {}
+
+
+def read_parquet(spark: SparkSession, path: str,
+                 base_path: str | None = None,
+                 schema: str | None = None) -> DataFrame:
+    """The parquet branch of :func:`read_table`, for callers whose files
+    are parquet whatever the table format (fixtures, streaming sinks)."""
+    r = spark.read
+    if base_path is not None:
+        r = r.option("basePath", base_path)
+    if schema is not None:
+        return r.schema(schema).parquet(path)
+    fp = listing_fingerprint(path)
+    if fp is None:
+        return r.parquet(path)
+    key = (tuple(spark.conf.get(k) for k in _INFER_CONFS), fp)
+    hit = _SCHEMAS.get((path, base_path))
+    if hit is not None and hit[0] == key:
+        return r.schema(hit[1]).parquet(path)
+    df = r.parquet(path)
+    _SCHEMAS[(path, base_path)] = (key, df.schema)
+    return df
+
+
 def read_table(spark: SparkSession, ident: str,
                base_path: str | None = None,
                schema: str | None = None) -> DataFrame:
@@ -74,16 +153,20 @@ def read_table(spark: SparkSession, ident: str,
     reading a subtree of a partitioned layout. ``schema`` (parquet only)
     declares the columns instead of inferring them from the files: no
     inference job, and a directory holding no committed file yet (only
-    ``_temporary/`` from a killed first write) reads as empty."""
+    ``_temporary/`` from a killed first write) reads as empty.
+
+    Without ``schema``, a parquet read infers the schema with one Spark
+    job (70–100 ms), then memoizes it per ``(ident, base_path)`` under the
+    path's :func:`listing_fingerprint` and the inference confs. A later
+    read whose fingerprint and confs are unchanged declares the memoized
+    schema and runs no job. Any added, removed or rewritten data file
+    changes the fingerprint, so that read infers again. Non-``file:``
+    paths, globs and empty listings always infer; Iceberg takes its schema
+    from table metadata and needs no memo."""
     if table_format() == "iceberg":
         _require_iceberg(spark)
         return spark.read.format("iceberg").load(ident)
-    r = spark.read
-    if base_path is not None:
-        r = r.option("basePath", base_path)
-    if schema is not None:
-        r = r.schema(schema)
-    return r.parquet(ident)
+    return read_parquet(spark, ident, base_path, schema)
 
 
 def write_table(df: DataFrame, ident: str, mode: str = "overwrite",

@@ -33,13 +33,17 @@ def count_op(plan: str, op: str) -> int:
 def split_exchanges(plan: str) -> tuple[int, int]:
     """``(data, guard)`` exchange counts from the detail sections.
 
-    guard — the small-scan guard's widening repartitions ONLY
-    (``io.scan_min_parallel``: fires when a fixture table arrives in fewer
-    splits than cores, structurally absent at production split counts).
-    The guard spreads round-robin or by hash on the table's unique key;
-    either way the exchange carries the ``REPARTITION_BY_NUM`` origin tag
-    (an explicit ``repartition(n, ...)``), which no planner-inserted
-    shuffle carries — matched by that tag, never by exclusion.
+    guard — every exchange from an explicit ``repartition(n[, cols])``:
+    round-robin, or tagged ``REPARTITION_BY_NUM``. No planner-inserted
+    shuffle carries that tag, so it is matched by the tag, never by
+    exclusion. In the audited queries that is the small-scan guard's
+    widening repartition (``io.scan_min_parallel``: fires when a fixture
+    table arrives in fewer splits than cores, structurally absent at
+    production split counts). The tag is not unique to the guard, though:
+    ``rollup.salted_repartition(num_partitions=...)`` carries it too, and
+    so would any other numbered repartition in query code. Such a shuffle
+    is counted here as guard, not data, so an audited query must not use
+    one for real data movement without changing this rule.
 
     data — every other exchange: hash, range AND SinglePartition (a global
     agg/sort is a real data-dependent shuffle and must stay counted).
