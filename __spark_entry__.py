@@ -32,11 +32,7 @@ W0 = 16  # base window for document-token rollups (docs are short)
 
 # ------------------------------------------------------------ helpers -------
 
-# path → (io.listing_fingerprint, split count): a rewritten fixture
-# changes the fingerprint and is probed again
-_SCAN_PARTS: dict[str, tuple[tuple, int]] = {}
-
-# unique (or near-unique) key per fact table for the widening exchange's
+# unique (or near-unique) key per fact table for the small-scan guard's
 # hash spread — high cardinality, deterministic, never derived from rand()
 _SPREAD_KEYS: dict[str, tuple[str, ...]] = {
     "events": ("event_id",),
@@ -44,64 +40,28 @@ _SPREAD_KEYS: dict[str, tuple[str, ...]] = {
     "embeddings": ("vec_id",),
     "lineitem": ("l_orderkey", "l_linenumber"),
     "orders": ("o_orderkey",),
-    "part": ("p_partkey",),
-    "supplier": ("s_suppkey",),
-    "customer": ("c_custkey",),
 }
 
 
-def _fact(spark: SparkSession, sf_dir: str, table: str,
-          widen: bool = True) -> DataFrame:
-    """Read a FACT table with the small-scan parallelism guard: the sf
-    fixtures arrive as one single-row-group file per table (row groups are
-    the parquet split atom, so maxPartitionBytes can't subdivide them), and
-    without the guard every pre-shuffle operator — shingle explode, md5,
-    conv position explode, Arrow UDF matmuls — runs on ONE core of 32.
-    At 100 TB the guard is a structural no-op (see io.scan_min_parallel).
-    Dimension tables (nation/region/customer/...) stay unwrapped: they ride
-    broadcast joins where an extra exchange is pure loss. The split-count
-    probe (~0.1 s of driver-side RDD conversion) is memoized per path and
-    listing fingerprint, the rule ``io.read_table`` memoizes schemas by, so
-    a fixture rewritten within a session is probed again."""
-    from tsrollup.io import (listing_fingerprint, parquet_split_atoms,
-                             read_parquet, scan_min_parallel)
+def _fact(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """Read a FACT table through the small-scan guard
+    (``io.scan_min_parallel``): the scan is hash-spread on the table's key
+    only where the file's row groups deny the splits Spark planned for it
+    — row groups are the parquet split atom, so a one-row-group file
+    planned as 32 splits would otherwise run every pre-shuffle operator
+    (shingle explode, md5, Arrow UDF matmuls) on ONE core. A table Spark
+    plans as one split, or one with enough row groups, is read as is.
+    Dimension tables (nation/region/customer/...) are read directly: they
+    ride broadcast joins where an extra exchange is pure loss."""
+    from tsrollup.io import read_parquet, scan_min_parallel
 
     path = f"{sf_dir}/{table}.parquet"
-    df = read_parquet(spark, path)
-    if not widen:
-        # scan→aggregate / window-first queries opt OUT: their map-side
-        # partial aggregation (or their first keyed exchange) already
-        # reduces before the only shuffle they need, so a widening
-        # exchange of the full projected rows is pure loss (measured
-        # +0.1–0.8 s per row at sf1.0); the heavy pre-shuffle compute the
-        # guard exists for isn't there
-        return df
-    fp = listing_fingerprint(path)
-    hit = _SCAN_PARTS.get(path)
-    if hit is not None and fp is not None and hit[0] == fp:
-        n = hit[1]
-    else:
-        n = df.rdd.getNumPartitions()
-        # clamp by the ROW-GROUP count: nominal size-based splits whose byte
-        # range holds no row-group start read nothing, so a one-row-group
-        # file "has" 32 splits but scans on ONE core (the round-5 sf1.0
-        # cliff: every documents/events query serialized its pre-shuffle
-        # compute while 31 tasks finished empty)
-        atoms = parquet_split_atoms(
-            path, cap=max(64, spark.sparkContext.defaultParallelism))
-        if atoms is not None:
-            n = min(n, atoms)
-        if fp is not None:
-            _SCAN_PARTS[path] = (fp, n)
-    # hash-spread on the table's unique key, not round-robin: round-robin
-    # pays a per-input-partition local sort (sortBeforeRepartition) that
-    # runs on the scan's few real tasks — the serial bottleneck again
-    return scan_min_parallel(df, known_partitions=n,
-                             spread_cols=_SPREAD_KEYS.get(table))
+    return scan_min_parallel(read_parquet(spark, path), path,
+                             _SPREAD_KEYS[table])
 
 
-def _docs(spark: SparkSession, sf_dir: str, widen: bool = True) -> DataFrame:
-    return _fact(spark, sf_dir, "documents", widen=widen)
+def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _fact(spark, sf_dir, "documents")
 
 
 def _tokenized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -239,7 +199,7 @@ def _cache(sf_dir: str, tag: str) -> str:
     """Per-(sf, tag) cache dir that PERSISTS across invocations (unlike
     ``_scratch``) — for stored indexes whose whole point is train-once
     reuse. Callers must key ``tag`` by anything that invalidates the cached
-    artifact: the input (row count / size / mtime) AND the producing code
+    artifact: the input (``_input_fp``) AND the producing code
     (``_code_fp`` over every module the artifact's values depend on)."""
     base = os.path.join(
         os.environ.get("TSROLLUP_BENCH_CACHE", "/tmp/tsrollup-bench"),
@@ -260,6 +220,19 @@ def _code_fp(*modules) -> str:
     blobs = [Path(__file__).read_bytes()]
     blobs += [Path(m.__file__).read_bytes() for m in modules]
     return hashlib.md5(b"\x00".join(blobs)).hexdigest()[:10]
+
+
+def _input_fp(path: str) -> str:
+    """Digest of ``io.listing_fingerprint(path)`` — the path, size and
+    ns mtime of every file Spark lists — for persisted-artifact keys: a
+    fixture rewritten at the same size within the same second still
+    changes it, where a whole-second mtime would not."""
+    import hashlib
+
+    from tsrollup.io import listing_fingerprint
+
+    fp = repr(listing_fingerprint(path)).encode()
+    return hashlib.md5(fp).hexdigest()[:10]
 
 
 def q_rollup_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -608,7 +581,7 @@ def q_segment_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     derivation of the lineage (the earlier two-branch form re-ran the scan
     and window twice; plan-guarded). Merged to free an oracle slot for
     range_join."""
-    ev = _fact(spark, sf_dir, "events", widen=False)
+    ev = _fact(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     prev_us = F.unix_micros(F.lag("ts").over(w).cast("timestamp"))
@@ -646,7 +619,7 @@ def q_segment_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_rolling_mean_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling mean over an ordered frame ≙ reference moving_average
     (IGN_experiment.py:190-205)."""
-    ev = _fact(spark, sf_dir, "events", widen=False)
+    ev = _fact(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(-3, 0)
     return ev.select("event_id", F.avg("value").over(w).alias("rmean"))
 
@@ -1019,7 +992,7 @@ def q_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tsrollup.features import source_drift_tv
     from tsrollup.text import tokenize_words
 
-    return source_drift_tv(tokenize_words(_docs(spark, sf_dir, widen=False)))
+    return source_drift_tv(tokenize_words(_docs(spark, sf_dir)))
 
 
 def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1032,7 +1005,7 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE division of exact int64s. Two data-sized exchanges."""
     from tsrollup.counters import retention_cohorts
 
-    return retention_cohorts(_fact(spark, sf_dir, "events", widen=False))
+    return retention_cohorts(_fact(spark, sf_dir, "events"))
 
 
 def q_group_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1044,7 +1017,7 @@ def q_group_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     window exchange; rank ≤ k prunes immediately."""
     from tsrollup.text import group_sample
 
-    return group_sample(_docs(spark, sf_dir, widen=False), k=5).select(
+    return group_sample(_docs(spark, sf_dir), k=5).select(
         "doc_id", "source", "n_chars", "sample_rank")
 
 
@@ -1143,7 +1116,7 @@ def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tsrollup.features import ks_drift
     from tsrollup.text import tokenize_words
 
-    return ks_drift(tokenize_words(_docs(spark, sf_dir, widen=False)))
+    return ks_drift(tokenize_words(_docs(spark, sf_dir)))
 
 
 def q_holt_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1219,9 +1192,7 @@ def q_grid_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     last_value IGNORE NULLS)."""
     from tsrollup.counters import grid_gapfill
 
-    # widen=False: grid_gapfill's own series repartition is the (only)
-    # spreading exchange — a widening exchange right before it is loss
-    return grid_gapfill(_fact(spark, sf_dir, "events", widen=False))
+    return grid_gapfill(_fact(spark, sf_dir, "events"))
 
 
 def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1234,7 +1205,7 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer-exact; bit-exact tail oracle."""
     from tsrollup.rollup import mad_outliers
 
-    return mad_outliers(_docs(spark, sf_dir, widen=False),
+    return mad_outliers(_docs(spark, sf_dir),
                         group_cols=("source",), value_col="n_chars", k=3)
 
 
@@ -1259,7 +1230,7 @@ def q_period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
     the self-join runs at grid grain. Bit-exact tail oracle."""
     from tsrollup.counters import period_over_period
 
-    return period_over_period(_fact(spark, sf_dir, "events", widen=False),
+    return period_over_period(_fact(spark, sf_dir, "events"),
                               series_cols=("event_type",))
 
 
@@ -1306,7 +1277,7 @@ def q_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     tail oracle."""
     from tsrollup.text import oov_rate
 
-    return oov_rate(_docs(spark, sf_dir, widen=False), vocab_size=20)
+    return oov_rate(_docs(spark, sf_dir), vocab_size=20)
 
 
 def q_funnel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1318,7 +1289,7 @@ def q_funnel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessionize's per-user exchange. Bit-exact tail oracle."""
     from tsrollup.segments import funnel_counts
 
-    return funnel_counts(_fact(spark, sf_dir, "events", widen=False))
+    return funnel_counts(_fact(spark, sf_dir, "events"))
 
 
 def q_hampel_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1331,7 +1302,7 @@ def q_hampel_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exact tail oracle."""
     from tsrollup.counters import hampel_filter
 
-    return hampel_filter(_fact(spark, sf_dir, "events", widen=False))
+    return hampel_filter(_fact(spark, sf_dir, "events"))
 
 
 def q_histogram_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1344,7 +1315,7 @@ def q_histogram_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bit-exact tail oracle."""
     from tsrollup.counters import histogram_quantile
 
-    return histogram_quantile(_fact(spark, sf_dir, "events", widen=False), 9, 10,
+    return histogram_quantile(_fact(spark, sf_dir, "events"), 9, 10,
                               series_cols=("event_type",))
 
 
@@ -1392,7 +1363,7 @@ def q_histogram_quantile_hourly(spark: SparkSession, sf_dir: str
     oracle."""
     from tsrollup.counters import histogram_quantile
 
-    ev = _fact(spark, sf_dir, "events", widen=False).withColumn(
+    ev = _fact(spark, sf_dir, "events").withColumn(
         "hour_ts", F.date_trunc("hour", F.col("ts")))
     return histogram_quantile(ev, 9, 10,
                               series_cols=("event_type", "hour_ts"))
@@ -1447,7 +1418,7 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     differ, double division does not). One exchange."""
     from tsrollup.counters import time_weighted_avg
 
-    return time_weighted_avg(_fact(spark, sf_dir, "events", widen=False))
+    return time_weighted_avg(_fact(spark, sf_dir, "events"))
 
 
 def q_quantile_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1460,7 +1431,7 @@ def q_quantile_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     definition), integer-exact in the DuckDB tail oracle."""
     from tsrollup.rollup import group_quantiles
 
-    return group_quantiles(_docs(spark, sf_dir, widen=False),
+    return group_quantiles(_docs(spark, sf_dir),
                            group_cols=("source",), value_col="n_chars")
 
 
@@ -1471,7 +1442,7 @@ def q_cadence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-series grouping; tail-oracle hash-exact."""
     from tsrollup.counters import cadence_gaps
 
-    return cadence_gaps(_fact(spark, sf_dir, "events", widen=False),
+    return cadence_gaps(_fact(spark, sf_dir, "events"),
                         cadence_seconds=3600)
 
 
@@ -1629,7 +1600,7 @@ def q_disorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange."""
     from tsrollup.counters import disorder_stats
 
-    return disorder_stats(_fact(spark, sf_dir, "events", widen=False))
+    return disorder_stats(_fact(spark, sf_dir, "events"))
 
 
 def q_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1711,7 +1682,7 @@ def q_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the single IEEE division."""
     from tsrollup.segments import interval_coverage
 
-    ev = _fact(spark, sf_dir, "events", widen=False).filter(F.col("ts").isNotNull())
+    ev = _fact(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     iv = ev.select("user_id", us.alias("start_us"),
                    (us + F.lit(300_000_000)).alias("end_us"))
@@ -1742,7 +1713,7 @@ def q_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     One pair-grain exchange after the bucket self-join."""
     from tsrollup.counters import spearman_matrix
 
-    return spearman_matrix(_fact(spark, sf_dir, "events", widen=False))
+    return spearman_matrix(_fact(spark, sf_dir, "events"))
 
 
 def q_threshold_episodes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1765,7 +1736,7 @@ def q_value_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact int64 div binning, one (bucket, bin) exchange."""
     from tsrollup.counters import value_heatmap
 
-    return value_heatmap(_fact(spark, sf_dir, "events", widen=False), bin_cents=500)
+    return value_heatmap(_fact(spark, sf_dir, "events"), bin_cents=500)
 
 
 def q_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1799,7 +1770,7 @@ def q_topn_others(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-group reuses the bucket partitioning."""
     from tsrollup.counters import topn_others
 
-    return topn_others(_fact(spark, sf_dir, "events", widen=False), n=3)
+    return topn_others(_fact(spark, sf_dir, "events"), n=3)
 
 
 def q_wfdb_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1885,7 +1856,7 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tsrollup.dedup import exact_dedup
 
-    return exact_dedup(_docs(spark, sf_dir, widen=False))
+    return exact_dedup(_docs(spark, sf_dir))
 
 
 def q_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2003,16 +1974,11 @@ def q_pca_whiten(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline (corpus content fingerprint + fitter-code fingerprint), so
     repeat invocations measure the steady-state projection path — the
     train-once contract, same as the stored IVF index."""
-    import pyarrow.parquet as pq
-
     from tsrollup import similarity as _sim
     from tsrollup.similarity import pca_fit, pca_project
 
     emb = _fact(spark, sf_dir, "embeddings")
-    src = f"{sf_dir}/embeddings.parquet"
-    st = os.stat(src)
-    n = pq.ParquetFile(src).metadata.num_rows
-    key = (f"pca-k4-d64-n{n}-s{st.st_size}-m{int(st.st_mtime)}"
+    key = (f"pca-k4-d64-i{_input_fp(f'{sf_dir}/embeddings.parquet')}"
            f"-c{_code_fp(_sim)}")
     model = _PCA_MEMO.get(key)
     if model is None:
@@ -2079,7 +2045,7 @@ def q_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeat calls — the frozen-encoder reuse pattern, reference
     arrythmia_experiment.py:191-193). The store key covers everything that
     invalidates the trained quantizer: index geometry (n_centroids, dim),
-    a corpus content fingerprint (row count + file size + mtime), AND a
+    a corpus content fingerprint (``_input_fp``: size and ns mtime), AND a
     trainer-code fingerprint (``_code_fp``), so a regenerated fixture with
     the same row count, a geometry change, or an edit to the Lloyd trainer
     retrains instead of silently reusing a stale store. Training itself is
@@ -2091,11 +2057,10 @@ def q_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = f"{sf_dir}/embeddings.parquet"
     n = pq.ParquetFile(src).metadata.num_rows
     emb = _fact(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    st = os.stat(src)
     # input fingerprint + trainer-code fingerprint: an edit to the Lloyd
     # trainer must retrain, not reuse a stale persisted quantizer
     from tsrollup import similarity as _sim
-    fp = f"n{n}-s{st.st_size}-m{int(st.st_mtime)}-c{_code_fp(_sim)}"
+    fp = f"i{_input_fp(src)}-c{_code_fp(_sim)}"
     store = os.path.join(_cache(sf_dir, f"ivf-c16-d64-{fp}"), "centroids")
     cent = _IVF_MEMO.get(store)
     if cent is None:
@@ -2172,18 +2137,16 @@ def q_tier_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract: parents derive from the stored child tier — in production
     run_rollup writes it, maintenance reads it), so like the IVF quantizer
     it is materialized once per corpus and REUSED: the store key carries a
-    content fingerprint (source size+mtime, window), a regenerated fixture
-    rebuilds, and repeat invocations measure the JOIN, not store
-    amortization. Both join sides read the store — one token scan + one
-    windowing-kernel pass total, and only on the first call. (The round-2
-    form joined two lazily derived frames: raw scan + kernels twice per
-    query; the round-4 form rebuilt the store every call.) Write is
-    tmp→rename so a killed run can't leave a partial store."""
+    content fingerprint (``_input_fp`` of the source, window), a
+    regenerated fixture rebuilds, and repeat invocations measure the JOIN,
+    not store amortization. Both join sides read the store — one token
+    scan + one windowing-kernel pass total, and only on the first call.
+    (The round-2 form joined two lazily derived frames: raw scan + kernels
+    twice per query; the round-4 form rebuilt the store every call.) Write
+    is tmp→rename so a killed run can't leave a partial store."""
     from tsrollup.io import read_parquet
     from tsrollup.rollup import reaggregate_tier, rollup_sequences
 
-    src = f"{sf_dir}/documents.parquet"
-    st = os.stat(src)
     # key = input fingerprint + code fingerprint over the whole producer
     # chain (tokenize_words lives in text.py, the windowing pass in
     # rollup/kernels, the glue in the entry file itself via _code_fp)
@@ -2191,7 +2154,8 @@ def q_tier_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tsrollup.rollup as _r
     import tsrollup.text as _t
     store = os.path.join(
-        _cache(sf_dir, f"tierjoin-w{W0}-s{st.st_size}-m{int(st.st_mtime)}"
+        _cache(sf_dir, f"tierjoin-w{W0}"
+               f"-i{_input_fp(f'{sf_dir}/documents.parquet')}"
                f"-c{_code_fp(_r, _k, _t)}"),
         "base")
     if not os.path.exists(store):
@@ -2250,7 +2214,7 @@ def q_one_hot_events(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    StructType)
 
     csv_dir = _scratch(sf_dir, "onehot-csv")
-    (_fact(spark, sf_dir, "events", widen=False)
+    (_fact(spark, sf_dir, "events")
      .select(F.col("event_id").cast("long"), F.col("user_id").cast("long"),
              "event_type")
      .write.mode("overwrite").option("header", True).csv(csv_dir))
@@ -2326,10 +2290,8 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir)
     edges = lsh_candidate_pairs(docs, k=4, bands=2, n=3, max_bucket=100)
-    # nodes leg: bare doc_id projection feeding a join — the widening
-    # exchange would be pure loss (scan→join, no pre-shuffle compute)
     return near_dup_clusters(
-        edges, _docs(spark, sf_dir, widen=False).select("doc_id"))
+        edges, _docs(spark, sf_dir).select("doc_id"))
 
 
 def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2370,9 +2332,7 @@ def q_segment_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-length zero-padded segments."""
     from tsrollup.segments import extract_segments
 
-    # widen=False: the user_id window exchange right after the scan is
-    # the spreading shuffle (A/B at sf1.0: 1.37 s vs 1.97 s widened)
-    ev = _fact(spark, sf_dir, "events", widen=False)
+    ev = _fact(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ev2 = ev.withColumn("pos", F.row_number().over(w) - 1)
     signal = (ev2.groupBy("user_id")
@@ -2621,7 +2581,7 @@ def q_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     One census-grain exchange."""
     from tsrollup.text import length_histogram
 
-    return length_histogram(_docs(spark, sf_dir, widen=False))
+    return length_histogram(_docs(spark, sf_dir))
 
 
 def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2632,7 +2592,7 @@ def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     caller (libm rule). One (group, digit)-grain exchange."""
     from tsrollup.counters import benford_census
 
-    return benford_census(_fact(spark, sf_dir, "events", widen=False))
+    return benford_census(_fact(spark, sf_dir, "events"))
 
 
 def q_energy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -166,29 +166,46 @@ def test_condition_is_authoritative_over_message_text():
 
 
 def test_scan_min_parallel_widens_small_scans_only(spark, tmp_path):
-    """An under-split scan is repartitioned up to the requested parallelism;
-    a scan already at/above it is returned untouched (the production
-    no-op)."""
+    """A scan whose file holds fewer row groups than the splits Spark
+    planned (capped at defaultParallelism) is hash-spread to that count;
+    one Spark plans as a single split, or one whose row groups grant the
+    planned splits, is returned untouched (the production no-op)."""
     import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from tsrollup.io import scan_min_parallel
 
-    p = str(tmp_path / "small")
-    pd.DataFrame({"x": range(100)}).to_parquet(p + ".parquet")
-    df = spark.read.parquet(p + ".parquet")
+    one = str(tmp_path / "one.parquet")
+    pd.DataFrame({"x": range(20_000)}).to_parquet(one)
+    df = spark.read.parquet(one)
     assert df.rdd.getNumPartitions() == 1
-    widened = scan_min_parallel(df, min_partitions=8)
-    assert widened.rdd.getNumPartitions() == 8
-    assert widened.count() == 100
-    # already wide enough → same plan object, no repartition inserted
-    wide = df.repartition(8)
-    assert scan_min_parallel(wide, min_partitions=4) is wide
+    assert scan_min_parallel(df, one, ("x",)) is df
+    many = str(tmp_path / "many.parquet")
+    pq.write_table(pa.table({"x": range(20_000)}), many,
+                   row_group_size=2_000)  # 10 row groups
+    keys = ("spark.sql.files.maxPartitionBytes",
+            "spark.sql.files.openCostInBytes")
+    before = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set(keys[0], "4k")
+        spark.conf.set(keys[1], "0")
+        df = spark.read.parquet(one)
+        assert df.rdd.getNumPartitions() > 4
+        widened = scan_min_parallel(df, one, ("x",))
+        assert widened.rdd.getNumPartitions() == 4  # local[4]
+        assert widened.count() == 20_000
+        wide = spark.read.parquet(many)
+        assert scan_min_parallel(wide, many, ("x",)) is wide
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
 
 
 def test_parquet_split_atoms_counts_row_groups(tmp_path):
     """Row groups are the parquet split atom: the probe must report the
     ROW-GROUP count (what scan tasks can actually parallelize over), not
-    the file count, and it must cap early and refuse non-parquet input."""
+    the file count, and it must refuse non-parquet input."""
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -203,16 +220,6 @@ def test_parquet_split_atoms_counts_row_groups(tmp_path):
     tbl = pa.Table.from_pandas(pd.DataFrame({"x": range(1000)}))
     pq.write_table(tbl, many, row_group_size=100)  # 10 row groups
     assert parquet_split_atoms(many) == 10
-    # cap stops early at file granularity — it may overshoot within the
-    # final footer read, the caller only asks "is it below my target"
-    assert parquet_split_atoms(many, cap=4) >= 4
-
-    d = tmp_path / "dir"
-    d.mkdir()
-    pd.DataFrame({"x": range(10)}).to_parquet(str(d / "a.parquet"))
-    pq.write_table(tbl, str(d / "b.parquet"), row_group_size=500)
-    (d / "_SUCCESS").write_text("")  # marker files are skipped
-    assert parquet_split_atoms(str(d)) == 3
 
     notpq = tmp_path / "x.parquet"
     notpq.write_text("not parquet")

@@ -56,10 +56,11 @@ def test_pricing_summary_pushes_partial_agg(spark):
     df = entrymod.q_pricing_summary(spark, "/root/testdata/sf0.001")
     plan = _plan(df)
     # exactly one DATA-DEPENDENT (hash) exchange — the agg's. The small-scan
-    # guard's widening repartition (io.scan_min_parallel) is expected on
-    # the single-row-group fixtures and absent at real scale; whether it
-    # spreads round-robin or by hash on the table key, it carries the
-    # REPARTITION_BY_NUM tag and must not count as an aggregation shuffle.
+    # guard's hash spread (io.scan_min_parallel) appears only where the
+    # file's row groups deny the splits Spark planned (not under these
+    # session confs, where the fixture plans as one split); where it does,
+    # it carries the REPARTITION_BY_NUM tag and must not count as an
+    # aggregation shuffle.
     # Partial agg must still sit between the scan side and the hash
     # exchange (map-side combine).
     import re

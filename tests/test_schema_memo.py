@@ -1,7 +1,6 @@
 """``io.read_table``'s schema memo: a parquet read of an unchanged local
 listing declares the schema it inferred before and runs no Spark job; any
-change to the listing infers again. ``__spark_entry__._fact``'s split-count
-memo is keyed by the same listing fingerprint."""
+change to the listing infers again."""
 
 from __future__ import annotations
 
@@ -163,34 +162,3 @@ def test_listing_fingerprint_follows_spark_listing(tmp_path):
     assert listing_fingerprint("file://" + str(d)) is not None
     for never in ("hdfs://nn/t", str(d / "*.parquet"), str(tmp_path / "no")):
         assert listing_fingerprint(never) is None
-
-
-def test_fact_split_count_follows_a_rewritten_fixture(spark, tmp_path):
-    """The split-count memo is keyed by the listing fingerprint: a fixture
-    rewritten within a session is probed again instead of keeping its old
-    count."""
-    import numpy as np
-
-    import __spark_entry__ as entry
-
-    sf = str(tmp_path / "sf")
-    os.makedirs(sf)
-    path = f"{sf}/events.parquet"
-    ids = np.random.default_rng(0).integers(0, 1 << 62, 20_000)
-    tbl = pa.table({"event_id": pa.array(ids, pa.int64())})
-    pq.write_table(tbl, path)  # one row group, ~160 KB
-    confs = {"spark.sql.files.maxPartitionBytes": "16k",
-             "spark.sql.files.openCostInBytes": "0"}
-    before = {k: spark.conf.get(k) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        assert spark.read.parquet(path).rdd.getNumPartitions() > 4
-        entry._fact(spark, sf, "events")
-        assert entry._SCAN_PARTS[path][1] == 1  # clamped to one row group
-        pq.write_table(tbl, path, row_group_size=5_000)  # four row groups
-        entry._fact(spark, sf, "events")
-        assert entry._SCAN_PARTS[path][1] == 4
-    finally:
-        for k, v in before.items():
-            spark.conf.set(k, v)

@@ -1,15 +1,23 @@
 """Local stand-in for the driver's correctness gate: run each queries() entry
 on Spark at sf0.01 and its oracle_sql() in DuckDB over the same parquet,
 compare row count + column names + order-insensitive values (exact for
-ints/strings, bitwise for floats unless --approx).
+ints/strings, bitwise for floats).
 
-Usage: python tools/check_correctness.py [query ...]
+Usage: python tools/check_correctness.py [--json PATH] [query ...]
+
+``--json PATH`` also writes a per-query correctness ledger: a JSON object
+naming the scale factor, whose ``queries`` list holds one record per query
+run with its name, status (OK / FAIL / ROWS-ONLY), Spark row count and
+seconds (build + collect).
 """
 
 from __future__ import annotations
 
+import argparse
+import json
 import os
 import sys
+import time
 
 import duckdb
 import numpy as np
@@ -65,7 +73,12 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from tsrollup.session import get_spark
 
-    only = set(sys.argv[1:])
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--json", metavar="PATH",
+                    help="also write one record per query to PATH")
+    ap.add_argument("query", nargs="*", help="query names (default: all)")
+    args = ap.parse_args()
+    only = set(args.query)
     con = duckdb.connect()
     for t in TABLES:
         p = f"{SF}/{t}.parquet"
@@ -74,35 +87,45 @@ def main() -> int:
     spark = get_spark("correctness", master="local[8]")
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    failed = []
+    records = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        rec = {"name": name, "status": "FAIL", "rows": None, "seconds": None}
+        records.append(rec)
+        t0 = time.perf_counter()
         try:
             spdf = fn(spark, SF).toPandas()
         except Exception as e:  # noqa: BLE001
-            failed.append(name)
             print(f"FAIL {name}: spark error {str(e)[:300]}")
             continue
+        rec["seconds"] = round(time.perf_counter() - t0, 3)
+        rec["rows"] = len(spdf)
         if name not in oracles:
+            rec["status"] = "ROWS-ONLY"
             print(f"ROWS-ONLY {name}: {len(spdf)} rows "
                   f"({len(spdf.columns)} cols)")
             continue
         try:
             dpdf = con.sql(oracles[name]).df()
         except Exception as e:  # noqa: BLE001
-            failed.append(name)
             print(f"FAIL {name}: duckdb error {str(e)[:300]}")
             continue
         errs = compare(name, spdf, dpdf)
         if errs:
-            failed.append(name)
             print(f"FAIL {name} ({len(spdf)} rows):")
             for e in errs:
                 print(f"   {e}")
         else:
+            rec["status"] = "OK"
             print(f"OK   {name}: {len(spdf)} rows match exactly")
     spark.stop()
+    failed = [r["name"] for r in records if r["status"] == "FAIL"]
+    if args.json:
+        with open(args.json, "w") as f:
+            json.dump({"sf": os.path.basename(SF.rstrip("/")),
+                       "queries": records}, f, indent=1)
+            f.write("\n")
     print(f"\n{'ALL GREEN' if not failed else 'FAILED: ' + ', '.join(failed)}")
     return 1 if failed else 0
 

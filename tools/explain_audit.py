@@ -124,9 +124,13 @@ def main() -> int:
         "equi-join on the bucket); their",
         "MANY-SHUFFLES likewise count the tiny post-histogram marginal",
         "aggregations (one raw-data exchange each).",
-        "`guard` counts the small-scan RoundRobin repartition",
-        "(io.scan_min_parallel — present only on under-split fixture files,",
-        "structurally absent at production split counts).", "",
+        "`guard` counts the small-scan guard's hash repartition on the",
+        "fact table's key (io.scan_min_parallel): it fires only when the",
+        "file holds fewer row groups than min(splits Spark planned,",
+        "defaultParallelism), so a fact file Spark plans as one split is",
+        "never widened, and a table with row groups for every core never",
+        "is either. `guard` also counts any other REPARTITION_BY_NUM",
+        "exchange (a numbered repartition in query code).", "",
         hdr,
         "|---" * 12 + "|",
     ]

@@ -122,6 +122,16 @@ _INFER_CONFS = ("spark.sql.parquet.mergeSchema",
 # entry per path, so a store that changes every step does not grow it
 _SCHEMAS: dict = {}
 
+# the session confs Spark plans file splits from; a memoized guard
+# decision also needs these (and defaultParallelism) unchanged
+_SPLIT_CONFS = ("spark.sql.files.maxPartitionBytes",
+                "spark.sql.files.openCostInBytes",
+                "spark.sql.files.minPartitionNum")
+
+# path → ((split confs, defaultParallelism, listing fingerprint), target);
+# target 0 = no widening (see scan_min_parallel)
+_SCAN_PARTS: dict = {}
+
 
 def read_parquet(spark: SparkSession, path: str,
                  base_path: str | None = None,
@@ -233,86 +243,64 @@ def write_table(df: DataFrame, ident: str, mode: str = "overwrite",
             spark.conf.set(conf_key, prev)
 
 
-def parquet_split_atoms(path: str, cap: int = 1 << 30) -> int | None:
-    """Count the parquet ROW GROUPS under ``path`` (file or directory) — the
-    true split atom. ``getNumPartitions()`` reports size-based splits, but a
-    scan task whose byte range contains no row-group START reads nothing, so
-    a single-row-group file scans as ONE working task no matter how many
-    nominal splits the size formula produces (observed: the sf1.0 fixtures
-    are one row group per table → 32 nominal splits, 31 of them empty, and
-    every per-doc operator serialized on one core of 32).
-
-    Stops early once ``cap`` atoms are found: a production table carries
-    orders of magnitude more row groups than cores, and the caller only needs
-    to know whether the count is BELOW its parallelism target — so at scale
-    this touches a handful of footers, never the full manifest. Returns None
-    when the layout isn't plain parquet files (caller falls back to the
-    split count)."""
+def parquet_split_atoms(path: str) -> int | None:
+    """The ROW-GROUP count of the parquet file ``path``: the split atom.
+    ``getNumPartitions()`` reports size-based splits, but a scan task whose
+    byte range contains no row-group START reads nothing, so a
+    single-row-group file scans as ONE working task however many nominal
+    splits the size formula plans. Reads one footer; None when ``path`` is
+    not a parquet file it can read (no claim)."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    if os.path.isdir(path):
-        files = sorted(
-            os.path.join(path, f) for f in os.listdir(path)
-            if f.endswith((".parquet", ".parq")) and not f.startswith(("_", ".")))
-    elif os.path.isfile(path):
-        files = [path]
-    else:
+    try:
+        return pq.ParquetFile(path).metadata.num_row_groups
+    except (OSError, pa.ArrowException):
         return None
-    if not files:
-        return None
-    total = 0
-    for f in files:
-        try:
-            total += pq.ParquetFile(f).metadata.num_row_groups
-        except Exception:  # noqa: BLE001 — not parquet we can read: no claim
-            return None
-        if total >= cap:
-            break
-    return total
 
 
-def scan_min_parallel(df: DataFrame,
-                      min_partitions: int | None = None,
-                      known_partitions: int | None = None,
-                      spread_cols: tuple[str, ...] | None = None) -> DataFrame:
-    """Guard against a SMALL scan serializing a wide pipeline: a table that
-    arrives as fewer splits than the session's parallelism (e.g. one file
-    with one parquet row group — row groups are the split atom, so
-    maxPartitionBytes can't cut finer) runs every pre-shuffle operator on
-    that handful of cores. Repartition up-front when, and only when, the
-    scan is below ``min_partitions`` (default: defaultParallelism); the
-    shuffled bytes are by construction tiny (the whole table fit in too few
-    splits), and explode/hash-heavy downstream work then uses the machine.
+def scan_min_parallel(df: DataFrame, path: str,
+                      spread_cols: tuple[str, ...]) -> DataFrame:
+    """The small-scan guard for ``df``, a read of the one parquet file
+    ``path``: hash-spread it on ``spread_cols`` (a high-cardinality key of
+    the table) only where the file's row groups deny the parallelism
+    Spark planned. With ``target = min(planned splits, defaultParallelism)``,
+    where the planned splits are ``df.rdd.getNumPartitions()`` (what Spark
+    plans from ``maxPartitionBytes``/``openCostInBytes``/``minPartitionNum``),
+    the scan is repartitioned to ``target`` when the file holds fewer than
+    ``target`` row groups, and returned untouched otherwise. A table Spark
+    plans as one split is never widened; a file with at least as many row
+    groups as cores never is either, so at production split counts the
+    guard is a no-op.
 
-    At production scale this is a structural NO-OP — a real table carries
-    orders of magnitude more splits than cores — so plans on big inputs are
-    untouched; only the pathological small-scan case pays one small
-    round-robin exchange.
+    Hash, not round-robin: round-robin first locally sorts every input
+    partition (sortBeforeRepartition), and on an under-split scan that
+    sort runs on the scan's few real tasks, the serial bottleneck the
+    guard exists to remove.
 
-    ``known_partitions`` lets a caller that memoizes the split-count probe
-    (the probe is ~0.1 s of driver-side RDD conversion per call) skip it —
-    see ``_fact`` in __spark_entry__.py.
-
-    ``spread_cols`` switches the widening exchange from round-robin to
-    HASH partitioning on those columns (pass a high-cardinality unique
-    key). Round-robin repartition first LOCALLY SORTS every input
-    partition (sortBeforeRepartition, for deterministic retries) — and on
-    an under-split scan that sort runs on the scan's few real tasks,
-    serializing a full-table sort onto the critical path the guard exists
-    to shorten. Hash repartition needs no sort, is retry-deterministic by
-    construction, and downstream operators keyed on the same columns can
-    reuse the partitioning outright."""
+    The probe (~0.1 s of driver-side RDD conversion plus one footer read)
+    is memoized per path under :func:`listing_fingerprint` and the
+    split-planning confs, so a rewritten file or a changed conf is probed
+    again."""
     spark = df.sparkSession
-    want = min_partitions or spark.sparkContext.defaultParallelism
-    n = (known_partitions if known_partitions is not None
-         else df.rdd.getNumPartitions())
-    if n < want:
-        if spread_cols:
-            from pyspark.sql import functions as F
+    cores = spark.sparkContext.defaultParallelism
+    fp = listing_fingerprint(path)
+    key = (tuple(spark.conf.get(k, None) for k in _SPLIT_CONFS), cores, fp)
+    hit = _SCAN_PARTS.get(path)
+    if hit is not None and hit[0] == key:
+        target = hit[1]
+    else:
+        target = min(df.rdd.getNumPartitions(), cores)
+        atoms = parquet_split_atoms(path) if target > 1 else None
+        if atoms is None or atoms >= target:
+            target = 0
+        if fp is not None:
+            _SCAN_PARTS[path] = (key, target)
+    if not target:
+        return df
+    from pyspark.sql import functions as F
 
-            return df.repartition(want, *[F.col(c) for c in spread_cols])
-        return df.repartition(want)
-    return df
+    return df.repartition(target, *[F.col(c) for c in spread_cols])
 
 
 _ICEBERG_OK: bool | None = None

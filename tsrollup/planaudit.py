@@ -37,9 +37,10 @@ def split_exchanges(plan: str) -> tuple[int, int]:
     round-robin, or tagged ``REPARTITION_BY_NUM``. No planner-inserted
     shuffle carries that tag, so it is matched by the tag, never by
     exclusion. In the audited queries that is the small-scan guard's
-    widening repartition (``io.scan_min_parallel``: fires when a fixture
-    table arrives in fewer splits than cores, structurally absent at
-    production split counts). The tag is not unique to the guard, though:
+    hash spread (``io.scan_min_parallel``: fires only when a fact file
+    holds fewer row groups than the splits Spark planned, capped at the
+    cores; structurally absent at production split counts). The tag is
+    not unique to the guard, though:
     ``rollup.salted_repartition(num_partitions=...)`` carries it too, and
     so would any other numbered repartition in query code. Such a shuffle
     is counted here as guard, not data, so an audited query must not use
