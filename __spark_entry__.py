@@ -463,16 +463,12 @@ def q_windows_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 label_length=4, shift=8, stride=4)
 
 
-def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed AS-OF join (tsrollup.joins.asof_join, union-window form —
-    ONE shuffle on the key, no range join): each event is joined to the
-    latest COMPLETED minute-tier point of its user (window end ≤ event ts) —
-    the "what did the last finished rollup window say" lookup a tier store
-    serves. Oracle: DuckDB's native ASOF JOIN over the same minute
-    aggregates. Events in their user's first minute have no completed
-    predecessor and drop out (inner)."""
-    from tsrollup.joins import asof_join
-
+def _asof_sides(spark: SparkSession, sf_dir: str
+                ) -> tuple[DataFrame, DataFrame]:
+    """The two sides of the asof family: ``left``, one row per event
+    (``event_id``, ``user_id``, ``_ts_us``), and ``minute``, the minute
+    tier per user (``m_minute``, ``m_count``, ``m_val_sum``) keyed by its
+    window end ``_te_us``, both on the exact integer-µs axis."""
     ev = _fact(spark, sf_dir, "events") \
         .select("event_id", "user_id", "ts", "value")
     # session tz is UTC → NTZ cast matches DuckDB's naive-as-UTC epoch_us
@@ -485,7 +481,20 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", F.col("m").alias("m_minute"),
                 ((F.col("m") + 1) * 60_000_000).alias("_te_us"),
                 "m_count", "m_val_sum"))
-    left = ev.select("event_id", "user_id", us.alias("_ts_us"))
+    return ev.select("event_id", "user_id", us.alias("_ts_us")), minute
+
+
+def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distributed AS-OF join (tsrollup.joins.asof_join, union-window form —
+    ONE shuffle on the key, no range join): each event is joined to the
+    latest COMPLETED minute-tier point of its user (window end ≤ event ts) —
+    the "what did the last finished rollup window say" lookup a tier store
+    serves. Oracle: DuckDB's native ASOF JOIN over the same minute
+    aggregates. Events in their user's first minute have no completed
+    predecessor and drop out (inner)."""
+    from tsrollup.joins import asof_join
+
+    left, minute = _asof_sides(spark, sf_dir)
     out = asof_join(left, minute, on="user_id",
                     left_ts="_ts_us", right_ts="_te_us",
                     attrs=("m_minute", "m_count", "m_val_sum"))
@@ -503,18 +512,7 @@ def q_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ASOF joins (>= and <=) arbitrated by the same exact delta CASE."""
     from tsrollup.joins import asof_join
 
-    ev = _fact(spark, sf_dir, "events") \
-        .select("event_id", "user_id", "ts", "value")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    minute = (ev.groupBy(
-        "user_id", (us / F.lit(60_000_000)).cast("long").alias("m"))
-        .agg(F.count("*").cast("long").alias("m_count"),
-             F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
-              .alias("m_val_sum"))
-        .select("user_id", F.col("m").alias("m_minute"),
-                ((F.col("m") + 1) * 60_000_000).alias("_te_us"),
-                "m_count", "m_val_sum"))
-    left = ev.select("event_id", "user_id", us.alias("_ts_us"))
+    left, minute = _asof_sides(spark, sf_dir)
     # how='left': the oracle's two ASOF LEFT JOINs keep every event (a
     # NULL-ts event would surface with NULL attrs there), so the Spark
     # side must too — 'inner' would silently drop such a row
@@ -538,18 +536,7 @@ def q_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     native ASOF LEFT JOIN + the same delta CASE."""
     from tsrollup.joins import asof_join
 
-    ev = _fact(spark, sf_dir, "events") \
-        .select("event_id", "user_id", "ts", "value")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    minute = (ev.groupBy(
-        "user_id", (us / F.lit(60_000_000)).cast("long").alias("m"))
-        .agg(F.count("*").cast("long").alias("m_count"),
-             F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
-              .alias("m_val_sum"))
-        .select("user_id", F.col("m").alias("m_minute"),
-                ((F.col("m") + 1) * 60_000_000).alias("_te_us"),
-                "m_count", "m_val_sum"))
-    left = ev.select("event_id", "user_id", us.alias("_ts_us"))
+    left, minute = _asof_sides(spark, sf_dir)
     out = asof_join(left, minute, on="user_id",
                     left_ts="_ts_us", right_ts="_te_us",
                     attrs=("m_minute", "m_count", "m_val_sum"),
@@ -1034,6 +1021,7 @@ def q_sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     division — no ln (the HLL linear-counting correction is documented
     downstream via hll_hit), so the DuckDB oracle matches every bit."""
     from tsrollup.dedup import _h60
+    from tsrollup.io import pin
     from tsrollup.sketches import (hll_estimate, hll_merge, hll_registers,
                                    kmv_estimate, kmv_merge, kmv_sketch)
 
@@ -1048,15 +1036,14 @@ def q_sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # registers are a max-agg, so a staged distinct is a redundant
     # full-table exchange that every sketch branch would recompute
     # (4 x 6M rows at sf1.0 — dropping it won every interleaved A/B
-    # pass, 6.9 s vs 8.2 s min). PINNED with a checkpoint-on-first-
-    # action so the scan+md5 runs once instead of once per branch
-    # (7.4 s vs 8.8 s min, every interleaved pass; honest per
-    # invocation — nothing survives across bench passes). A production
+    # pass, 6.9 s vs 8.2 s min). Pinned because the four sketch
+    # branches read it, so the scan+md5 runs once instead of once per
+    # branch (7.4 s vs 8.8 s min, every interleaved pass). A production
     # tier pipeline stores the sketch TABLE itself and never
     # recomputes any of this.
-    hashed = ev.select("mon", "day",
-                       _h60(F.col("l_orderkey").cast("string"))
-                       .alias("h")).localCheckpoint(eager=False)
+    hashed = pin(ev.select("mon", "day",
+                           _h60(F.col("l_orderkey").cast("string"))
+                           .alias("h")))
     kd = kmv_sketch(hashed, "h", ["mon"], k=64, key_is_hash=True)
     kdir = kd.select("mon", kmv_estimate(kd, k=64).alias("kmv_est"))
     km = kmv_merge(kmv_sketch(hashed, "h", ["mon", "day"], k=64,
@@ -1173,11 +1160,12 @@ def q_dtw_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pruned path is pytest-pinned bit-equal to the brute-force
     baseline and the double-loop DP reference (tests/test_dtw.py)."""
     from tsrollup.dtw import dtw_knn
+    from tsrollup.io import pin
 
-    # pin the tokenized corpus: the query-collection take and dtw_knn's
-    # own corpus pin otherwise each re-run the interpreted tokenize HOF
-    # over every doc (checkpoint-on-first-action, honest per invocation)
-    toks = _tokenized(spark, sf_dir).localCheckpoint(eager=False)
+    # the query-collection take and dtw_knn's own corpus pin read the
+    # tokenized corpus; unpinned, each re-runs the interpreted tokenize
+    # HOF over every doc
+    toks = pin(_tokenized(spark, sf_dir))
     qdf = toks.filter(F.size("tokens") >= 64).orderBy("doc_id").limit(3)
     return dtw_knn(toks, qdf, k=5, r=8, length=64)
 
@@ -1243,24 +1231,23 @@ def q_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     tested), full-outer key join, class summary via partial agg.
     Bit-exact tail oracle."""
     from tsrollup.checkpoint import table_diff
+    from tsrollup.io import pin
 
     ev = _fact(spark, sf_dir, "events")
     # BOTH snapshots from ONE scan+aggregation: the b-side's sum is the
     # conditional sum and its key set is the groups holding >= 1
     # non-error row — value-identical to aggregating the filtered table
-    # separately, for one scan instead of two. The combined frame is
-    # grain-reduced (per user-hour) and pinned checkpoint-on-first-
-    # action so table_diff's two reads share it.
+    # separately, for one scan instead of two. table_diff's two reads
+    # share the pinned per-user-hour frame.
     cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
     nonerr = F.col("event_type") != "error"
-    combined = (ev.groupBy("user_id",
-                           F.date_trunc("hour", F.col("ts")).alias("h"))
-                .agg(F.sum(cents.cast("decimal(18,0)")).cast("long")
-                     .alias("_ca"),
-                     F.sum(F.when(nonerr, cents.cast("decimal(18,0)")))
-                     .cast("long").alias("_cb"),
-                     F.count(F.when(nonerr, F.lit(1))).alias("_nb"))
-                .localCheckpoint(eager=False))
+    combined = pin(ev.groupBy("user_id",
+                              F.date_trunc("hour", F.col("ts")).alias("h"))
+                   .agg(F.sum(cents.cast("decimal(18,0)")).cast("long")
+                        .alias("_ca"),
+                        F.sum(F.when(nonerr, cents.cast("decimal(18,0)")))
+                        .cast("long").alias("_cb"),
+                        F.count(F.when(nonerr, F.lit(1))).alias("_nb")))
     a = combined.select("user_id", "h", F.col("_ca").alias("cents"))
     b = (combined.filter(F.col("_nb") > 0)
          .select("user_id", "h", F.col("_cb").alias("cents")))

@@ -1,12 +1,15 @@
-"""Guard: Arrow is the one batch format between Spark and the package's
-Python workers.
+"""Guards on the executor boundary, over the AST of every ``tsrollup/*.py``
+module and ``__spark_entry__.py``.
 
-Walks the AST of every ``tsrollup/*.py`` module and ``__spark_entry__.py``
-and fails on any reference to a pandas executor API (``mapInPandas``,
-``pandas_udf``, ``applyInPandas``). The stateful streaming operators are
-the one exception: PySpark 4.1 has no Arrow form of
+Arrow is the one batch format between Spark and the package's Python
+workers: any reference to a pandas executor API (``mapInPandas``,
+``pandas_udf``, ``applyInPandas``) fails. The stateful streaming operators
+are the one exception: PySpark 4.1 has no Arrow form of
 ``applyInPandasWithState``, so its two calls in ``streaming.py`` stay, each
 with a one-line comment giving the reason on the line above.
+
+``tsrollup.io.pin`` is the one place a frame is materialized for reuse: any
+other call of ``localCheckpoint`` or ``checkpoint`` fails.
 """
 
 from __future__ import annotations
@@ -17,6 +20,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 PANDAS_APIS = {"mapInPandas", "pandas_udf", "applyInPandas"}
 STATEFUL = "applyInPandasWithState"
+PIN_APIS = {"localCheckpoint", "checkpoint"}
 
 
 def _sources() -> list[Path]:
@@ -67,3 +71,29 @@ def test_only_the_commented_stateful_calls_remain():
                 f"{p.name}:{line} needs a one-line reason comment above"
             found.append(p.name)
     assert found == ["streaming.py", "streaming.py"], found
+
+
+def _pin_calls(tree: ast.AST, skip: ast.AST | None = None) -> list[int]:
+    """Lines of every call of a method named in ``PIN_APIS`` in ``tree``,
+    outside the subtree ``skip``. Calls, not names: ``tsrollup.checkpoint``
+    is also a module."""
+    inside = {id(n) for n in ast.walk(skip)} if skip is not None else set()
+    return [n.lineno for n in ast.walk(tree)
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+            and n.func.attr in PIN_APIS and id(n) not in inside]
+
+
+def test_only_io_pin_materializes():
+    assert _pin_calls(ast.parse(
+        "from tsrollup import checkpoint\ncheckpoint.refresh(x)\n"
+        "df.localCheckpoint(eager=False)\ndf.checkpoint()\n")) == [3, 4]
+    bad = []
+    for p in _sources():
+        tree = ast.parse(p.read_text())
+        pin = None
+        if p.name == "io.py":
+            pin = next((n for n in tree.body if isinstance(n, ast.FunctionDef)
+                        and n.name == "pin"), None)
+        bad += [f"{p.relative_to(ROOT)}:{line}"
+                for line in _pin_calls(tree, pin)]
+    assert not bad, bad

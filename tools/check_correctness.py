@@ -6,14 +6,19 @@ ints/strings, bitwise for floats).
 Usage: python tools/check_correctness.py [--json PATH] [query ...]
 
 ``--json PATH`` also writes a per-query correctness ledger: a JSON object
-naming the scale factor, whose ``queries`` list holds one record per query
-run with its name, status (OK / FAIL / ROWS-ONLY), Spark row count and
-seconds (build + collect).
+naming the scale factor, the Spark master and its ``defaultParallelism``,
+whose ``queries`` list holds one record per query run with its name, status
+(OK / FAIL / ROWS-ONLY), Spark row count, seconds (build + collect), the
+result schema and ``hash``, the sha256 of its sorted rows — so two ledgers
+also tell whether a ROWS-ONLY query returned the same rows.
+
+The session runs on ``local[$SPARK_GRAFT_CPUS]``, read as bench.py reads it.
 """
 
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import os
 import sys
@@ -26,6 +31,7 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01")
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
 
@@ -33,6 +39,19 @@ TABLES = ("region nation customer supplier part orders lineitem events "
 def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     pdf = pdf.reindex(sorted(pdf.columns), axis=1)
     return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+
+
+def row_hash(pdf: pd.DataFrame) -> str:
+    """sha256 of the rows of ``pdf`` with columns in name order, each row
+    rendered by ``repr`` of its values (arrays as lists), rows sorted."""
+    cols = sorted(pdf.columns)
+
+    def cell(v) -> str:
+        return repr(v.tolist() if isinstance(v, np.ndarray) else v)
+
+    rows = sorted("\x1f".join(map(cell, r))
+                  for r in pdf[cols].itertuples(index=False, name=None))
+    return hashlib.sha256("\n".join(rows).encode()).hexdigest()
 
 
 def compare(name: str, a: pd.DataFrame, b: pd.DataFrame) -> list[str]:
@@ -84,23 +103,27 @@ def main() -> int:
         p = f"{SF}/{t}.parquet"
         if os.path.exists(p):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    spark = get_spark("correctness", master="local[8]")
+    master = f"local[{CPUS}]"
+    spark = get_spark("correctness", master=master)
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     records = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        rec = {"name": name, "status": "FAIL", "rows": None, "seconds": None}
+        rec = {"name": name, "status": "FAIL", "rows": None, "seconds": None,
+               "schema": None, "hash": None}
         records.append(rec)
         t0 = time.perf_counter()
         try:
-            spdf = fn(spark, SF).toPandas()
+            df = fn(spark, SF)
+            spdf = df.toPandas()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error {str(e)[:300]}")
             continue
         rec["seconds"] = round(time.perf_counter() - t0, 3)
-        rec["rows"] = len(spdf)
+        rec.update(rows=len(spdf), schema=df.schema.simpleString(),
+                   hash=row_hash(spdf))
         if name not in oracles:
             rec["status"] = "ROWS-ONLY"
             print(f"ROWS-ONLY {name}: {len(spdf)} rows "
@@ -119,11 +142,14 @@ def main() -> int:
         else:
             rec["status"] = "OK"
             print(f"OK   {name}: {len(spdf)} rows match exactly")
+    parallelism = spark.sparkContext.defaultParallelism
     spark.stop()
     failed = [r["name"] for r in records if r["status"] == "FAIL"]
     if args.json:
         with open(args.json, "w") as f:
             json.dump({"sf": os.path.basename(SF.rstrip("/")),
+                       "master": master,
+                       "defaultParallelism": parallelism,
                        "queries": records}, f, indent=1)
             f.write("\n")
     print(f"\n{'ALL GREEN' if not failed else 'FAILED: ' + ', '.join(failed)}")

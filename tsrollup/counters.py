@@ -58,6 +58,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .io import pin
+
 
 def counter_increase(events: DataFrame,
                      series_cols: Sequence[str] = ("user_id", "event_type"),
@@ -183,20 +185,16 @@ def lag_coupling(events: DataFrame, type_a: str = "click",
         raise ValueError("max_lag must be >= 0")
     if bucket not in ("hour", "day"):
         raise ValueError("bucket must be 'hour' or 'day'")
-    grid = (events
-            .groupBy(F.col(user_col).alias("user_id"),
-                     F.date_trunc(bucket, F.col(ts_col)).alias("bucket_ts"))
-            .agg(F.sum(F.when(F.col(type_col) == type_a,
-                              F.col(value_col).cast("decimal(18,2)")))
-                 .cast("decimal(18,2)").alias("a"),
-                 F.sum(F.when(F.col(type_col) == type_b,
-                              F.col(value_col).cast("decimal(18,2)")))
-                 .cast("decimal(18,2)").alias("b"))
-            # pinned: both join sides below re-reference the grid, and
-            # each reference would re-run the scan+aggregation; the frame
-            # is user-bucket grain (retention-bounded), so the
-            # checkpoint-on-first-action pin is scale-safe
-            .localCheckpoint(eager=False))
+    # both join sides below read the user-bucket grid
+    grid = pin(events
+               .groupBy(F.col(user_col).alias("user_id"),
+                        F.date_trunc(bucket, F.col(ts_col)).alias("bucket_ts"))
+               .agg(F.sum(F.when(F.col(type_col) == type_a,
+                                 F.col(value_col).cast("decimal(18,2)")))
+                    .cast("decimal(18,2)").alias("a"),
+                    F.sum(F.when(F.col(type_col) == type_b,
+                                 F.col(value_col).cast("decimal(18,2)")))
+                    .cast("decimal(18,2)").alias("b")))
     lags = F.explode(F.sequence(F.lit(0), F.lit(int(max_lag)))).alias("lag")
     # hour buckets: fixed-duration (day-time) interval — hour bucket starts
     # are always 3600 s apart as instants. day buckets: CALENDAR interval —
@@ -1493,6 +1491,20 @@ def value_heatmap(events: DataFrame, ts_col: str = "ts",
                     "n"))
 
 
+def _key_bucket_cents(events: DataFrame, key_col: str, ts_col: str,
+                      value_col: str, bucket: str) -> DataFrame:
+    """The pinned (key, bucket) grid of :func:`pair_correlation` and
+    :func:`spearman_matrix`: ``_k``, ``_b`` (``date_trunc(bucket)``) and
+    ``_y``, the exact decimal(18,0) cents sum — one raw pass, K·B rows."""
+    cents = (F.col(value_col).cast("decimal(18,2)") * 100).cast("long")
+    return pin(events.filter(F.col(value_col).isNotNull()
+                             & F.col(key_col).isNotNull())
+               .groupBy(F.col(key_col).alias("_k"),
+                        F.date_trunc(bucket, F.col(ts_col)).alias("_b"))
+               .agg(F.sum(cents.cast("decimal(18,0)"))
+                    .cast("decimal(18,0)").alias("_y")))
+
+
 def pair_correlation(events: DataFrame, key_col: str = "event_type",
                      ts_col: str = "ts", value_col: str = "value",
                      bucket: str = "hour") -> DataFrame:
@@ -1517,13 +1529,13 @@ def pair_correlation(events: DataFrame, key_col: str = "event_type",
     (sqrt is correctly rounded by IEEE 754), bit-identical cross-engine.
     A constant or empty side (zero variance) emits NULL corr, not NaN.
 
-    Shape: ONE raw-data pass — the grid aggregation is materialized
-    once (localCheckpoint, the dedup-clustering discipline) because the
-    marginal rollup and BOTH sides of the co-active self-join read it;
-    without the pin Spark recomputes the full raw scan+exchange for
-    each of the three references (measured: 4 raw scans → 1; the 4
-    remaining exchanges are all grid-grain). Everything after runs at
-    grid grain (K·B rows). The
+    Shape: ONE raw-data pass — the grid aggregation is pinned once
+    (:func:`_key_bucket_cents`) because the marginal rollup and BOTH
+    sides of the co-active self-join read it; without the pin Spark
+    recomputes the full raw scan+exchange for each of the three
+    references (measured: 4 raw scans → 1; the 4 remaining exchanges
+    are all grid-grain). Everything after runs at grid grain (K·B
+    rows). The
     co-active self-join is an equi-join on the bucket producing ≤ K²
     rows per bucket — the inherent correlation-matrix cost; for large K
     cap the key set (or block the matrix) upstream. The marginal pair
@@ -1535,16 +1547,7 @@ def pair_correlation(events: DataFrame, key_col: str = "event_type",
     """
     if bucket not in _BUCKET_US and bucket != "day":
         raise ValueError(f"unsupported bucket {bucket!r}")
-    cents = (F.col(value_col).cast("decimal(18,2)") * 100).cast("long")
-    g = (events.filter(F.col(value_col).isNotNull()
-                       & F.col(key_col).isNotNull())
-         .groupBy(F.col(key_col).alias("_k"),
-                  F.date_trunc(bucket, F.col(ts_col)).alias("_b"))
-         .agg(F.sum(cents.cast("decimal(18,0)")).cast("decimal(18,0)")
-              .alias("_y")))
-    # three consumers (marginals + both self-join sides): pin the tiny
-    # grid once so the raw scan/exchange never recomputes
-    g = g.localCheckpoint(eager=True)
+    g = _key_bucket_cents(events, key_col, ts_col, value_col, bucket)
     marg = (g.groupBy("_k")
             .agg(F.count("*").cast("long").alias("_n"),
                  F.sum("_y").cast("decimal(38,0)").alias("_sx"),
@@ -1859,8 +1862,8 @@ def spearman_matrix(events: DataFrame, key_col: str = "event_type",
     bounds). corr is one division of single-rounded IEEE terms; all-tied
     (zero-variance) sides emit NULL, not NaN.
 
-    Shape: one raw pass to the bucket grid (localCheckpoint-pinned — the
-    self-join reads it twice), the co-active equi-join on the bucket
+    Shape: one raw pass to the pinned bucket grid (the self-join reads
+    it twice), the co-active equi-join on the bucket
     (≤ K² rows per bucket, the inherent matrix cost), then rank windows
     and the final moment aggregation ALL on the (key1, key2) pair
     partitioning — one pair-grain exchange.
@@ -1870,14 +1873,7 @@ def spearman_matrix(events: DataFrame, key_col: str = "event_type",
     """
     if bucket not in _BUCKET_US:
         raise ValueError(f"unsupported bucket {bucket!r}")
-    cents = (F.col(value_col).cast("decimal(18,2)") * 100).cast("long")
-    g = (events.filter(F.col(value_col).isNotNull()
-                       & F.col(key_col).isNotNull())
-         .groupBy(F.col(key_col).alias("_k"),
-                  F.date_trunc(bucket, F.col(ts_col)).alias("_b"))
-         .agg(F.sum(cents.cast("decimal(18,0)")).cast("decimal(18,0)")
-              .alias("_y")))
-    g = g.localCheckpoint(eager=True)
+    g = _key_bucket_cents(events, key_col, ts_col, value_col, bucket)
     a = g.select(F.col("_k").alias("_k1"), "_b", F.col("_y").alias("_ya"))
     b = g.select(F.col("_k").alias("_k2"), "_b", F.col("_y").alias("_yb"))
     co = a.join(b, ["_b"]).filter(F.col("_k1") < F.col("_k2"))

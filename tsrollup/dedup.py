@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .io import pin
+
 
 def _h60(col: Column, salt: int | None = None) -> Column:
     """60-bit integer hash from md5 (cross-engine deterministic)."""
@@ -290,16 +292,15 @@ def near_dup_clusters(edges: DataFrame, nodes: DataFrame | None = None,
     mutual similarity), so the round count stays small; the pointer jump
     in each round (label ← label[label]) cuts a long path to
     O(log diameter) rounds. Each round is one join + one groupBy on the
-    (small) label table; the edge list is materialized ONCE up front
-    (localCheckpoint) so the per-round lineage stays flat and the upstream
-    similarity pipeline (LSH banding, md5) is never recomputed; labels are
-    re-checkpointed each round for the same reason. Convergence is detected by an aggregate over the propagation
-    delta (one tiny action per round), not by comparing snapshots.
+    (small) label table; the edge list is pinned ONCE up front
+    (:func:`tsrollup.io.pin`) so the per-round lineage stays flat and the
+    upstream similarity pipeline (LSH banding, md5) is never recomputed;
+    labels are re-pinned each round for the same reason. Convergence is
+    detected by an aggregate over the propagation delta (one tiny action
+    per round), not by comparing snapshots.
 
-    ``reliable_checkpoints=True`` switches the per-round materialization
-    from ``localCheckpoint`` (executor-local blocks — fast, but an executor
-    loss mid-fixpoint fails the job) to reliable ``checkpoint`` into the
-    session's ``sc.setCheckpointDir`` location — the right setting for a
+    ``reliable_checkpoints=True`` makes every pin reliable (into the
+    session's ``sc.setCheckpointDir``) — the right setting for a
     1000-executor run where losing a node mid-iteration must not restart
     the whole similarity pipeline. Local/bench runs keep the default.
 
@@ -311,27 +312,18 @@ def near_dup_clusters(edges: DataFrame, nodes: DataFrame | None = None,
     so the rows are identical; ``max_iter`` bounds only the fixpoint. Ids
     that are not integers or strings, or NULL ids, take the fixpoint."""
 
-    def _pin(df: DataFrame, eager: bool = True) -> DataFrame:
-        # eager=False is checkpoint-on-first-action: the NEXT action both
-        # computes and persists the frame, so pin+measure (and pin+
-        # convergence-check below) cost ONE job instead of two — on a
-        # small graph the fixpoint is driver/job-latency bound, and each
-        # merged barrier is a full scheduler round trip saved
-        if reliable_checkpoints:
-            return df.checkpoint(eager=eager)
-        return df.localCheckpoint(eager=eager)
-    # checkpoint the DIRECTED edge list first, THEN mirror it: a union of
-    # two selects over the un-materialized edge DAG would execute the whole
-    # upstream similarity pipeline twice (the two union branches share no
-    # exchange), and the checkpoint would store every edge in both
-    # directions — materialize once, mirror the stored rows (the count
-    # below is the materializing action)
-    e = _pin(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")),
-             eager=False)
+    # pin the DIRECTED edge list first, THEN mirror it: a union of two
+    # selects over the un-pinned edge DAG would execute the whole upstream
+    # similarity pipeline twice (the two union branches share no
+    # exchange), and the pin would store every edge in both directions
+    # (the count below is the materializing action)
+    e = pin(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")),
+            reliable_checkpoints)
     n_edges = e.count()
     labels = _driver_labels(e) if n_edges <= DRIVER_FINISH_EDGES else None
     if labels is None:
-        labels = _fixpoint_labels(e, n_edges, max_iter, _pin)
+        labels = _fixpoint_labels(e, n_edges, max_iter,
+                                  reliable_checkpoints)
     out = labels.select(F.col("u").alias("doc_id"),
                         F.col("label").alias("cluster_rep"))
     if nodes is not None:
@@ -411,10 +403,10 @@ def _min_labels(u, v):
 
 
 def _fixpoint_labels(e: DataFrame, n_edges: int, max_iter: int,
-                     pin) -> DataFrame:
+                     reliable: bool) -> DataFrame:
     """``near_dup_clusters``' distributed min-label fixpoint over the pinned
     directed edges ``e`` (``u``, ``v``): ``(u, label)`` for every node.
-    ``pin(df, eager)`` materializes a round the way the caller chose."""
+    Each round's labels are pinned, reliably when ``reliable``."""
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     # scale-ADAPTIVE round partitioning: every per-round frame is
     # edge/node-sized, so the fixpoint's shuffles are sized from the
@@ -433,7 +425,8 @@ def _fixpoint_labels(e: DataFrame, n_edges: int, max_iter: int,
         spark.conf.set(conf_key, str(round_parts))
         labels = pin(sym.groupBy("u")
                      .agg(F.min("v").alias("_nbr"))
-                     .select("u", F.least("u", "_nbr").alias("label")))
+                     .select("u", F.least("u", "_nbr").alias("label")),
+                     reliable)
         for _ in range(max_iter):
             # neighbor minimum under current labels
             prop = (sym.join(labels.select(F.col("u").alias("v"),
@@ -463,7 +456,7 @@ def _fixpoint_labels(e: DataFrame, n_edges: int, max_iter: int,
                                    | (F.col("label")
                                       > F.coalesce("_ll", F.col("label"))))
                                   .alias("_chg")))
-            new_labels = pin(new_labels, eager=False)
+            new_labels = pin(new_labels, reliable)
             changed = new_labels.agg(
                 F.sum(F.col("_chg").cast("int")).alias("c")).collect()[0]["c"]
             labels = new_labels.drop("_chg")

@@ -63,6 +63,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .arrowbuf import fixed_rows
+from .io import pin
 
 _INF = np.int64(1) << 60
 
@@ -166,15 +167,12 @@ def dtw_knn(df: DataFrame, queries: DataFrame, k: int = 5, r: int = 8,
     nq = len(qids)
     qid_of = {i: qids[i] for i in range(nq)}
 
-    # pin the filtered corpus: the plan references it from FOUR jobs (the
-    # seed DP, the tau collect, the survivor DP and the final union), and
-    # without the pin each re-runs the upstream tokenize (an interpreted
-    # HOF over every doc). checkpoint-on-first-action: the first job both
-    # computes and persists, later jobs read executor-local blocks.
-    corpus = df.select(F.col(id_col).alias("doc_id"),
-                       F.col(tokens_col).alias("toks")) \
-               .filter(F.size("toks") >= length) \
-               .localCheckpoint(eager=False)
+    # FOUR jobs read the filtered corpus (the seed DP, the tau collect,
+    # the survivor DP and the final union); unpinned, each re-runs the
+    # upstream tokenize (an interpreted HOF over every doc)
+    corpus = pin(df.select(F.col(id_col).alias("doc_id"),
+                           F.col(tokens_col).alias("toks"))
+                 .filter(F.size("toks") >= length))
 
     def lb_scan(batches: Iterator[pa.RecordBatch]
                 ) -> Iterator[pa.RecordBatch]:
@@ -191,11 +189,9 @@ def dtw_knn(df: DataFrame, queries: DataFrame, k: int = 5, r: int = 8,
                 pa.array(lb.reshape(-1).astype(np.int64)),
             ], ["qi", "doc_id", "lb"])
 
-    # same rationale: the LB table feeds the seed window, the survivor
-    # filter and the final ranking — pin so the NumPy envelope scan runs
-    # once per invocation, not once per referencing job
-    lb_df = corpus.mapInArrow(lb_scan, "qi int, doc_id string, lb long") \
-                  .localCheckpoint(eager=False)
+    # the seed window, the survivor filter and the final ranking read the
+    # LB table, so the NumPy envelope scan runs once per invocation
+    lb_df = pin(corpus.mapInArrow(lb_scan, "qi int, doc_id string, lb long"))
 
     def exact(cand_ids: DataFrame) -> DataFrame:
         """Exact DTW for a (qi, doc_id) candidate list: broadcast-join the

@@ -46,6 +46,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .arrowbuf import row_slices
+from .io import pin
 
 #: default SAX breakpoints in token-value space (word-length tokens cluster
 #: around 3-8; three integer breakpoints give a 4-letter alphabet a..d)
@@ -210,6 +211,26 @@ def acf_moments(df: DataFrame, max_lag: int = 4,
                         / F.col("n_pairs").cast("double")))
 
 
+def _source_value_grid(df: DataFrame, group_col: str,
+                       tokens_col: str) -> DataFrame:
+    """The COMPLETE source × token-value grid of :func:`source_drift_tv`
+    and :func:`ks_drift`: ``source``, ``v``, ``rt`` (the source's token
+    total), ``ct`` (the value's total), ``o`` (the (source, value) count,
+    NULL where the source never emits the value) and ``n`` (the corpus
+    total). The (source, value) histogram is the one raw-token exchange;
+    it is pinned because both marginals and the grid join read it."""
+    t = df.select(F.col(group_col).alias("source"),
+                  F.explode(tokens_col).alias("v"))
+    hist = pin(t.groupBy("source", "v")
+               .agg(F.count("*").cast("long").alias("o")))
+    vals = hist.groupBy("v").agg(F.sum("o").cast("long").alias("ct"))
+    srcs = hist.groupBy("source").agg(F.sum("o").cast("long").alias("rt"))
+    n1 = vals.agg(F.sum("ct").cast("long").alias("n"))
+    return (srcs.crossJoin(F.broadcast(vals))
+            .join(hist, ["source", "v"], "left")
+            .crossJoin(F.broadcast(n1)))
+
+
 def source_drift_tv(df: DataFrame, group_col: str = "source",
                     tokens_col: str = "tokens") -> DataFrame:
     """Distribution drift of each source vs the whole corpus, as EXACT
@@ -241,22 +262,8 @@ def source_drift_tv(df: DataFrame, group_col: str = "source",
     linf_num, tv_num, tv (doubles exact below 2^53; tv ∈ [0, 1]).
     """
     d18 = "decimal(18,0)"
-    t = df.select(F.col(group_col).alias("source"),
-                  F.explode(tokens_col).alias("v"))
-    # pinned (checkpoint-on-first-action): the histogram is referenced by
-    # both marginal aggregations and the grid join — each reference would
-    # re-run the token explode+aggregation. Histogram grain is tiny at
-    # any corpus scale, so the pin is scale-safe.
-    hist = (t.groupBy("source", "v")
-            .agg(F.count("*").cast("long").alias("o"))
-            .localCheckpoint(eager=False))
-    vals = hist.groupBy("v").agg(F.sum("o").cast("long").alias("ct"))
-    srcs = hist.groupBy("source").agg(F.sum("o").cast("long").alias("rt"))
-    n1 = vals.agg(F.sum("ct").cast("long").alias("n"))
-    grid = (srcs.crossJoin(F.broadcast(vals))
-            .join(hist, ["source", "v"], "left")
-            .crossJoin(F.broadcast(n1))
-            .withColumn("_o", F.coalesce(F.col("o"), F.lit(0)).cast(d18)))
+    grid = _source_value_grid(df, group_col, tokens_col).withColumn(
+        "_o", F.coalesce(F.col("o"), F.lit(0)).cast(d18))
     dev = F.abs(F.col("_o") * F.col("n").cast(d18)
                 - F.col("rt").cast(d18) * F.col("ct").cast(d18))
     probed = grid.select("source", "rt", "n", "_o", dev.alias("_dev"))
@@ -512,22 +519,8 @@ def ks_drift(df: DataFrame, group_col: str = "source",
     from pyspark.sql import Window
 
     d18 = "decimal(18,0)"
-    t = df.select(F.col(group_col).alias("source"),
-                  F.explode(tokens_col).alias("v"))
-    # pinned (checkpoint-on-first-action): the histogram is referenced by
-    # both marginal aggregations and the grid join — each reference would
-    # re-run the token explode+aggregation. Histogram grain is tiny at
-    # any corpus scale, so the pin is scale-safe.
-    hist = (t.groupBy("source", "v")
-            .agg(F.count("*").cast("long").alias("o"))
-            .localCheckpoint(eager=False))
-    vals = hist.groupBy("v").agg(F.sum("o").cast("long").alias("ct"))
-    srcs = hist.groupBy("source").agg(F.sum("o").cast("long").alias("rt"))
-    n1 = vals.agg(F.sum("ct").cast("long").alias("n"))
-    grid = (srcs.crossJoin(F.broadcast(vals))
-            .join(hist, ["source", "v"], "left")
-            .crossJoin(F.broadcast(n1))
-            .withColumn("_o", F.coalesce(F.col("o"), F.lit(0))))
+    grid = _source_value_grid(df, group_col, tokens_col).withColumn(
+        "_o", F.coalesce(F.col("o"), F.lit(0)))
     # the COMPLETE grid makes the per-source cumsum of the value totals
     # equal the GLOBAL cumulative at every value — no second join
     ws = (Window.partitionBy("source").orderBy("v")

@@ -303,6 +303,25 @@ def scan_min_parallel(df: DataFrame, path: str,
     return df.repartition(target, *[F.col(c) for c in spread_cols])
 
 
+def pin(df: DataFrame, reliable: bool = False) -> DataFrame:
+    """``df`` materialized for reuse: the one place a frame that several
+    consumers read (join sides, aggregations, later jobs) is pinned, so the
+    plan below it — a scan, an exchange, a Python map — runs once instead
+    of once per consumer.
+
+    The pin checkpoints on first action: the next action both computes and
+    stores the frame, so a pin adds no job of its own, though under
+    adaptive execution the shuffle stages below it run when it is called.
+    Blocks are executor-local (``localCheckpoint``), lost with their
+    executor, unless ``reliable`` writes them through ``checkpoint`` into
+    the session's ``setCheckpointDir``. A pin holds the whole frame, so a
+    frame bounded by an output grain (a histogram, a bucket grid, a
+    vocabulary, an edge list) is safe at any input scale."""
+    if reliable:
+        return df.checkpoint(eager=False)
+    return df.localCheckpoint(eager=False)
+
+
 _ICEBERG_OK: bool | None = None
 
 

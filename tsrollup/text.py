@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .io import pin
+
 # tiny stopword lexicons for the n-gram-free language-ID heuristic
 LANG_STOPWORDS = {
     "en": ("the", "of", "and", "to", "in", "is", "that", "it", "was", "for"),
@@ -262,13 +264,9 @@ def collocations(df: DataFrame, k: int = 50, min_count: int = 5,
         raise ValueError("need k >= 1 and min_count >= 1")
     ws = df.select("doc_id", words(text_col).alias("_ws"))
     toks = ws.select(F.explode("_ws").alias("w"))
-    # the unigram table is referenced THREE times downstream (w1 join,
-    # w2 join, and N below) and each reference would re-run the word
-    # explode+aggregation; pinned checkpoint-on-first-action — the frame
-    # is vocabulary-grain, tiny at any corpus scale. N derives from the
-    # pinned counts (Σn ≡ total word occurrences, exact).
-    uni = toks.groupBy("w").agg(F.count("*").cast("long").alias("n")) \
-        .localCheckpoint(eager=False)
+    # the w1 join, the w2 join and N read the unigram table. N derives
+    # from the pinned counts (Σn ≡ total word occurrences, exact).
+    uni = pin(toks.groupBy("w").agg(F.count("*").cast("long").alias("n")))
     tot = uni.agg(F.sum("n").cast("long").alias("_N"))
     pairs = (ws.select(F.explode(F.expr(
                  "transform(slice(_ws, 1, size(_ws) - 1), "
