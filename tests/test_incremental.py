@@ -271,12 +271,12 @@ class TestCompactGuards:
         from tsrollup.checkpoint import compact_epochs
         _, root = self._store(spark, tmp_path, corpus)
         wm_dir = os.path.join(root, "_watermarks")
-        kept = duckdb.sql(
-            f"SELECT * FROM '{wm_dir}/*.parquet' WHERE epoch <> 7").df()
+        kept = str(tmp_path / "kept.parquet")
+        duckdb.sql(f"COPY (SELECT * FROM '{wm_dir}/*.parquet' "
+                   f"WHERE epoch <> 7) TO '{kept}' (FORMAT PARQUET)")
         shutil.rmtree(wm_dir)
         os.makedirs(wm_dir)
-        duckdb.sql("COPY kept TO '{}/part.parquet' (FORMAT PARQUET)"
-                   .format(wm_dir))
+        shutil.move(kept, os.path.join(wm_dir, "part.parquet"))
         with pytest.raises(ValueError, match="no watermark row"):
             compact_epochs(spark, root)
 
@@ -744,3 +744,183 @@ class TestRefreshLag:
         lag = refresh_lag(spark, inp, root).toPandas()
         assert (lag["watermark_seq"] == -1).all()
         assert int(lag["pending_docs"].sum()) == 40
+
+
+def _seq_file(corpus: str, path: str, lo: int, hi: int) -> None:
+    """The corpus docs with ``lo <= seq < hi`` as the one parquet file
+    ``path`` (written in place if it exists)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(corpus)
+    seqs = [int(d.rsplit("-", 1)[1]) for d in tbl["doc_id"].to_pylist()]
+    pq.write_table(tbl.filter(pa.array([lo <= q < hi for q in seqs])), path)
+
+
+def _input_files(df, inp: str) -> set[str]:
+    """Names of the files under ``inp`` that ``df`` scans."""
+    from urllib.parse import urlparse
+
+    paths = (urlparse(f).path for f in df.inputFiles())
+    return {os.path.basename(p) for p in paths if p.startswith(inp + "/")}
+
+
+def _refresh_scan(monkeypatch, spark, inp, root, epoch, **kw):
+    """refresh_incremental's result and the input files its rollup read."""
+    from tsrollup import checkpoint
+
+    seen = []
+    real = checkpoint._rolled
+
+    def spy(df, *a):
+        seen.append(_input_files(df, inp))
+        return real(df, *a)
+
+    monkeypatch.setattr(checkpoint, "_rolled", spy)
+    try:
+        n = refresh_incremental(spark, inp, root, epoch=epoch, tiers=TIERS,
+                                **kw)
+    finally:
+        monkeypatch.setattr(checkpoint, "_rolled", real)
+    return n, (seen[0] if seen else set())
+
+
+def _jobs(spark, fn, tag):
+    """``fn()``'s result and the number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    grp = f"incremental-{tag}"
+    sc.setJobGroup(grp, tag)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(spark._jsc.sc().statusTracker().getJobIdsForGroup(grp))
+
+
+class TestInputManifest:
+    """The refresh path reads only the input files no committed refresh
+    has read, and falls back to every file when a read one changed."""
+
+    @staticmethod
+    def _store(spark, tmp_path, corpus):
+        inp = str(tmp_path / "inp")
+        root = str(tmp_path / "store")
+        os.makedirs(inp)
+        _seq_file(corpus, f"{inp}/part-0.parquet", 0, 30)
+        _seq_file(corpus, f"{inp}/part-1.parquet", 30, 40)
+        assert refresh_incremental(spark, inp, root, epoch=0,
+                                   tiers=TIERS) == 40
+        return inp, root
+
+    def test_appended_file_is_the_whole_tail(self, spark, tmp_path, corpus,
+                                             monkeypatch):
+        from tsrollup.checkpoint import read_realtime
+
+        inp, root = self._store(spark, tmp_path, corpus)
+        _seq_file(corpus, f"{inp}/part-2.parquet", 40, 50)
+        view = read_realtime(spark, inp, root, tiers=TIERS)
+        assert _input_files(view, inp) == {"part-2.parquet"}
+        want = rollup_sequences(spark.read.parquet(inp), tiers=TIERS)
+        assert _rows(view) == _rows(want)
+        n, read = _refresh_scan(monkeypatch, spark, inp, root, 1)
+        assert (n, read) == (10, {"part-2.parquet"})
+        assert _rows(read_incremental(spark, root)) == _rows(want)
+        _seq_file(corpus, f"{inp}/part-3.parquet", 50, 60)
+        view = read_realtime(spark, inp, root, tiers=TIERS)
+        assert _input_files(view, inp) == {"part-3.parquet"}
+        want = rollup_sequences(spark.read.parquet(inp), tiers=TIERS)
+        assert _rows(view) == _rows(want)
+
+    def test_rewritten_consumed_file_falls_back_to_full_scan(
+            self, spark, tmp_path, corpus, monkeypatch):
+        from tsrollup.checkpoint import read_realtime
+
+        inp, root = self._store(spark, tmp_path, corpus)
+        # a consumed file is rewritten in place and gains 10 new docs: a
+        # tail of unread files alone would miss them
+        _seq_file(corpus, f"{inp}/part-1.parquet", 30, 50)
+        everything = {"part-0.parquet", "part-1.parquet"}
+        view = read_realtime(spark, inp, root, tiers=TIERS)
+        assert _input_files(view, inp) == everything
+        want = rollup_sequences(spark.read.parquet(inp), tiers=TIERS)
+        assert _rows(view) == _rows(want)
+        n, read = _refresh_scan(monkeypatch, spark, inp, root, 1)
+        assert (n, read) == (10, everything)
+        assert _rows(read_incremental(spark, root)) == _rows(want)
+        # the fallback recorded the rewritten file as read: the next tail
+        # is the next appended file again
+        _seq_file(corpus, f"{inp}/part-2.parquet", 50, 60)
+        n, read = _refresh_scan(monkeypatch, spark, inp, root, 2)
+        assert (n, read) == (10, {"part-2.parquet"})
+        want = rollup_sequences(spark.read.parquet(inp), tiers=TIERS)
+        assert _rows(read_incremental(spark, root)) == _rows(want)
+
+    def test_small_delta_writes_one_bucket_per_tier(self, spark, tmp_path,
+                                                    corpus):
+        import math
+
+        import pyarrow.parquet as pq
+
+        inp, root = self._store(spark, tmp_path, corpus)
+
+        def buckets(e):
+            edir = os.path.join(root, "data", f"epoch={e}")
+            return {b for b in os.listdir(edir) if b.startswith("bucket=")}
+
+        assert buckets(0) == {"bucket=0"}
+        assert {t for t in os.listdir(os.path.join(root, "data", "epoch=0",
+                                                   "bucket=0"))
+                if t.startswith("tier=")} == {f"tier={t}" for t in TIERS}
+        # the fan-out follows the delta's tokens over the split size
+        _seq_file(corpus, f"{inp}/part-2.parquet", 40, 60)
+        n_tok = sum(len(t) for t in
+                    pq.read_table(f"{inp}/part-2.parquet")["tokens"]
+                    .to_pylist())
+        key = "spark.sql.files.maxPartitionBytes"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "4k")
+        try:
+            refresh_incremental(spark, inp, root, epoch=1, tiers=TIERS)
+        finally:
+            spark.conf.set(key, prev)
+        want = max(1, min(8, math.ceil(4 * n_tok / 4096)))
+        assert want > 1
+        assert buckets(1) <= {f"bucket={b}" for b in range(want)}
+        assert len(buckets(1)) > 1
+
+    def test_unchanged_log_is_read_once(self, spark, tmp_path, corpus):
+        from tsrollup.checkpoint import epoch_ranges
+
+        inp, root = self._store(spark, tmp_path, corpus)
+        marks = read_watermarks(spark, root)
+        again, n = _jobs(spark, lambda: read_watermarks(spark, root),
+                         "wm-hit")
+        assert (again, n) == (marks, 0)
+        _, n = _jobs(spark, lambda: epoch_ranges(spark, root), "ranges-hit")
+        assert n == 0
+        _seq_file(corpus, f"{inp}/part-2.parquet", 40, 60)
+        refresh_incremental(spark, inp, root, epoch=1, tiers=TIERS)
+        moved, n = _jobs(spark, lambda: read_watermarks(spark, root),
+                         "wm-miss")
+        assert n >= 1 and moved != marks
+
+    def test_compaction_folds_the_log(self, spark, tmp_path, corpus,
+                                      monkeypatch):
+        from tsrollup.checkpoint import compact_epochs, epoch_ranges
+
+        inp, root = self._store(spark, tmp_path, corpus)
+        _seq_file(corpus, f"{inp}/part-2.parquet", 40, 50)
+        refresh_incremental(spark, inp, root, epoch=1, tiers=TIERS)
+        log = os.path.join(root, "_watermarks")
+        marks, ranges = read_watermarks(spark, root), epoch_ranges(spark,
+                                                                   root)
+        compact_epochs(spark, root)
+        files = [f for f in os.listdir(log) if f.endswith(".parquet")]
+        assert len(files) == 1
+        assert read_watermarks(spark, root) == marks
+        assert epoch_ranges(spark, root) == ranges
+        _seq_file(corpus, f"{inp}/part-3.parquet", 50, 60)
+        n, read = _refresh_scan(monkeypatch, spark, inp, root, 2)
+        assert (n, read) == (10, {"part-3.parquet"})
+        want = rollup_sequences(spark.read.parquet(inp), tiers=TIERS)
+        assert _rows(read_incremental(spark, root)) == _rows(want)

@@ -40,7 +40,10 @@ def main() -> int:
     ap.add_argument("--input", required=True, help="sequences table (path or, "
                     "with TSROLLUP_TABLE_FORMAT=iceberg, a catalog table)")
     ap.add_argument("--output", required=True, help="rollup output root")
-    ap.add_argument("--buckets", type=int, default=64)
+    ap.add_argument("--buckets", type=int, default=None,
+                    help="hash buckets: 64 for a checkpointed run; a "
+                    "--refresh epoch sizes its own fan-out from its delta "
+                    "unless this is given")
     ap.add_argument("--max-buckets", type=int, default=None,
                     help="bound the work of this invocation (shard/resume)")
     ap.add_argument("--bucket-lo", type=int, default=None,
@@ -126,20 +129,21 @@ def main() -> int:
         print(f"epoch {args.refresh}: rolled up {n} new doc(s)")
         spark.stop()
         return 0
+    n_buckets = 64 if args.buckets is None else args.buckets
     brange = (None if args.bucket_lo is None
               else (args.bucket_lo, args.bucket_hi))
     done = run_checkpointed(
         spark, args.input, args.output,
-        n_buckets=args.buckets, run_id=args.run_id,
+        n_buckets=n_buckets, run_id=args.run_id,
         window=args.window or BASE_WINDOW,
         compressed=args.compressed, max_buckets=args.max_buckets,
         bucket_range=brange)
     lineage = read_lineage(spark, args.output)
     n_done = lineage.filter("status = 'done'").count()
     print(f"completed {len(done)} bucket(s) this run; "
-          f"{n_done}/{args.buckets} total done")
+          f"{n_done}/{n_buckets} total done")
 
-    if n_done == args.buckets and not args.compressed:
+    if n_done == n_buckets and not args.compressed:
         from tsrollup.checkpoint import read_rollup
         from tsrollup.io import write_table
         from tsrollup.rollup import per_source_stats

@@ -20,11 +20,17 @@ Layout under ``output_root`` (all reads/writes via ``tsrollup.io``, so the
 parquet ⇄ Iceberg boundary is one config flag):
     data/bucket=<b>/tier=<t>/*.parquet   rolled-up points (or packed rows)
     _lineage/*.parquet                   one row per completed bucket
+
+and under an incremental store's root:
+    data/epoch=<e>/bucket=<b>/tier=<t>/  one refresh's delta per epoch
+    _watermarks/*.parquet                per-epoch watermark rows and the
+                                         input manifest (files each read)
 """
 
 from __future__ import annotations
 
 import functools
+import math
 import os
 import shutil
 import time
@@ -35,7 +41,8 @@ from pyspark.sql import functions as F
 
 from . import BASE_WINDOW, TIER_FACTOR
 from .arrowbuf import rows_df
-from .io import is_missing_table_error, read_table, table_format, write_table
+from .io import (is_missing_table_error, local_listing, read_files,
+                 read_table, table_format, write_table)
 from .rollup import (apply_retention, decompress_rollup, is_packed,
                      rollup_compressed, rollup_sequences)
 
@@ -177,9 +184,17 @@ def run_checkpointed(spark: SparkSession, input_path: str, output_root: str,
 # ---------------------------------------------------- incremental refresh ---
 
 # one row per (source, epoch) committed by refresh_incremental; the CURRENT
-# watermark of a source is the max over its rows
+# watermark of a source is the max over its rows. The same append carries
+# the epoch's input manifest: one row per input file the refresh read, with
+# a NULL source and the file's path, size and mtime in the last three
+# columns (NULL on watermark rows, absent from logs written before them)
 WATERMARK_SCHEMA = ("source string, max_seq long, n_docs long, epoch int, "
-                    "run_id string, committed_at string")
+                    "run_id string, committed_at string, file string, "
+                    "file_size long, file_mtime_ns long")
+
+# log path → (listing fingerprint, every row of the log); one entry per
+# path, so a log that grows every commit does not grow the memo
+_LOGS: dict = {}
 
 
 def doc_seq(col: str = "doc_id") -> Column:
@@ -196,25 +211,54 @@ def doc_seq(col: str = "doc_id") -> Column:
     return F.element_at(F.split(F.col(col), "-"), -1).try_cast("long")
 
 
+def _log_rows(spark: SparkSession, output_root: str) -> list[tuple]:
+    """Every row of the watermark log, in :data:`WATERMARK_SCHEMA` order,
+    collected once per commit: memoized per log path under its
+    :func:`~tsrollup.io.local_listing`, so a read of an unchanged log runs
+    no job. The listing is taken before the collect, so a commit racing
+    the read changes the next call's key rather than hiding behind this
+    one's. A log with no local listing (Iceberg, object stores, no
+    committed file yet) is read every time."""
+    path = f"{output_root}/_watermarks"
+    fp = local_listing(path)
+    hit = _LOGS.get(path)
+    if fp is not None and hit is not None and hit[0] == fp:
+        return hit[1]
+    rows = [tuple(r) for r in
+            _read_log(spark, path, WATERMARK_SCHEMA).collect()]
+    if fp is not None:
+        _LOGS[path] = (fp, rows)
+    return rows
+
+
 def _watermark_state(spark: SparkSession, output_root: str
-                     ) -> tuple[dict[str, int], set[int]]:
-    """(per-source high-water marks, committed epoch ids). Bounded
-    driver-side collect: one row per (source, epoch) — |sources| is small
-    by contract (the mixture/per_source_stats argument)."""
+                     ) -> tuple[dict[str, int], set[int], set[tuple]]:
+    """(per-source high-water marks, committed epoch ids, input manifest)
+    from one read of the log. Bounded driver-side state: one row per
+    (source, epoch) — |sources| is small by contract (the
+    mixture/per_source_stats argument) — plus one per input file a refresh
+    read. The manifest is the set of ``(path, size, mtime_ns)`` committed
+    refreshes read, so duplicate rows (a convergent re-run, an interrupted
+    log fold) collapse."""
     marks: dict[str, int] = {}
     epochs: set[int] = set()
-    for src_name, max_seq, e in _watermark_rows(spark, output_root):
-        marks[src_name] = max(marks.get(src_name, -1), max_seq)
-        epochs.add(e)
-    return marks, epochs
+    manifest: set[tuple] = set()
+    for src_name, max_seq, _, e, _, _, f, size, mtime in _log_rows(
+            spark, output_root):
+        if src_name is not None:
+            marks[src_name] = max(marks.get(src_name, -1), max_seq)
+            epochs.add(e)
+        elif f is not None:
+            manifest.add((f, size, mtime))
+    return marks, epochs, manifest
 
 
 def _watermark_rows(spark: SparkSession, output_root: str
                     ) -> list[tuple[str, int, int]]:
-    """(source, max_seq, epoch) of every watermark row, collected once."""
-    wm = _read_log(spark, f"{output_root}/_watermarks", WATERMARK_SCHEMA)
-    return [(r["source"], int(r["max_seq"]), int(r["epoch"]))
-            for r in wm.select("source", "max_seq", "epoch").collect()]
+    """(source, max_seq, epoch) of every watermark row; the manifest rows,
+    whose source is NULL, are left out."""
+    return [(r[0], r[1], r[3]) for r in _log_rows(spark, output_root)
+            if r[0] is not None]
 
 
 def read_watermarks(spark: SparkSession, output_root: str) -> dict[str, int]:
@@ -233,6 +277,37 @@ def _watermark_threshold(wm: dict[str, int]) -> Column:
         entries += [F.lit(k), F.lit(v)]
     return F.coalesce(F.element_at(F.create_map(*entries), F.col("source")),
                       F.lit(-1))
+
+
+def _unconsumed(spark: SparkSession, input_path: str, manifest: set[tuple]
+                ) -> tuple[DataFrame, list[tuple] | None]:
+    """(scan, files): the input files no committed refresh has read yet,
+    from one local listing of ``input_path``, and the ``(path, size,
+    mtime_ns)`` of exactly the files the scan reads.
+
+    A listed file is consumed when the manifest holds its path, size and
+    mtime: a committed refresh read every doc of that file content, so its
+    docs are at or below the watermarks and the ``seq > watermark`` filter
+    would drop them all. The scan falls back to every listed file when the
+    manifest cannot vouch for the rest — it is empty (a store written
+    before manifests, or none yet), or a file it holds was rewritten in
+    place (same path, new size or mtime). Without a local listing of data
+    files only (an object store, a glob, Iceberg, a streaming sink) the
+    scan is the whole input and ``files`` is None. Either way the filter
+    on top still decides every row; this only skips files whose rows it
+    would drop."""
+    listing = local_listing(input_path)
+    # parquet summary files and a streaming sink's log are listed but hold
+    # no docs; Spark's own reader decides which files such a table holds
+    if listing is None or any(os.path.basename(p).startswith("_")
+                              or "_spark_metadata" in p.split(os.sep)
+                              for p, _, _ in listing):
+        return read_table(spark, input_path), None
+    held = {p for p, _, _ in manifest}
+    rewritten = any(f[0] in held and f not in manifest for f in listing)
+    files = (list(listing) if not manifest or rewritten
+             else [f for f in listing if f not in manifest])
+    return read_files(spark, input_path, [p for p, _, _ in files]), files
 
 
 def refresh_lag(spark: SparkSession, input_path: str,
@@ -277,7 +352,7 @@ def refresh_incremental(spark: SparkSession, input_path: str,
                         window: int = BASE_WINDOW,
                         tiers: dict[str, int] = TIER_FACTOR,
                         seq: Column | None = None,
-                        n_buckets: int = 8,
+                        n_buckets: int | None = None,
                         compressed: bool = False) -> int:
     """Continuous-aggregate REFRESH for an append-only corpus: roll up only
     the documents that arrived since the last refresh and commit them as a
@@ -292,16 +367,36 @@ def refresh_incremental(spark: SparkSession, input_path: str,
     (watermarks are a tiny driver-side dict by contract), new sources
     default to watermark −1 (fully included).
 
+    The scan reads only the input files no committed refresh has read: the
+    input is listed once, and the files whose ``(path, size, mtime_ns)``
+    the input manifest in ``_watermarks/`` holds are skipped, since the
+    filter would drop every doc in them. A consumed file rewritten in
+    place, a store with no manifest rows (none yet, or written before
+    manifests) and an input with no local listing (object store, glob,
+    Iceberg) fall back to scanning every file, so the rows never depend on
+    the manifest. The manifest rows of the files read ride in the same
+    append as the epoch's watermark rows, so a crash before that commit
+    leaves neither behind.
+
+    ``n_buckets=None`` sizes the epoch's hash fan-out from its delta:
+    ``ceil(4 · Σ size(tokens) / spark.sql.files.maxPartitionBytes)``
+    clamped to 1..8, i.e. one bucket per scan split's worth of int32
+    tokens. The token sum is one more column of the stats aggregation, so
+    sizing costs no job; a small delta writes one file per tier instead of
+    8, and a large one keeps the 8-bucket layout. An explicit
+    ``n_buckets`` is used as given.
+
     Idempotency / crash-safety, in commit order:
 
     1. delta rollup → DYNAMIC partition overwrite of
        ``data/epoch=<e>/bucket=<b>/tier=<t>`` — only THIS epoch's
        partitions are touched; earlier epochs are immutable.
-    2. per-source watermark rows (epoch-tagged) appended AFTER the data
-       commit. A crash between 1 and 2 leaves the watermarks unmoved, so
-       the re-run recomputes the SAME delta (same filter ⇒ same bytes)
-       and overwrites the same epoch partitions — convergent, never
-       duplicated. Re-running a FULLY COMMITTED epoch is an up-front
+    2. per-source watermark rows (epoch-tagged) and the manifest rows of
+       the files read, appended as one file AFTER the data commit. A
+       crash between 1 and 2 leaves the watermarks and the manifest
+       unmoved, so the re-run recomputes the SAME delta (same filter ⇒
+       same bytes) and overwrites the same epoch partitions — convergent,
+       never duplicated. Re-running a FULLY COMMITTED epoch is an up-front
        no-op: its id is in the watermark table, so the call returns 0
        without touching data — if it instead recomputed "its" delta after
        still-newer docs arrived, the dynamic overwrite would REPLACE the
@@ -322,20 +417,23 @@ def refresh_incremental(spark: SparkSession, input_path: str,
     """
     if epoch < 0:
         raise ValueError("epoch must be >= 0")
-    wm, committed = _watermark_state(spark, output_root)
+    wm, committed, manifest = _watermark_state(spark, output_root)
     if epoch in committed:
         return 0  # fully committed — never rewrite an epoch's partitions
     s = seq if seq is not None else doc_seq()
-    src = read_table(spark, input_path)
+    src, files = _unconsumed(spark, input_path, manifest)
     thr = _watermark_threshold(wm)
     # stats + NULL-seq validation BEFORE the data write (the filter is
     # deterministic, so pre- and post-write stats are identical — and the
     # validation must fire before anything is committed)
+    tokens = F.col("tokens")
     stats = (src.filter(s.isNull() | (s > thr))
              .groupBy("source")
              .agg(F.max(s).cast("long").alias("max_seq"),
                   F.countDistinct("doc_id").cast("long").alias("n_docs"),
-                  F.sum(s.isNull().cast("long")).alias("n_null_seq"))
+                  F.sum(s.isNull().cast("long")).alias("n_null_seq"),
+                  F.sum(F.when(tokens.isNotNull(), F.size(tokens)))
+                  .cast("long").alias("n_tokens"))
              .collect())
     n_null = sum(int(r["n_null_seq"]) for r in stats)
     if n_null:
@@ -362,6 +460,12 @@ def refresh_incremental(spark: SparkSession, input_path: str,
                 f"{'packed' if was_packed else 'plain'} epochs but this "
                 f"refresh asked for compressed={compressed} — one store, "
                 "one mode")
+    if n_buckets is None:
+        # maxPartitionBytes as Spark parses it (the conf takes sizes like 4k)
+        split = spark._jsparkSession.sessionState().conf() \
+            .filesMaxPartitionBytes()
+        n_tok = sum(r["n_tokens"] or 0 for r in stats)
+        n_buckets = max(1, min(8, math.ceil(4 * n_tok / split)))
     out = _rolled(src.filter(s > thr), window, tiers, compressed,
                   n_buckets).withColumn("epoch", F.lit(int(epoch)))
     write_table(out, f"{output_root}/data", mode="overwrite",
@@ -369,7 +473,9 @@ def refresh_incremental(spark: SparkSession, input_path: str,
                 dynamic_overwrite=True)
     now = time.strftime("%Y-%m-%dT%H:%M:%S")
     rows = [(r["source"], int(r["max_seq"]), int(r["n_docs"]),
-             int(epoch), run_id, now) for r in stats]
+             int(epoch), run_id, now, None, None, None) for r in stats]
+    rows += [(None, None, None, int(epoch), run_id, now, *f)
+             for f in files or ()]
     write_table(rows_df(spark, rows, WATERMARK_SCHEMA),
                 f"{output_root}/_watermarks", mode="append")
     return int(sum(r["n_docs"] for r in stats))
@@ -407,7 +513,11 @@ def read_realtime(spark: SparkSession, input_path: str, output_root: str,
     real-time continuous aggregates). Readers see results identical to a
     clean rollup of the FULL input bit-for-bit (tested) no matter how far
     the refresh schedule lags, while the scan cost of the query is
-    store + delta, never the 100 TB history.
+    store + delta, never the 100 TB history: the tail scan reads only the
+    input files the manifest of committed refreshes does not hold (see
+    :func:`refresh_incremental`), and falls back to every input file when
+    the manifest is empty, a file it holds was rewritten in place, or the
+    input has no local listing.
 
     Consistency rules, matching the refresh commit protocol:
 
@@ -435,9 +545,9 @@ def read_realtime(spark: SparkSession, input_path: str, output_root: str,
     ``window``/``tiers``/``seq`` must match the store's refresh
     parameters — they define the rows the store already holds.
     """
-    wm, committed = _watermark_state(spark, output_root)
+    wm, committed, manifest = _watermark_state(spark, output_root)
     s = seq if seq is not None else doc_seq()
-    src = read_table(spark, input_path)
+    src, _ = _unconsumed(spark, input_path, manifest)
     tail = src.filter(s.isNull() | (s > _watermark_threshold(wm)))
     fresh = rollup_sequences(tail, window, tiers)
     if not committed:
@@ -602,16 +712,19 @@ def compact_epochs(spark: SparkSession, output_root: str,
 
     Rows are copied verbatim — compaction is layout-only, the row multiset
     before and after is identical (validated by row count before the swap,
-    multiset-tested). Watermarks are NOT rewritten: the committed-epoch
-    set keeps every historical epoch id reserved, so a late retry of a
-    folded epoch stays a no-op and new refreshes keep allocating fresh
-    ids. ``into_epoch`` must itself be a COMMITTED id (review finding: an
-    unreserved target — e.g. a default 0 that was never refreshed — would
-    let a later ``--refresh 0`` dynamically overwrite the whole compacted
-    history). ORPHAN epochs (data committed, watermark append lost to a
-    crash) are refused: folding one would duplicate its rows when the
-    crashed refresh's convergent re-run rewrites that epoch — retry the
-    refresh first.
+    multiset-tested). After the swap the metadata log is folded the same
+    way: ``_watermarks/`` becomes one file holding every committed row
+    verbatim (watermarks and input manifest), so readers stop paying one
+    file per commit. Watermark values are NOT rewritten: the
+    committed-epoch set keeps every historical epoch id reserved, so a
+    late retry of a folded epoch stays a no-op and new refreshes keep
+    allocating fresh ids. ``into_epoch`` must itself be a COMMITTED id
+    (review finding: an unreserved target — e.g. a default 0 that was
+    never refreshed — would let a later ``--refresh 0`` dynamically
+    overwrite the whole compacted history). ORPHAN epochs (data
+    committed, watermark append lost to a crash) are refused: folding one
+    would duplicate its rows when the crashed refresh's convergent re-run
+    rewrites that epoch — retry the refresh first.
 
     Commit protocol on a plain filesystem: write the compacted layout to a
     sibling ``data.compact``, validate its row count equals the source,
@@ -637,7 +750,7 @@ def compact_epochs(spark: SparkSession, output_root: str,
         os.rename(old, data)
     shutil.rmtree(tmp, ignore_errors=True)
     shutil.rmtree(old, ignore_errors=True)
-    _, committed = _watermark_state(spark, output_root)
+    _, committed, _ = _watermark_state(spark, output_root)
     if not committed:
         raise ValueError(f"no committed epochs under {output_root}")
     if into_epoch is None:
@@ -668,7 +781,23 @@ def compact_epochs(spark: SparkSession, output_root: str,
     os.rename(data, old)
     os.rename(tmp, data)
     shutil.rmtree(old, ignore_errors=True)
+    _fold_log(spark, output_root)
     return int(n)
+
+
+def _fold_log(spark: SparkSession, output_root: str) -> None:
+    """Rewrite the watermark log as one file holding every committed row
+    verbatim: append the folded file, then delete the files it replaces.
+    The listing is taken before the rows are read, so only files whose
+    rows are in the fold are deleted. A crash in between leaves duplicate
+    rows only, which every reader tolerates: a watermark is the max per
+    source, :func:`epoch_ranges` dedups, and the manifest is a set."""
+    log = f"{output_root}/_watermarks"
+    folded = local_listing(log) or ()
+    write_table(rows_df(spark, _log_rows(spark, output_root),
+                        WATERMARK_SCHEMA), log, mode="append")
+    for path, _, _ in folded:
+        os.remove(path)
 
 
 def apply_retention_to_store(spark: SparkSession, output_root: str,

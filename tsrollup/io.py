@@ -109,6 +109,32 @@ def listing_fingerprint(ident: str) -> tuple | None:
     return tuple(sorted(out)) or None
 
 
+def local_listing(ident: str) -> tuple | None:
+    """:func:`listing_fingerprint` of a parquet table, None for an Iceberg
+    table name: the files a reader of ``ident`` would see, or None when
+    there is no local listing to vouch for them."""
+    return None if table_format() == "iceberg" else listing_fingerprint(ident)
+
+
+def read_files(spark: SparkSession, ident: str,
+               paths: list[str]) -> DataFrame:
+    """The files ``paths`` of the local parquet table ``ident`` (taken from
+    its :func:`local_listing`), read with the table's schema, memoized or
+    inferred by :func:`read_parquet`, and with ``ident`` as the base path
+    of a directory, so partition columns and column types are those of a
+    read of the whole table. No paths is an empty frame that runs no
+    task."""
+    from urllib.parse import urlparse
+
+    schema = read_parquet(spark, ident).schema
+    if not paths:
+        return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+    r = spark.read.schema(schema)
+    if os.path.isdir(urlparse(ident).path):
+        r = r.option("basePath", ident)
+    return r.parquet(*paths)
+
+
 # the session confs that change what parquet schema inference returns for
 # the same files; a memo hit also needs these unchanged
 _INFER_CONFS = ("spark.sql.parquet.mergeSchema",
