@@ -797,6 +797,17 @@ def _jobs(spark, fn, tag):
     return out, len(spark._jsc.sc().statusTracker().getJobIdsForGroup(grp))
 
 
+def _log_marks(spark, root):
+    """The watermarks of a fresh read of the whole log, past every memo."""
+    from pyspark.sql import functions as F
+
+    from tsrollup.checkpoint import WATERMARK_SCHEMA
+
+    log = spark.read.schema(WATERMARK_SCHEMA).parquet(f"{root}/_watermarks")
+    return {r[0]: r[1] for r in log.filter("source IS NOT NULL")
+            .groupBy("source").agg(F.max("max_seq")).collect()}
+
+
 class TestInputManifest:
     """The refresh path reads only the input files no committed refresh
     has read, and falls back to every file when a read one changed."""
@@ -900,9 +911,61 @@ class TestInputManifest:
         assert n == 0
         _seq_file(corpus, f"{inp}/part-2.parquet", 40, 60)
         refresh_incremental(spark, inp, root, epoch=1, tiers=TIERS)
+        # the refresh wrote its rows through to the memo: no job
         moved, n = _jobs(spark, lambda: read_watermarks(spark, root),
-                         "wm-miss")
-        assert n >= 1 and moved != marks
+                         "wm-through")
+        assert n == 0 and moved != marks
+        assert moved == _log_marks(spark, root)
+
+    def test_foreign_log_file_is_collected(self, spark, tmp_path, corpus,
+                                           monkeypatch):
+        """A file another writer appends to ``_watermarks/`` is not this
+        refresh's write: the next read collects and sees its rows, whether
+        it lands after the refresh or between its start and its append."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from tsrollup import checkpoint
+
+        inp, root = self._store(spark, tmp_path, corpus)
+        log = os.path.join(root, "_watermarks")
+
+        def foreign(name, source, seq):
+            pq.write_table(pa.table({
+                "source": [source], "max_seq": pa.array([seq], pa.int64()),
+                "n_docs": pa.array([1], pa.int64()),
+                "epoch": pa.array([90], pa.int32()), "run_id": ["other"],
+                "committed_at": ["t"], "file": pa.array([None], pa.string()),
+                "file_size": pa.array([None], pa.int64()),
+                "file_mtime_ns": pa.array([None], pa.int64())}),
+                os.path.join(log, name))
+
+        marks = read_watermarks(spark, root)
+        foreign("part-foreign-0.parquet", "zz", 999)
+        seen, n = _jobs(spark, lambda: read_watermarks(spark, root),
+                        "wm-foreign-after")
+        assert n >= 1 and seen == {**marks, "zz": 999}
+        real = checkpoint.write_table
+
+        def racing(df, ident, *a, **kw):
+            if ident == log:
+                foreign("part-foreign-1.parquet", "yy", 7)
+            return real(df, ident, *a, **kw)
+
+        monkeypatch.setattr(checkpoint, "write_table", racing)
+        _seq_file(corpus, f"{inp}/part-2.parquet", 40, 50)
+        refresh_incremental(spark, inp, root, epoch=1, tiers=TIERS)
+        monkeypatch.setattr(checkpoint, "write_table", real)
+        seen, n = _jobs(spark, lambda: read_watermarks(spark, root),
+                        "wm-foreign-race")
+        assert n >= 1 and seen["yy"] == 7 and seen["zz"] == 999
+        assert seen == _log_marks(spark, root)
+        # with the log read again, the next refresh writes through
+        _seq_file(corpus, f"{inp}/part-3.parquet", 50, 60)
+        refresh_incremental(spark, inp, root, epoch=2, tiers=TIERS)
+        seen, n = _jobs(spark, lambda: read_watermarks(spark, root),
+                        "wm-foreign-through")
+        assert n == 0 and seen == _log_marks(spark, root)
 
     def test_compaction_folds_the_log(self, spark, tmp_path, corpus,
                                       monkeypatch):
@@ -924,3 +987,99 @@ class TestInputManifest:
         assert (n, read) == (10, {"part-3.parquet"})
         want = rollup_sequences(spark.read.parquet(inp), tiers=TIERS)
         assert _rows(read_incremental(spark, root)) == _rows(want)
+
+
+def _repr_rows(df):
+    return sorted(map(repr, df.collect()))
+
+
+class TestRealtimeBuild:
+    """A real-time read costs one view build per committed state, and the
+    build runs no Spark job."""
+
+    @pytest.mark.parametrize("packed", [False, True],
+                             ids=["plain", "packed"])
+    def test_declared_store_schema_equals_inferred(self, spark, tmp_path,
+                                                   corpus, packed):
+        from tsrollup.checkpoint import read_store
+
+        inp = str(tmp_path / "inp")
+        root = str(tmp_path / "store")
+        os.makedirs(inp)
+        _seq_file(corpus, f"{inp}/part-0.parquet", 0, 30)
+        refresh_incremental(spark, inp, root, epoch=0, tiers=TIERS,
+                            compressed=packed)
+        _seq_file(corpus, f"{inp}/part-1.parquet", 30, 40)
+        refresh_incremental(spark, inp, root, epoch=1, tiers=TIERS,
+                            compressed=packed)
+        data = f"{root}/data"
+        got, n = _jobs(spark, lambda: read_store(spark, data),
+                       f"store-{packed}")
+        want = spark.read.parquet(data)
+        assert n == 0
+        assert got.schema == want.schema
+        assert _repr_rows(got) == _repr_rows(want)
+
+    def test_first_read_after_refresh_runs_no_job(self, spark, tmp_path,
+                                                  corpus):
+        from tsrollup.checkpoint import read_realtime
+
+        inp, root = TestInputManifest._store(spark, tmp_path, corpus)
+        _seq_file(corpus, f"{inp}/part-2.parquet", 40, 50)
+        refresh_incremental(spark, inp, root, epoch=1, tiers=TIERS)
+        _seq_file(corpus, f"{inp}/part-3.parquet", 50, 60)
+        view, n = _jobs(spark, lambda: read_realtime(spark, inp, root,
+                                                     tiers=TIERS), "cold")
+        assert n == 0
+        want = rollup_sequences(spark.read.parquet(inp), tiers=TIERS)
+        assert _rows(view) == _rows(want)
+
+    def test_second_read_of_unchanged_state_is_the_same_view(
+            self, spark, tmp_path, corpus):
+        from tsrollup.checkpoint import read_realtime
+
+        inp, root = TestInputManifest._store(spark, tmp_path, corpus)
+        _seq_file(corpus, f"{inp}/part-2.parquet", 40, 50)
+        view = read_realtime(spark, inp, root, tiers=TIERS)
+        again, n = _jobs(spark, lambda: read_realtime(spark, inp, root,
+                                                      tiers=TIERS), "hit")
+        assert again is view and n == 0
+        want = rollup_sequences(spark.read.parquet(inp), tiers=TIERS)
+        assert _rows(again) == _rows(want)
+        # other tiers, or a custom seq, are other views
+        assert read_realtime(spark, inp, root, tiers={"1m": 1}) is not view
+        assert read_realtime(spark, inp, root, tiers=TIERS,
+                             seq=doc_seq()) is not view
+
+    def test_each_state_change_builds_a_fresh_view(self, spark, tmp_path,
+                                                   corpus):
+        from tsrollup.checkpoint import compact_epochs, read_realtime
+
+        inp, root = TestInputManifest._store(spark, tmp_path, corpus)
+
+        def fresh(prev, sess=spark):
+            view = read_realtime(sess, inp, root, tiers=TIERS)
+            assert view is not prev
+            assert read_realtime(sess, inp, root, tiers=TIERS) is view
+            want = rollup_sequences(spark.read.parquet(inp), tiers=TIERS)
+            assert _rows(view) == _rows(want)
+            return view
+
+        view = read_realtime(spark, inp, root, tiers=TIERS)
+        _seq_file(corpus, f"{inp}/part-2.parquet", 40, 50)  # an append
+        view = fresh(view)
+        refresh_incremental(spark, inp, root, epoch=1, tiers=TIERS)
+        view = fresh(view)
+        compact_epochs(spark, root)
+        view = fresh(view)
+        # a consumed file rewritten in place with 10 more docs
+        _seq_file(corpus, f"{inp}/part-2.parquet", 40, 60)
+        view = fresh(view)
+        key = "spark.sql.ansi.enabled"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "false" if prev == "true" else "true")
+        try:
+            view = fresh(view)
+        finally:
+            spark.conf.set(key, prev)
+        fresh(view, spark.newSession())

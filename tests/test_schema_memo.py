@@ -162,3 +162,86 @@ def test_listing_fingerprint_follows_spark_listing(tmp_path):
     assert listing_fingerprint("file://" + str(d)) is not None
     for never in ("hdfs://nn/t", str(d / "*.parquet"), str(tmp_path / "no")):
         assert listing_fingerprint(never) is None
+
+
+def test_same_footer_append_runs_no_job(spark, tmp_path):
+    """Files appended beside the memo's, with its reference footer, keep
+    the memoized schema: the read declares it and runs no job."""
+    from tsrollup.io import read_table
+
+    d = tmp_path / "dir"
+    d.mkdir()
+    _write(str(d / "a.parquet"))
+    read_table(spark, str(d))
+    for name in ("b.parquet", "c.parquet"):
+        _write(str(d / name), n=5)
+        got, n = _jobs(spark, lambda: read_table(spark, str(d)),
+                       f"append-{name}")
+        assert n == 0
+    want = spark.read.parquet(str(d))
+    assert got.schema == want.schema
+    assert _rows(got) == _rows(want)
+
+
+def _write_int32(path, n=5):
+    pq.write_table(pa.table({"k": pa.array(range(n), pa.int32()),
+                             "v": pa.array([f"t{i}" for i in range(n)])}),
+                   path)
+
+
+@pytest.mark.parametrize("other", [
+    lambda p: _write(p, n=5, extra=True),  # one more column
+    _write_int32,                          # another physical type
+], ids=["extra-column", "int32-key"])
+def test_append_with_another_footer_infers_again(spark, tmp_path, other):
+    from tsrollup.io import read_table
+
+    d = tmp_path / "dir"
+    d.mkdir()
+    _write(str(d / "a.parquet"))
+    read_table(spark, str(d))
+    _write(str(d / "b.parquet"), n=5)
+    assert _jobs(spark, lambda: read_table(spark, str(d)), "same")[1] == 0
+    other(str(d / "c.parquet"))
+    got, n = _jobs(spark, lambda: read_table(spark, str(d)), "other-footer")
+    assert n >= 1
+    assert got.schema == spark.read.parquet(str(d)).schema
+
+
+def test_append_beside_a_summary_file_infers_again(spark, tmp_path):
+    from tsrollup.io import read_table
+
+    d = tmp_path / "dir"
+    d.mkdir()
+    _write(str(d / "a.parquet"))
+    read_table(spark, str(d))
+    _write(str(d / "b.parquet"), n=5)
+    assert _jobs(spark, lambda: read_table(spark, str(d)), "plain")[1] == 0
+    pq.write_metadata(pq.read_schema(str(d / "a.parquet")),
+                      str(d / "_common_metadata"))
+    read_table(spark, str(d))
+    _write(str(d / "c.parquet"), n=5)
+    got, n = _jobs(spark, lambda: read_table(spark, str(d)), "summary")
+    assert n >= 1
+    want = spark.read.parquet(str(d))
+    assert got.schema == want.schema
+    assert _rows(got) == _rows(want)
+
+
+def test_append_in_a_new_directory_infers_again(spark, tmp_path):
+    """A new partition directory brings a partition value to type."""
+    from tsrollup.io import read_table
+
+    d = tmp_path / "dir"
+    (d / "p=1").mkdir(parents=True)
+    _write(str(d / "p=1" / "a.parquet"))
+    read_table(spark, str(d))
+    _write(str(d / "p=1" / "b.parquet"), n=5)
+    assert _jobs(spark, lambda: read_table(spark, str(d)), "old-dir")[1] == 0
+    (d / "p=x").mkdir()
+    _write(str(d / "p=x" / "a.parquet"), n=5)
+    got, n = _jobs(spark, lambda: read_table(spark, str(d)), "new-dir")
+    assert n >= 1
+    want = spark.read.parquet(str(d))
+    assert got.schema == want.schema
+    assert _rows(got) == _rows(want)

@@ -41,10 +41,12 @@ from pyspark.sql import functions as F
 
 from . import BASE_WINDOW, TIER_FACTOR
 from .arrowbuf import rows_df
-from .io import (is_missing_table_error, local_listing, read_files,
-                 read_table, table_format, write_table)
-from .rollup import (apply_retention, decompress_rollup, is_packed,
-                     rollup_compressed, rollup_sequences)
+from .io import (_INFER_CONFS, has_summaries, is_missing_table_error,
+                 local_listing, read_files, read_table, table_format,
+                 write_table)
+from .rollup import (COMPRESSED_SCHEMA, ROLLUP_SCHEMA, apply_retention,
+                     decompress_rollup, is_packed, rollup_compressed,
+                     rollup_sequences)
 
 # wall_time_sec is the wall clock of the COMMITTING CALL (all its pending
 # buckets roll up in one single-scan job), recorded identically on each of
@@ -193,8 +195,18 @@ WATERMARK_SCHEMA = ("source string, max_seq long, n_docs long, epoch int, "
                     "file_size long, file_mtime_ns long")
 
 # log path → (listing fingerprint, every row of the log); one entry per
-# path, so a log that grows every commit does not grow the memo
+# path, so a log that grows every commit does not grow the memo. The
+# fingerprint is None when the log had no listing (no committed file yet):
+# such an entry never serves a read, but a first append can extend it
 _LOGS: dict = {}
+
+# (input path, store root) → (state key, view): the real-time view of one
+# committed state (see read_realtime); one entry per pair, like io._SCHEMAS
+_VIEWS: dict = {}
+
+# the session confs that change how a real-time view is analyzed: the
+# schema-inference confs of both reads, and ANSI mode (casts, arithmetic)
+_VIEW_CONFS = _INFER_CONFS + ("spark.sql.ansi.enabled",)
 
 
 def doc_seq(col: str = "doc_id") -> Column:
@@ -226,9 +238,35 @@ def _log_rows(spark: SparkSession, output_root: str) -> list[tuple]:
         return hit[1]
     rows = [tuple(r) for r in
             _read_log(spark, path, WATERMARK_SCHEMA).collect()]
-    if fp is not None:
-        _LOGS[path] = (fp, rows)
+    _LOGS[path] = (fp, rows)
     return rows
+
+
+def _extend_log(path: str, rows: list[tuple]) -> None:
+    """Write-through after this call appended ``rows`` to the watermark
+    log at ``path``: when the files added since the memo's listing are
+    the listing's only change and hold exactly ``len(rows)`` rows (their
+    footers' counts, read on the driver), they are this append's file, so
+    the memo becomes the new listing with ``rows`` added and the next read
+    runs no job. A removed file or another writer's file (more rows)
+    leaves the memo as it is, and the next read collects."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    hit = _LOGS.get(path)
+    fp = local_listing(path)
+    if hit is None or fp is None:
+        return
+    before = set(hit[0] or ())
+    added = [p for p in fp if p not in before]
+    if len(fp) - len(added) != len(before):
+        return
+    try:
+        n = sum(pq.ParquetFile(p).metadata.num_rows for p, _, _ in added)
+    except (OSError, pa.ArrowException):
+        return
+    if n == len(rows):
+        _LOGS[path] = (fp, hit[1] + rows)
 
 
 def _watermark_state(spark: SparkSession, output_root: str
@@ -299,9 +337,7 @@ def _unconsumed(spark: SparkSession, input_path: str, manifest: set[tuple]
     listing = local_listing(input_path)
     # parquet summary files and a streaming sink's log are listed but hold
     # no docs; Spark's own reader decides which files such a table holds
-    if listing is None or any(os.path.basename(p).startswith("_")
-                              or "_spark_metadata" in p.split(os.sep)
-                              for p, _, _ in listing):
+    if listing is None or has_summaries(listing):
         return read_table(spark, input_path), None
     held = {p for p, _, _ in manifest}
     rewritten = any(f[0] in held and f not in manifest for f in listing)
@@ -447,7 +483,7 @@ def refresh_incremental(spark: SparkSession, input_path: str,
     # across the two schemas reads back as nulls/garbage long after the
     # bad commit — fail fast on the flag mismatch instead
     try:
-        existing = read_table(spark, f"{output_root}/data")
+        existing = read_store(spark, f"{output_root}/data")
     except Exception as e:  # noqa: BLE001
         if not is_missing_table_error(e):
             raise
@@ -476,9 +512,48 @@ def refresh_incremental(spark: SparkSession, input_path: str,
              int(epoch), run_id, now, None, None, None) for r in stats]
     rows += [(None, None, None, int(epoch), run_id, now, *f)
              for f in files or ()]
-    write_table(rows_df(spark, rows, WATERMARK_SCHEMA),
-                f"{output_root}/_watermarks", mode="append")
+    log = f"{output_root}/_watermarks"
+    write_table(rows_df(spark, rows, WATERMARK_SCHEMA), log, mode="append")
+    _extend_log(log, rows)
     return int(sum(r["n_docs"] for r in stats))
+
+
+# the partition columns of an incremental store's data/, in directory order
+_STORE_PARTS = ("epoch", "bucket", "tier")
+
+
+def read_store(spark: SparkSession, data: str) -> DataFrame:
+    """The rows of an incremental store's ``data/`` directory (every
+    epoch; ``epoch``, ``bucket`` and ``tier`` are partition columns), read
+    with a declared schema and no Spark job.
+
+    Only this module writes the store, so its schema is known: packed or
+    plain is decided from one data file's footer of the local listing
+    (pyarrow, on the driver), and the schema is :data:`COMPRESSED_SCHEMA`
+    or :data:`ROLLUP_SCHEMA` without ``tier``, followed by ``epoch int,
+    bucket int, tier string`` — the schema Spark's inference returns for
+    the same files, without the inference job each new epoch's listing
+    would cost. A store with no local listing (Iceberg, an object store,
+    a missing directory) or whose first data file does not sit under
+    ``epoch=/bucket=/tier=`` directories is read by
+    :func:`~tsrollup.io.read_table` as before, which raises for a store
+    that does not exist."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    first = next((p for p, _, _ in local_listing(data) or ()
+                  if not os.path.basename(p).startswith("_")), None)
+    dirs = os.path.relpath(first, data).split(os.sep)[:-1] if first else []
+    if [d.split("=", 1)[0] for d in dirs] != list(_STORE_PARTS):
+        return read_table(spark, data)
+    try:
+        packed = "n_windows" in pq.read_schema(first).names
+    except (OSError, pa.ArrowException):
+        return read_table(spark, data)
+    cols = [c for c in (COMPRESSED_SCHEMA if packed else ROLLUP_SCHEMA)
+            .split(", ") if c.split(" ", 1)[0] not in _STORE_PARTS]
+    return read_table(spark, data, schema=", ".join(
+        cols + ["epoch int", "bucket int", "tier string"]))
 
 
 def read_incremental(spark: SparkSession, output_root: str,
@@ -494,8 +569,9 @@ def read_incremental(spark: SparkSession, output_root: str,
     cost only (epoch is the leading partition directory, no data outside
     the horizon is scanned). History lasts until :func:`compact_epochs`
     deliberately folds it (documented there); orphan-epoch exclusion
-    remains :func:`read_realtime`'s domain, as for the plain read."""
-    df = read_table(spark, f"{output_root}/data")
+    remains :func:`read_realtime`'s domain, as for the plain read. The
+    store is read by :func:`read_store`, which runs no job."""
+    df = read_store(spark, f"{output_root}/data")
     if as_of_epoch is not None:
         if as_of_epoch < 0:
             raise ValueError("need as_of_epoch >= 0")
@@ -544,7 +620,43 @@ def read_realtime(spark: SparkSession, input_path: str, output_root: str,
 
     ``window``/``tiers``/``seq`` must match the store's refresh
     parameters — they define the rows the store already holds.
+
+    One view per committed state: with the default ``seq``, the view is
+    memoized per ``(input_path, output_root)`` under the session, the
+    confs that change its analysis (``io._INFER_CONFS`` and
+    ``spark.sql.ansi.enabled``), the local listings of the input, the
+    store's ``data/`` and its ``_watermarks/``, ``window`` and ``tiers``.
+    A read while all of these are unchanged returns the same DataFrame and
+    builds nothing; an append, a refresh, a compaction, a file rewritten
+    in place, a conf change or a new session builds a fresh view. The
+    listings are taken before the build, so a commit racing it changes
+    the next read's key rather than hiding behind this one's. A custom
+    ``seq`` (a Column, which has no stable identity) and a missing local
+    listing (no store yet, Iceberg, an object store) build every time.
+    Readers of one state share the object, so a ``cache()`` on it caches
+    it for all of them.
     """
+    key = None
+    if seq is None:
+        listings = tuple(local_listing(p) for p in (
+            input_path, f"{output_root}/data", f"{output_root}/_watermarks"))
+        if None not in listings:
+            key = (spark, tuple(spark.conf.get(k) for k in _VIEW_CONFS),
+                   listings, window, tuple(tiers.items()))
+            hit = _VIEWS.get((input_path, output_root))
+            if hit is not None and hit[0] == key:
+                return hit[1]
+    view = _realtime_view(spark, input_path, output_root, window, tiers,
+                          seq)
+    if key is not None:
+        _VIEWS[(input_path, output_root)] = (key, view)
+    return view
+
+
+def _realtime_view(spark: SparkSession, input_path: str, output_root: str,
+                   window: int, tiers: dict[str, int],
+                   seq: Column | None) -> DataFrame:
+    """The build behind :func:`read_realtime`."""
     wm, committed, manifest = _watermark_state(spark, output_root)
     s = seq if seq is not None else doc_seq()
     src, _ = _unconsumed(spark, input_path, manifest)
@@ -644,7 +756,7 @@ def repair_epochs(spark: SparkSession, input_path: str, output_root: str,
         raise ValueError(
             f"epoch(s) {bad} are not committed in {output_root} — an "
             "orphan/unstarted epoch is repaired by re-running its refresh")
-    existing = read_table(spark, f"{output_root}/data")
+    existing = read_store(spark, f"{output_root}/data")
     physical = {int(r["epoch"]) for r in
                 existing.select("epoch").distinct().collect()}
     if physical != committed:
@@ -760,7 +872,7 @@ def compact_epochs(spark: SparkSession, output_root: str,
             f"into_epoch={into_epoch} is not a committed epoch "
             f"{sorted(committed)} — an unreserved target could later be "
             "overwritten by a refresh reusing that id")
-    src = read_table(spark, data)
+    src = read_store(spark, data)
     data_epochs = {int(r["epoch"]) for r in
                    src.select("epoch").distinct().collect()}
     orphans = data_epochs - committed
@@ -773,7 +885,7 @@ def compact_epochs(spark: SparkSession, output_root: str,
     df = src.withColumn("epoch", F.lit(int(into_epoch)))
     write_table(df, tmp, mode="overwrite",
                 partition_by=("epoch", "bucket", "tier"))
-    n = read_table(spark, tmp).count()
+    n = read_store(spark, tmp).count()
     if n != n_src:
         raise RuntimeError(
             f"compacted copy has {n} rows, source has {n_src} — swap "

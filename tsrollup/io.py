@@ -109,6 +109,14 @@ def listing_fingerprint(ident: str) -> tuple | None:
     return tuple(sorted(out)) or None
 
 
+def has_summaries(listing: tuple) -> bool:
+    """True when ``listing`` (a :func:`listing_fingerprint`) holds parquet
+    summary files or a streaming sink's log: listed, but holding no rows,
+    and they decide what Spark's reader infers and which files it reads."""
+    return any(os.path.basename(p).startswith("_")
+               or "_spark_metadata" in p.split(os.sep) for p, _, _ in listing)
+
+
 def local_listing(ident: str) -> tuple | None:
     """:func:`listing_fingerprint` of a parquet table, None for an Iceberg
     table name: the files a reader of ``ident`` would see, or None when
@@ -144,8 +152,9 @@ _INFER_CONFS = ("spark.sql.parquet.mergeSchema",
                 "spark.sql.sources.partitionColumnTypeInference.enabled",
                 "spark.sql.caseSensitive")
 
-# (path, base_path) → ((inference confs, listing fingerprint), schema); one
-# entry per path, so a store that changes every step does not grow it
+# (path, base_path) → ((inference confs, listing fingerprint), schema,
+# reference footer); one entry per path, so a store that changes every step
+# does not grow it
 _SCHEMAS: dict = {}
 
 # the session confs Spark plans file splits from; a memoized guard
@@ -159,11 +168,52 @@ _SPLIT_CONFS = ("spark.sql.files.maxPartitionBytes",
 _SCAN_PARTS: dict = {}
 
 
+def parquet_footer(path: str) -> tuple | None:
+    """The parquet schema text and key-value metadata of the file
+    ``path``'s footer (what schema inference reads from a part-file), or
+    None when it is not a parquet file pyarrow can read. One footer read
+    on the driver, no Spark job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        md = pq.ParquetFile(path).metadata
+    except (OSError, pa.ArrowException):
+        return None
+    # the text's first line is the Python object's address
+    return str(md.schema).split("\n", 1)[1], md.metadata
+
+
+def _only_appended(old: tuple, new: tuple, footer) -> bool:
+    """True when the listing ``new`` is ``old`` plus files in directories
+    ``old`` already lists, holds no summary file, and every added file's
+    footer equals ``footer``: schema inference over ``new`` then returns
+    what it returned over ``old``."""
+    added = set(new) - set(old)
+    if footer is None or len(new) - len(added) != len(old) \
+            or has_summaries(new):
+        return False
+    dirs = {os.path.dirname(p) for p, _, _ in old}
+    return all(os.path.dirname(p) in dirs and parquet_footer(p) == footer
+               for p, _, _ in added)
+
+
 def read_parquet(spark: SparkSession, path: str,
                  base_path: str | None = None,
                  schema: str | None = None) -> DataFrame:
     """The parquet branch of :func:`read_table`, for callers whose files
-    are parquet whatever the table format (fixtures, streaming sinks)."""
+    are parquet whatever the table format (fixtures, streaming sinks).
+
+    The memoized schema also survives an append. Spark's inference
+    (without ``mergeSchema``) reads the footer of one part-file and
+    assumes every part-file agrees, so a new listing infers the memoized
+    schema again when it only adds files, each in a directory the memo's
+    listing already held (no new partition value to type), holds no
+    summary file, and each added file's footer (:func:`parquet_footer`)
+    equals the reference footer the memo recorded from its first data
+    file. Such a read declares the schema and runs no job; an added file
+    with any other footer (another column, another type, other writer
+    metadata) infers again."""
     r = spark.read
     if base_path is not None:
         r = r.option("basePath", base_path)
@@ -174,10 +224,15 @@ def read_parquet(spark: SparkSession, path: str,
         return r.parquet(path)
     key = (tuple(spark.conf.get(k) for k in _INFER_CONFS), fp)
     hit = _SCHEMAS.get((path, base_path))
-    if hit is not None and hit[0] == key:
+    if hit is not None and hit[0][0] == key[0] and (
+            hit[0][1] == fp or _only_appended(hit[0][1], fp, hit[2])):
+        _SCHEMAS[(path, base_path)] = (key, *hit[1:])
         return r.schema(hit[1]).parquet(path)
     df = r.parquet(path)
-    _SCHEMAS[(path, base_path)] = (key, df.schema)
+    first = next((p for p, _, _ in fp
+                  if not os.path.basename(p).startswith("_")), None)
+    _SCHEMAS[(path, base_path)] = (key, df.schema,
+                                   first and parquet_footer(first))
     return df
 
 
@@ -195,10 +250,11 @@ def read_table(spark: SparkSession, ident: str,
     job (70–100 ms), then memoizes it per ``(ident, base_path)`` under the
     path's :func:`listing_fingerprint` and the inference confs. A later
     read whose fingerprint and confs are unchanged declares the memoized
-    schema and runs no job. Any added, removed or rewritten data file
-    changes the fingerprint, so that read infers again. Non-``file:``
+    schema and runs no job. A removed or rewritten data file changes the
+    fingerprint, so that read infers again. Non-``file:``
     paths, globs and empty listings always infer; Iceberg takes its schema
-    from table metadata and needs no memo."""
+    from table metadata and needs no memo. An append of files whose
+    footers match the memo's keeps it (see :func:`read_parquet`)."""
     if table_format() == "iceberg":
         _require_iceberg(spark)
         return spark.read.format("iceberg").load(ident)
@@ -342,7 +398,13 @@ def pin(df: DataFrame, reliable: bool = False) -> DataFrame:
     executor, unless ``reliable`` writes them through ``checkpoint`` into
     the session's ``setCheckpointDir``. A pin holds the whole frame, so a
     frame bounded by an output grain (a histogram, a bucket grid, a
-    vocabulary, an edge list) is safe at any input scale."""
+    vocabulary, an edge list) is safe at any input scale.
+
+    The SQL metrics of the plan below a pin (its scan's output rows and
+    scan time, its Python and shuffle operators) are posted under the
+    pin's own ``localCheckpoint`` SQL execution, not under the query
+    that consumes the pinned frame, so a run record built from SQL
+    metrics must read that execution too."""
     if reliable:
         return df.checkpoint(eager=False)
     return df.localCheckpoint(eager=False)

@@ -4,6 +4,17 @@ AQE on (runtime coalesce + skew handling), Arrow for the driver's pandas
 conversions and 2048-row executor batches, shuffle partitions sized for the
 local harness. On a real cluster the same builder is used from spark-submit;
 only master/partitions change.
+
+``spark.python.sql.dataFrameDebugging.enabled`` is fixed to false. With it
+on, PySpark wraps every ``pyspark.sql.functions`` call and every ``Column``
+method: each call looks up the active session, reads a conf, sets and
+clears the JVM's current origin (py4j round trips all), and walks the
+Python stack to capture the call site. On a builder of many small
+expressions that is about half of its py4j round trips. It only adds the
+Python call site to a DataFrame error's query context; the error itself,
+its condition and the JVM-side context are unchanged. PySpark reads the
+conf once per process, at the first wrapped call after a session exists,
+so it is set here, on the builder, before any plan is built.
 """
 
 from __future__ import annotations
@@ -45,6 +56,8 @@ def get_spark(app: str = "tsrollup", master: str | None = None,
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
+        # no per-call Python call-site capture (see the module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # one whole doc's windows stay well under 2 GiB; parquet splits at 128 MiB
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("TSROLLUP_DRIVER_MEM", "8g"))
