@@ -182,6 +182,36 @@ def test_one_lineage_file_per_commit(spark, sequences_path, tmp_path):
     assert completed_buckets(spark, root) == {0, 1, 2, 3}
 
 
+def test_lineage_reads_run_no_job(spark, sequences_path, tmp_path):
+    """The lineage log is read on the driver: ``completed_buckets`` and
+    building ``read_lineage`` run no Spark job, and give the rows a Spark
+    read of the log gives."""
+    from tsrollup.checkpoint import LINEAGE_SCHEMA
+
+    root = str(tmp_path / "lin0")
+    run_checkpointed(spark, sequences_path, root, n_buckets=4,
+                     bucket_range=(0, 2))
+    sc = spark.sparkContext
+
+    def jobs(fn, grp):
+        sc.setJobGroup(grp, grp)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return out, len(sc._jsc.sc().statusTracker()
+                        .getJobIdsForGroup(grp))
+
+    assert jobs(lambda: completed_buckets(spark, root),
+                "lineage-done") == ({0, 1}, 0)
+    lin, n = jobs(lambda: read_lineage(spark, root), "lineage-build")
+    assert n == 0
+    want = spark.read.schema(LINEAGE_SCHEMA).parquet(f"{root}/_lineage")
+    assert lin.schema == want.schema
+    assert sorted(map(tuple, lin.collect())) == \
+        sorted(map(tuple, want.collect()))
+
+
 def test_read_lineage_ignores_killed_later_append(spark, sequences_path,
                                                   tmp_path):
     """Committed lineage files plus the ``_temporary/`` a killed LATER

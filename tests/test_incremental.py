@@ -911,17 +911,17 @@ class TestInputManifest:
         assert n == 0
         _seq_file(corpus, f"{inp}/part-2.parquet", 40, 60)
         refresh_incremental(spark, inp, root, epoch=1, tiers=TIERS)
-        # the refresh wrote its rows through to the memo: no job
+        # the log is read on the driver: no job after a commit either
         moved, n = _jobs(spark, lambda: read_watermarks(spark, root),
-                         "wm-through")
+                         "wm-after-commit")
         assert n == 0 and moved != marks
         assert moved == _log_marks(spark, root)
 
     def test_foreign_log_file_is_collected(self, spark, tmp_path, corpus,
                                            monkeypatch):
-        """A file another writer appends to ``_watermarks/`` is not this
-        refresh's write: the next read collects and sees its rows, whether
-        it lands after the refresh or between its start and its append."""
+        """A file another writer appends to ``_watermarks/`` is seen by
+        the next read, with no job, whether it lands after a refresh or
+        between the refresh's start and its append."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -944,7 +944,7 @@ class TestInputManifest:
         foreign("part-foreign-0.parquet", "zz", 999)
         seen, n = _jobs(spark, lambda: read_watermarks(spark, root),
                         "wm-foreign-after")
-        assert n >= 1 and seen == {**marks, "zz": 999}
+        assert n == 0 and seen == {**marks, "zz": 999}
         real = checkpoint.write_table
 
         def racing(df, ident, *a, **kw):
@@ -958,13 +958,12 @@ class TestInputManifest:
         monkeypatch.setattr(checkpoint, "write_table", real)
         seen, n = _jobs(spark, lambda: read_watermarks(spark, root),
                         "wm-foreign-race")
-        assert n >= 1 and seen["yy"] == 7 and seen["zz"] == 999
+        assert n == 0 and seen["yy"] == 7 and seen["zz"] == 999
         assert seen == _log_marks(spark, root)
-        # with the log read again, the next refresh writes through
         _seq_file(corpus, f"{inp}/part-3.parquet", 50, 60)
         refresh_incremental(spark, inp, root, epoch=2, tiers=TIERS)
         seen, n = _jobs(spark, lambda: read_watermarks(spark, root),
-                        "wm-foreign-through")
+                        "wm-foreign-next")
         assert n == 0 and seen == _log_marks(spark, root)
 
     def test_compaction_folds_the_log(self, spark, tmp_path, corpus,
@@ -985,6 +984,69 @@ class TestInputManifest:
         _seq_file(corpus, f"{inp}/part-3.parquet", 50, 60)
         n, read = _refresh_scan(monkeypatch, spark, inp, root, 2)
         assert (n, read) == (10, {"part-3.parquet"})
+        want = rollup_sequences(spark.read.parquet(inp), tiers=TIERS)
+        assert _rows(read_incremental(spark, root)) == _rows(want)
+
+
+class TestDriverLogReads:
+    """The watermark log is read on the driver with no Spark job: cold,
+    after compaction, and when it was written before the input manifest
+    existed."""
+
+    def test_cold_read_and_read_after_compaction_run_no_job(
+            self, spark, tmp_path, corpus):
+        from tsrollup.checkpoint import compact_epochs, epoch_ranges
+
+        inp, root = TestInputManifest._store(spark, tmp_path, corpus)
+        _seq_file(corpus, f"{inp}/part-2.parquet", 40, 50)
+        refresh_incremental(spark, inp, root, epoch=1, tiers=TIERS)
+        # a copy is a log this process never read, as in a new session
+        cold = str(tmp_path / "cold")
+        shutil.copytree(root, cold)
+        marks, n = _jobs(spark, lambda: read_watermarks(spark, cold),
+                         "wm-cold")
+        assert n == 0 and marks == _log_marks(spark, root)
+        ranges, n = _jobs(spark, lambda: epoch_ranges(spark, cold),
+                          "ranges-cold")
+        assert n == 0 and set(ranges) == {0, 1}
+        compact_epochs(spark, cold)
+        assert len([f for f in os.listdir(f"{cold}/_watermarks")
+                    if f.endswith(".parquet")]) == 1
+        got, n = _jobs(spark, lambda: (read_watermarks(spark, cold),
+                                       epoch_ranges(spark, cold)),
+                       "wm-compacted")
+        assert n == 0 and got == (marks, ranges)
+
+    def test_log_from_before_the_manifest(self, spark, tmp_path, corpus,
+                                          monkeypatch):
+        """A ``_watermarks/`` file holding only the first six columns reads
+        with NULL manifest columns and keeps its watermarks; with no
+        manifest rows the next refresh scans every input file and still
+        gives exact rows."""
+        import pyarrow.parquet as pq
+
+        from tsrollup.checkpoint import WATERMARK_SCHEMA, _log_rows
+
+        inp, root = TestInputManifest._store(spark, tmp_path, corpus)
+        marks = read_watermarks(spark, root)
+        log = os.path.join(root, "_watermarks")
+        files = [os.path.join(log, f) for f in os.listdir(log)
+                 if f.endswith(".parquet")]
+        tbl = pq.read_table(files)
+        tbl = tbl.filter(tbl["source"].is_valid())
+        names = [c.split(" ", 1)[0] for c in WATERMARK_SCHEMA.split(", ")]
+        for f in files:
+            os.remove(f)
+        pq.write_table(tbl.select(names[:6]), f"{log}/part-0.parquet")
+        rows, n = _jobs(spark, lambda: _log_rows(spark, root), "wm-old")
+        assert n == 0 and rows
+        assert all(r[0] is not None and r[6:] == (None, None, None)
+                   for r in rows)
+        assert read_watermarks(spark, root) == marks
+        _seq_file(corpus, f"{inp}/part-2.parquet", 40, 50)
+        n, read = _refresh_scan(monkeypatch, spark, inp, root, 1)
+        assert (n, read) == (10, {"part-0.parquet", "part-1.parquet",
+                                  "part-2.parquet"})
         want = rollup_sequences(spark.read.parquet(inp), tiers=TIERS)
         assert _rows(read_incremental(spark, root)) == _rows(want)
 

@@ -202,29 +202,30 @@ def test_scan_min_parallel_widens_small_scans_only(spark, tmp_path):
             spark.conf.set(k, v)
 
 
-def test_parquet_split_atoms_counts_row_groups(tmp_path):
-    """Row groups are the parquet split atom: the probe must report the
+def test_footer_counts_row_groups(tmp_path):
+    """Row groups are the parquet split atom: the footer must report the
     ROW-GROUP count (what scan tasks can actually parallelize over), not
     the file count, and it must refuse non-parquet input."""
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from tsrollup.io import parquet_split_atoms
+    from tsrollup.io import footer
 
     one = str(tmp_path / "one.parquet")
     pd.DataFrame({"x": range(1000)}).to_parquet(one)
-    assert parquet_split_atoms(one) == 1
+    assert footer(one).num_row_groups == 1
 
     many = str(tmp_path / "many.parquet")
     tbl = pa.Table.from_pandas(pd.DataFrame({"x": range(1000)}))
     pq.write_table(tbl, many, row_group_size=100)  # 10 row groups
-    assert parquet_split_atoms(many) == 10
+    assert footer(many).num_row_groups == 10
+    assert footer(many).schema.names == ["x"]
 
     notpq = tmp_path / "x.parquet"
     notpq.write_text("not parquet")
-    assert parquet_split_atoms(str(notpq)) is None
-    assert parquet_split_atoms(str(tmp_path / "missing")) is None
+    assert footer(str(notpq)) is None
+    assert footer(str(tmp_path / "missing")) is None
 
 
 def test_shingle_explode_keeps_transform_above_exchange(spark):

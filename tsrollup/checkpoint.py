@@ -41,9 +41,9 @@ from pyspark.sql import functions as F
 
 from . import BASE_WINDOW, TIER_FACTOR
 from .arrowbuf import rows_df
-from .io import (_INFER_CONFS, has_summaries, is_missing_table_error,
-                 local_listing, read_files, read_table, table_format,
-                 write_table)
+from .io import (_INFER_CONFS, footer, has_summaries, is_missing_table_error,
+                 local_listing, read_files, read_rows, read_table,
+                 table_format, write_table)
 from .rollup import (COMPRESSED_SCHEMA, ROLLUP_SCHEMA, apply_retention,
                      decompress_rollup, is_packed, rollup_compressed,
                      rollup_sequences)
@@ -73,6 +73,23 @@ def _rolled(df: DataFrame, window: int, tiers: dict[str, int],
                                                 _bucket_col(n_buckets))
 
 
+def _token_sum() -> Column:
+    """Σ size(tokens) over an aggregation's rows; a NULL array adds 0."""
+    tokens = F.col("tokens")
+    return F.sum(F.when(tokens.isNotNull(), F.size(tokens))).cast("long")
+
+
+def _fan_out(spark: SparkSession, n_tokens: int) -> int:
+    """The hash-bucket count of an epoch whose docs hold ``n_tokens``
+    tokens: ``ceil(4 · n_tokens / spark.sql.files.maxPartitionBytes)``
+    clamped to 1..8, i.e. one bucket per scan split's worth of int32
+    tokens."""
+    # maxPartitionBytes as Spark parses it (the conf takes sizes like 4k)
+    split = spark._jsparkSession.sessionState().conf() \
+        .filesMaxPartitionBytes()
+    return max(1, min(8, math.ceil(4 * n_tokens / split)))
+
+
 def _require_local_parquet(output_root: str, what: str, commit: str) -> None:
     """``what`` walks or renames store directories, so it needs a
     local-filesystem parquet store; object stores and Iceberg catalogs are
@@ -84,37 +101,45 @@ def _require_local_parquet(output_root: str, what: str, commit: str) -> None:
             "snapshot commit (not implemented)")
 
 
-def _read_log(spark: SparkSession, ident: str, schema: str) -> DataFrame:
-    """A metadata log (lineage, watermarks) read with its declared schema.
+def _read_log(spark: SparkSession, ident: str, schema: str) -> list[tuple]:
+    """Every row of a metadata log (lineage, watermarks) as tuples of its
+    declared schema. A log is a few small files, so a log with a local
+    listing is read on the driver (:func:`~tsrollup.io.read_rows`), on
+    every call and with no Spark job; a column a file lacks (a log written
+    before it existed) reads as NULL. Any other log (Iceberg, an object
+    store, parquet summary files) is read by Spark, and so is a local path
+    with no listed file: the listing cannot tell a missing or
+    ``_temporary/``-only log from an unreadable one, Spark's read can.
 
     Empty ONLY when the log genuinely doesn't exist yet (first run) — or
     holds no committed file yet: a killed first append leaves only
     ``_temporary/``, which the declared schema reads as no rows. Any other
-    failure — permissions, storage blip, corrupt files (raised by the first
-    action) — propagates: treating it as 'no log' would silently mark every
-    bucket pending or every epoch uncommitted, i.e. one full input rescan
-    and rewrite with no signal that resume state was lost."""
+    failure — permissions, storage blip, corrupt files — propagates:
+    treating it as 'no log' would silently mark every bucket pending or
+    every epoch uncommitted, i.e. one full input rescan and rewrite with
+    no signal that resume state was lost."""
+    listing = local_listing(ident)
+    if listing is not None and not has_summaries(listing):
+        return read_rows(listing, schema)
     try:
-        return read_table(spark, ident, schema=schema)
+        return [tuple(r) for r in
+                read_table(spark, ident, schema=schema).collect()]
     except Exception as e:  # noqa: BLE001
         if is_missing_table_error(e):
-            # from an empty RDD, not an empty list: a list becomes a Python
-            # RDD that runs one Python task per core on every read
-            return spark.createDataFrame(spark.sparkContext.emptyRDD(),
-                                         schema)
+            return []
         raise
 
 
 def read_lineage(spark: SparkSession, output_root: str) -> DataFrame:
     """The lineage log, one row per completed bucket (see :func:`_read_log`
     for when it reads empty and when it raises)."""
-    return _read_log(spark, f"{output_root}/_lineage", LINEAGE_SCHEMA)
+    return rows_df(spark, _read_log(spark, f"{output_root}/_lineage",
+                                    LINEAGE_SCHEMA), LINEAGE_SCHEMA)
 
 
 def completed_buckets(spark: SparkSession, output_root: str) -> set[int]:
-    rows = (read_lineage(spark, output_root)
-            .filter("status = 'done'").select("bucket").distinct().collect())
-    return {r["bucket"] for r in rows}
+    return {r[0] for r in _read_log(spark, f"{output_root}/_lineage",
+                                    LINEAGE_SCHEMA) if r[1] == "done"}
 
 
 def run_checkpointed(spark: SparkSession, input_path: str, output_root: str,
@@ -194,12 +219,6 @@ WATERMARK_SCHEMA = ("source string, max_seq long, n_docs long, epoch int, "
                     "run_id string, committed_at string, file string, "
                     "file_size long, file_mtime_ns long")
 
-# log path → (listing fingerprint, every row of the log); one entry per
-# path, so a log that grows every commit does not grow the memo. The
-# fingerprint is None when the log had no listing (no committed file yet):
-# such an entry never serves a read, but a first append can extend it
-_LOGS: dict = {}
-
 # (input path, store root) → (state key, view): the real-time view of one
 # committed state (see read_realtime); one entry per pair, like io._SCHEMAS
 _VIEWS: dict = {}
@@ -224,49 +243,9 @@ def doc_seq(col: str = "doc_id") -> Column:
 
 
 def _log_rows(spark: SparkSession, output_root: str) -> list[tuple]:
-    """Every row of the watermark log, in :data:`WATERMARK_SCHEMA` order,
-    collected once per commit: memoized per log path under its
-    :func:`~tsrollup.io.local_listing`, so a read of an unchanged log runs
-    no job. The listing is taken before the collect, so a commit racing
-    the read changes the next call's key rather than hiding behind this
-    one's. A log with no local listing (Iceberg, object stores, no
-    committed file yet) is read every time."""
-    path = f"{output_root}/_watermarks"
-    fp = local_listing(path)
-    hit = _LOGS.get(path)
-    if fp is not None and hit is not None and hit[0] == fp:
-        return hit[1]
-    rows = [tuple(r) for r in
-            _read_log(spark, path, WATERMARK_SCHEMA).collect()]
-    _LOGS[path] = (fp, rows)
-    return rows
-
-
-def _extend_log(path: str, rows: list[tuple]) -> None:
-    """Write-through after this call appended ``rows`` to the watermark
-    log at ``path``: when the files added since the memo's listing are
-    the listing's only change and hold exactly ``len(rows)`` rows (their
-    footers' counts, read on the driver), they are this append's file, so
-    the memo becomes the new listing with ``rows`` added and the next read
-    runs no job. A removed file or another writer's file (more rows)
-    leaves the memo as it is, and the next read collects."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    hit = _LOGS.get(path)
-    fp = local_listing(path)
-    if hit is None or fp is None:
-        return
-    before = set(hit[0] or ())
-    added = [p for p in fp if p not in before]
-    if len(fp) - len(added) != len(before):
-        return
-    try:
-        n = sum(pq.ParquetFile(p).metadata.num_rows for p, _, _ in added)
-    except (OSError, pa.ArrowException):
-        return
-    if n == len(rows):
-        _LOGS[path] = (fp, hit[1] + rows)
+    """Every row of the watermark log, in :data:`WATERMARK_SCHEMA` order
+    (see :func:`_read_log`: no job for a log with a local listing)."""
+    return _read_log(spark, f"{output_root}/_watermarks", WATERMARK_SCHEMA)
 
 
 def _watermark_state(spark: SparkSession, output_root: str
@@ -412,12 +391,13 @@ def refresh_incremental(spark: SparkSession, input_path: str,
     Iceberg) fall back to scanning every file, so the rows never depend on
     the manifest. The manifest rows of the files read ride in the same
     append as the epoch's watermark rows, so a crash before that commit
-    leaves neither behind.
+    leaves neither behind. The log is read on the driver on every call
+    (:func:`_read_log`), so a refresh runs no job to learn the
+    watermarks, whoever appended to the log last.
 
-    ``n_buckets=None`` sizes the epoch's hash fan-out from its delta:
-    ``ceil(4 · Σ size(tokens) / spark.sql.files.maxPartitionBytes)``
-    clamped to 1..8, i.e. one bucket per scan split's worth of int32
-    tokens. The token sum is one more column of the stats aggregation, so
+    ``n_buckets=None`` sizes the epoch's hash fan-out from its delta
+    (:func:`_fan_out`: one bucket per scan split's worth of int32 tokens,
+    1..8). The token sum is one more column of the stats aggregation, so
     sizing costs no job; a small delta writes one file per tier instead of
     8, and a large one keeps the 8-bucket layout. An explicit
     ``n_buckets`` is used as given.
@@ -462,14 +442,12 @@ def refresh_incremental(spark: SparkSession, input_path: str,
     # stats + NULL-seq validation BEFORE the data write (the filter is
     # deterministic, so pre- and post-write stats are identical — and the
     # validation must fire before anything is committed)
-    tokens = F.col("tokens")
     stats = (src.filter(s.isNull() | (s > thr))
              .groupBy("source")
              .agg(F.max(s).cast("long").alias("max_seq"),
                   F.countDistinct("doc_id").cast("long").alias("n_docs"),
                   F.sum(s.isNull().cast("long")).alias("n_null_seq"),
-                  F.sum(F.when(tokens.isNotNull(), F.size(tokens)))
-                  .cast("long").alias("n_tokens"))
+                  _token_sum().alias("n_tokens"))
              .collect())
     n_null = sum(int(r["n_null_seq"]) for r in stats)
     if n_null:
@@ -497,11 +475,7 @@ def refresh_incremental(spark: SparkSession, input_path: str,
                 f"refresh asked for compressed={compressed} — one store, "
                 "one mode")
     if n_buckets is None:
-        # maxPartitionBytes as Spark parses it (the conf takes sizes like 4k)
-        split = spark._jsparkSession.sessionState().conf() \
-            .filesMaxPartitionBytes()
-        n_tok = sum(r["n_tokens"] or 0 for r in stats)
-        n_buckets = max(1, min(8, math.ceil(4 * n_tok / split)))
+        n_buckets = _fan_out(spark, sum(r["n_tokens"] or 0 for r in stats))
     out = _rolled(src.filter(s > thr), window, tiers, compressed,
                   n_buckets).withColumn("epoch", F.lit(int(epoch)))
     write_table(out, f"{output_root}/data", mode="overwrite",
@@ -512,9 +486,8 @@ def refresh_incremental(spark: SparkSession, input_path: str,
              int(epoch), run_id, now, None, None, None) for r in stats]
     rows += [(None, None, None, int(epoch), run_id, now, *f)
              for f in files or ()]
-    log = f"{output_root}/_watermarks"
-    write_table(rows_df(spark, rows, WATERMARK_SCHEMA), log, mode="append")
-    _extend_log(log, rows)
+    write_table(rows_df(spark, rows, WATERMARK_SCHEMA),
+                f"{output_root}/_watermarks", mode="append")
     return int(sum(r["n_docs"] for r in stats))
 
 
@@ -538,22 +511,27 @@ def read_store(spark: SparkSession, data: str) -> DataFrame:
     ``epoch=/bucket=/tier=`` directories is read by
     :func:`~tsrollup.io.read_table` as before, which raises for a store
     that does not exist."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     first = next((p for p, _, _ in local_listing(data) or ()
                   if not os.path.basename(p).startswith("_")), None)
     dirs = os.path.relpath(first, data).split(os.sep)[:-1] if first else []
-    if [d.split("=", 1)[0] for d in dirs] != list(_STORE_PARTS):
+    md = footer(first) if first else None
+    if [d.split("=", 1)[0] for d in dirs] != list(_STORE_PARTS) \
+            or md is None:
         return read_table(spark, data)
-    try:
-        packed = "n_windows" in pq.read_schema(first).names
-    except (OSError, pa.ArrowException):
-        return read_table(spark, data)
+    packed = "n_windows" in md.schema.names
     cols = [c for c in (COMPRESSED_SCHEMA if packed else ROLLUP_SCHEMA)
             .split(", ") if c.split(" ", 1)[0] not in _STORE_PARTS]
     return read_table(spark, data, schema=", ".join(
         cols + ["epoch int", "bucket int", "tier string"]))
+
+
+def _store_epochs(data: str) -> set[int]:
+    """The epoch ids of the ``epoch=`` directories that hold files in the
+    local listing of an incremental store's ``data/``: its physical
+    epochs, with no job."""
+    tops = {os.path.relpath(p, data).split(os.sep)[0]
+            for p, _, _ in local_listing(data) or ()}
+    return {int(t.split("=", 1)[1]) for t in tops if t.startswith("epoch=")}
 
 
 def read_incremental(spark: SparkSession, output_root: str,
@@ -709,7 +687,7 @@ def epoch_ranges(spark: SparkSession, output_root: str
 def repair_epochs(spark: SparkSession, input_path: str, output_root: str,
                   epochs, window: int = BASE_WINDOW,
                   tiers: dict[str, int] = TIER_FACTOR,
-                  seq: Column | None = None, n_buckets: int = 8) -> int:
+                  seq: Column | None = None) -> int:
     """Recompute the given COMMITTED epochs from the CURRENT raw input —
     the invalidation-repair motion of a continuous aggregate (cf.
     TimescaleDB's invalidation log → refresh_continuous_aggregate over a
@@ -727,6 +705,10 @@ def repair_epochs(spark: SparkSession, input_path: str, output_root: str,
     CURRENT raw table, so corrected docs re-roll, late docs appear, and
     deleted docs vanish. Ranges are watermark-log facts, so watermarks are
     NOT touched — the repair changes rows, never boundaries.
+
+    Each repaired epoch is written with the hash fan-out a refresh of its
+    docs would use (:func:`_fan_out`), from one aggregation that also
+    counts the returned docs.
 
     Commit: one dynamic partition overwrite of the epochs' (epoch, bucket,
     tier) partitions, then stale leftover partitions under each repaired
@@ -756,9 +738,9 @@ def repair_epochs(spark: SparkSession, input_path: str, output_root: str,
         raise ValueError(
             f"epoch(s) {bad} are not committed in {output_root} — an "
             "orphan/unstarted epoch is repaired by re-running its refresh")
-    existing = read_store(spark, f"{output_root}/data")
-    physical = {int(r["epoch"]) for r in
-                existing.select("epoch").distinct().collect()}
+    data = f"{output_root}/data"
+    existing = read_store(spark, data)
+    physical = _store_epochs(data)
     if physical != committed:
         raise ValueError(
             f"store at {output_root} was compacted (physical epochs "
@@ -775,15 +757,19 @@ def repair_epochs(spark: SparkSession, input_path: str, output_root: str,
                       else assign.when(cond, e))
     docs = src.withColumn("_repair_epoch", assign).filter(
         F.col("_repair_epoch").isNotNull())
+    # a doc's seq falls in one epoch's range, so the per-epoch distinct
+    # counts add up to the repaired epochs' doc count
+    stats = {r[0]: (r[1], r[2] or 0) for r in docs.groupBy("_repair_epoch")
+             .agg(F.countDistinct("doc_id"), _token_sum()).collect()}
     parts = []
     for e in epochs:  # few epochs by contract — one bounded loop
         d = docs.filter(F.col("_repair_epoch") == e).drop("_repair_epoch")
+        n_buckets = _fan_out(spark, stats.get(e, (0, 0))[1])
         parts.append(_rolled(d, window, tiers, packed, n_buckets)
                      .withColumn("epoch", F.lit(e)))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    data = f"{output_root}/data"
     write_table(out, data, mode="overwrite",
                 partition_by=("epoch", "bucket", "tier"),
                 dynamic_overwrite=True)
@@ -811,7 +797,7 @@ def repair_epochs(spark: SparkSession, input_path: str, output_root: str,
                 shutil.rmtree(os.path.join(edir, bdir))
         if not any(x.startswith("bucket=") for x in os.listdir(edir)):
             shutil.rmtree(edir)
-    return int(docs.select("doc_id").distinct().count())
+    return int(sum(n for n, _ in stats.values()))
 
 
 def compact_epochs(spark: SparkSession, output_root: str,
@@ -873,9 +859,7 @@ def compact_epochs(spark: SparkSession, output_root: str,
             f"{sorted(committed)} — an unreserved target could later be "
             "overwritten by a refresh reusing that id")
     src = read_store(spark, data)
-    data_epochs = {int(r["epoch"]) for r in
-                   src.select("epoch").distinct().collect()}
-    orphans = data_epochs - committed
+    orphans = _store_epochs(data) - committed
     if orphans:
         raise ValueError(
             f"epoch(s) {sorted(orphans)} have data but no watermark row — "

@@ -168,33 +168,54 @@ _SPLIT_CONFS = ("spark.sql.files.maxPartitionBytes",
 _SCAN_PARTS: dict = {}
 
 
-def parquet_footer(path: str) -> tuple | None:
-    """The parquet schema text and key-value metadata of the file
-    ``path``'s footer (what schema inference reads from a part-file), or
-    None when it is not a parquet file pyarrow can read. One footer read
-    on the driver, no Spark job."""
+def footer(path: str):
+    """The parquet footer (``pyarrow`` ``FileMetaData``) of the file
+    ``path``: its ``.schema``, key-value ``.metadata`` and
+    ``.num_row_groups``. None when it is not a parquet file pyarrow can
+    read. One footer read on the driver, no Spark job."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     try:
-        md = pq.ParquetFile(path).metadata
+        return pq.ParquetFile(path).metadata
     except (OSError, pa.ArrowException):
         return None
-    # the text's first line is the Python object's address
-    return str(md.schema).split("\n", 1)[1], md.metadata
 
 
-def _only_appended(old: tuple, new: tuple, footer) -> bool:
+def read_rows(listing: tuple, schema: str) -> list[tuple]:
+    """Every row of the parquet files of ``listing`` (a
+    :func:`local_listing`), read on the driver with pyarrow as tuples of
+    the DDL ``schema``'s columns: what a Spark read with that declared
+    schema returns, without a job. A column a file lacks reads as NULL;
+    an unreadable file raises."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from .arrowbuf import arrow_schema
+
+    arrow = arrow_schema(schema)
+    # a log file is a few KB: one thread per file beats a pool
+    tbl = pa.concat_tables([pq.ParquetFile(p).read(use_threads=False)
+                            for p, _, _ in listing],
+                           promote_options="permissive")
+    names = set(tbl.column_names)
+    return list(zip(*(tbl[c.name].cast(c.type).to_pylist() if c.name in names
+                      else [None] * len(tbl) for c in arrow)))
+
+
+def _only_appended(old: tuple, new: tuple, ref) -> bool:
     """True when the listing ``new`` is ``old`` plus files in directories
     ``old`` already lists, holds no summary file, and every added file's
-    footer equals ``footer``: schema inference over ``new`` then returns
-    what it returned over ``old``."""
+    :func:`footer` has the schema and key-value metadata of ``ref``:
+    schema inference over ``new`` then returns what it returned over
+    ``old``."""
     added = set(new) - set(old)
-    if footer is None or len(new) - len(added) != len(old) \
+    if ref is None or len(new) - len(added) != len(old) \
             or has_summaries(new):
         return False
     dirs = {os.path.dirname(p) for p, _, _ in old}
-    return all(os.path.dirname(p) in dirs and parquet_footer(p) == footer
+    return all(os.path.dirname(p) in dirs and (md := footer(p)) is not None
+               and md.schema == ref.schema and md.metadata == ref.metadata
                for p, _, _ in added)
 
 
@@ -209,11 +230,11 @@ def read_parquet(spark: SparkSession, path: str,
     assumes every part-file agrees, so a new listing infers the memoized
     schema again when it only adds files, each in a directory the memo's
     listing already held (no new partition value to type), holds no
-    summary file, and each added file's footer (:func:`parquet_footer`)
-    equals the reference footer the memo recorded from its first data
-    file. Such a read declares the schema and runs no job; an added file
-    with any other footer (another column, another type, other writer
-    metadata) infers again."""
+    summary file, and each added file's :func:`footer` has the schema
+    and key-value metadata of the reference footer the memo recorded from
+    its first data file. Such a read declares the schema and runs no job;
+    an added file with any other footer (another column, another type,
+    other writer metadata) infers again."""
     r = spark.read
     if base_path is not None:
         r = r.option("basePath", base_path)
@@ -231,8 +252,7 @@ def read_parquet(spark: SparkSession, path: str,
     df = r.parquet(path)
     first = next((p for p, _, _ in fp
                   if not os.path.basename(p).startswith("_")), None)
-    _SCHEMAS[(path, base_path)] = (key, df.schema,
-                                   first and parquet_footer(first))
+    _SCHEMAS[(path, base_path)] = (key, df.schema, first and footer(first))
     return df
 
 
@@ -325,22 +345,6 @@ def write_table(df: DataFrame, ident: str, mode: str = "overwrite",
             spark.conf.set(conf_key, prev)
 
 
-def parquet_split_atoms(path: str) -> int | None:
-    """The ROW-GROUP count of the parquet file ``path``: the split atom.
-    ``getNumPartitions()`` reports size-based splits, but a scan task whose
-    byte range contains no row-group START reads nothing, so a
-    single-row-group file scans as ONE working task however many nominal
-    splits the size formula plans. Reads one footer; None when ``path`` is
-    not a parquet file it can read (no claim)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    try:
-        return pq.ParquetFile(path).metadata.num_row_groups
-    except (OSError, pa.ArrowException):
-        return None
-
-
 def scan_min_parallel(df: DataFrame, path: str,
                       spread_cols: tuple[str, ...]) -> DataFrame:
     """The small-scan guard for ``df``, a read of the one parquet file
@@ -350,10 +354,11 @@ def scan_min_parallel(df: DataFrame, path: str,
     where the planned splits are ``df.rdd.getNumPartitions()`` (what Spark
     plans from ``maxPartitionBytes``/``openCostInBytes``/``minPartitionNum``),
     the scan is repartitioned to ``target`` when the file holds fewer than
-    ``target`` row groups, and returned untouched otherwise. A table Spark
-    plans as one split is never widened; a file with at least as many row
-    groups as cores never is either, so at production split counts the
-    guard is a no-op.
+    ``target`` row groups (the split atom: a scan task whose byte range
+    holds no row-group start reads nothing), and returned untouched
+    otherwise. A table Spark plans as one split is never widened; a file
+    with at least as many row groups as cores never is either, so at
+    production split counts the guard is a no-op.
 
     Hash, not round-robin: round-robin first locally sorts every input
     partition (sortBeforeRepartition), and on an under-split scan that
@@ -373,8 +378,8 @@ def scan_min_parallel(df: DataFrame, path: str,
         target = hit[1]
     else:
         target = min(df.rdd.getNumPartitions(), cores)
-        atoms = parquet_split_atoms(path) if target > 1 else None
-        if atoms is None or atoms >= target:
+        md = footer(path) if target > 1 else None
+        if md is None or md.num_row_groups >= target:
             target = 0
         if fp is not None:
             _SCAN_PARTS[path] = (key, target)
