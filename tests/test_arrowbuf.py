@@ -88,6 +88,29 @@ def test_rows_df_is_a_local_relation(spark):
         "word:string", "n:bigint"]
 
 
+def test_arrow_schema_parses_each_ddl_once(spark, monkeypatch):
+    """A metadata-log read and a ``rows_df`` ask for the same constant
+    schema on every call: only the first parses it through the JVM."""
+    from pyspark.sql.types import DataType
+
+    from tsrollup import arrowbuf
+
+    parsed = []
+
+    class Spy:
+        @staticmethod
+        def fromDDL(ddl):
+            parsed.append(ddl)
+            return DataType.fromDDL(ddl)
+
+    monkeypatch.setattr(arrowbuf, "DataType", Spy)
+    ddl = "probe_once long, probe_name string"
+    first = arrowbuf.arrow_schema(ddl)
+    assert first.names == ["probe_once", "probe_name"]
+    assert arrowbuf.arrow_schema(ddl) is first
+    assert parsed == [ddl]
+
+
 def _no_rdd(df):
     plan = formatted_plan(df)
     assert "ExistingRDD" not in plan, plan

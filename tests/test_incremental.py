@@ -168,16 +168,6 @@ class TestRefreshGuards:
         with pytest.raises(Exception, match="NULL ingest sequence"):
             refresh_incremental(spark, inp, root, epoch=0, tiers=TIERS)
 
-    def test_n_buckets_is_threaded(self, spark, tmp_path, corpus):
-        inp = str(tmp_path / "inp")
-        root = str(tmp_path / "store")
-        _write_first_n(spark, corpus, inp, 40)
-        refresh_incremental(spark, inp, root, epoch=0, tiers=TIERS,
-                            n_buckets=4)
-        buckets = {r.bucket for r in read_incremental(spark, root)
-                   .select("bucket").distinct().collect()}
-        assert buckets <= set(range(4)) and len(buckets) > 1
-
 
 class TestCompactEpochs:
     def test_compaction_preserves_rows_and_future_refreshes(self, spark,
@@ -645,11 +635,19 @@ class TestRepairEpochs:
         from tsrollup.checkpoint import repair_epochs
 
         inp, root = self._store(spark, tmp_path, corpus)
-        # delete most epoch-0 docs from raw, repair: their rows must VANISH
+        # delete every epoch-0 doc from raw, repair: their rows must VANISH
+        # with the tier directories that held them
         df = spark.read.parquet(inp)
-        kept = df.withColumn("_s", doc_seq()).filter("_s >= 35").drop("_s")
+        kept = df.withColumn("_s", doc_seq()).filter("_s >= 40").drop("_s")
         kept.coalesce(1).write.mode("overwrite").parquet(inp + ".v2")
-        repair_epochs(spark, inp + ".v2", root, [0, 1], tiers=TIERS)
+        n, jobs = _jobs(spark, lambda: repair_epochs(
+            spark, inp + ".v2", root, [0, 1], tiers=TIERS), "repair")
+        assert n == 20
+        # the input's schema inference, the doc-count aggregation (three
+        # stages under adaptive execution) and the write: the prune runs
+        # no job and the repaired rollup is computed once
+        assert jobs == 5
+        assert not os.path.exists(os.path.join(root, "data", "epoch=0"))
         want = rollup_sequences(spark.read.parquet(inp + ".v2"), tiers=TIERS)
         assert _rows(read_incremental(spark, root)) == _rows(want)
 
@@ -866,38 +864,23 @@ class TestInputManifest:
         want = rollup_sequences(spark.read.parquet(inp), tiers=TIERS)
         assert _rows(read_incremental(spark, root)) == _rows(want)
 
-    def test_small_delta_writes_one_bucket_per_tier(self, spark, tmp_path,
-                                                    corpus):
-        import math
-
-        import pyarrow.parquet as pq
+    def test_small_delta_writes_one_file_per_tier(self, spark, tmp_path,
+                                                  corpus):
+        from tsrollup.io import local_listing
 
         inp, root = self._store(spark, tmp_path, corpus)
-
-        def buckets(e):
-            edir = os.path.join(root, "data", f"epoch={e}")
-            return {b for b in os.listdir(edir) if b.startswith("bucket=")}
-
-        assert buckets(0) == {"bucket=0"}
-        assert {t for t in os.listdir(os.path.join(root, "data", "epoch=0",
-                                                   "bucket=0"))
-                if t.startswith("tier=")} == {f"tier={t}" for t in TIERS}
-        # the fan-out follows the delta's tokens over the split size
         _seq_file(corpus, f"{inp}/part-2.parquet", 40, 60)
-        n_tok = sum(len(t) for t in
-                    pq.read_table(f"{inp}/part-2.parquet")["tokens"]
-                    .to_pylist())
-        key = "spark.sql.files.maxPartitionBytes"
-        prev = spark.conf.get(key)
-        spark.conf.set(key, "4k")
-        try:
-            refresh_incremental(spark, inp, root, epoch=1, tiers=TIERS)
-        finally:
-            spark.conf.set(key, prev)
-        want = max(1, min(8, math.ceil(4 * n_tok / 4096)))
-        assert want > 1
-        assert buckets(1) <= {f"bucket={b}" for b in range(want)}
-        assert len(buckets(1)) > 1
+        refresh_incremental(spark, inp, root, epoch=1, tiers=TIERS)
+        data = os.path.join(root, "data")
+        dirs = [os.path.dirname(os.path.relpath(p, data))
+                for p, _, _ in local_listing(data)]
+        # an epoch is (epoch, tier) directories, one file per writing task:
+        # the one-file delta of epoch 1 is one task, so one file per tier
+        want = [os.path.join(f"epoch={e}", f"tier={t}")
+                for e in (0, 1) for t in TIERS]
+        assert set(dirs) == set(want)
+        assert sorted(d for d in dirs if d.startswith("epoch=1")) == \
+            sorted(want[len(TIERS):])
 
     def test_unchanged_log_is_read_once(self, spark, tmp_path, corpus):
         from tsrollup.checkpoint import epoch_ranges
@@ -1047,6 +1030,65 @@ class TestDriverLogReads:
         n, read = _refresh_scan(monkeypatch, spark, inp, root, 1)
         assert (n, read) == (10, {"part-0.parquet", "part-1.parquet",
                                   "part-2.parquet"})
+        want = rollup_sequences(spark.read.parquet(inp), tiers=TIERS)
+        assert _rows(read_incremental(spark, root)) == _rows(want)
+
+
+class TestBucketedStore:
+    """A store written with the older (epoch, bucket, tier) layout still
+    reads, is refused by the refresh and the repair, and is migrated to
+    (epoch, tier) by compaction."""
+
+    def test_refused_until_compaction_migrates_it(self, spark, tmp_path,
+                                                  corpus):
+        from pyspark.sql import functions as F
+
+        from tsrollup.arrowbuf import rows_df
+        from tsrollup.checkpoint import (WATERMARK_SCHEMA, compact_epochs,
+                                         repair_epochs)
+        from tsrollup.io import local_listing, write_table
+
+        inp = str(tmp_path / "inp")
+        root = str(tmp_path / "store")
+        # one source's docs, so the old store's log is one watermark row
+        src = spark.read.parquet(corpus)
+        head = src.groupBy("source").count() \
+            .orderBy(F.desc("count"), "source").first()["source"]
+        one = src.filter(F.col("source") == head)
+        seqs = sorted(r[0] for r in one.select(doc_seq()).collect())
+        early = seqs[:len(seqs) // 2]
+        one.filter(doc_seq() <= early[-1]).coalesce(1).write.parquet(inp)
+        old = rollup_sequences(spark.read.parquet(inp), tiers=TIERS) \
+            .withColumn("epoch", F.lit(0)) \
+            .withColumn("bucket", F.pmod(F.xxhash64("doc_id"), F.lit(2))
+                        .cast("int"))
+        write_table(old, f"{root}/data",
+                    partition_by=("epoch", "bucket", "tier"))
+        write_table(rows_df(spark, [(head, early[-1], len(early), 0, "old",
+                                     "t", None, None, None)],
+                            WATERMARK_SCHEMA),
+                    f"{root}/_watermarks", mode="append")
+        one.coalesce(1).write.mode("overwrite").parquet(inp)
+        stored = _rows(read_incremental(spark, root))
+        before = local_listing(root)
+
+        def refused(fn):
+            with pytest.raises(ValueError, match="compact_epochs"):
+                fn()
+
+        _, n = _jobs(spark, lambda: refused(lambda: refresh_incremental(
+            spark, inp, root, epoch=1, tiers=TIERS)), "bucketed")
+        assert n == 0
+        refused(lambda: repair_epochs(spark, inp, root, [0], tiers=TIERS))
+        assert local_listing(root) == before
+        assert compact_epochs(spark, root) == len(stored)
+        migrated = read_incremental(spark, root)
+        assert "bucket" not in migrated.columns
+        assert _rows(migrated) == stored
+        assert not any("bucket=" in p
+                       for p, _, _ in local_listing(f"{root}/data"))
+        assert refresh_incremental(spark, inp, root, epoch=1,
+                                   tiers=TIERS) == len(seqs) - len(early)
         want = rollup_sequences(spark.read.parquet(inp), tiers=TIERS)
         assert _rows(read_incremental(spark, root)) == _rows(want)
 

@@ -41,9 +41,7 @@ def main() -> int:
                     "with TSROLLUP_TABLE_FORMAT=iceberg, a catalog table)")
     ap.add_argument("--output", required=True, help="rollup output root")
     ap.add_argument("--buckets", type=int, default=None,
-                    help="hash buckets: 64 for a checkpointed run; a "
-                    "--refresh epoch sizes its own fan-out from its delta "
-                    "unless this is given")
+                    help="hash buckets of a checkpointed run (default 64)")
     ap.add_argument("--max-buckets", type=int, default=None,
                     help="bound the work of this invocation (shard/resume)")
     ap.add_argument("--bucket-lo", type=int, default=None,
@@ -114,7 +112,8 @@ def main() -> int:
         spark.stop()
         return 0 if behind == 0 else 1
     if args.refresh is not None:
-        if args.bucket_lo is not None or args.max_buckets is not None:
+        if (args.bucket_lo is not None or args.max_buckets is not None
+                or args.buckets is not None):
             print("ERROR: --refresh is incompatible with the bucket "
                   "sharding flags", file=sys.stderr)
             spark.stop()
@@ -124,7 +123,6 @@ def main() -> int:
         n = refresh_incremental(spark, args.input, args.output,
                                 epoch=args.refresh, run_id=args.run_id,
                                 window=args.window or BASE_WINDOW,
-                                n_buckets=args.buckets,
                                 compressed=args.compressed)
         print(f"epoch {args.refresh}: rolled up {n} new doc(s)")
         spark.stop()

@@ -8,6 +8,8 @@ boundary as Arrow local relations (:func:`rows_df`).
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -73,9 +75,11 @@ def rows_array(mat: np.ndarray) -> pa.ListArray:
     return pa.ListArray.from_arrays(pa.array(offs), pa.array(mat.reshape(-1)))
 
 
+@functools.lru_cache(maxsize=None)
 def arrow_schema(ddl: str) -> pa.Schema:
     """The Arrow schema of a Spark DDL string. Parsing DDL needs the
-    driver's JVM, so map functions take the result in their closure."""
+    driver's JVM, so map functions take the result in their closure; the
+    schemas are a few module constants, each parsed once per process."""
     return to_arrow_schema(DataType.fromDDL(ddl))
 
 

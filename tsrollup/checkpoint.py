@@ -22,15 +22,20 @@ parquet ⇄ Iceberg boundary is one config flag):
     _lineage/*.parquet                   one row per completed bucket
 
 and under an incremental store's root:
-    data/epoch=<e>/bucket=<b>/tier=<t>/  one refresh's delta per epoch
+    data/epoch=<e>/tier=<t>/*.parquet    one refresh's delta per epoch, one
+                                         file per writing task
     _watermarks/*.parquet                per-epoch watermark rows and the
                                          input manifest (files each read)
+
+The epoch is an incremental store's resume and provenance unit (its docs
+are the watermark log's per-source seq ranges), so it has no hash level:
+a store written with ``data/epoch=/bucket=/tier=`` directories is refused
+by the refresh and the repair until :func:`compact_epochs` rewrites it.
 """
 
 from __future__ import annotations
 
 import functools
-import math
 import os
 import shutil
 import time
@@ -63,31 +68,10 @@ def _bucket_col(n_buckets: int):
 
 
 def _rolled(df: DataFrame, window: int, tiers: dict[str, int],
-            packed: bool, n_buckets: int) -> DataFrame:
-    """``df`` rolled up in the store's mode (codec-packed or plain rows),
-    tagged with its hash bucket. The bucket is recomputed from doc_id after
-    the rollup (the map drops helper columns): one cheap hash per output
-    row, and the scan stays single-pass."""
+            packed: bool) -> DataFrame:
+    """``df`` rolled up in the store's mode (codec-packed or plain rows)."""
     rollup = rollup_compressed if packed else rollup_sequences
-    return rollup(df, window, tiers).withColumn("bucket",
-                                                _bucket_col(n_buckets))
-
-
-def _token_sum() -> Column:
-    """Σ size(tokens) over an aggregation's rows; a NULL array adds 0."""
-    tokens = F.col("tokens")
-    return F.sum(F.when(tokens.isNotNull(), F.size(tokens))).cast("long")
-
-
-def _fan_out(spark: SparkSession, n_tokens: int) -> int:
-    """The hash-bucket count of an epoch whose docs hold ``n_tokens``
-    tokens: ``ceil(4 · n_tokens / spark.sql.files.maxPartitionBytes)``
-    clamped to 1..8, i.e. one bucket per scan split's worth of int32
-    tokens."""
-    # maxPartitionBytes as Spark parses it (the conf takes sizes like 4k)
-    split = spark._jsparkSession.sessionState().conf() \
-        .filesMaxPartitionBytes()
-    return max(1, min(8, math.ceil(4 * n_tokens / split)))
+    return rollup(df, window, tiers)
 
 
 def _require_local_parquet(output_root: str, what: str, commit: str) -> None:
@@ -184,7 +168,10 @@ def run_checkpointed(spark: SparkSession, input_path: str, output_root: str,
     src = read_table(spark, input_path) \
         .withColumn("_bucket", _bucket_col(n_buckets))
     part = src.filter(F.col("_bucket").isin(pending)).drop("_bucket")
-    out = _rolled(part, window, tiers, compressed, n_buckets)
+    # the bucket is recomputed from doc_id after the rollup (the map drops
+    # helper columns): one cheap hash per output row, one input scan
+    out = _rolled(part, window, tiers, compressed) \
+        .withColumn("bucket", _bucket_col(n_buckets))
     write_table(out, f"{output_root}/data", mode="overwrite",
                 partition_by=("bucket", "tier"), dynamic_overwrite=True)
     wall = time.time() - t0
@@ -367,7 +354,6 @@ def refresh_incremental(spark: SparkSession, input_path: str,
                         window: int = BASE_WINDOW,
                         tiers: dict[str, int] = TIER_FACTOR,
                         seq: Column | None = None,
-                        n_buckets: int | None = None,
                         compressed: bool = False) -> int:
     """Continuous-aggregate REFRESH for an append-only corpus: roll up only
     the documents that arrived since the last refresh and commit them as a
@@ -395,17 +381,17 @@ def refresh_incremental(spark: SparkSession, input_path: str,
     (:func:`_read_log`), so a refresh runs no job to learn the
     watermarks, whoever appended to the log last.
 
-    ``n_buckets=None`` sizes the epoch's hash fan-out from its delta
-    (:func:`_fan_out`: one bucket per scan split's worth of int32 tokens,
-    1..8). The token sum is one more column of the stats aggregation, so
-    sizing costs no job; a small delta writes one file per tier instead of
-    8, and a large one keeps the 8-bucket layout. An explicit
-    ``n_buckets`` is used as given.
+    The epoch is written as ``data/epoch=<e>/tier=<t>/``, one file per
+    writing task: a small delta writes one file per tier. A store with
+    data under ``bucket=`` directories (the older (epoch, bucket, tier)
+    layout) is refused before the scan: an (epoch, tier) epoch beside it
+    would make every later read fail on conflicting partition columns.
+    :func:`compact_epochs` rewrites such a store as (epoch, tier).
 
     Idempotency / crash-safety, in commit order:
 
     1. delta rollup → DYNAMIC partition overwrite of
-       ``data/epoch=<e>/bucket=<b>/tier=<t>`` — only THIS epoch's
+       ``data/epoch=<e>/tier=<t>`` — only THIS epoch's
        partitions are touched; earlier epochs are immutable.
     2. per-source watermark rows (epoch-tagged) and the manifest rows of
        the files read, appended as one file AFTER the data commit. A
@@ -436,6 +422,9 @@ def refresh_incremental(spark: SparkSession, input_path: str,
     wm, committed, manifest = _watermark_state(spark, output_root)
     if epoch in committed:
         return 0  # fully committed — never rewrite an epoch's partitions
+    data = f"{output_root}/data"
+    listing = local_listing(data) or ()
+    _refuse_bucketed(output_root, listing)
     s = seq if seq is not None else doc_seq()
     src, files = _unconsumed(spark, input_path, manifest)
     thr = _watermark_threshold(wm)
@@ -446,8 +435,7 @@ def refresh_incremental(spark: SparkSession, input_path: str,
              .groupBy("source")
              .agg(F.max(s).cast("long").alias("max_seq"),
                   F.countDistinct("doc_id").cast("long").alias("n_docs"),
-                  F.sum(s.isNull().cast("long")).alias("n_null_seq"),
-                  _token_sum().alias("n_tokens"))
+                  F.sum(s.isNull().cast("long")).alias("n_null_seq"))
              .collect())
     n_null = sum(int(r["n_null_seq"]) for r in stats)
     if n_null:
@@ -461,7 +449,7 @@ def refresh_incremental(spark: SparkSession, input_path: str,
     # across the two schemas reads back as nulls/garbage long after the
     # bad commit — fail fast on the flag mismatch instead
     try:
-        existing = read_store(spark, f"{output_root}/data")
+        existing = read_store(spark, data, listing)
     except Exception as e:  # noqa: BLE001
         if not is_missing_table_error(e):
             raise
@@ -474,12 +462,9 @@ def refresh_incremental(spark: SparkSession, input_path: str,
                 f"{'packed' if was_packed else 'plain'} epochs but this "
                 f"refresh asked for compressed={compressed} — one store, "
                 "one mode")
-    if n_buckets is None:
-        n_buckets = _fan_out(spark, sum(r["n_tokens"] or 0 for r in stats))
-    out = _rolled(src.filter(s > thr), window, tiers, compressed,
-                  n_buckets).withColumn("epoch", F.lit(int(epoch)))
-    write_table(out, f"{output_root}/data", mode="overwrite",
-                partition_by=("epoch", "bucket", "tier"),
+    out = _rolled(src.filter(s > thr), window, tiers, compressed) \
+        .withColumn("epoch", F.lit(int(epoch)))
+    write_table(out, data, mode="overwrite", partition_by=_STORE_PARTS,
                 dynamic_overwrite=True)
     now = time.strftime("%Y-%m-%dT%H:%M:%S")
     rows = [(r["source"], int(r["max_seq"]), int(r["n_docs"]),
@@ -492,26 +477,43 @@ def refresh_incremental(spark: SparkSession, input_path: str,
 
 
 # the partition columns of an incremental store's data/, in directory order
-_STORE_PARTS = ("epoch", "bucket", "tier")
+_STORE_PARTS = ("epoch", "tier")
 
 
-def read_store(spark: SparkSession, data: str) -> DataFrame:
+def _refuse_bucketed(output_root: str, listing: tuple) -> None:
+    """Raise when a data file of the local ``listing`` of the store's
+    ``data/`` sits under a ``bucket=`` directory: the (epoch, bucket,
+    tier) layout older versions wrote. Decided on the driver, no job."""
+    data = f"{output_root}/data"
+    if any(d.startswith("bucket=") for p, _, _ in listing
+           for d in os.path.relpath(p, data).split(os.sep)[:-1]):
+        raise ValueError(
+            f"store at {output_root} holds data under bucket= directories "
+            "(the older epoch/bucket/tier layout) — run compact_epochs on "
+            "it first, which rewrites it as (epoch, tier)")
+
+
+def read_store(spark: SparkSession, data: str,
+               listing: tuple | None = None) -> DataFrame:
     """The rows of an incremental store's ``data/`` directory (every
-    epoch; ``epoch``, ``bucket`` and ``tier`` are partition columns), read
-    with a declared schema and no Spark job.
+    epoch; ``epoch`` and ``tier`` are partition columns), read with a
+    declared schema and no Spark job. ``listing`` is the directory's
+    :func:`~tsrollup.io.local_listing` when the caller already took it.
 
     Only this module writes the store, so its schema is known: packed or
     plain is decided from one data file's footer of the local listing
     (pyarrow, on the driver), and the schema is :data:`COMPRESSED_SCHEMA`
     or :data:`ROLLUP_SCHEMA` without ``tier``, followed by ``epoch int,
-    bucket int, tier string`` — the schema Spark's inference returns for
-    the same files, without the inference job each new epoch's listing
-    would cost. A store with no local listing (Iceberg, an object store,
-    a missing directory) or whose first data file does not sit under
-    ``epoch=/bucket=/tier=`` directories is read by
-    :func:`~tsrollup.io.read_table` as before, which raises for a store
-    that does not exist."""
-    first = next((p for p, _, _ in local_listing(data) or ()
+    tier string`` — the schema Spark's inference returns for the same
+    files, without the inference job each new epoch's listing would cost.
+    A store with no local listing (Iceberg, an object store, a missing
+    directory) or whose first data file does not sit under
+    ``epoch=/tier=`` directories (such as an older store with a
+    ``bucket=`` level) is read by :func:`~tsrollup.io.read_table` as
+    before, which raises for a store that does not exist."""
+    if listing is None:
+        listing = local_listing(data) or ()
+    first = next((p for p, _, _ in listing
                   if not os.path.basename(p).startswith("_")), None)
     dirs = os.path.relpath(first, data).split(os.sep)[:-1] if first else []
     md = footer(first) if first else None
@@ -522,15 +524,14 @@ def read_store(spark: SparkSession, data: str) -> DataFrame:
     cols = [c for c in (COMPRESSED_SCHEMA if packed else ROLLUP_SCHEMA)
             .split(", ") if c.split(" ", 1)[0] not in _STORE_PARTS]
     return read_table(spark, data, schema=", ".join(
-        cols + ["epoch int", "bucket int", "tier string"]))
+        cols + ["epoch int", "tier string"]))
 
 
-def _store_epochs(data: str) -> set[int]:
-    """The epoch ids of the ``epoch=`` directories that hold files in the
-    local listing of an incremental store's ``data/``: its physical
-    epochs, with no job."""
-    tops = {os.path.relpath(p, data).split(os.sep)[0]
-            for p, _, _ in local_listing(data) or ()}
+def _store_epochs(data: str, listing: tuple) -> set[int]:
+    """The epoch ids of the ``epoch=`` directories that hold files in
+    ``listing``, the local listing of an incremental store's ``data/``:
+    its physical epochs, with no job."""
+    tops = {os.path.relpath(p, data).split(os.sep)[0] for p, _, _ in listing}
     return {int(t.split("=", 1)[1]) for t in tops if t.startswith("epoch=")}
 
 
@@ -644,7 +645,7 @@ def _realtime_view(spark: SparkSession, input_path: str, output_root: str,
         return fresh
     stored = read_incremental(spark, output_root) \
         .filter(F.col("epoch").isin(*[int(e) for e in committed])) \
-        .drop("epoch", "bucket")
+        .drop("epoch")
     if is_packed(stored):
         tier = F.col("tier")
         parts = [decompress_rollup(stored.filter(tier == t))
@@ -706,23 +707,23 @@ def repair_epochs(spark: SparkSession, input_path: str, output_root: str,
     deleted docs vanish. Ranges are watermark-log facts, so watermarks are
     NOT touched — the repair changes rows, never boundaries.
 
-    Each repaired epoch is written with the hash fan-out a refresh of its
-    docs would use (:func:`_fan_out`), from one aggregation that also
-    counts the returned docs.
-
-    Commit: one dynamic partition overwrite of the epochs' (epoch, bucket,
-    tier) partitions, then stale leftover partitions under each repaired
-    epoch (a bucket/tier the new rows no longer populate) are pruned.
-    A crash between the two steps leaves stale extras only; re-running the
+    Commit: one dynamic partition overwrite of the epochs' (epoch, tier)
+    partitions, then stale leftover partitions under each repaired epoch
+    (a tier the new rows no longer populate) are pruned. The overwrite
+    replaces every partition it writes, so a tier directory under a
+    repaired epoch is stale exactly when every file in it was in the
+    store's listing taken before the write; the prune needs no job. A
+    crash between the two steps leaves stale extras only; re-running the
     repair converges — same discipline as the refresh protocol. The prune
     walks the local filesystem, so (like :func:`compact_epochs`) object
     stores / Iceberg catalogs are rejected up front: there the equivalent
     is a REPLACE-partition snapshot commit.
 
-    Refused: uncommitted/orphan epoch ids (re-run the refresh instead) and
+    Refused: uncommitted/orphan epoch ids (re-run the refresh instead),
     compacted stores (physical epoch set ≠ committed set — per-epoch
-    provenance was folded; repair before compacting). Returns the number
-    of docs in the repaired epochs after repair.
+    provenance was folded; repair before compacting) and stores with the
+    older ``bucket=`` level (see :func:`refresh_incremental`). Returns the
+    number of docs in the repaired epochs after repair.
     """
     _require_local_parquet(output_root, "stale-partition pruning",
                            "REPLACE-partition")
@@ -739,8 +740,10 @@ def repair_epochs(spark: SparkSession, input_path: str, output_root: str,
             f"epoch(s) {bad} are not committed in {output_root} — an "
             "orphan/unstarted epoch is repaired by re-running its refresh")
     data = f"{output_root}/data"
-    existing = read_store(spark, data)
-    physical = _store_epochs(data)
+    listing = local_listing(data) or ()
+    _refuse_bucketed(output_root, listing)
+    existing = read_store(spark, data, listing)
+    physical = _store_epochs(data, listing)
     if physical != committed:
         raise ValueError(
             f"store at {output_root} was compacted (physical epochs "
@@ -759,45 +762,30 @@ def repair_epochs(spark: SparkSession, input_path: str, output_root: str,
         F.col("_repair_epoch").isNotNull())
     # a doc's seq falls in one epoch's range, so the per-epoch distinct
     # counts add up to the repaired epochs' doc count
-    stats = {r[0]: (r[1], r[2] or 0) for r in docs.groupBy("_repair_epoch")
-             .agg(F.countDistinct("doc_id"), _token_sum()).collect()}
-    parts = []
-    for e in epochs:  # few epochs by contract — one bounded loop
-        d = docs.filter(F.col("_repair_epoch") == e).drop("_repair_epoch")
-        n_buckets = _fan_out(spark, stats.get(e, (0, 0))[1])
-        parts.append(_rolled(d, window, tiers, packed, n_buckets)
-                     .withColumn("epoch", F.lit(e)))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    write_table(out, data, mode="overwrite",
-                partition_by=("epoch", "bucket", "tier"),
+    n_docs = sum(r[1] for r in docs.groupBy("_repair_epoch")
+                 .agg(F.countDistinct("doc_id")).collect())
+    out = functools.reduce(DataFrame.unionByName, [
+        _rolled(docs.filter(F.col("_repair_epoch") == e)
+                .drop("_repair_epoch"), window, tiers, packed)
+        .withColumn("epoch", F.lit(e))
+        for e in epochs])  # few epochs by contract — one bounded union
+    write_table(out, data, mode="overwrite", partition_by=_STORE_PARTS,
                 dynamic_overwrite=True)
-    # prune stale partitions the overwrite did not touch (a bucket/tier the
-    # repaired rows no longer populate would otherwise serve deleted docs).
-    # The fresh set comes from the REPAIRED rows — reading the store back
-    # would see the stale partitions too and protect them from the prune.
-    fresh = {(int(r["epoch"]), int(r["bucket"]), r["tier"]) for r in
-             out.select("epoch", "bucket", "tier").distinct().collect()}
+    # prune the tier directories the overwrite did not replace (a tier the
+    # repaired rows no longer populate would otherwise serve deleted docs):
+    # each holds only files of the pre-write listing
+    before = set(listing)
     for e in epochs:
         edir = os.path.join(data, f"epoch={e}")
-        if not os.path.isdir(edir):
-            continue
-        for bdir in os.listdir(edir):
-            if not bdir.startswith("bucket="):
-                continue
-            b = int(bdir.split("=", 1)[1])
-            for tdir in os.listdir(os.path.join(edir, bdir)):
-                if not tdir.startswith("tier="):
-                    continue
-                t = tdir.split("=", 1)[1]
-                if (e, b, t) not in fresh:
-                    shutil.rmtree(os.path.join(edir, bdir, tdir))
-            if not os.listdir(os.path.join(edir, bdir)):
-                shutil.rmtree(os.path.join(edir, bdir))
-        if not any(x.startswith("bucket=") for x in os.listdir(edir)):
+        tdirs = [os.path.join(edir, t) for t in
+                 (os.listdir(edir) if os.path.isdir(edir) else ())
+                 if t.startswith("tier=")]
+        for tdir in tdirs:
+            if set(local_listing(tdir) or ()) <= before:
+                shutil.rmtree(tdir)
+        if tdirs and not any(t.startswith("tier=") for t in os.listdir(edir)):
             shutil.rmtree(edir)
-    return int(sum(n for n, _ in stats.values()))
+    return int(n_docs)
 
 
 def compact_epochs(spark: SparkSession, output_root: str,
@@ -810,19 +798,22 @@ def compact_epochs(spark: SparkSession, output_root: str,
 
     Rows are copied verbatim — compaction is layout-only, the row multiset
     before and after is identical (validated by row count before the swap,
-    multiset-tested). After the swap the metadata log is folded the same
-    way: ``_watermarks/`` becomes one file holding every committed row
-    verbatim (watermarks and input manifest), so readers stop paying one
-    file per commit. Watermark values are NOT rewritten: the
-    committed-epoch set keeps every historical epoch id reserved, so a
-    late retry of a folded epoch stays a no-op and new refreshes keep
-    allocating fresh ids. ``into_epoch`` must itself be a COMMITTED id
-    (review finding: an unreserved target — e.g. a default 0 that was
-    never refreshed — would let a later ``--refresh 0`` dynamically
-    overwrite the whole compacted history). ORPHAN epochs (data
-    committed, watermark append lost to a crash) are refused: folding one
-    would duplicate its rows when the crashed refresh's convergent re-run
-    rewrites that epoch — retry the refresh first.
+    multiset-tested). The copy is written as ``data/epoch=<e>/tier=<t>/``
+    whatever the source layout, so compaction also migrates a store with
+    the older ``bucket=`` level (its ``bucket`` column is dropped). After
+    the swap the metadata log is folded the same way: ``_watermarks/``
+    becomes one file holding every committed row verbatim (watermarks and
+    input manifest), so readers stop paying one file per commit.
+    Watermark values are NOT rewritten: the committed-epoch set keeps
+    every historical epoch id reserved, so a late retry of a folded epoch
+    stays a no-op and new refreshes keep allocating fresh ids.
+    ``into_epoch`` must itself be a COMMITTED id (review finding: an
+    unreserved target — e.g. a default 0 that was never refreshed — would
+    let a later ``--refresh 0`` dynamically overwrite the whole compacted
+    history). ORPHAN epochs (data committed, watermark append lost to a
+    crash) are refused: folding one would duplicate its rows when the
+    crashed refresh's convergent re-run rewrites that epoch — retry the
+    refresh first.
 
     Commit protocol on a plain filesystem: write the compacted layout to a
     sibling ``data.compact``, validate its row count equals the source,
@@ -858,17 +849,17 @@ def compact_epochs(spark: SparkSession, output_root: str,
             f"into_epoch={into_epoch} is not a committed epoch "
             f"{sorted(committed)} — an unreserved target could later be "
             "overwritten by a refresh reusing that id")
-    src = read_store(spark, data)
-    orphans = _store_epochs(data) - committed
+    listing = local_listing(data) or ()
+    src = read_store(spark, data, listing)
+    orphans = _store_epochs(data, listing) - committed
     if orphans:
         raise ValueError(
             f"epoch(s) {sorted(orphans)} have data but no watermark row — "
             "a crashed refresh is mid-commit; re-run it (convergent) "
             "before compacting, or folding would duplicate its rows")
     n_src = src.count()
-    df = src.withColumn("epoch", F.lit(int(into_epoch)))
-    write_table(df, tmp, mode="overwrite",
-                partition_by=("epoch", "bucket", "tier"))
+    df = src.withColumn("epoch", F.lit(int(into_epoch))).drop("bucket")
+    write_table(df, tmp, mode="overwrite", partition_by=_STORE_PARTS)
     n = read_store(spark, tmp).count()
     if n != n_src:
         raise RuntimeError(
@@ -901,14 +892,15 @@ def apply_retention_to_store(spark: SparkSession, output_root: str,
     """Enforce a retention policy ON the checkpointed store (the third leg of
     rollup+downsample+RETENTION as a store operation): per (doc, tier) keep
     only the trailing ``keep_windows[tier]`` windows, rewriting ONLY the
-    (bucket, tier) partitions the policy names via dynamic partition
-    overwrite — tiers outside the policy are never touched or rewritten.
-    Returns the number of rows aged out.
+    tier partitions the policy names via dynamic partition overwrite —
+    tiers outside the policy are never touched or rewritten. Returns the
+    number of rows aged out.
 
     At the 10^12 scale this is the periodic maintenance job: each affected
-    partition is bounded (one bucket × one tier), the rewrite is one job,
-    and untouched tiers' files are never opened (partition pruning on the
-    tier directory key — plan-guarded in tests/test_plans.py).
+    partition is bounded (one bucket or epoch × one tier), the rewrite is
+    one job, and untouched tiers' files are never opened (partition
+    pruning on the tier directory key — plan-guarded in
+    tests/test_plans.py).
     """
     assert all(n >= 1 for n in keep_windows.values()), \
         "retention must keep ≥1 window (an emptied partition would not be " \
@@ -916,11 +908,12 @@ def apply_retention_to_store(spark: SparkSession, output_root: str,
     tiers = list(keep_windows.keys())
     store = read_table(spark, f"{output_root}/data",
                        base_path=f"{output_root}/data")
-    # an incrementally-refreshed store carries a leading epoch partition
-    # key: the rewrite must preserve it, or the dynamic overwrite would
-    # write bucket=… dirs beside the epoch=… dirs and corrupt the layout
-    part_cols = (("epoch", "bucket", "tier") if "epoch" in store.columns
-                 else ("bucket", "tier"))
+    # the rewrite keeps the partition columns it read (bucket/tier for a
+    # checkpointed store, epoch/tier for an incremental one): any other
+    # set would write directories beside the existing ones and corrupt
+    # the layout
+    part_cols = [c for c in ("epoch", "bucket", "tier")
+                 if c in store.columns]
     affected = store.filter(F.col("tier").isin(tiers))
     before = affected.count()          # scan 1: pre-image row count
     kept = apply_retention(affected, keep_windows)
