@@ -303,10 +303,10 @@ def q_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     half = full.count() // 2
     full.filter(doc_seq() < half).write.mode("overwrite").parquet(inp)
     refresh_incremental(spark, inp, out, epoch=0, tiers={"w": 1},
-                        window=W0, seq=doc_seq())
+                        window=W0)
     full.write.mode("overwrite").parquet(inp)
     refresh_incremental(spark, inp, out, epoch=1, tiers={"w": 1},
-                        window=W0, seq=doc_seq())
+                        window=W0)
     return _rollup_cols(read_incremental(spark, out))
 
 
@@ -326,7 +326,7 @@ def q_realtime_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     half = full.count() // 2
     full.filter(doc_seq() < half).write.mode("overwrite").parquet(inp)
     refresh_incremental(spark, inp, out, epoch=0, tiers={"w": 1},
-                        window=W0, seq=doc_seq())
+                        window=W0)
     full.write.mode("overwrite").parquet(inp)  # tail arrives, no refresh
     return _rollup_cols(read_realtime(spark, inp, out, tiers={"w": 1},
                                       window=W0))
@@ -354,13 +354,12 @@ def q_repair_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                    .otherwise(F.col("tokens")))
     corrupt.filter(doc_seq() < half).write.mode("overwrite").parquet(inp)
     refresh_incremental(spark, inp, out, epoch=0, tiers={"w": 1},
-                        window=W0, seq=doc_seq())
+                        window=W0)
     corrupt.write.mode("overwrite").parquet(inp)
     refresh_incremental(spark, inp, out, epoch=1, tiers={"w": 1},
-                        window=W0, seq=doc_seq())
+                        window=W0)
     full.write.mode("overwrite").parquet(inp)  # the correction lands
-    repair_epochs(spark, inp, out, [0], tiers={"w": 1}, window=W0,
-                  seq=doc_seq())
+    repair_epochs(spark, inp, out, [0], tiers={"w": 1}, window=W0)
     from tsrollup.checkpoint import read_incremental
 
     return _rollup_cols(read_incremental(spark, out))
@@ -1822,19 +1821,18 @@ def q_wfdb_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting + document fingerprinting in ONE scan
-    (tsrollup.text.text_profile — the standalone token_stats and fingerprint
-    ops merged; identical column expressions, so each op's values still
-    bit-match its oracle). Merged so every oracle-backed query fits the
-    driver's 50-entry ledger window."""
+    (tsrollup.text.text_profile): word, BPE-ish and chars/4 token counts,
+    the max word length, and the md5 / 60-bit md5 fingerprints of each
+    doc."""
     from tsrollup.text import text_profile
 
     return text_profile(_docs(spark, sf_dir))
 
 
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality scoring + language-ID in ONE scan (tsrollup.text.quality_lang
-    — the standalone quality_score and lang_id ops merged; same ledger-window
-    rationale as q_token_stats)."""
+    """Quality scoring + language-ID in ONE scan (tsrollup.text.quality_lang):
+    stopword ratio, mean word length and their combined score, and the
+    language with the most stopword hits."""
     from tsrollup.text import quality_lang
 
     return quality_lang(_docs(spark, sf_dir))
@@ -2182,8 +2180,7 @@ def q_ewma_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     models_keras.py:109-111) PLUS the backward fold ≙ Bidirectional(LSTM)
     (models_keras.py:510) — both directions in one select over one scan
     (tsrollup.convolve.ewma_scan_features; pinned fold order matches DuckDB
-    list_reduce). Merged ewma_scan + ewma_bidir for the driver's 50-entry
-    ledger window."""
+    list_reduce), with the running max/min and the last token."""
     from tsrollup.convolve import ewma_scan_features
 
     return ewma_scan_features(_tokenized(spark, sf_dir), alpha=0.125)
@@ -2221,13 +2218,12 @@ def q_residual_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Residual add of a coarse branch (avg-pool/2 → upsample×2 → crop) onto
     the input ≙ reference residual blocks with pad/crop alignment
     (blocks_keras.py:157-161), checksum-aggregated so the whole aligned
-    zip_with path is value-checked — MERGED (round 5, freeing the ledger
-    slot dedup_cluster now occupies) with the en_loss clip→−log→pow→mean
+    zip_with path is value-checked — with the en_loss clip→−log→pow→mean
     reduction (≙ reference YiboGao custom loss, models_keras.py:1538-1550;
     per-element terms rounded to 9 decimals, bit-identical JVM↔DuckDB over
-    the token domain) in the same scan. Single-token docs carry NULL
-    residual columns (the branch needs ≥2 positions); en_loss covers every
-    non-empty doc."""
+    the token domain) in the same scan (tsrollup.gating.residual_en_features).
+    Single-token docs carry NULL residual columns (the branch needs ≥2
+    positions); en_loss covers every non-empty doc."""
     from tsrollup.gating import residual_en_features
 
     return residual_en_features(_tokenized(spark, sf_dir))
@@ -2237,18 +2233,17 @@ def q_attention_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Attention multiply-gate + residual add (≙ reference RTA block,
     blocks_keras.py:201-202): linear-attention weights (x_i/Σx — IEEE-exact
     cross-engine) multiplied onto the signal, residual-added, checksum-
-    aggregated — MERGED with the softmax head (models_keras.py:70) in the
-    same scan: max-subtracted exponent args are INTEGERS, so round-9 exp is
+    aggregated — with the softmax head (models_keras.py:70) in the same
+    scan: max-subtracted exponent args are INTEGERS, so round-9 exp is
     bit-verified cross-engine and the partition function z / max-probability
-    p_max are hash-exact (see gating.attention_softmax_features; this
-    upgrades softmax from a rows-only check to a full value oracle)."""
+    p_max are hash-exact (tsrollup.gating.attention_softmax_features)."""
     from tsrollup.gating import attention_softmax_features
 
-    # include_entropy=False: softmax_entropy's final ln(z) is libm-ulp-
-    # unsafe cross-engine, so the rows-only column stays out of the hashed
-    # oracle slot (it is NumPy-pinned in tests instead)
-    return attention_softmax_features(_tokenized(spark, sf_dir),
-                                      include_entropy=False)
+    # softmax_entropy's final ln(z) is libm-ulp-unsafe cross-engine, so the
+    # rows-only column stays out of the hashed oracle slot (it is
+    # NumPy-pinned in tests instead)
+    return attention_softmax_features(_tokenized(spark, sf_dir)) \
+        .drop("softmax_entropy")
 
 
 def q_activations(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2256,8 +2251,7 @@ def q_activations(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks_keras.py:167; round-9 per element, bit-verified cross-engine over
     the integer token domain) PLUS ReLU/LeakyReLU checksums (≙ relu
     models_keras.py:27, LeakyReLU :636 — exact piecewise-linear maps) in one
-    select over one scan (tsrollup.gating.activation_features). Merged
-    activations + relu_stats for the driver's 50-entry ledger window."""
+    select over one scan (tsrollup.gating.activation_features)."""
     from tsrollup.gating import activation_features
 
     return activation_features(_tokenized(spark, sf_dir), threshold=8)
@@ -3098,7 +3092,7 @@ JOIN nation ON c_nationkey = n_nationkey
 GROUP BY n_name
 """
 
-    # token_stats + fingerprint merged (one scan on the Spark side)
+    # one scan on the Spark side: text.text_profile
     sqls["token_stats"] = """
 SELECT doc_id,
        len(string_split(text, ' '))::INT AS n_words,
@@ -3116,7 +3110,7 @@ FROM documents
     en = ", ".join(f"'{s}'" for s in
                    ("the", "of", "and", "to", "in", "is", "that", "it",
                     "was", "for"))
-    # quality_score + lang_id merged (one scan on the Spark side)
+    # one scan on the Spark side: text.quality_lang
     from tsrollup.text import LANG_STOPWORDS
 
     hit_cols = []
@@ -3779,7 +3773,7 @@ FROM tok WHERE len(t) >= 4
 
     # list_reduce: init = first element, left fold, acc is the first lambda
     # arg — identical semantics and float op order to the Spark aggregate().
-    # ewma_scan + ewma_bidir merged (one select on the Spark side).
+    # One select on the Spark side: convolve.ewma_scan_features.
     sqls["ewma_scan"] = """
 WITH tok AS (
   SELECT CAST(doc_id AS VARCHAR) AS doc_id,

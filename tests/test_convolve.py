@@ -90,10 +90,10 @@ def test_pool1d_matches_numpy(spark, toks_df, pool, stride, agg):
 
 
 def test_ewma_matches_numpy(spark, toks_df):
-    from tsrollup.convolve import ewma_last
+    from tsrollup.convolve import ewma_scan_features
 
     a = 0.125
-    got = {r["doc_id"]: r for r in ewma_last(toks_df, a).collect()}
+    got = {r["doc_id"]: r for r in ewma_scan_features(toks_df, a).collect()}
     for _, r in toks_df.toPandas().iterrows():
         x = r["tokens"]
         if not len(x):
@@ -109,31 +109,20 @@ def test_ewma_matches_numpy(spark, toks_df):
 
 
 def test_ewma_bidir_and_scan_features_match_numpy(spark, toks_df):
-    """Single-pass bidirectional scan (no self-join) and the merged
-    ewma_scan_features both reproduce the scalar folds exactly."""
-    from tsrollup.convolve import ewma_bidir, ewma_scan_features
+    """The backward fold of ewma_scan_features (no self-join: the same
+    select folds reverse(tokens)) reproduces the scalar fold exactly."""
+    from tsrollup.convolve import ewma_scan_features
 
     a = 0.125
-
-    def fold(xs):
-        acc = float(xs[0])
-        for v in xs[1:]:
-            acc = a * float(v) + (1 - a) * acc
-        return acc
-
-    bid = {r["doc_id"]: r for r in ewma_bidir(toks_df, a).collect()}
     feat = {r["doc_id"]: r for r in ewma_scan_features(toks_df, a).collect()}
     for _, r in toks_df.toPandas().iterrows():
-        x = list(r["tokens"])
+        x = list(r["tokens"])[::-1]
         if not x:
-            assert r["doc_id"] not in bid and r["doc_id"] not in feat
             continue
-        assert bid[r["doc_id"]]["ewma_fwd"] == fold(x)
-        assert bid[r["doc_id"]]["ewma_bwd"] == fold(x[::-1])
-        g = feat[r["doc_id"]]
-        assert g["ewma_last"] == fold(x) and g["ewma_bwd"] == fold(x[::-1])
-        assert g["run_max"] == max(x) and g["run_min"] == min(x)
-        assert g["last_tok"] == x[-1]
+        acc = float(x[0])
+        for v in x[1:]:
+            acc = a * float(v) + (1 - a) * acc
+        assert feat[r["doc_id"]]["ewma_bwd"] == acc
 
 
 def test_conv1d_dilations_single_scan_matches_per_rate_runs(spark, toks_df):

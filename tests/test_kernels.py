@@ -10,7 +10,7 @@ import numpy as np
 import pytest
 
 from tsrollup.kernels import (
-    base_window_partials, derive_stats, gap_fill, global_features, reaggregate,
+    base_window_partials, derive_stats, gap_fill, reaggregate,
 )
 
 
@@ -123,11 +123,6 @@ def test_empty_input():
     assert p["count"].shape == (0,)
     r = reaggregate(p, 60)
     assert r["count"].shape == (0,)
-
-
-def test_global_features():
-    g = global_features(np.array([2, 3, 4], dtype=np.int32))
-    assert g == {"count": 3, "sum": 9, "sumsq": 29, "min": 2, "max": 4}
 
 
 def test_batch_kernels_bit_identical_to_scalar():

@@ -88,22 +88,6 @@ def test_decoded_stats_match_source_pixels():
     assert (arr == img).all()
 
 
-def test_fake_decode_matches_meta():
-    from tsrollup.multimodal import fake_decode, generate_media
-
-    pdf = generate_media(3, 30, real=False)
-    for _, r in pdf.iterrows():
-        arr = fake_decode(r["payload"], r["meta"])
-        m = r["meta"]
-        if m["fmt"] == "image":
-            assert arr.shape == (m["height"], m["width"], m["channels"])
-        elif m["fmt"] == "audio":
-            assert arr.shape == (m["sample_rate"],)
-        else:
-            assert arr.shape == (m["n_frames"], m["height"], m["width"],
-                                 m["channels"])
-
-
 def test_external_codec_formats_are_gated():
     from tsrollup.multimodal import decode_media
 

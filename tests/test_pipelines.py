@@ -19,10 +19,10 @@ def toks_df(spark):
 @pytest.mark.parametrize("pipeline", ["ohshulih", "shihaotian", "autoenc",
                                       "caiwenjuan", "kimmingu"])
 def test_pipeline_features_match_numpy(spark, toks_df, pipeline):
-    from tsrollup.pipelines import pipeline_features, run_pipeline
+    from tsrollup.pipelines import pipeline_features_multi, run_pipeline
 
     got = {r["doc_id"]: r
-           for r in pipeline_features(toks_df, pipeline).collect()}
+           for r in pipeline_features_multi(toks_df, (pipeline,)).collect()}
     for _, row in toks_df.toPandas().iterrows():
         h = run_pipeline(np.asarray(row["tokens"], dtype=np.float64), pipeline)
         if h.shape[0] == 0:
@@ -83,45 +83,27 @@ def test_ewma_batch_bitwise_matches_scalar():
 
 
 def test_all_25_architectures_run_and_match(spark, toks_df):
-    """Every reference model has a spec; batched Spark path == per-doc oracle
-    for each (spot-checked on f_mean/f_len to keep runtime bounded)."""
-    from tsrollup.pipelines import PIPELINES, pipeline_features, run_pipeline
+    """Every reference model has a spec; one zoo pass over all 25 equals the
+    per-doc oracle for each (doc, arch) (spot-checked on
+    f_mean/f_len/f_last to keep runtime bounded)."""
+    from tsrollup.pipelines import (PIPELINES, pipeline_features_multi,
+                                    run_pipeline)
 
     assert len(PIPELINES) == 25
     pdf = toks_df.toPandas().head(10)
+    got = {(r["doc_id"], r["arch"]): r for r in pipeline_features_multi(
+        spark.createDataFrame(pdf)).collect()}
     for arch in PIPELINES:
-        got = {r["doc_id"]: r for r in pipeline_features(
-            spark.createDataFrame(pdf), arch).collect()}
         produced = 0
         for _, row in pdf.iterrows():
             h = run_pipeline(np.asarray(row["tokens"], dtype=np.float64), arch)
             if h.shape[0] == 0:
-                assert row["doc_id"] not in got
+                assert (row["doc_id"], arch) not in got
                 continue
             produced += 1
-            g = got[row["doc_id"]]
+            g = got.pop((row["doc_id"], arch))
             assert g["f_len"] == h.shape[0], arch
             assert g["f_mean"] == float(h.mean()), arch
             assert g["f_last"] == float(h[-1]), arch
         assert produced > 0, arch
-
-
-def test_multi_arch_single_pass_matches_per_arch(spark, toks_df):
-    """pipeline_features_multi (ONE mapInArrow pass for the whole zoo) is
-    bit-identical per (doc, arch) to the single-arch path — the zoo query's
-    25-scans→1-scan rewrite must not change a value."""
-    from tsrollup.pipelines import PIPELINES, pipeline_features, \
-        pipeline_features_multi
-
-    multi = {(r["doc_id"], r["arch"]): r
-             for r in pipeline_features_multi(toks_df).collect()}
-    for arch in ("ohshulih", "autoenc", "caiwenjuan", "genminxing"):
-        single = {r["doc_id"]: r
-                  for r in pipeline_features(toks_df, arch).collect()}
-        assert set(single) == {d for d, a in multi if a == arch}
-        for doc_id, s in single.items():
-            m = multi[(doc_id, arch)]
-            for c in ("f_mean", "f_var", "f_min", "f_max", "f_last", "f_len"):
-                assert m[c] == s[c], (arch, doc_id, c)
-    # every arch present
-    assert {a for _, a in multi} == set(PIPELINES)
+    assert not got  # no row for an unknown (doc, arch)

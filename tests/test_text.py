@@ -20,70 +20,53 @@ def docs_df(spark):
 
 
 def test_lang_id_planted(spark, docs_df):
-    from tsrollup.text import lang_id
+    from tsrollup.text import quality_lang
 
-    got = dict(lang_id(docs_df).select("doc_id", "pred_lang").toPandas().values)
-    assert got[1] == "en" and got[2] == "de"
-    assert got[3] == "fr" and got[4] == "es"
+    got = {r["doc_id"]: r for r in quality_lang(docs_df).collect()}
+    assert [got[i]["pred_lang"] for i in (1, 2, 3, 4)] == \
+        ["en", "de", "fr", "es"]
+    # "the" ×4 + of/and/it/was/for, each an English stopword
+    assert got[1]["stop_hits"] == 9
 
 
 def test_token_stats_exact(spark, docs_df):
-    from tsrollup.text import token_stats
+    import re
 
-    r = token_stats(docs_df).filter("doc_id = 1").collect()[0]
+    from tsrollup.text import BPE_PATTERN, text_profile
+
+    r = text_profile(docs_df).filter("doc_id = 1").collect()[0]
     text = "the cat sat on the mat and it was happy for the rest of the day"
     assert r["n_words"] == len(text.split(" "))
+    assert r["bpe_tokens"] == len(re.findall(BPE_PATTERN, text))
     assert r["n_chars_meas"] == len(text)
+    assert r["bpe_est"] == len(text) / 4.0
     assert r["max_word_len"] == max(len(w) for w in text.split(" "))
 
 
 def test_quality_score_exact(spark, docs_df):
-    from tsrollup.text import quality_score
+    from tsrollup.text import quality_lang
 
-    r = quality_score(docs_df).filter("doc_id = 1").collect()[0]
+    r = quality_lang(docs_df).filter("doc_id = 1").collect()[0]
     words = "the cat sat on the mat and it was happy for the rest of the day" \
         .split(" ")
     en = {"the", "of", "and", "to", "in", "is", "that", "it", "was", "for"}
     n_stop = sum(w in en for w in words)
     assert r["n_stopwords"] == n_stop
     assert r["stop_ratio"] == n_stop / len(words)
-    z = quality_score(docs_df).filter("doc_id = 5").collect()[0]
+    mean_wl = len(" ".join(words)) / len(words)
+    assert r["mean_word_len"] == mean_wl
+    assert r["quality"] == (n_stop / len(words)) * 2.0 + 1.0 / mean_wl
+    z = quality_lang(docs_df).filter("doc_id = 5").collect()[0]
     assert z["n_stopwords"] == 0
 
 
 def test_fingerprint_unique_unless_equal(spark, docs_df):
-    from tsrollup.text import fingerprint
+    from tsrollup.text import text_profile
 
     two = docs_df.union(docs_df.filter("doc_id = 1"))
-    fp = fingerprint(two).toPandas()
+    fp = text_profile(two).toPandas()
     assert fp["md5"].nunique() == 5  # 6 rows, one duplicated text
     assert fp.groupby("md5")["fp60"].nunique().max() == 1
-
-
-def test_merged_single_pass_ops_match_standalone(spark, docs_df):
-    """text_profile == token_stats ⨝ fingerprint and quality_lang ==
-    quality_score ⨝ lang_id, column for column (the merged ops are the same
-    expressions in one select — zero drift allowed)."""
-    from tsrollup.text import (fingerprint, lang_id, quality_lang,
-                               quality_score, text_profile, token_stats)
-
-    prof = {r["doc_id"]: r for r in text_profile(docs_df).collect()}
-    for r in token_stats(docs_df).collect():
-        for c in ("n_words", "bpe_tokens", "n_chars_meas", "bpe_est",
-                  "max_word_len"):
-            assert prof[r["doc_id"]][c] == r[c]
-    for r in fingerprint(docs_df).collect():
-        assert prof[r["doc_id"]]["md5"] == r["md5"]
-        assert prof[r["doc_id"]]["fp60"] == r["fp60"]
-
-    ql = {r["doc_id"]: r for r in quality_lang(docs_df).collect()}
-    for r in quality_score(docs_df).collect():
-        for c in ("n_words", "n_stopwords", "stop_ratio", "mean_word_len",
-                  "quality"):
-            assert ql[r["doc_id"]][c] == r[c]
-    for r in lang_id(docs_df).collect():
-        assert ql[r["doc_id"]]["pred_lang"] == r["pred_lang"]
-        assert ql[r["doc_id"]]["stop_hits"] == r["stop_hits"]
 
 
 def test_repetition_stats_planted(spark):

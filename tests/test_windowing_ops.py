@@ -1,4 +1,5 @@
-"""forecast windows + attention gate + en_loss vs a NumPy reference."""
+"""forecast windows + attention gate + activations + en_loss vs a NumPy
+reference."""
 
 from __future__ import annotations
 
@@ -45,10 +46,10 @@ def test_forecast_windows_match_numpy(spark, toks_df):
 
 
 def test_attention_gate_matches_numpy(spark, toks_df):
-    from tsrollup.gating import attention_gate_features
+    from tsrollup.gating import attention_softmax_features
 
     got = {r["doc_id"]: r
-           for r in attention_gate_features(toks_df).collect()}
+           for r in attention_softmax_features(toks_df).collect()}
     for _, r in toks_df.toPandas().iterrows():
         x = np.asarray(r["tokens"], dtype=np.float64)
         if not len(x):
@@ -66,9 +67,9 @@ def test_attention_gate_matches_numpy(spark, toks_df):
 
 
 def test_en_loss_matches_numpy(spark, toks_df):
-    from tsrollup.gating import en_loss
+    from tsrollup.gating import residual_en_features
 
-    got = {r["doc_id"]: r for r in en_loss(toks_df).collect()}
+    got = {r["doc_id"]: r for r in residual_en_features(toks_df).collect()}
     for _, r in toks_df.toPandas().iterrows():
         x = r["tokens"]
         if not len(x):
@@ -80,6 +81,7 @@ def test_en_loss_matches_numpy(spark, toks_df):
             t = (-math.log(p)) ** 0.3 if v % 2 == 1 \
                 else (-math.log(1.0 - p)) ** 0.3
             acc = acc + round(t, 9)
+        assert got[r["doc_id"]]["n_tok"] == len(x)
         assert got[r["doc_id"]]["en_loss"] == acc / len(x)
 
 
@@ -105,12 +107,6 @@ def test_attention_softmax_features_match_numpy(spark, toks_df):
         g = got[row["doc_id"]]
         assert g["softmax_z"] == z
         assert g["softmax_pmax"] == float(e.max() / z)
-        att = x / x.sum()
-        gated = x * att + x
-        s = 0.0
-        for v in gated:
-            s = s + v
-        assert g["gate_sum"] == s and g["gate_max"] == gated.max()
         # entropy H = ln z − (Σ eᵢ·dᵢ)/z: the folds are pinned, the final
         # ln is libm — compare to the same formula within 1 ulp-ish rtol
         d = (x - x.max()).astype(np.float64)
@@ -123,42 +119,50 @@ def test_attention_softmax_features_match_numpy(spark, toks_df):
         assert -1e-9 <= g["softmax_entropy"] <= np.log(x.size) + 1e-9
 
 
-def test_attention_query_excludes_entropy_column(spark, toks_df):
+def test_attention_query_excludes_entropy_column(spark, tmp_path):
     """The oracle-hashed query drops the libm-unsafe entropy column."""
-    from tsrollup.gating import attention_softmax_features
+    import __spark_entry__ as entrymod
 
-    cols = attention_softmax_features(toks_df, include_entropy=False).columns
-    assert "softmax_entropy" not in cols
-    assert "softmax_z" in cols and "softmax_pmax" in cols
+    pd.DataFrame({"doc_id": [1, 2], "text": ["a bb", "ccc dd e"]}) \
+        .to_parquet(tmp_path / "documents.parquet")
+    cols = entrymod.q_attention_gate(spark, str(tmp_path)).columns
+    assert cols == ["doc_id", "n_tok", "gate_sum", "gate_max", "softmax_z",
+                    "softmax_pmax"]
 
 
-def test_merged_gating_ops_match_standalone(spark, toks_df):
-    """activation_features == activation_checksums ⨝ relu_stats and
-    attention_softmax_features ⊇ attention_gate_features, column for column
-    — the merged single-scan ops must stay bit-identical to the standalone
-    operators their oracles were verified against (same guard text.py has
-    for its merged ops)."""
-    from tsrollup.convolve import relu_stats
-    from tsrollup.gating import (activation_checksums, activation_features,
-                                 attention_gate_features,
-                                 attention_softmax_features)
+def test_activation_features_match_numpy(spark, toks_df):
+    """tanh/sigmoid sums of round-9 values and ReLU/LeakyReLU checksums
+    against a scalar reference with the same pinned left folds: at the
+    query's threshold=8 and at 20, where the leaky branch sums negative
+    α·(x − t) terms over most tokens (tokens are 1..29)."""
+    from tsrollup.gating import activation_features
 
-    merged = {r["doc_id"]: r
-              for r in activation_features(toks_df, threshold=8).collect()}
-    for r in activation_checksums(toks_df).collect():
-        for c in ("n_tok", "tanh_sum", "sigmoid_sum"):
-            assert merged[r["doc_id"]][c] == r[c], c
-    for r in relu_stats(toks_df, threshold=8).collect():
-        if r["doc_id"] not in merged:  # empty docs filtered by the merged op
-            continue
-        for c in ("relu_sum", "n_active", "leaky_sum"):
-            assert merged[r["doc_id"]][c] == r[c], c
-
-    msf = {r["doc_id"]: r
-           for r in attention_softmax_features(toks_df).collect()}
-    for r in attention_gate_features(toks_df).collect():
-        for c in ("n_tok", "gate_sum", "gate_max"):
-            assert msf[r["doc_id"]][c] == r[c], c
+    alpha = 0.01
+    pdf = toks_df.toPandas()
+    for thr in (8, 20):
+        got = {r["doc_id"]: r
+               for r in activation_features(toks_df, threshold=thr,
+                                            leaky_alpha=alpha).collect()}
+        n_neg = 0
+        for _, r in pdf.iterrows():
+            x = [int(v) for v in r["tokens"]]
+            if not x:
+                assert r["doc_id"] not in got
+                continue
+            tanh_s = sig_s = leaky_s = 0.0
+            for v in x:
+                tanh_s = tanh_s + round(math.tanh(float(v)), 9)
+                sig_s = sig_s + round(1.0 / (1.0 + math.exp(-float(v))), 9)
+                leaky_s = leaky_s + (float(v - thr) if v > thr
+                                     else alpha * float(v - thr))
+            n_neg += sum(v < thr for v in x)
+            g = got[r["doc_id"]]
+            assert g["n_tok"] == len(x)
+            assert g["tanh_sum"] == tanh_s and g["sigmoid_sum"] == sig_s
+            assert g["relu_sum"] == sum(max(v - thr, 0) for v in x)
+            assert g["n_active"] == sum(v > thr for v in x)
+            assert g["leaky_sum"] == leaky_s
+        assert n_neg > 0
 
 
 def test_residual_en_single_token_doc_matches_oracle(spark):

@@ -215,18 +215,18 @@ _VIEWS: dict = {}
 _VIEW_CONFS = _INFER_CONFS + ("spark.sql.ansi.enabled",)
 
 
-def doc_seq(col: str = "doc_id") -> Column:
+def doc_seq() -> Column:
     """The engine's doc-id convention ``<source>-…-<number>`` → the monotone
-    per-arrival sequence number (the trailing dash segment). Production
-    tables should carry an explicit ingest-sequence column instead — a real
-    (source, seq) literal predicate then prunes parquet/Iceberg files via
-    min/max stats, which a derived expression cannot.
+    per-arrival sequence number (the trailing dash segment of ``doc_id``),
+    the ingest sequence of every incremental-store function. Being derived,
+    it cannot prune parquet/Iceberg files via min/max stats the way a
+    stored (source, seq) column's literal predicate would.
 
     try_cast, not cast: a non-integer trailing segment must yield NULL in
     BOTH ANSI modes (ANSI cast throws CAST_INVALID_INPUT mid-scan) so
     refresh_incremental's NULL-seq validation can report it as one loud,
     counted error instead of a task failure."""
-    return F.element_at(F.split(F.col(col), "-"), -1).try_cast("long")
+    return F.element_at(F.split(F.col("doc_id"), "-"), -1).try_cast("long")
 
 
 def _log_rows(spark: SparkSession, output_root: str) -> list[tuple]:
@@ -353,7 +353,6 @@ def refresh_incremental(spark: SparkSession, input_path: str,
                         run_id: str = "refresh-0",
                         window: int = BASE_WINDOW,
                         tiers: dict[str, int] = TIER_FACTOR,
-                        seq: Column | None = None,
                         compressed: bool = False) -> int:
     """Continuous-aggregate REFRESH for an append-only corpus: roll up only
     the documents that arrived since the last refresh and commit them as a
@@ -362,11 +361,11 @@ def refresh_incremental(spark: SparkSession, input_path: str,
     re-scan 100 TB to add a few GB).
 
     Increment contract: docs are immutable once written and carry a
-    monotone per-source sequence number (``seq``, default
-    :func:`doc_seq`) — exactly how a training corpus grows. The delta is
-    ``seq > watermark[source]`` via a broadcast-free literal map lookup
-    (watermarks are a tiny driver-side dict by contract), new sources
-    default to watermark −1 (fully included).
+    monotone per-source sequence number (:func:`doc_seq`) — exactly how a
+    training corpus grows. The delta is ``seq > watermark[source]`` via a
+    broadcast-free literal map lookup (watermarks are a tiny driver-side
+    dict by contract), new sources default to watermark −1 (fully
+    included).
 
     The scan reads only the input files no committed refresh has read: the
     input is listed once, and the files whose ``(path, size, mtime_ns)``
@@ -405,10 +404,10 @@ def refresh_incremental(spark: SparkSession, input_path: str,
        epoch's original partitions and destroy committed rows (review
        finding; guarded + tested). New arrivals always go to a NEW epoch.
 
-    Docs whose ``seq`` is NULL (an id that doesn't end in an integer, with
-    the default :func:`doc_seq`) would otherwise be silently excluded from
-    every epoch while the full backfill path includes them — the refresh
-    counts them in the same stats pass and raises instead.
+    Docs whose seq is NULL (an id that doesn't end in an integer) would
+    otherwise be silently excluded from every epoch while the full backfill
+    path includes them — the refresh counts them in the same stats pass
+    and raises instead.
 
     Returns the number of new docs rolled up. Read the store with
     :func:`read_incremental`; total rows across epochs equal one clean
@@ -425,7 +424,7 @@ def refresh_incremental(spark: SparkSession, input_path: str,
     data = f"{output_root}/data"
     listing = local_listing(data) or ()
     _refuse_bucketed(output_root, listing)
-    s = seq if seq is not None else doc_seq()
+    s = doc_seq()
     src, files = _unconsumed(spark, input_path, manifest)
     thr = _watermark_threshold(wm)
     # stats + NULL-seq validation BEFORE the data write (the filter is
@@ -442,7 +441,7 @@ def refresh_incremental(spark: SparkSession, input_path: str,
         raise ValueError(
             f"{n_null} doc(s) have a NULL ingest sequence (doc_id does not "
             "end in an integer?) — they would be silently excluded from "
-            "every refresh; fix the ids or pass an explicit seq column")
+            "every refresh; fix the ids")
     if not stats:
         return 0
     # packed and plain epochs must never mix in one store: a parquet union
@@ -560,8 +559,7 @@ def read_incremental(spark: SparkSession, output_root: str,
 
 def read_realtime(spark: SparkSession, input_path: str, output_root: str,
                   window: int = BASE_WINDOW,
-                  tiers: dict[str, int] = TIER_FACTOR,
-                  seq: Column | None = None) -> DataFrame:
+                  tiers: dict[str, int] = TIER_FACTOR) -> DataFrame:
     """REAL-TIME continuous-aggregate view: the stored epochs UNION a
     fresh rollup of only the raw tail past the per-source watermarks — the
     read-side twin of :func:`refresh_incremental` (cf. TimescaleDB's
@@ -580,7 +578,7 @@ def read_realtime(spark: SparkSession, input_path: str, output_root: str,
       (data written, watermark append lost to a crash) is excluded — its
       docs still sit past the watermark, so they arrive via the fresh
       tail instead; served rows are never duplicated and never missing.
-    * docs with a NULL ``seq`` (which :func:`refresh_incremental` refuses
+    * docs with a NULL seq (which :func:`refresh_incremental` refuses
       to commit) are ALWAYS served fresh: the view stays exact even while
       the refresh path is blocked on the bad ids.
     * a compressed store (codec-packed epochs) is decoded on read; the
@@ -597,47 +595,43 @@ def read_realtime(spark: SparkSession, input_path: str, output_root: str,
     tagged branches, and Spark drops their scan and decode: a routed read
     decodes only the routed tier.
 
-    ``window``/``tiers``/``seq`` must match the store's refresh
-    parameters — they define the rows the store already holds.
+    ``window``/``tiers`` must match the store's refresh parameters — they
+    define the rows the store already holds.
 
-    One view per committed state: with the default ``seq``, the view is
-    memoized per ``(input_path, output_root)`` under the session, the
-    confs that change its analysis (``io._INFER_CONFS`` and
-    ``spark.sql.ansi.enabled``), the local listings of the input, the
-    store's ``data/`` and its ``_watermarks/``, ``window`` and ``tiers``.
-    A read while all of these are unchanged returns the same DataFrame and
-    builds nothing; an append, a refresh, a compaction, a file rewritten
-    in place, a conf change or a new session builds a fresh view. The
-    listings are taken before the build, so a commit racing it changes
-    the next read's key rather than hiding behind this one's. A custom
-    ``seq`` (a Column, which has no stable identity) and a missing local
-    listing (no store yet, Iceberg, an object store) build every time.
-    Readers of one state share the object, so a ``cache()`` on it caches
-    it for all of them.
+    One view per committed state: the view is memoized per
+    ``(input_path, output_root)`` under the session, the confs that change
+    its analysis (``io._INFER_CONFS`` and ``spark.sql.ansi.enabled``), the
+    local listings of the input, the store's ``data/`` and its
+    ``_watermarks/``, ``window`` and ``tiers``. A read while all of these
+    are unchanged returns the same DataFrame and builds nothing; an
+    append, a refresh, a compaction, a file rewritten in place, a conf
+    change or a new session builds a fresh view. The listings are taken
+    before the build, so a commit racing it changes the next read's key
+    rather than hiding behind this one's. A missing local listing (no
+    store yet, Iceberg, an object store) builds every time. Readers of one
+    state share the object, so a ``cache()`` on it caches it for all of
+    them.
     """
     key = None
-    if seq is None:
-        listings = tuple(local_listing(p) for p in (
-            input_path, f"{output_root}/data", f"{output_root}/_watermarks"))
-        if None not in listings:
-            key = (spark, tuple(spark.conf.get(k) for k in _VIEW_CONFS),
-                   listings, window, tuple(tiers.items()))
-            hit = _VIEWS.get((input_path, output_root))
-            if hit is not None and hit[0] == key:
-                return hit[1]
-    view = _realtime_view(spark, input_path, output_root, window, tiers,
-                          seq)
+    listings = tuple(local_listing(p) for p in (
+        input_path, f"{output_root}/data", f"{output_root}/_watermarks"))
+    if None not in listings:
+        key = (spark, tuple(spark.conf.get(k) for k in _VIEW_CONFS),
+               listings, window, tuple(tiers.items()))
+        hit = _VIEWS.get((input_path, output_root))
+        if hit is not None and hit[0] == key:
+            return hit[1]
+    view = _realtime_view(spark, input_path, output_root, window, tiers)
     if key is not None:
         _VIEWS[(input_path, output_root)] = (key, view)
     return view
 
 
 def _realtime_view(spark: SparkSession, input_path: str, output_root: str,
-                   window: int, tiers: dict[str, int],
-                   seq: Column | None) -> DataFrame:
+                   window: int, tiers: dict[str, int]) -> DataFrame:
     """The build behind :func:`read_realtime`."""
     wm, committed, manifest = _watermark_state(spark, output_root)
-    s = seq if seq is not None else doc_seq()
+    s = doc_seq()
     src, _ = _unconsumed(spark, input_path, manifest)
     tail = src.filter(s.isNull() | (s > _watermark_threshold(wm)))
     fresh = rollup_sequences(tail, window, tiers)
@@ -687,8 +681,7 @@ def epoch_ranges(spark: SparkSession, output_root: str
 
 def repair_epochs(spark: SparkSession, input_path: str, output_root: str,
                   epochs, window: int = BASE_WINDOW,
-                  tiers: dict[str, int] = TIER_FACTOR,
-                  seq: Column | None = None) -> int:
+                  tiers: dict[str, int] = TIER_FACTOR) -> int:
     """Recompute the given COMMITTED epochs from the CURRENT raw input —
     the invalidation-repair motion of a continuous aggregate (cf.
     TimescaleDB's invalidation log → refresh_continuous_aggregate over a
@@ -750,7 +743,7 @@ def repair_epochs(spark: SparkSession, input_path: str, output_root: str,
             f"{sorted(physical)} != committed {sorted(committed)}) — "
             "per-epoch provenance is folded; repair before compacting")
     packed = is_packed(existing)
-    s = seq if seq is not None else doc_seq()
+    s = doc_seq()
     src = read_table(spark, input_path)
     assign = None
     for e in epochs:  # each committed epoch has >= 1 range

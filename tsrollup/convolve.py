@@ -171,28 +171,6 @@ def conv1d_same_with_ma(df: DataFrame, weights: Sequence[float],
                       F.col("_v.y").alias("y"), F.col("_v.y_ma").alias("y_ma"))
 
 
-def relu_stats(df: DataFrame, threshold: int = 0, leaky_alpha: float = 0.01,
-               tokens_col: str = "tokens") -> DataFrame:
-    """ReLU + LeakyReLU activations over each doc's signal (reference relu
-    throughout, e.g. models_keras.py:27; LeakyReLU models_keras.py:636):
-    y = max(x − t, 0) and leaky y = x−t if >0 else α·(x−t) — both exact
-    cross-engine (integer compare + one literal multiplication), reduced to
-    checksums."""
-    t = F.col(tokens_col)
-    act = F.transform(t, lambda x: F.greatest(x - threshold, F.lit(0)))
-    a = F.lit(float(leaky_alpha))
-    leaky = F.transform(
-        t, lambda x: F.when(x > threshold, (x - threshold).cast("double"))
-        .otherwise(a * (x - threshold).cast("double")))
-    return df.select(
-        "doc_id",
-        F.aggregate(act, F.lit(0).cast("long"), lambda a_, x: a_ + x)
-         .alias("relu_sum"),
-        F.size(F.filter(act, lambda y: y > 0)).cast("long").alias("n_active"),
-        F.aggregate(leaky, F.lit(0.0), lambda a_, x: a_ + x)
-         .alias("leaky_sum"))
-
-
 def dense(df: DataFrame, weights: Sequence[Sequence[float]],
           bias: Sequence[float], tokens_col: str = "tokens") -> DataFrame:
     """Dense y = Wx + b over the first-k token window (reference
@@ -241,24 +219,9 @@ def pool1d(df: DataFrame, pool: int = 2, stride: int | None = None,
             .select("doc_id", F.col("pos").cast("long").alias("pos"), "y"))
 
 
-def ewma_last(df: DataFrame, alpha: float = 0.125,
-              tokens_col: str = "tokens") -> DataFrame:
-    """EWMA over each doc's signal, final value + running max/min — the
-    deterministic analog of the reference's LSTM/GRU seq→vector scans
-    (return_sequences=False, models_keras.py:109-111). Strictly sequential
-    F.aggregate fold ⇒ float order is pinned and SQL-oracle-reproducible."""
-    tok = F.col(tokens_col)
-    return (df.filter(F.size(tok) > 0)
-            .select("doc_id",
-                    _ewma_fold(tok, alpha).alias("ewma_last"),
-                    F.array_max(tok).cast("long").alias("run_max"),
-                    F.array_min(tok).cast("long").alias("run_min"),
-                    F.element_at(tok, -1).cast("long").alias("last_tok")))
-
-
 def _ewma_fold(tok: Column, alpha: float) -> Column:
     """Strictly sequential EWMA fold over an array column (init = first
-    element) — the shared kernel of the fwd/bwd/bidir scans."""
+    element) — the kernel of the forward and backward scans."""
     first = F.element_at(tok, 1).cast("double")
     rest = F.slice(tok, 2, F.greatest(F.size(tok) - 1, F.lit(0)))
     a = F.lit(float(alpha))
@@ -314,25 +277,16 @@ def holt_last(df: DataFrame, alpha: float = 0.5, beta: float = 0.25,
                     (state["l"] + state["b"]).alias("holt_forecast")))
 
 
-def ewma_bidir(df: DataFrame, alpha: float = 0.125,
-               tokens_col: str = "tokens") -> DataFrame:
-    """Bidirectional scan analog (reference Bidirectional(LSTM),
-    models_keras.py:510): the same fold forward and over reverse(tokens) —
-    both directions in ONE select over one scan. (The previous form joined
-    two derived frames — a doc_id shuffle and a second full read of the
-    corpus at scale, for a value computable per-row.)"""
-    tok = F.col(tokens_col)
-    return (df.filter(F.size(tok) > 0)
-            .select("doc_id",
-                    _ewma_fold(tok, alpha).alias("ewma_fwd"),
-                    _ewma_fold(F.reverse(tok), alpha).alias("ewma_bwd")))
-
-
 def ewma_scan_features(df: DataFrame, alpha: float = 0.125,
                        tokens_col: str = "tokens") -> DataFrame:
-    """ewma_last + ewma_bidir merged: forward fold, running extrema, last
-    timestep, and the backward fold — one select, one scan (the 100 TB form
-    of 'compute every scan feature in a single corpus pass')."""
+    """EWMA scan features per non-empty doc: the forward fold's final value
+    (``ewma_last``) ≙ the reference's LSTM/GRU seq→vector scans
+    (return_sequences=False, models_keras.py:109-111), the running max/min,
+    the last token, and the same fold over reverse(tokens) (``ewma_bwd``)
+    ≙ Bidirectional(LSTM) (models_keras.py:510). Strictly sequential
+    F.aggregate folds ⇒ float order is pinned and SQL-oracle-reproducible.
+    One select, one scan (the 100 TB form of 'compute every scan feature in
+    a single corpus pass')."""
     tok = F.col(tokens_col)
     return (df.filter(F.size(tok) > 0)
             .select("doc_id",

@@ -1,20 +1,29 @@
-"""Attention gating and the en_loss reduction — elementwise multiply paths.
+"""Attention gating, activations and the en_loss reduction — elementwise
+multiply paths, each reduced to per-doc checksums in one scan.
 
-* ``attention_gate_features`` ≙ the reference's RTA attention block
+* ``attention_softmax_features`` ≙ the reference's RTA attention block
   (``blocks_keras.py:201-202``: ``x = multiply([x2, attention_map]);
   x = add([x, x1])``): an attention weight per position is multiplied onto
   the signal and the result residual-added back. The engine's deterministic
   attention map is linear normalization w_i = x_i / Σx (division — IEEE-exact
-  cross-engine). ``attention_softmax_features`` adds the softmax head in the
-  same scan: max-subtracted exponent args are integers, so round-9 exp is
-  bit-verified cross-engine and the partition function / max probability are
-  hash-exact (the one libm-unsafe piece, ln(z) for entropy, is omitted).
+  cross-engine). The same scan computes a softmax head: max-subtracted
+  exponent args are integers, so round-9 exp is bit-verified cross-engine
+  and the partition function / max probability are hash-exact (the one
+  libm-unsafe piece, ln(z) for entropy, is a rows-only column).
 
-* ``en_loss`` ≙ YiboGao's custom loss (``models_keras.py:1538-1550``):
-  clip → −log → pow(γ) → class-select → mean. libm log/pow differ from
-  DuckDB's in the last ulp, so each per-element term is rounded to 9 decimals
-  (verified bit-identical across both engines over the full token domain);
-  the pinned sequential fold then makes the doc-level mean hash-exact.
+* ``activation_features`` ≙ tanh/sigmoid (``models_keras.py:455``,
+  ``blocks_keras.py:167``) and ReLU/LeakyReLU (``models_keras.py:27``,
+  ``:636``). tanh and sigmoid are rounded to 9 decimals per element —
+  verified bit-identical across JVM and DuckDB libm over the integer token
+  domain (DuckDB lacks tanh, its oracle uses the exp form, which agrees
+  after rounding); ReLU and LeakyReLU are exact piecewise-linear maps.
+
+* ``residual_en_features`` ≙ a residual branch (``blocks_keras.py:157-161``)
+  and YiboGao's custom loss (``models_keras.py:1538-1550``): clip → −log →
+  pow(γ) → class-select → mean. libm log/pow differ from DuckDB's in the
+  last ulp, so each per-element term is rounded to 9 decimals (verified
+  bit-identical across both engines over the full token domain); the pinned
+  sequential fold then makes the doc-level mean hash-exact.
 
 Everything is JVM-side higher-order functions — zero Python.
 """
@@ -32,93 +41,33 @@ def multiply_gate(tokens: Column, gate: Column) -> Column:
 
 
 def _gated_arr(t: Column, sd: Column) -> Column:
-    """gated_i = x_i·(x_i/Σx) + x_i — the shared attention-gate expression
-    (any edit here changes the standalone and merged ops together, keeping
-    both bit-matched to the same oracle)."""
+    """gated_i = x_i·(x_i/Σx) + x_i — the attention-gate expression."""
     att = F.transform(t, lambda x: x.cast("double") / sd)
     return F.zip_with(multiply_gate(t, att), t,
                       lambda g, x: g + x.cast("double"))
 
 
-def _tanh_arr(t: Column) -> Column:
-    return F.transform(t, lambda x: F.round(F.tanh(x.cast("double")), 9))
-
-
-def _sigmoid_arr(t: Column) -> Column:
-    return F.transform(
-        t, lambda x: F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-x.cast("double"))), 9))
-
-
-def _relu_arrs(t: Column, threshold: int, leaky_alpha: float
-               ) -> tuple[Column, Column]:
-    act = F.transform(t, lambda x: F.greatest(x - threshold, F.lit(0)))
-    a = F.lit(float(leaky_alpha))
-    leaky = F.transform(
-        t, lambda x: F.when(x > threshold, (x - threshold).cast("double"))
-        .otherwise(a * (x - threshold).cast("double")))
-    return act, leaky
-
-
-def attention_gate_features(df: DataFrame,
-                            tokens_col: str = "tokens") -> DataFrame:
-    """Linear-attention gate + residual add, reduced to checksum aggregates:
-    gated_i = x_i·(x_i/Σx) + x_i. Returns (doc_id, n_tok, gate_sum, gate_max).
-
-    The Σx aggregate is staged as a column FIRST (embedding it in the
-    per-element lambda would re-evaluate the fold per element — O(n²))."""
-    t = F.col(tokens_col)
-    s = F.aggregate(t, F.lit(0).cast("long"), lambda a, x: a + x)
-    staged = (df.filter(F.size(t) > 0)
-              .select("doc_id", t.alias("_t"), s.alias("_s"))
-              .filter(F.col("_s") > 0))
-    gated = _gated_arr(F.col("_t"), F.col("_s").cast("double"))
-    return staged.select(
-        "doc_id",
-        F.size("_t").cast("long").alias("n_tok"),
-        F.aggregate(gated, F.lit(0.0), lambda a, x: a + x).alias("gate_sum"),
-        F.array_max(gated).alias("gate_max"))
-
-
-def activation_checksums(df: DataFrame,
-                         tokens_col: str = "tokens") -> DataFrame:
-    """tanh / sigmoid activations over each doc's signal (reference tanh
-    models_keras.py:455, sigmoid blocks_keras.py:167), reduced to pinned-fold
-    sums. Per-element values rounded to 9 decimals — verified bit-identical
-    across JVM and DuckDB libm over the full integer token domain (the same
-    enumerable-domain argument as en_loss; DuckDB lacks tanh, its oracle uses
-    the exp form, which agrees after rounding)."""
-    t = F.col(tokens_col)
-    th, sg = _tanh_arr(t), _sigmoid_arr(t)
-    return (df.filter(F.size(t) > 0)
-            .select("doc_id",
-                    F.size(t).cast("long").alias("n_tok"),
-                    F.aggregate(th, F.lit(0.0), lambda a, x: a + x)
-                     .alias("tanh_sum"),
-                    F.aggregate(sg, F.lit(0.0), lambda a, x: a + x)
-                     .alias("sigmoid_sum")))
-
-
 def attention_softmax_features(df: DataFrame,
-                               tokens_col: str = "tokens",
-                               include_entropy: bool = True) -> DataFrame:
-    """attention_gate_features MERGED with an oracle-checkable softmax head
-    (models_keras.py:70) in ONE scan. The softmax trick: after max
-    subtraction the exponent arguments d = x − max(x) are INTEGERS, so
-    per-element exp(d) lives on an enumerable domain and the round-9
-    convention applies (same argument as tanh/sigmoid/en_loss — verified
-    bit-identical JVM↔DuckDB); the partition function z is then a pinned
-    fold of exact values and p_max = max(e)/z one exact IEEE division —
-    softmax normalization becomes hash-exact cross-engine. The entropy
-    H = −Σ pᵢ ln pᵢ = ln z − (Σ eᵢ·dᵢ)/z ships as ``softmax_entropy``
-    (``include_entropy``, default on): Σ eᵢ·dᵢ is a pinned fold of exact
+                               tokens_col: str = "tokens") -> DataFrame:
+    """Linear-attention gate + residual add and a softmax head
+    (models_keras.py:70) in ONE scan, per non-empty doc with Σx > 0:
+    (doc_id, n_tok, gate_sum, gate_max, softmax_z, softmax_pmax,
+    softmax_entropy), where gated_i = x_i·(x_i/Σx) + x_i.
+
+    The softmax trick: after max subtraction the exponent arguments
+    d = x − max(x) are INTEGERS, so per-element exp(d) lives on an
+    enumerable domain and the round-9 convention applies (same argument as
+    tanh/sigmoid/en_loss — verified bit-identical JVM↔DuckDB); the
+    partition function z is then a pinned fold of exact values and
+    p_max = max(e)/z one exact IEEE division — softmax normalization
+    becomes hash-exact cross-engine. The entropy
+    H = −Σ pᵢ ln pᵢ = ln z − (Σ eᵢ·dᵢ)/z: Σ eᵢ·dᵢ is a pinned fold of exact
     products, but the final ln(z) of a CONTINUOUS argument is libm-ulp-
-    unsafe, so the column is rows-only — NumPy-pinned in pytest and
-    excluded from the oracle-hashed query (q_attention_gate passes
-    include_entropy=False). Both the Σx and max(x) aggregates are STAGED as
-    columns —
-    inside the per-element lambdas they would re-evaluate per element
-    (O(n²), the HOF staging trap; the round-2 softmax query had exactly
-    that bug on its max)."""
+    unsafe, so ``softmax_entropy`` is rows-only — NumPy-pinned in pytest
+    and dropped by the oracle-hashed query (q_attention_gate). Both the Σx
+    and max(x) aggregates are STAGED as columns — inside the per-element
+    lambdas they would re-evaluate per element (O(n²), the HOF staging
+    trap; the round-2 softmax query had exactly that bug on its max)."""
     t = F.col(tokens_col)
     staged = (df.filter(F.size(t) > 0)
               .select("doc_id", t.alias("_t"),
@@ -139,36 +88,39 @@ def attention_softmax_features(df: DataFrame,
                .select("doc_id", "_t", "_s", "_mx", "_g", "_ex",
                        F.aggregate("_ex", F.lit(0.0), lambda a, x: a + x)
                        .alias("softmax_z")))
-    cols = [
+    sed = F.aggregate(
+        F.zip_with("_ex", "_t", lambda e, x: e * (x - mx).cast("double")),
+        F.lit(0.0), lambda a, x: a + x)
+    return staged2.select(
         "doc_id",
         F.size("_t").cast("long").alias("n_tok"),
         F.aggregate("_g", F.lit(0.0), lambda a, x: a + x).alias("gate_sum"),
         F.array_max("_g").alias("gate_max"),
         F.col("softmax_z"),
         (F.array_max("_ex") / F.col("softmax_z")).alias("softmax_pmax"),
-    ]
-    if include_entropy:
-        mx2 = F.col("_mx")
-        sed = F.aggregate(
-            F.zip_with("_ex", "_t",
-                       lambda e, x: e * (x - mx2).cast("double")),
-            F.lit(0.0), lambda a, x: a + x)
-        cols.append((F.log("softmax_z") - sed / F.col("softmax_z"))
-                    .alias("softmax_entropy"))
-    return staged2.select(*cols)
+        (F.log("softmax_z") - sed / F.col("softmax_z"))
+        .alias("softmax_entropy"))
 
 
 def activation_features(df: DataFrame, threshold: int = 8,
                         leaky_alpha: float = 0.01,
                         tokens_col: str = "tokens") -> DataFrame:
-    """tanh/sigmoid AND ReLU/LeakyReLU checksums in ONE scan — the merged form
-    of ``activation_checksums`` + ``convolve.relu_stats`` (identical column
-    expressions, so values bit-match each standalone op's oracle). One select,
-    no join: a 100 TB feature pass computes every activation family in a
-    single read of the corpus."""
+    """tanh/sigmoid AND ReLU/LeakyReLU checksums in ONE scan, per non-empty
+    doc: n_tok, the pinned-fold sums of round-9 tanh and sigmoid, and of
+    y = max(x − threshold, 0) (``relu_sum``, with ``n_active`` its positive
+    count) and of leaky y = x − threshold if > 0 else α·(x − threshold)
+    (``leaky_sum``) — both exact cross-engine (integer compare + one
+    literal multiplication). One select, no join: a 100 TB feature pass
+    computes every activation family in a single read of the corpus."""
     t = F.col(tokens_col)
-    th, sg = _tanh_arr(t), _sigmoid_arr(t)
-    act, leaky = _relu_arrs(t, threshold, leaky_alpha)
+    th = F.transform(t, lambda x: F.round(F.tanh(x.cast("double")), 9))
+    sg = F.transform(t, lambda x: F.round(
+        F.lit(1.0) / (F.lit(1.0) + F.exp(-x.cast("double"))), 9))
+    act = F.transform(t, lambda x: F.greatest(x - threshold, F.lit(0)))
+    a = F.lit(float(leaky_alpha))
+    leaky = F.transform(
+        t, lambda x: F.when(x > threshold, (x - threshold).cast("double"))
+        .otherwise(a * (x - threshold).cast("double")))
     return (df.filter(F.size(t) > 0)
             .select("doc_id",
                     F.size(t).cast("long").alias("n_tok"),
@@ -185,8 +137,9 @@ def activation_features(df: DataFrame, threshold: int = 8,
 
 
 def _en_term(gamma: float, eps: float, scale: float):
-    """Per-element en_loss term builder (shared by en_loss and the merged
-    residual_en_features scan)."""
+    """Per-element en_loss term: p = clip(x/scale, ε, 1−ε), term =
+    (−log p)^γ if x is odd (the class-1 branch) else (−log(1−p))^γ, each
+    rounded to 9 decimals for cross-engine bit-exactness."""
     g = F.lit(float(gamma))
 
     def term(x):
@@ -200,34 +153,15 @@ def _en_term(gamma: float, eps: float, scale: float):
     return term
 
 
-def en_loss(df: DataFrame, gamma: float = 0.3, eps: float = 1.0e-7,
-            scale: float = 100.0, tokens_col: str = "tokens") -> DataFrame:
-    """YiboGao en_loss over each doc's token signal
-    (models_keras.py:1538-1550): p = clip(x/scale, ε, 1−ε),
-    term = (−log p)^γ if x odd (the class-1 branch) else (−log(1−p))^γ,
-    loss = mean(term). Per-element terms rounded to 9 decimals for
-    cross-engine bit-exactness (see module doc)."""
-    t = F.col(tokens_col)
-    staged = (df.filter(F.size(t) > 0)
-              .select("doc_id",
-                      F.transform(t, _en_term(gamma, eps, scale))
-                      .alias("_terms")))
-    return staged.select(
-        "doc_id",
-        F.size("_terms").cast("long").alias("n_tok"),
-        (F.aggregate("_terms", F.lit(0.0), lambda a, x: a + x)
-         / F.size("_terms").cast("double")).alias("en_loss"))
-
-
 def residual_en_features(df: DataFrame, gamma: float = 0.3,
                          eps: float = 1.0e-7, scale: float = 100.0,
                          tokens_col: str = "tokens") -> DataFrame:
-    """Residual-add checksums MERGED with en_loss in ONE scan (round-5 slot
-    merge, same grain: one row per non-empty doc). The residual branch
-    (avg-pool/2 → upsample×2 → crop → zip_with add, reference residual
-    blocks blocks_keras.py:157-161) needs ≥2 positions, so single-token
-    docs carry NULL n_res/res_sum — the same NULL-past-narrower-range
-    convention as the conv1d merges; en_loss (models_keras.py:1538-1550)
+    """Residual-add checksums and en_loss in ONE scan, one row per
+    non-empty doc. The residual branch (avg-pool/2 → upsample×2 → crop →
+    zip_with add, reference residual blocks blocks_keras.py:157-161) needs
+    ≥2 positions, so single-token docs carry NULL n_res/res_sum — the same
+    NULL-past-narrower-range convention as the conv1d merges; en_loss
+    (models_keras.py:1538-1550, the mean of :func:`_en_term` over the doc)
     covers every non-empty doc."""
     t = F.col(tokens_col)
     n = F.size(t)

@@ -214,22 +214,6 @@ def derive_stats(partials: dict[str, np.ndarray]) -> dict[str, np.ndarray]:
     return {"mean": mean, "var": var, "spec_centroid": centroid}
 
 
-def global_features(x: np.ndarray) -> dict[str, float]:
-    """Per-sequence global aggregates ≙ GlobalAverage/MaxPooling1D
-    (reference blocks_keras.py:96, :227-232)."""
-    x64 = np.asarray(x, dtype=np.int64)
-    n = int(x64.shape[0])
-    if n == 0:
-        return {"count": 0, "sum": 0, "sumsq": 0, "min": 0, "max": 0}
-    return {
-        "count": n,
-        "sum": int(np.add.reduce(x64)),
-        "sumsq": int(np.add.reduce(x64 * x64)),
-        "min": int(x64.min()),
-        "max": int(x64.max()),
-    }
-
-
 # ------------------------------------------------ batched (cross-doc) -------
 #
 # The per-doc kernels above are the ORACLE semantics. The batch_* variants

@@ -10,8 +10,7 @@ PNG (zlib inflate + full five-filter unfiltering), PCM16 WAV, and MPNG
 (length-prefixed PNG frames — the fixture video container); see
 ``tsrollup.media_codecs``. Formats that genuinely require external codec
 libraries (JPEG, H.264, …) raise NotImplementedError with the library to
-install; ``fake_decode`` remains as the plumbing-only stand-in for tests of
-the Spark-side mechanics independent of any codec.
+install.
 
 Media table schema (one row per asset):
     media_id : string
@@ -76,24 +75,6 @@ def decode_media(payload: bytes, meta: dict) -> np.ndarray:
         "in this container")
 
 
-def fake_decode(payload: bytes, meta: dict) -> np.ndarray:
-    """Deterministic stand-in decoder: tiles the payload bytes into the shape
-    the metadata declares. (height, width, channels) for images; (n_samples,)
-    for audio; (n_frames, height, width, channels) for video."""
-    fmt = meta["fmt"]
-    if fmt == "audio":
-        shape: tuple[int, ...] = (int(meta["sample_rate"]),)
-    elif fmt == "video":
-        shape = (int(meta["n_frames"]), int(meta["height"]),
-                 int(meta["width"]), int(meta["channels"]))
-    else:
-        shape = (int(meta["height"]), int(meta["width"]), int(meta["channels"]))
-    n = int(np.prod(shape))
-    raw = np.frombuffer(payload, dtype=np.uint8)
-    reps = -(-n // max(raw.size, 1))
-    return np.tile(raw, reps)[:n].reshape(shape)
-
-
 def _resize_strided(img: np.ndarray, side: int = THUMB) -> np.ndarray:
     """Strided-subsample resize to (side, side, C) — deterministic, no interp."""
     h, w = img.shape[0], img.shape[1]
@@ -102,8 +83,7 @@ def _resize_strided(img: np.ndarray, side: int = THUMB) -> np.ndarray:
     return img[ri][:, ci]
 
 
-def extract_features(df: DataFrame, frame_stride: int = 2,
-                     decoder=decode_media) -> DataFrame:
+def extract_features(df: DataFrame, frame_stride: int = 2) -> DataFrame:
     """decode → (frame-sample for video) → per-channel mean/std → strided
     thumbnail, one Arrow batch at a time. The shuffle-free scale path: media
     rows are independent, so this is a pure mapInArrow over the scan."""
@@ -114,9 +94,9 @@ def extract_features(df: DataFrame, frame_stride: int = 2,
             rows = []
             for r in rb.to_pylist():
                 payload, meta = r["payload"], r["meta"]
-                arr = decoder(payload, meta)
+                arr = decode_media(payload, meta)
                 n_sampled = 0
-                if meta["fmt"] in ("video", "mpng"):
+                if meta["fmt"] == "mpng":
                     arr = arr[::frame_stride]          # frame sampling
                     n_sampled = arr.shape[0]
                     arr = arr.reshape((-1,) + arr.shape[2:])  # stack frames
@@ -136,11 +116,9 @@ def extract_features(df: DataFrame, frame_stride: int = 2,
              .mapInArrow(run, FEATURE_SCHEMA)
 
 
-def generate_media(seed: int, n: int, real: bool = True) -> pd.DataFrame:
-    """Seeded synthetic media table. ``real=True`` (default) writes GENUINE
-    encoded payloads — PNG images, PCM16 WAVs, MPNG videos — that the real
-    ``decode_media`` path decodes; ``real=False`` keeps the opaque-bytes
-    plumbing fixture for codec-independent tests (``fake_decode``)."""
+def generate_media(seed: int, n: int) -> pd.DataFrame:
+    """Seeded synthetic media table of GENUINE encoded payloads — PNG
+    images, PCM16 WAVs, MPNG videos — that :func:`decode_media` decodes."""
     from . import media_codecs as mc
 
     rng = np.random.default_rng(seed)
@@ -151,29 +129,22 @@ def generate_media(seed: int, n: int, real: bool = True) -> pd.DataFrame:
         if kind == "image":
             h, w, c = int(rng.integers(8, 64)), int(rng.integers(8, 64)), 3
             meta = {"width": w, "height": h, "channels": c, "sample_rate": 0,
-                    "n_frames": 0, "fmt": "png" if real else "image"}
-            payload = (mc.encode_png(
-                rng.integers(0, 256, (h, w, c), dtype=np.uint8)) if real
-                else rng.integers(0, 256, int(rng.integers(64, 4096)),
-                                  dtype=np.uint8).tobytes())
+                    "n_frames": 0, "fmt": "png"}
+            payload = mc.encode_png(
+                rng.integers(0, 256, (h, w, c), dtype=np.uint8))
         elif kind == "audio":
             sr = int(rng.integers(100, 2000))
             meta = {"width": 0, "height": 0, "channels": 1, "sample_rate": sr,
-                    "n_frames": 0, "fmt": "wav" if real else "audio"}
-            payload = (mc.encode_wav(
+                    "n_frames": 0, "fmt": "wav"}
+            payload = mc.encode_wav(
                 rng.integers(-2 ** 15, 2 ** 15, sr).astype(np.int16), sr)
-                if real
-                else rng.integers(0, 256, int(rng.integers(64, 4096)),
-                                  dtype=np.uint8).tobytes())
         else:
             h, w, c, nf = (int(rng.integers(4, 16)), int(rng.integers(4, 16)),
                            3, int(rng.integers(2, 12)))
             meta = {"width": w, "height": h, "channels": c, "sample_rate": 0,
-                    "n_frames": nf, "fmt": "mpng" if real else "video"}
-            payload = (mc.encode_mpng(
-                rng.integers(0, 256, (nf, h, w, c), dtype=np.uint8)) if real
-                else rng.integers(0, 256, int(rng.integers(64, 4096)),
-                                  dtype=np.uint8).tobytes())
+                    "n_frames": nf, "fmt": "mpng"}
+            payload = mc.encode_mpng(
+                rng.integers(0, 256, (nf, h, w, c), dtype=np.uint8))
         rows.append({
             "media_id": f"m-{seed:04d}-{i:06d}",
             "kind": kind,

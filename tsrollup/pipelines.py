@@ -28,7 +28,7 @@ EWMA/bidir scans are batched ACROSS docs (one vectorized loop over the time
 axis of a padded matrix — no per-element Python, bit-identical to the scalar
 fold since the per-step op is elementwise); row assembly is columnar.
 ``run_pipeline`` (the per-doc oracle the tests compare against) and the Spark
-``pipeline_features`` path share the interpreter, so parity holds by
+``pipeline_features_multi`` path share the interpreter, so parity holds by
 construction and is still asserted per-architecture in test_pipelines.py.
 
 Output: one row per doc with a fixed-length feature struct — the engine twin
@@ -282,19 +282,14 @@ def run_pipeline(x: np.ndarray, pipeline: str) -> np.ndarray:
     return _run_spec([x], ARCH_SPECS[pipeline], [x])[0]
 
 
-def pipeline_features(df: DataFrame, pipeline: str = "ohshulih",
-                      tokens_col: str = "tokens") -> DataFrame:
-    """Per-doc global stats of the pipeline's output sequence (the engine twin
-    of the reference model's feature vector): the one-architecture case of
-    :func:`pipeline_features_multi`, whose per-doc stats keep
-    np.mean/np.var float semantics so the output bit-matches
-    run_pipeline."""
-    return pipeline_features_multi(df, (pipeline,), tokens_col).drop("arch")
-
-
 def pipeline_features_multi(df: DataFrame, pipelines: tuple[str, ...] = PIPELINES,
                             tokens_col: str = "tokens") -> DataFrame:
-    """ALL requested architectures in ONE mapInArrow pass: each Arrow batch is
+    """Per-(doc, arch) global stats of each pipeline's output sequence (the
+    engine twin of the reference model's feature vector), kept in
+    np.mean/np.var float semantics so each row bit-matches
+    :func:`run_pipeline`; a doc whose output is empty has no row.
+
+    ALL requested architectures run in ONE mapInArrow pass: each Arrow batch is
     decoded once (zero-copy list-buffer slicing) and every spec is interpreted
     over the same in-memory sequences, emitting an ``arch`` column — one
     corpus scan for the whole zoo instead of one scan per architecture

@@ -20,8 +20,10 @@ Three execution paths, all producing bit-identical rolled-up points:
    order (exact); float partials use a window_start-sorted sequential fold so
    the result is bit-identical to the kernel's ``np.add.reduceat``.
 
-Skew: heavy ``source`` partitions are balanced by ``salted_repartition`` on
-``(source, pmod(xxhash64(doc_id), B))`` before the map (north_rule).
+Skew: no engine path repartitions its input — ``rollup_sequences`` is one
+``mapInArrow`` with no exchange. ``salted_repartition`` is a helper a caller
+may apply to a skewed input first: it spreads heavy ``source`` partitions
+over ``(source, pmod(xxhash64(doc_id), B))``.
 """
 
 from __future__ import annotations

@@ -54,13 +54,6 @@ def _token_stat_cols(text_col: str) -> list[Column]:
     ]
 
 
-def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-doc token counting: whitespace tokens, a real BPE-ish regex token
-    count (letter/digit/punct runs, BPE_PATTERN), the chars/4 heuristic, and
-    max word length."""
-    return df.select("doc_id", *_token_stat_cols(text_col))
-
-
 def _quality_cols(text_col: str) -> list[Column]:
     w = words(text_col)
     en = F.array(*[F.lit(s) for s in LANG_STOPWORDS["en"]])
@@ -75,12 +68,6 @@ def _quality_cols(text_col: str) -> list[Column]:
         mean_wl.alias("mean_word_len"),
         (stop_ratio * F.lit(2.0) + F.lit(1.0) / mean_wl).alias("quality"),
     ]
-
-
-def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Heuristic quality scoring: stopword ratio, mean word length, and a
-    combined score — exact integer counts + pinned double arithmetic."""
-    return df.select("doc_id", *_quality_cols(text_col))
 
 
 def _lang_cols(text_col: str) -> list[Column]:
@@ -98,24 +85,12 @@ def _lang_cols(text_col: str) -> list[Column]:
     return [best["lang"].alias("pred_lang"), best["hits"].alias("stop_hits")]
 
 
-def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Language-ID heuristic: most stopword hits wins; ties break by language
-    code order (deterministic greatest-of-structs trick)."""
-    return df.select("doc_id", *_lang_cols(text_col))
-
-
 def _fingerprint_cols(text_col: str) -> list[Column]:
     return [
         F.md5(F.col(text_col)).alias("md5"),
         F.conv(F.substring(F.md5(F.col(text_col)), 1, 15), 16, 10)
          .cast("long").alias("fp60"),
     ]
-
-
-def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Document fingerprints: md5 of full text (exact dup key) + a 60-bit
-    int fingerprint (md5-derived) usable as a shard/join key."""
-    return df.select("doc_id", *_fingerprint_cols(text_col))
 
 
 def _word_ngrams(w: Column, n: int) -> Column:
@@ -204,16 +179,25 @@ def repetition_stats(df: DataFrame, text_col: str = "text",
 
 
 def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """token_stats + fingerprint in ONE scan (one select, no join): at 100 TB
-    a pipeline computes every per-doc text feature in a single pass over the
-    corpus rather than one scan per feature family."""
+    """Per-doc token counts and fingerprints in ONE scan (one select, no
+    join): whitespace tokens, a BPE-ish regex token count (letter/digit/
+    punct runs, ``BPE_PATTERN``), the chars/4 heuristic and the max word
+    length, plus the md5 of the full text (exact dup key) and a 60-bit
+    md5-derived int usable as a shard/join key. At 100 TB a pipeline
+    computes every per-doc text feature in a single pass over the corpus
+    rather than one scan per feature family."""
     return df.select("doc_id", *_token_stat_cols(text_col),
                      *_fingerprint_cols(text_col))
 
 
 def quality_lang(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """quality_score + lang_id in ONE scan (same single-pass rationale as
-    text_profile; the per-language stopword counters share the word split)."""
+    """Heuristic quality score and language ID in ONE scan (the
+    single-pass rationale of :func:`text_profile`): the English stopword
+    ratio, the mean word length and their combined score (exact integer
+    counts, pinned double arithmetic), and the language with the most
+    stopword hits, a tie going to the greater language code (greatest of
+    (hits, lang) structs).
+    The per-language stopword counters share the word split."""
     return df.select("doc_id", *_quality_cols(text_col),
                      *_lang_cols(text_col))
 
