@@ -1771,8 +1771,7 @@ def q_wfdb_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal what DuckDB computes from the quantization directly — the
     round-trip is the identity, byte-packing bugs surface as hash
     mismatches. Per-series state is one record's samples (MIT-BIH:
-    650k samples = 1.3 MB packed), the same bound the streaming ring
-    buffer documents; at 100 TB parallelism is per-series."""
+    650k samples = 1.3 MB packed); at 100 TB parallelism is per-series."""
     from pyspark.sql.functions import arrow_udf
 
     from tsrollup.arrowbuf import binary_buffers, list_views
@@ -2431,7 +2430,7 @@ def q_pipeline_zoo(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent jobs = 25 corpus scans); per-arch row-count + feature-length
     checksums, one tiny groupBy('arch') shuffle (≤25 rows per map task).
     rows-only (np.convolve chains not SQL-expressible); per-arch NumPy
-    parity — including vs the single-arch path — in tests/test_pipelines.py."""
+    parity against the per-doc ``run_pipeline`` in tests/test_pipelines.py."""
     from tsrollup.pipelines import pipeline_features_multi
 
     t = _tokenized(spark, sf_dir) \
@@ -2513,8 +2512,8 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-state streaming distinct sketch VALUE-checked end-to-end
     (tsrollup.streaming.stream_hll_actives): the events table streamed
     file-by-file through a watermarked per-hour HLL register aggregation
-    (state = 2^p rows per open bucket regardless of key cardinality —
-    the 100 TB answer to stream_actives' per-key dedup state), flushed
+    (state = 2^p rows per open bucket regardless of key cardinality,
+    where an exact distinct keeps one dedup row per key), flushed
     by a far-future sentinel row, sink filtered back to real buckets.
     The register derivation is the SHARED sketches.hll_idx_rho, so the
     streamed table must hash-match the same DuckDB register SQL the

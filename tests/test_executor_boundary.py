@@ -3,10 +3,7 @@ module and ``__spark_entry__.py``.
 
 Arrow is the one batch format between Spark and the package's Python
 workers: any reference to a pandas executor API (``mapInPandas``,
-``pandas_udf``, ``applyInPandas``) fails. The stateful streaming operators
-are the one exception: PySpark 4.1 has no Arrow form of
-``applyInPandasWithState``, so its two calls in ``streaming.py`` stay, each
-with a one-line comment giving the reason on the line above.
+``pandas_udf``, ``applyInPandas``, ``applyInPandasWithState``) fails.
 
 ``tsrollup.io.pin`` is the one place a frame is materialized for reuse: any
 other call of ``localCheckpoint`` or ``checkpoint`` fails.
@@ -18,8 +15,8 @@ import ast
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
-PANDAS_APIS = {"mapInPandas", "pandas_udf", "applyInPandas"}
-STATEFUL = "applyInPandasWithState"
+PANDAS_APIS = {"mapInPandas", "pandas_udf", "applyInPandas",
+               "applyInPandasWithState"}
 PIN_APIS = {"localCheckpoint", "checkpoint"}
 
 
@@ -46,7 +43,9 @@ def test_guard_sees_every_form():
     src = ("from pyspark.sql.functions import pandas_udf\n"
            "@F.pandas_udf('long')\ndef f(s): return s\n"
            "df.mapInPandas(f, 's long')\n"
-           "df.groupBy('k').applyInPandas(f, 's long')\n")
+           "df.groupBy('k').applyInPandas(f, 's long')\n"
+           "df.groupBy('k').applyInPandasWithState(f, 's long', 'b long',"
+           " 'append', 'NoTimeout')\n")
     assert sorted({n for n, _ in _refs(ast.parse(src))} & PANDAS_APIS) \
         == sorted(PANDAS_APIS)
 
@@ -57,20 +56,6 @@ def test_no_pandas_executor_api():
            for name, line in _refs(ast.parse(p.read_text()))
            if name in PANDAS_APIS]
     assert not bad, bad
-
-
-def test_only_the_commented_stateful_calls_remain():
-    found = []
-    for p in _sources():
-        lines = p.read_text().splitlines()
-        for name, line in _refs(ast.parse(p.read_text())):
-            if name != STATEFUL:
-                continue
-            above = lines[line - 2].strip()
-            assert above.startswith("#") and "Arrow" in above, \
-                f"{p.name}:{line} needs a one-line reason comment above"
-            found.append(p.name)
-    assert found == ["streaming.py", "streaming.py"], found
 
 
 def _pin_calls(tree: ast.AST, skip: ast.AST | None = None) -> list[int]:

@@ -309,6 +309,28 @@ class TestRetentionOnIncrementalStore:
         assert all(d.startswith("epoch=") or d.startswith("_")
                    for d in top), top
 
+    def test_packed_store_raises_before_any_write(self, spark, tmp_path,
+                                                  corpus):
+        """One packed row holds every window of its (doc, tier), so a
+        row-level trim would keep them all and report 0 aged out."""
+        from tsrollup.checkpoint import apply_retention_to_store
+        inp = str(tmp_path / "inp")
+        root = str(tmp_path / "store")
+        _write_first_n(spark, corpus, inp, 40)
+        refresh_incremental(spark, inp, root, epoch=0, tiers=TIERS,
+                            compressed=True)
+
+        def listing():
+            data = os.path.join(root, "data")
+            return sorted((os.path.relpath(os.path.join(d, f), data),
+                           os.stat(os.path.join(d, f)).st_mtime_ns)
+                          for d, _, fs in os.walk(data) for f in fs)
+
+        before = listing()
+        with pytest.raises(ValueError, match="packed"):
+            apply_retention_to_store(spark, root, {"1m": 2})
+        assert listing() == before
+
 
 class TestTableDiff:
     def test_classifies_all_four_ways(self, spark):

@@ -260,72 +260,6 @@ def test_iceberg_without_runtime_fails_with_actionable_error(
         tio.read_table(spark, "ns.sequences")
 
 
-class TestZOrder:
-    def test_key_interleaves_bits(self, spark):
-        from tsrollup.io import zorder_key
-        df = spark.createDataFrame([(3, 5)], "a long, b long")
-        # a=0b011, b=0b101 at bits=3 -> z = interleave(a into even,
-        # b into odd positions): bit layout z = b2 a2 b1 a1 b0 a0
-        #   a0=1,b0=1,a1=1,b1=0,a2=0,b2=1 -> 0b100111 = 39
-        z = df.select(zorder_key(["a", "b"], bits=3).alias("z")).collect()
-        assert z[0].z == 0b100111
-
-    def test_validation(self, spark):
-        from tsrollup.io import zorder_key
-        import pytest as _pytest
-        with _pytest.raises(ValueError):
-            zorder_key([], bits=8)
-        with _pytest.raises(ValueError):
-            zorder_key(["a", "b"], bits=32)  # 64 > 63
-
-    def test_layout_prunes_both_dimensions(self, spark, tmp_path):
-        """The load-bearing property: against a box filter on the SECOND
-        dimension, a layout sorted on the first dimension alone prunes
-        nothing (every file spans all of b), while the z-ordered layout's
-        per-file min/max stats exclude most files — measured from the
-        real parquet footers, the same stats Spark's scan uses."""
-        import pyarrow.parquet as pq
-
-        from tsrollup.io import zorder_layout
-
-        rows = [(a, b) for a in range(64) for b in range(64)]
-        df = spark.createDataFrame(rows, "a long, b long")
-
-        def matching_groups(root, lo_b, hi_b):
-            import os
-            n_match = n_total = 0
-            for f in os.listdir(root):
-                if not f.endswith(".parquet"):
-                    continue
-                md = pq.ParquetFile(os.path.join(root, f)).metadata
-                for g in range(md.num_row_groups):
-                    stats = {md.row_group(g).column(i).path_in_schema:
-                             md.row_group(g).column(i).statistics
-                             for i in range(md.row_group(g).num_columns)}
-                    s = stats["b"]
-                    n_total += 1
-                    if not (s.max < lo_b or s.min > hi_b):
-                        n_match += 1
-            return n_match, n_total
-
-        linear = str(tmp_path / "linear")
-        (df.repartitionByRange(8, "a").sortWithinPartitions("a")
-         .write.parquet(linear))
-        zord = str(tmp_path / "zord")
-        zorder_layout(df, ["a", "b"], bits=6, n_files=8).write.parquet(zord)
-
-        lin_match, lin_total = matching_groups(linear, 0, 7)
-        z_match, z_total = matching_groups(zord, 0, 7)
-        assert lin_match == lin_total  # a-sort cannot prune a b-filter
-        assert z_match < z_total // 2, (z_match, z_total)
-
-        # layout only: row multiset unchanged
-        back = spark.read.parquet(zord)
-        assert back.count() == len(rows)
-        assert back.groupBy().sum("a", "b").collect() == \
-            df.groupBy().sum("a", "b").collect()
-
-
 class TestProfileTable:
     def test_counts_nulls_distincts_and_cents(self, spark):
         from tsrollup.io import profile_table
@@ -368,71 +302,3 @@ class TestProfileTable:
             profile_table(df, ["v"], ["v"])
         with _pytest.raises(ValueError, match="more than once"):
             profile_table(df, ["v", "v"], [])
-
-
-class TestBucketed:
-    """Co-located joins via catalog bucketing (io.write_bucketed): the
-    100 TB store layout — same key, same bucket count, zero exchanges."""
-
-    @staticmethod
-    def _frames(spark):
-        from pyspark.sql import functions as F
-        a = spark.range(0, 1000).select(
-            F.col("id").alias("doc_id"), (F.col("id") * 2).alias("v"))
-        b = spark.range(0, 1000).select(
-            F.col("id").alias("doc_id"), (F.col("id") * 3).alias("w"))
-        return a, b
-
-    def test_colocated_join_zero_exchanges_vs_two_plain(
-            self, spark, tmp_path):
-        from pyspark.sql import functions as F
-        from tsrollup.io import write_bucketed
-        from tsrollup.planaudit import formatted_plan, n_data_exchanges
-
-        a, b = self._frames(spark)
-        write_bucketed(a, "tb_join_a", "doc_id", 4,
-                       path=str(tmp_path / "a"))
-        write_bucketed(b, "tb_join_b", "doc_id", 4,
-                       path=str(tmp_path / "b"))
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            j = spark.table("tb_join_a").join(spark.table("tb_join_b"),
-                                              "doc_id")
-            plan = formatted_plan(j)
-            assert n_data_exchanges(plan) == 0, plan
-            got = j.agg(F.sum(F.col("v") + F.col("w"))).collect()[0][0]
-            assert got == sum(5 * i for i in range(1000))
-            # the same join without the layout shuffles BOTH sides
-            plain = formatted_plan(a.join(b, "doc_id"))
-            assert n_data_exchanges(plain) == 2, plain
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-            spark.sql("DROP TABLE IF EXISTS tb_join_a")
-            spark.sql("DROP TABLE IF EXISTS tb_join_b")
-
-    def test_groupby_on_bucket_key_skips_shuffle(self, spark, tmp_path):
-        from pyspark.sql import functions as F
-        from tsrollup.io import write_bucketed
-        from tsrollup.planaudit import formatted_plan, n_data_exchanges
-
-        a, _ = self._frames(spark)
-        write_bucketed(a, "tb_grp", "doc_id", 4, path=str(tmp_path / "g"))
-        try:
-            g = spark.table("tb_grp").groupBy("doc_id").agg(
-                F.sum("v").alias("s"))
-            assert n_data_exchanges(formatted_plan(g)) == 0
-            assert g.count() == 1000
-        finally:
-            spark.sql("DROP TABLE IF EXISTS tb_grp")
-
-    def test_validation_and_iceberg_gate(self, spark, monkeypatch):
-        from tsrollup.io import write_bucketed
-        a, _ = self._frames(spark)
-        with pytest.raises(ValueError, match="buckets"):
-            write_bucketed(a, "tb_bad", "doc_id", 0)
-        with pytest.raises(ValueError, match="bucket key"):
-            write_bucketed(a, "tb_bad", [], 4)
-        monkeypatch.setenv("TSROLLUP_TABLE_FORMAT", "iceberg")
-        with pytest.raises(ValueError, match="bucket\\(N, col\\)"):
-            write_bucketed(a, "tb_bad", "doc_id", 4)

@@ -16,13 +16,20 @@ def toks_df(spark):
     return spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "tokens"]))
 
 
+@pytest.fixture(scope="module")
+def zoo_rows(toks_df):
+    """One zoo pass over ``toks_df``: every (doc, arch) row."""
+    from tsrollup.pipelines import pipeline_features_multi
+
+    return pipeline_features_multi(toks_df).collect()
+
+
 @pytest.mark.parametrize("pipeline", ["ohshulih", "shihaotian", "autoenc",
                                       "caiwenjuan", "kimmingu"])
-def test_pipeline_features_match_numpy(spark, toks_df, pipeline):
-    from tsrollup.pipelines import pipeline_features_multi, run_pipeline
+def test_pipeline_features_match_numpy(toks_df, zoo_rows, pipeline):
+    from tsrollup.pipelines import run_pipeline
 
-    got = {r["doc_id"]: r
-           for r in pipeline_features_multi(toks_df, (pipeline,)).collect()}
+    got = {r["doc_id"]: r for r in zoo_rows if r["arch"] == pipeline}
     for _, row in toks_df.toPandas().iterrows():
         h = run_pipeline(np.asarray(row["tokens"], dtype=np.float64), pipeline)
         if h.shape[0] == 0:

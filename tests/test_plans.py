@@ -132,27 +132,6 @@ def test_rollup_store_reads_prune_partitions(spark, sequences_path, tmp_path):
     assert "tier" in scan and "bucket" in scan, plan
 
 
-def test_salted_repartition_balances_heavy_source(spark):
-    """One Zipf-heavy source must spread over many partitions after the
-    salted repartition (north_rule skew handling)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from tsrollup.rollup import salted_repartition
-
-    pdf = pd.DataFrame({
-        "doc_id": [f"d{i}" for i in range(2000)],
-        "tokens": [[1, 2, 3]] * 2000,
-        "source": ["heavy"] * 1900 + ["light"] * 100,  # 95% one source
-    })
-    df = salted_repartition(spark.createDataFrame(pdf), buckets=16,
-                            num_partitions=16)
-    sizes = (df.withColumn("_pid", F.spark_partition_id())
-             .groupBy("_pid").count().toPandas())
-    assert len(sizes) >= 8  # heavy source spread over many partitions
-    assert sizes["count"].max() < 2000 * 0.5  # no partition holds the bulk
-
-
 def test_pipeline_zoo_is_single_scan(spark):
     """The whole 25-architecture zoo must run as ONE corpus scan + ONE
     mapInArrow (round 2 ran 25 independent jobs over the same input)."""

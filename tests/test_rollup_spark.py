@@ -16,7 +16,6 @@ from tsrollup import TIER_FACTOR
 from tsrollup.oracle import ROLLUP_COLUMNS, rollup_table
 from tsrollup.rollup import (
     derive_columns, reaggregate_tier, rollup_grouped, rollup_sequences,
-    salted_repartition,
 )
 
 KEY = ["tier", "doc_id", "window_start"]
@@ -58,9 +57,9 @@ def test_rollup_exact_match_all_tiers(spark, seq_df, oracle_out):
     assert set(got["tier"].unique()) == set(TIER_FACTOR)
 
 
-def test_rollup_salted_same_result(spark, seq_df, oracle_out):
-    # repartitioning (skew handling) must not change a single bit
-    got = rollup_sequences(salted_repartition(seq_df, buckets=16)).toPandas()
+def test_rollup_repartitioned_same_result(spark, seq_df, oracle_out):
+    # each doc rolls up alone: the input partitioning must not change a bit
+    got = rollup_sequences(seq_df.repartition(16)).toPandas()
     assert_exact_match(got, oracle_out)
 
 

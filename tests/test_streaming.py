@@ -1,6 +1,6 @@
 """Streaming surface: incremental file ingestion must produce exactly the
 batch rollup of the union of all arrived files (exactly-once), and the
-event-time minute tier must match its batch twin."""
+streamed sessions and HLL registers must match their batch twins."""
 
 from __future__ import annotations
 
@@ -58,334 +58,6 @@ def test_stream_rollup_incremental_equals_batch(spark, stream_dirs):
         a = got[c].to_numpy(np.float64)
         b = want[c].to_numpy(np.float64)
         assert ((a == b) | (np.isnan(a) & np.isnan(b))).all(), c
-
-
-def test_stream_minute_rollup_matches_batch(spark, tmp_path):
-    from tsrollup.streaming import stream_minute_rollup
-
-    rng = np.random.default_rng(7)
-    n = 500
-    ev = pd.DataFrame({
-        "user_id": rng.integers(0, 20, n).astype(np.int64),
-        "ts": pd.Timestamp("2026-01-01")
-        + pd.to_timedelta(np.sort(rng.integers(0, 3600, n)), unit="s"),
-        "value": np.round(rng.uniform(0, 100, n), 2),
-    })
-    src = tmp_path / "events"
-    src.mkdir()
-    # Spark can't read parquet NANOS as TimestampType → write micros.
-    ev.to_parquet(src / "p0.parquet", coerce_timestamps="us",
-                  allow_truncated_timestamps=True)
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-
-    def run_once():
-        stream = (spark.readStream
-                  .schema("user_id long, ts timestamp, value double")
-                  .parquet(str(src)))
-        q = (stream_minute_rollup(stream).writeStream
-             .format("parquet").option("path", sink)
-             .option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True).start())
-        _await_done(q)
-
-    run_once()
-    # Append-mode only emits windows the watermark has passed: push the
-    # watermark over every real window with a far-future flush event, then
-    # restart from the checkpoint (late-data close-out, SURVEY §2.11).
-    flush = pd.DataFrame({"user_id": [9999],
-                          "ts": [pd.Timestamp("2026-01-03")],
-                          "value": [0.0]})
-    flush.to_parquet(src / "p1.parquet", coerce_timestamps="us",
-                     allow_truncated_timestamps=True)
-    run_once()
-
-    got = (spark.read.parquet(sink).filter("user_id <> 9999").toPandas())
-    # withWatermark is a no-op on a batch frame → same code path, batch twin
-    want = stream_minute_rollup(
-        spark.read.parquet(str(src)).filter("user_id <> 9999")).toPandas()
-
-    key = ["user_id", "window_start"]
-    got = got.sort_values(key).reset_index(drop=True)
-    want = want.sort_values(key).reset_index(drop=True)
-    assert len(got) == len(want) > 0
-    for c in ("count", "sum", "min", "max"):
-        assert (got[c].values == want[c].values).all(), c
-
-
-def test_stateful_rolling_matches_batch_window(spark, tmp_path):
-    """Ring-buffer state across triggers AND a query restart must reproduce
-    the batch window aggregate bit-for-bit (in-order arrival)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from tsrollup.streaming import stream_stateful_rolling
-
-    rng = np.random.default_rng(11)
-    n = 400
-    ev = pd.DataFrame({
-        "user_id": rng.integers(0, 10, n).astype(np.int64),
-        "event_id": np.arange(n, dtype=np.int64),
-        "ts": pd.Timestamp("2026-01-01")
-        + pd.to_timedelta(np.arange(n), unit="s"),
-        "value": np.round(rng.uniform(0, 100, n), 2),
-    })
-    src = tmp_path / "ev"
-    src.mkdir()
-    # file 0 = first half, file 1 = second half (later ts) → in-order arrival
-    ev.iloc[:200].to_parquet(src / "p0.parquet", coerce_timestamps="us",
-                             allow_truncated_timestamps=True)
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-
-    def run_once():
-        stream = (spark.readStream
-                  .schema("user_id long, event_id long, ts timestamp, "
-                          "value double")
-                  .parquet(str(src)))
-        q = (stream_stateful_rolling(stream, window_n=4).writeStream
-             .format("parquet").option("path", sink)
-             .option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        assert not q.isActive
-
-    run_once()
-    ev.iloc[200:].to_parquet(src / "p1.parquet", coerce_timestamps="us",
-                             allow_truncated_timestamps=True)
-    run_once()  # restart: ring buffers come back from the state store
-
-    got = (spark.read.parquet(sink).toPandas()
-           .sort_values("event_id").reset_index(drop=True))
-    w = (Window.partitionBy("user_id").orderBy("ts", "event_id")
-         .rowsBetween(-3, 0))
-    want = (spark.read.parquet(str(src))
-            .select("event_id", F.avg("value").over(w).alias("rmean"),
-                    F.count("*").over(w).cast("int").alias("n_in_window"))
-            .toPandas().sort_values("event_id").reset_index(drop=True))
-    assert len(got) == len(want) == n
-    assert (got["n_in_window"].values == want["n_in_window"].values).all()
-    a = got["rmean"].to_numpy(np.float64)
-    b = want["rmean"].to_numpy(np.float64)
-    np.testing.assert_allclose(a, b, rtol=1e-12)
-
-
-def test_stateful_rolling_group_spanning_many_chunks(spark, tmp_path):
-    """applyInPandasWithState may deliver one group split across multiple
-    Arrow chunks with no cross-chunk ordering; the operator must sort the
-    whole group before folding (a per-chunk sort gives wrong rolling means
-    for any group bigger than one chunk)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from tsrollup.streaming import stream_stateful_rolling
-
-    rng = np.random.default_rng(23)
-    n = 500  # ONE user, many rows; tiny Arrow batches force chunk splits
-    ev = pd.DataFrame({
-        "user_id": np.zeros(n, dtype=np.int64),
-        "event_id": np.arange(n, dtype=np.int64),
-        "ts": pd.Timestamp("2026-01-01")
-        + pd.to_timedelta(np.arange(n), unit="s"),
-        "value": np.round(rng.uniform(0, 100, n), 2),
-    })
-    src = tmp_path / "ev1"
-    src.mkdir()
-    ev.to_parquet(src / "p0.parquet", coerce_timestamps="us",
-                  allow_truncated_timestamps=True)
-    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
-    try:
-        stream = (spark.readStream
-                  .schema("user_id long, event_id long, ts timestamp, "
-                          "value double")
-                  .parquet(str(src)))
-        sink = str(tmp_path / "sink1")
-        q = (stream_stateful_rolling(stream, window_n=4).writeStream
-             .format("parquet").option("path", sink)
-             .option("checkpointLocation", str(tmp_path / "ckpt1"))
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        assert not q.isActive
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
-    got = (spark.read.parquet(sink).toPandas()
-           .sort_values("event_id").reset_index(drop=True))
-    w = (Window.partitionBy("user_id").orderBy("ts", "event_id")
-         .rowsBetween(-3, 0))
-    want = (spark.read.parquet(str(src))
-            .select("event_id", F.avg("value").over(w).alias("rmean"))
-            .toPandas().sort_values("event_id").reset_index(drop=True))
-    assert len(got) == n
-    np.testing.assert_allclose(got["rmean"].to_numpy(np.float64),
-                               want["rmean"].to_numpy(np.float64),
-                               rtol=1e-12)
-
-
-def test_hour_tier_from_streamed_minute_sink(spark, tmp_path):
-    """Coarse-tier maintenance over the STREAMED minute output: hour points
-    re-aggregated from the 1m partials equal aggregating the raw events
-    directly — the decomposability contract that lets tier maintenance never
-    re-read the stream."""
-    from pyspark.sql import functions as F
-
-    from tsrollup.streaming import reaggregate_time_tier, stream_minute_rollup
-
-    rng = np.random.default_rng(11)
-    n = 800
-    ev = pd.DataFrame({
-        "user_id": rng.integers(0, 10, n).astype(np.int64),
-        "ts": pd.Timestamp("2026-01-01")
-        + pd.to_timedelta(np.sort(rng.integers(0, 4 * 3600, n)), unit="s"),
-        "value": np.round(rng.uniform(0, 100, n), 2),
-    })
-    src = tmp_path / "ev"
-    src.mkdir()
-    ev.to_parquet(src / "p0.parquet", coerce_timestamps="us",
-                  allow_truncated_timestamps=True)
-    events = spark.read.parquet(str(src))
-    minute = stream_minute_rollup(events)  # watermark no-op on batch frame
-    got = reaggregate_time_tier(minute, "hour").toPandas()
-
-    want = (events
-            .groupBy("user_id",
-                     F.date_trunc("hour", "ts").alias("window_start"))
-            .agg(F.count("*").cast("long").alias("count"),
-                 F.sum(F.col("value").cast("decimal(28,10)")).cast("double")
-                  .alias("sum"),
-                 F.min("value").alias("min"),
-                 F.max("value").alias("max"))).toPandas()
-    key = ["user_id", "window_start"]
-    got = got.sort_values(key).reset_index(drop=True)
-    want = want.sort_values(key).reset_index(drop=True)
-    assert len(got) == len(want) > 0
-    for c in ("count", "sum", "min", "max"):
-        assert (got[c].values == want[c].values).all(), c
-
-
-def test_stateful_rolling_enforces_per_trigger_key_cap(spark, tmp_path):
-    """An unpaired source delivering one key's deep backlog in a single
-    trigger must fail with the contract error (naming the source-config
-    fix), not materialize an unbounded frame; the same input passes with an
-    adequate cap."""
-    from tsrollup.streaming import stream_stateful_rolling
-
-    rng = np.random.default_rng(41)
-    n = 600  # one key, one file, one trigger
-    ev = pd.DataFrame({
-        "user_id": np.zeros(n, dtype=np.int64),
-        "event_id": np.arange(n, dtype=np.int64),
-        "ts": pd.Timestamp("2026-01-01")
-        + pd.to_timedelta(np.arange(n), unit="s"),
-        "value": np.round(rng.uniform(0, 100, n), 2),
-    })
-    src = tmp_path / "evcap"
-    src.mkdir()
-    ev.to_parquet(src / "p0.parquet", coerce_timestamps="us",
-                  allow_truncated_timestamps=True)
-
-    def run(cap, tag):
-        stream = (spark.readStream
-                  .schema("user_id long, event_id long, ts timestamp, "
-                          "value double")
-                  .parquet(str(src)))
-        q = (stream_stateful_rolling(stream, window_n=4,
-                                     max_rows_per_trigger_key=cap)
-             .writeStream.format("parquet")
-             .option("path", str(tmp_path / f"sink{tag}"))
-             .option("checkpointLocation", str(tmp_path / f"ckpt{tag}"))
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        return q
-
-    with pytest.raises(Exception, match="max_rows_per_trigger_key"):
-        q = run(100, "small")
-        q.processAllAvailable()
-    ok = run(n, "ok")
-    assert not ok.isActive
-    got = spark.read.parquet(str(tmp_path / "sinkok"))
-    assert got.count() == n
-
-
-def test_stateful_rolling_timeout_evicts_idle_key(spark, tmp_path):
-    """ProcessingTimeTimeout contract: a key silent past the configured
-    duration has its ring buffer REMOVED when a later batch fires the timer,
-    so its next arrival starts a fresh window (n_in_window restarts at 1).
-    Without eviction the buffer would survive and report n_in_window=3."""
-    import time as _time
-
-    from tsrollup.streaming import stream_stateful_rolling
-
-    src = tmp_path / "evto"
-    src.mkdir()
-    cols = {"user_id": np.int64, "event_id": np.int64, "value": np.float64}
-
-    def drop(tag, rows):
-        pdf = pd.DataFrame(rows, columns=["user_id", "event_id", "ts",
-                                          "value"]).astype(
-            {k: v for k, v in cols.items()})
-        pdf.to_parquet(src / f"{tag}.parquet", coerce_timestamps="us",
-                       allow_truncated_timestamps=True)
-
-    # NB: a CONTINUOUS processingTime trigger, not availableNow — Spark
-    # keeps an availableNow query alive indefinitely ("no new data but
-    # cleaning up state" batches) once ProcessingTimeTimeout is configured,
-    # so the one-shot harness the other tests use never terminates here.
-    stream = (spark.readStream
-              .schema("user_id long, event_id long, ts timestamp, "
-                      "value double")
-              .parquet(str(src)))
-    q = (stream_stateful_rolling(stream, window_n=4,
-                                 timeout="ProcessingTimeTimeout",
-                                 timeout_duration_ms=300)
-         .writeStream.format("parquet")
-         .option("path", str(tmp_path / "sink"))
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .outputMode("append")
-         .trigger(processingTime="200 milliseconds").start())
-
-    def wait_for_events(ids, deadline_s=90):
-        t_end = _time.time() + deadline_s
-        while _time.time() < t_end:
-            try:
-                got = spark.read.parquet(str(tmp_path / "sink")).toPandas()
-                if set(ids) <= set(got["event_id"]):
-                    return got
-            except Exception:
-                pass  # sink not created yet
-            _time.sleep(0.3)
-        raise AssertionError(f"sink never produced events {ids}")
-
-    try:
-        t0 = pd.Timestamp("2026-01-01")
-        # batch 1: key 1 builds a 2-deep buffer
-        drop("p0", [(1, 0, t0, 10.0),
-                    (1, 1, t0 + pd.Timedelta(seconds=1), 20.0),
-                    (2, 2, t0, 5.0)])
-        wait_for_events([0, 1, 2])
-        _time.sleep(1.0)  # >> timeout_duration_ms: key 1's timer expires
-        # key-2 data keeps batches flowing; the end-of-batch timeout sweep
-        # must evict key 1's ring buffer
-        drop("p1", [(2, 3, t0 + pd.Timedelta(seconds=2), 6.0)])
-        wait_for_events([3])
-        # key 1 returns; a fresh window means n_in_window == 1
-        drop("p2", [(1, 4, t0 + pd.Timedelta(seconds=3), 30.0)])
-        wait_for_events([4])
-    finally:
-        q.stop()
-
-    got = (spark.read.parquet(str(tmp_path / "sink")).toPandas()
-           .set_index("event_id").sort_index())
-    assert got.loc[1, "n_in_window"] == 2       # pre-eviction fold worked
-    assert got.loc[4, "n_in_window"] == 1       # buffer was evicted
-    assert got.loc[4, "rmean"] == 30.0
-
-
-def test_stateful_rolling_rejects_event_time_timeout():
-    """The ring-buffer fold is processing-order; EventTimeTimeout is
-    rejected at construction, not silently accepted as a no-op."""
-    from tsrollup.streaming import stream_stateful_rolling
-
-    with pytest.raises(ValueError, match="ProcessingTimeTimeout"):
-        stream_stateful_rolling(None, timeout="EventTimeTimeout")
 
 
 def test_stream_sessionize_matches_batch_sessionize(spark, tmp_path):
@@ -485,171 +157,6 @@ def test_stream_sessionize_rejects_bad_gap(spark):
         stream_sessionize(spark.range(1), gap_minutes=0)
 
 
-def test_stream_cusum_matches_batch_bitwise(spark, tmp_path):
-    """O(1) prefix/extrema state across triggers AND a query restart must
-    reproduce counters.cusum_drift BIT-FOR-BIT (exact integer cents; each
-    score is one int64->double conversion + /100, the same correctly-
-    rounded rational the batch decimal cast yields)."""
-    from tsrollup.counters import cusum_drift
-    from tsrollup.streaming import stream_cusum
-
-    rng = np.random.default_rng(23)
-    n = 300
-    ev = pd.DataFrame({
-        "user_id": rng.integers(0, 4, n).astype(np.int64),
-        "event_type": rng.choice(["a", "b"], n),
-        "event_id": np.arange(n, dtype=np.int64),
-        "ts": pd.Timestamp("2026-01-01")
-        + pd.to_timedelta(np.arange(n), unit="s"),
-        "value": np.round(rng.uniform(0, 120, n), 2),
-    })
-    src = tmp_path / "ev"
-    src.mkdir()
-    ev.iloc[:150].to_parquet(src / "p0.parquet", coerce_timestamps="us",
-                             allow_truncated_timestamps=True)
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-
-    def run_once():
-        stream = (spark.readStream
-                  .schema("user_id long, event_type string, event_id long, "
-                          "ts timestamp, value double")
-                  .parquet(str(src)))
-        q = (stream_cusum(stream, target=50.0, threshold=40.0).writeStream
-             .format("parquet").option("path", sink)
-             .option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        assert not q.isActive
-
-    run_once()
-    ev.iloc[150:].to_parquet(src / "p1.parquet", coerce_timestamps="us",
-                             allow_truncated_timestamps=True)
-    run_once()  # restart: the three-int state returns from the store
-
-    got = (spark.read.parquet(sink).toPandas()
-           .sort_values("event_id").reset_index(drop=True))
-    want = (cusum_drift(spark.read.parquet(str(src)),
-                        target=50.0, threshold=40.0)
-            .toPandas().rename(columns={"id": "event_id"})
-            .sort_values("event_id").reset_index(drop=True))
-    assert len(got) == len(want) == n
-    assert (got["cusum_hi"].values == want["cusum_hi"].values).all()
-    assert (got["cusum_lo"].values == want["cusum_lo"].values).all()
-    assert (got["alarm"].values == want["alarm"].values).all()
-    assert got["alarm"].sum() > 0  # the fixture actually drifts
-
-
-def test_stream_cusum_rejects_bad_args(spark):
-    from tsrollup.streaming import stream_cusum
-    df = spark.readStream.format("rate").load()
-    with pytest.raises(ValueError):
-        stream_cusum(df, timeout="EventTimeTimeout")
-    with pytest.raises(ValueError):
-        stream_cusum(df, timeout="ProcessingTimeTimeout",
-                     timeout_duration_ms=0)
-
-
-def test_stream_cusum_null_value_does_not_poison_state(spark, tmp_path):
-    """Review finding: rint(NaN).astype(int64) wrote INT64_MIN into the
-    persisted state. NULL samples must be dropped (the batch policy) and
-    later samples must continue from uncorrupted state."""
-    from tsrollup.counters import cusum_drift
-    from tsrollup.streaming import stream_cusum
-
-    ev = pd.DataFrame({
-        "user_id": np.int64([1, 1, 1]),
-        "event_type": ["a", "a", "a"],
-        "event_id": np.int64([0, 1, 2]),
-        "ts": pd.Timestamp("2026-01-01")
-        + pd.to_timedelta([0, 1, 2], unit="s"),
-        "value": [60.0, np.nan, 60.0],
-    })
-    src = tmp_path / "ev"
-    src.mkdir()
-    ev.to_parquet(src / "p0.parquet", coerce_timestamps="us",
-                  allow_truncated_timestamps=True)
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    stream = (spark.readStream
-              .schema("user_id long, event_type string, event_id long, "
-                      "ts timestamp, value double")
-              .parquet(str(src)))
-    q = (stream_cusum(stream, target=50.0, threshold=15.0).writeStream
-         .format("parquet").option("path", sink)
-         .option("checkpointLocation", ckpt)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = (spark.read.parquet(sink).toPandas()
-           .sort_values("event_id").reset_index(drop=True))
-    want = (cusum_drift(spark.read.parquet(str(src)), target=50.0,
-                        threshold=15.0)
-            .toPandas().rename(columns={"id": "event_id"})
-            .sort_values("event_id").reset_index(drop=True))
-    assert len(got) == len(want) == 2
-    assert (got["cusum_hi"].values == want["cusum_hi"].values).all()
-    assert got["alarm"].tolist() == [0, 1]
-
-
-def test_stream_dedup_drops_redeliveries_across_triggers(spark, tmp_path):
-    """At-least-once redelivery: the same events land again in a later
-    file (within the watermark horizon). The streamed output must equal
-    batch dropDuplicates on the full input — one row per event_id — and
-    survive a query restart without re-emitting."""
-    from tsrollup.streaming import stream_dedup
-
-    rng = np.random.default_rng(31)
-    n = 200
-    ev = pd.DataFrame({
-        "event_id": np.arange(n, dtype=np.int64),
-        "user_id": rng.integers(0, 6, n).astype(np.int64),
-        "ts": pd.Timestamp("2026-01-01")
-        + pd.to_timedelta(np.arange(n), unit="s"),
-        "value": np.round(rng.uniform(0, 100, n), 2),
-    })
-    src = tmp_path / "ev"
-    src.mkdir()
-    kw = dict(coerce_timestamps="us", allow_truncated_timestamps=True)
-    # file 0: events 0-119; file 1: events 60-199 (60-119 redelivered)
-    ev.iloc[:120].to_parquet(src / "p0.parquet", **kw)
-    ev.iloc[60:].to_parquet(src / "p1.parquet", **kw)
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-
-    def run_once():
-        stream = (spark.readStream
-                  .schema("event_id long, user_id long, ts timestamp, "
-                          "value double")
-                  .parquet(str(src)))
-        q = (stream_dedup(stream, watermark="1 hour").writeStream
-             .format("parquet").option("path", sink)
-             .option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        assert not q.isActive
-
-    run_once()
-    # a restart with a THIRD redelivery of a processed range: state (and
-    # the checkpoint) must still suppress them
-    ev.iloc[100:140].to_parquet(src / "p2.parquet", **kw)
-    run_once()
-
-    got = (spark.read.parquet(sink).toPandas()
-           .sort_values("event_id").reset_index(drop=True))
-    want = (stream_dedup(spark.read.parquet(str(src)))  # batch twin
-            .toPandas().sort_values("event_id").reset_index(drop=True))
-    assert len(got) == len(want) == n  # every duplicate dropped, none lost
-    assert (got["event_id"].values == want["event_id"].values).all()
-    assert (got["value"].values == want["value"].values).all()
-
-
-def test_stream_dedup_composite_key_and_batch_twin(spark):
-    from tsrollup.streaming import stream_dedup
-
-    df = spark.createDataFrame(
-        [(1, "a", 5.0), (1, "a", 5.0), (1, "b", 2.0), (2, "a", 7.0)],
-        "user_id long, event_type string, value double")
-    out = stream_dedup(df, keys=("user_id", "event_type")).collect()
-    assert len(out) == 3
-
-
 def test_stream_sessionize_merges_across_triggers(spark, tmp_path):
     """Native session_window sessions, fed across two triggers with
     maxFilesPerTrigger=1 (sessions that straddle the file boundary must
@@ -701,322 +208,6 @@ def test_stream_sessionize_merges_across_triggers(spark, tmp_path):
     for c in ("user_id", "start_ts", "end_ts", "n_events",
               "duration_us", "sum_value"):
         assert (got[c].values == want[c].values).all(), c
-
-
-def test_stream_interval_join_matches_batch(spark, tmp_path):
-    """Clicks join their user's views within the 15-min lookback, with
-    view/click pairs deliberately straddling trigger boundaries (both
-    sides buffered in join state across batches); the streamed pairs must
-    equal the batch inequality join of the full inputs."""
-    from tsrollup.streaming import stream_interval_join
-
-    rng = np.random.default_rng(53)
-    n = 240
-    base = pd.Timestamp("2026-01-01")
-    steps = rng.integers(1, 7, n).cumsum()  # global minutes timeline
-    ev = pd.DataFrame({
-        "event_id": np.arange(n, dtype=np.int64),
-        "user_id": rng.integers(0, 5, n).astype(np.int64),
-        "ts": base + pd.to_timedelta(steps, unit="m"),
-        "value": np.round(rng.uniform(0, 100, n), 2),
-    })
-    views, clicks = ev.iloc[::2], ev.iloc[1::2]
-    vdir, cdir = tmp_path / "views", tmp_path / "clicks"
-    vdir.mkdir(), cdir.mkdir()
-    kw = dict(coerce_timestamps="us", allow_truncated_timestamps=True)
-    views.iloc[:60].to_parquet(vdir / "p0.parquet", **kw)
-    views.iloc[60:].to_parquet(vdir / "p1.parquet", **kw)
-    clicks.iloc[:60].to_parquet(cdir / "p0.parquet", **kw)
-    clicks.iloc[60:].to_parquet(cdir / "p1.parquet", **kw)
-
-    schema = "event_id long, user_id long, ts timestamp, value double"
-    sv = (spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(str(vdir)))
-    sc_ = (spark.readStream.schema(schema)
-           .option("maxFilesPerTrigger", 1).parquet(str(cdir)))
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    q = (stream_interval_join(sc_, sv).writeStream
-         .format("parquet").option("path", sink)
-         .option("checkpointLocation", ckpt)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    assert not q.isActive
-
-    key = ["event_id", "event_id_r"]
-    got = (spark.read.parquet(sink).toPandas()
-           .sort_values(key).reset_index(drop=True))
-    bv = spark.createDataFrame(views, schema)
-    bc = spark.createDataFrame(clicks, schema)
-    want = (stream_interval_join(bc, bv).toPandas()
-            .sort_values(key).reset_index(drop=True))
-    assert len(got) == len(want) > 50
-    for c in ("event_id", "event_id_r", "user_id", "ts", "ts_r",
-              "value", "value_r"):
-        assert (got[c].values == want[c].values).all(), c
-
-
-def test_stream_interval_join_boundaries_inclusive(spark):
-    """Both interval ends are inclusive on exact microseconds: a view at
-    exactly left_ts − max_delay matches, one microsecond earlier does
-    not; a view at left_ts matches, one microsecond later does not."""
-    from tsrollup.streaming import stream_interval_join
-
-    base = pd.Timestamp("2026-01-01 12:00:00")
-    delay = pd.Timedelta(minutes=15)
-    us = pd.Timedelta(microseconds=1)
-    views = pd.DataFrame({
-        "event_id": np.int64([0, 1, 2, 3]),
-        "user_id": np.int64([1, 1, 1, 1]),
-        "ts": [base - delay - us, base - delay, base, base + us],
-        "value": [1.0, 2.0, 3.0, 4.0],
-    })
-    clicks = pd.DataFrame({
-        "event_id": np.int64([10]), "user_id": np.int64([1]),
-        "ts": [base], "value": [9.0]})
-    schema = "event_id long, user_id long, ts timestamp, value double"
-    out = stream_interval_join(
-        spark.createDataFrame(clicks, schema),
-        spark.createDataFrame(views, schema)).toPandas()
-    assert sorted(out["event_id_r"].tolist()) == [1, 2]
-
-    from tsrollup.streaming import stream_interval_join as sij
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        sij(spark.range(1), spark.range(1), max_delay_minutes=0)
-
-
-def test_stream_ohlc_matches_batch_and_states(spark, tmp_path):
-    from tsrollup.states import ohlc
-    from tsrollup.streaming import stream_ohlc
-
-    rng = np.random.default_rng(11)
-    n = 400
-    ev = pd.DataFrame({
-        "event_id": np.arange(n, dtype=np.int64),
-        "event_type": rng.choice(["click", "view", "error"], n),
-        "ts": pd.Timestamp("2026-01-01")
-        + pd.to_timedelta(np.sort(rng.integers(0, 4 * 3600, n)), unit="s"),
-        "value": np.round(rng.uniform(0, 100, n), 2),
-    })
-    src = tmp_path / "events"
-    src.mkdir()
-    ev.to_parquet(src / "p0.parquet", coerce_timestamps="us",
-                  allow_truncated_timestamps=True)
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-
-    def run_once():
-        stream = (spark.readStream
-                  .schema("event_id long, event_type string, ts timestamp, "
-                          "value double")
-                  .parquet(str(src)))
-        q = (stream_ohlc(stream).writeStream
-             .format("parquet").option("path", sink)
-             .option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True).start())
-        _await_done(q)
-
-    run_once()
-    flush = pd.DataFrame({"event_id": [99999], "event_type": ["flush"],
-                          "ts": [pd.Timestamp("2026-01-03")],
-                          "value": [0.0]})
-    flush.to_parquet(src / "p1.parquet", coerce_timestamps="us",
-                     allow_truncated_timestamps=True)
-    run_once()
-
-    got = (spark.read.parquet(sink)
-           .filter("event_type <> 'flush'").toPandas())
-    batch = spark.read.parquet(str(src)).filter("event_type <> 'flush'")
-    want = stream_ohlc(batch).toPandas()   # watermark no-op on batch
-    key = ["event_type", "window_start"]
-    got = got.sort_values(key).reset_index(drop=True)[want.columns]
-    want = want.sort_values(key).reset_index(drop=True)
-    assert len(got) == len(want) > 0
-    pd.testing.assert_frame_equal(got, want)
-
-    # cross-module semantic parity: window("1 hour").start aligns with
-    # states.ohlc's date_trunc('hour') buckets, so the streamed panel IS
-    # the batch continuous aggregate
-    via_states = (ohlc(batch)
-                  .withColumnRenamed("bucket_ts", "window_start")
-                  .toPandas()
-                  .sort_values(key).reset_index(drop=True)[want.columns])
-    pd.testing.assert_frame_equal(via_states, want)
-
-
-def test_disorder_profile_sizes_the_watermark(spark, tmp_path):
-    """End-to-end watermark-sizing workflow: disorder_stats measures the
-    batch's max lateness; a stream configured with exactly that delay
-    drops NOTHING (bit-equal to the batch rollup), while a much tighter
-    delay provably loses the late rows. Arrival order = file order
-    (mtime-ordered, maxFilesPerTrigger=1) = event_id order — the same
-    order disorder_stats replays.
-
-    The fmid spacer file matters: since SPARK-24699, the late-record
-    filter uses the PREVIOUS batch's watermark (watermarkForLateEvents)
-    while state eviction uses the current one — a watermark observed in
-    batch N only rejects late input from batch N+2 on. fmid burns that
-    one-batch lag so f1's late rows face an already-armed watermark."""
-    import os
-
-    from tsrollup.counters import disorder_stats
-    from tsrollup.streaming import stream_minute_rollup
-
-    t0 = pd.Timestamp("2026-02-01")
-    f0 = pd.DataFrame({
-        "event_id": np.arange(0, 60, dtype=np.int64),
-        "user_id": np.int64(1),
-        "ts": t0 + pd.to_timedelta(np.arange(60) * 10, unit="s"),
-        "value": 1.0})                         # on-time: up to t0+590s
-    fmid = pd.DataFrame({
-        # on-time spacer (ties f0's max, so the profile is unchanged):
-        # arms the previous-batch watermark before the late rows land
-        "event_id": np.array([90], dtype=np.int64),
-        "user_id": np.int64(2),
-        "ts": [t0 + pd.Timedelta(seconds=590)], "value": 0.0})
-    f1 = pd.DataFrame({
-        "event_id": np.arange(100, 104, dtype=np.int64),
-        "user_id": np.int64(1),
-        # 400 s late vs f0's running max (t0+590s)
-        "ts": t0 + pd.to_timedelta([190, 200, 210, 220], unit="s"),
-        "value": 100.0})
-    flush = pd.DataFrame({
-        "event_id": np.array([999], dtype=np.int64),
-        "user_id": np.int64(9999),
-        "ts": [t0 + pd.Timedelta(days=2)], "value": 0.0})
-    src = tmp_path / "events"
-    src.mkdir()
-    for i, frame in enumerate((f0, fmid, f1, flush)):
-        p = src / f"p{i}.parquet"
-        frame.to_parquet(p, coerce_timestamps="us",
-                         allow_truncated_timestamps=True)
-        os.utime(p, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
-
-    batch = spark.read.parquet(str(src))
-    prof = disorder_stats(batch).filter("user_id = 1").collect()[0]
-    assert prof.max_lateness_us == 400_000_000
-
-    def run(watermark: str, tag: str) -> pd.DataFrame:
-        sink = str(tmp_path / f"sink_{tag}")
-        ckpt = str(tmp_path / f"ckpt_{tag}")
-        stream = (spark.readStream
-                  .schema("event_id long, user_id long, ts timestamp, "
-                          "value double")
-                  .option("maxFilesPerTrigger", 1).parquet(str(src)))
-        q = (stream_minute_rollup(stream, watermark=watermark)
-             .writeStream.format("parquet").option("path", sink)
-             .option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True).start())
-        _await_done(q)
-        return (spark.read.parquet(sink).filter("user_id = 1")
-                .toPandas().sort_values("window_start")
-                .reset_index(drop=True))
-
-    # profiled delay (400 s) → nothing drops: bit-equal to the batch twin
-    got = run("400 seconds", "sized")
-    want = (stream_minute_rollup(batch.filter("user_id = 1"))
-            .toPandas().sort_values("window_start").reset_index(drop=True))
-    assert len(got) == len(want) > 0
-    for c in ("count", "sum", "min", "max"):
-        assert (got[c].values == want[c].values).all(), c
-
-    # a 10x tighter delay loses exactly the late rows' mass
-    tight = run("40 seconds", "tight")
-    assert tight["count"].sum() == want["count"].sum() - len(f1)
-    assert tight["sum"].sum() == want["sum"].sum() - 400.0
-
-
-def test_stream_actives_matches_batch_distinct(spark, tmp_path):
-    """Per-bucket distinct actives: the two-stateful-operator chain
-    (dedup → windowed count) must equal the batch COUNT(DISTINCT) per
-    bucket bit-for-bit, across multi-file arrival with in-watermark
-    duplicates."""
-    import datetime as dt
-    import os
-
-    from pyspark.sql import functions as F
-
-    from tsrollup.streaming import stream_actives
-
-    t0 = dt.datetime(2026, 3, 1)
-    rng = np.random.default_rng(17)
-    frames = []
-    eid = 0
-    for f in range(3):
-        n = 400
-        rows = pd.DataFrame({
-            "event_id": np.arange(eid, eid + n, dtype=np.int64),
-            "user_id": rng.integers(1, 40, size=n).astype(np.int64),
-            "ts": [t0 + dt.timedelta(seconds=int(s))
-                   for s in rng.integers(f * 3600, (f + 2) * 3600, size=n)],
-            "value": 1.0})
-        eid += n
-        frames.append(rows)
-    flush = pd.DataFrame({
-        "event_id": np.array([99999], dtype=np.int64),
-        "user_id": np.int64(77777),
-        "ts": [t0 + dt.timedelta(days=3)], "value": 0.0})
-    frames.append(flush)
-    src = tmp_path / "ev"
-    src.mkdir()
-    for i, fr in enumerate(frames):
-        p = src / f"f{i}.parquet"
-        fr.to_parquet(p, coerce_timestamps="us",
-                      allow_truncated_timestamps=True)
-        os.utime(p, (1_700_000_000 + i * 60,) * 2)
-
-    stream = (spark.readStream
-              .schema("event_id long, user_id long, ts timestamp, "
-                      "value double")
-              .option("maxFilesPerTrigger", 1).parquet(str(src)))
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    q = (stream_actives(stream, watermark="4 hours")
-         .writeStream.format("parquet").option("path", sink)
-         .option("checkpointLocation", ckpt)
-         .outputMode("append").trigger(availableNow=True).start())
-    _await_done(q)
-    got = (spark.read.parquet(sink)
-           .filter(F.col("bucket_ts") < dt.datetime(2026, 3, 2))
-           .toPandas().sort_values("bucket_ts").reset_index(drop=True))
-
-    batch = spark.read.parquet(str(src))
-    want = (stream_actives(batch)
-            .filter(F.col("bucket_ts") < dt.datetime(2026, 3, 2))
-            .toPandas().sort_values("bucket_ts").reset_index(drop=True))
-    direct = (batch.filter("user_id != 77777")
-              .groupBy(F.window("ts", "1 hour").alias("w"))
-              .agg(F.countDistinct("user_id").alias("n"))
-              .select(F.col("w.start").alias("bucket_ts"), "n")
-              .toPandas().sort_values("bucket_ts").reset_index(drop=True))
-    assert len(got) == len(want) == len(direct) > 0
-    assert (got.active_users.values == want.active_users.values).all()
-    assert (got.active_users.values == direct.n.values).all()
-
-
-def test_stream_actives_guards_null_user_and_pre_epoch(spark):
-    """Batch-degrade guard set (review r5): NULL users don't count
-    (COUNT(DISTINCT) parity) and pre-epoch rows are excluded rather
-    than colliding dedup bucket -1 with bucket 0 (`div` truncates
-    toward zero while F.window floors)."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from tsrollup.streaming import stream_actives
-
-    rows = [
-        # bucket 0 of 1970-01-01: one real user + a NULL user
-        (1, dt.datetime(1970, 1, 1, 0, 30)),
-        (None, dt.datetime(1970, 1, 1, 0, 30)),
-        # pre-epoch event for the SAME user: truncating div would give
-        # dedup bucket 0 and swallow one of the two appearances
-        (1, dt.datetime(1969, 12, 31, 23, 30)),
-    ]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp")
-    got = {r["bucket_ts"]: r["active_users"]
-           for r in stream_actives(df).collect()}
-    # NULL user ignored; pre-epoch row excluded, not merged into 00:00
-    assert got == {dt.datetime(1970, 1, 1): 1}
 
 
 def test_stream_hll_registers_match_batch(spark, tmp_path):

@@ -894,6 +894,10 @@ def apply_retention_to_store(spark: SparkSession, output_root: str,
     one job, and untouched tiers' files are never opened (partition
     pruning on the tier directory key — plan-guarded in
     tests/test_plans.py).
+
+    A codec-packed store raises ValueError before any write: its one row
+    per (doc, tier) holds every window, so a row-level trim would age
+    out nothing.
     """
     assert all(n >= 1 for n in keep_windows.values()), \
         "retention must keep ≥1 window (an emptied partition would not be " \
@@ -901,6 +905,10 @@ def apply_retention_to_store(spark: SparkSession, output_root: str,
     tiers = list(keep_windows.keys())
     store = read_table(spark, f"{output_root}/data",
                        base_path=f"{output_root}/data")
+    if is_packed(store):
+        raise ValueError(
+            f"{output_root} is a codec-packed store; retention on a packed "
+            "store is not supported yet")
     # the rewrite keeps the partition columns it read (bucket/tier for a
     # checkpointed store, epoch/tier for an incremental one): any other
     # set would write directories beside the existing ones and corrupt

@@ -242,9 +242,8 @@ def cusum_drift(events: DataFrame,
     alarm (1 when either side exceeds ``threshold``).
     """
     scols = list(series_cols)
-    # a NULL sample is no observation (engine-wide policy; keeps the
-    # streaming twin's O(1) state bit-equal without NULL-propagation
-    # emulation — a leading NULL would otherwise emit NULL scores)
+    # a NULL sample is no observation (engine-wide policy; a leading
+    # NULL would otherwise emit NULL scores)
     events = events.filter(F.col(value_col).isNotNull())
     w = (Window.partitionBy(*scols).orderBy(ts_col, id_col)
          .rowsBetween(Window.unboundedPreceding, 0))

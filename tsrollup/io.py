@@ -440,99 +440,6 @@ def _require_iceberg(spark: SparkSession) -> None:
             "spark.sql.catalog.<name>=org.apache.iceberg.spark.SparkCatalog.")
 
 
-def zorder_key(cols, bits: int = 16):
-    """Morton/Z-order key: interleave the low ``bits`` bits of each column
-    so rows close in EVERY dimension land close in the one sort order —
-    the layout primitive behind multi-dimension scan pruning (Delta's
-    OPTIMIZE ZORDER; Iceberg's z-ordered rewrites). A layout sorted on
-    (a) alone prunes row groups only for filters on a; a z-ordered layout
-    tightens the min/max ranges of BOTH a and b in every file, so a
-    filter on either (or both) skips row groups.
-
-    Inputs must be non-negative ints already bounded below ``2**bits``
-    (bucket/rank/scale first — e.g. ``pmod(xxhash64(key), 2**bits)`` or a
-    min-max scale); bits above the window are deliberately ignored
-    (documented, not silently clamped data). Pure JVM bit arithmetic —
-    ``bits × len(cols)`` shift/or terms, no UDF.
-    """
-    from functools import reduce
-
-    from pyspark.sql import Column, functions as F
-
-    cols = [F.col(c) if isinstance(c, str) else c for c in cols]
-    if not cols:
-        raise ValueError("need at least one column")
-    k = len(cols)
-    if bits < 1 or bits * k > 63:
-        raise ValueError("need 1 <= bits and bits * len(cols) <= 63")
-    terms: list[Column] = []
-    for j, c in enumerate(cols):
-        x = c.cast("long")
-        for i in range(bits):
-            terms.append(
-                F.shiftleft(F.shiftright(x, i).bitwiseAND(F.lit(1)),
-                            i * k + j))
-    return reduce(lambda a, b: a.bitwiseOR(b), terms)
-
-
-def zorder_layout(df: DataFrame, cols, bits: int = 16,
-                  n_files: int = 8) -> DataFrame:
-    """Return ``df`` re-laid-out in Z-order over ``cols`` (see
-    :func:`zorder_key`): range-partitioned then sorted by the interleaved
-    key, so each written file covers a compact hyper-rectangle and its
-    parquet min/max statistics prune on EVERY z-ordered dimension.
-    Row multiset is untouched — this is a LAYOUT operator; the pruning
-    evidence lives in tests/test_io.py (row-group stats measured via the
-    parquet footers)."""
-    z = zorder_key(cols, bits=bits)
-    return (df.repartitionByRange(int(n_files), z.alias("_z"))
-            .sortWithinPartitions(z.alias("_z")))
-
-
-def write_bucketed(df: DataFrame, table: str, key, buckets: int,
-                   sort: bool = True, mode: str = "overwrite",
-                   path: str | None = None) -> None:
-    """Save ``df`` as a catalog table hash-BUCKETED (and by default sorted)
-    on ``key`` — the co-located layout for the store's hot join/regroup
-    keys. Two tables bucketed on the same key with the same bucket count
-    sort-merge-join with ZERO exchanges (each bucket pairs file-to-file),
-    and aggregations whose grouping keys start with ``key`` skip their
-    shuffle too: at 100 TB the store is written once but joined every
-    refresh/read, so the one-time bucketed write amortizes immediately.
-    Plan evidence lives in tests/test_io.py::TestBucketed — the bucketed
-    join's audit shows 0 exchanges vs 2 for the same join unbucketed.
-
-    Bucket metadata lives in the session catalog: durable across restarts
-    with a persistent metastore (production), session-scoped with the
-    default in-memory catalog (this sandbox — documented, not a bug).
-    On Iceberg deployments the equivalent is the ``bucket(N, col)``
-    partition transform on the DataFrameWriterV2 path (env-gated like the
-    rest of write_table); plain ``partition_by`` there covers the coarse
-    layout, so this helper intentionally targets the parquet/catalog
-    format only.
-
-    ``path`` makes it an external table (data at ``path``, metadata in
-    the catalog); default is a managed table under the warehouse dir.
-    """
-    if buckets < 1:
-        raise ValueError("need buckets >= 1")
-    if table_format() == "iceberg":
-        raise ValueError(
-            "write_bucketed targets the parquet/catalog format; on "
-            "Iceberg use write_table with a bucket(N, col) partition "
-            "transform instead")
-    keys = [key] if isinstance(key, str) else list(key)
-    if not keys:
-        raise ValueError("need at least one bucket key")
-    w = (df.write.format("parquet").mode(mode)
-         .bucketBy(int(buckets), keys[0], *keys[1:]))
-    if sort:
-        w = w.sortBy(keys[0], *keys[1:])
-    if path is not None:
-        w = w.option("path", path)
-    w.saveAsTable(table)
-
-
 def profile_table(df: DataFrame, numeric_cols, key_cols=()) -> DataFrame:
     """Data-quality profile — the schema-drift / null-audit pass an ingest
     runs before trusting a new drop: one row per profiled column with

@@ -282,34 +282,31 @@ def run_pipeline(x: np.ndarray, pipeline: str) -> np.ndarray:
     return _run_spec([x], ARCH_SPECS[pipeline], [x])[0]
 
 
-def pipeline_features_multi(df: DataFrame, pipelines: tuple[str, ...] = PIPELINES,
-                            tokens_col: str = "tokens") -> DataFrame:
+def pipeline_features_multi(df: DataFrame) -> DataFrame:
     """Per-(doc, arch) global stats of each pipeline's output sequence (the
     engine twin of the reference model's feature vector), kept in
     np.mean/np.var float semantics so each row bit-matches
     :func:`run_pipeline`; a doc whose output is empty has no row.
 
-    ALL requested architectures run in ONE mapInArrow pass: each Arrow batch is
-    decoded once (zero-copy list-buffer slicing) and every spec is interpreted
-    over the same in-memory sequences, emitting an ``arch`` column — one
-    corpus scan for the whole zoo instead of one scan per architecture
-    (25 scans ≈ 25 full corpus reads at 100 TB). Per-(doc, arch) values are
-    the same whether an architecture runs alone or with the zoo: every spec
-    is interpreted on the same float64 views."""
-    archs = sorted(pipelines)
-    specs = {a: ARCH_SPECS[a] for a in archs}
+    ALL architectures of ``PIPELINES`` run over ``tokens`` in ONE mapInArrow
+    pass: each Arrow batch is decoded once (zero-copy list-buffer slicing)
+    and every spec is interpreted over the same in-memory float64 views,
+    emitting an ``arch`` column — one corpus scan for the whole zoo instead
+    of one scan per architecture (25 scans ≈ 25 full corpus reads at
+    100 TB)."""
+    archs = sorted(PIPELINES)
 
     def run(batches):
         import pyarrow as pa
 
         for rb in batches:
-            rows, xs = row_slices(rb.column(tokens_col), np.float64)
+            rows, xs = row_slices(rb.column("tokens"), np.float64)
             if not xs:
                 continue
             out_rows, out_arch = [], []
             stats_rows, len_rows = [], []
             for arch in archs:
-                hs = _run_spec(list(xs), specs[arch], xs)
+                hs = _run_spec(list(xs), ARCH_SPECS[arch], xs)
                 for i, h in enumerate(hs):
                     if not h.shape[0]:
                         continue
@@ -332,5 +329,5 @@ def pipeline_features_multi(df: DataFrame, pipelines: tuple[str, ...] = PIPELINE
                 ["doc_id", "arch", "f_mean", "f_var", "f_min", "f_max",
                  "f_last", "f_len"])
 
-    return df.select("doc_id", tokens_col).mapInArrow(
+    return df.select("doc_id", "tokens").mapInArrow(
         run, "doc_id string, arch string, " + PIPELINE_SCHEMA.split(", ", 1)[1])

@@ -40,8 +40,8 @@ def split_exchanges(plan: str) -> tuple[int, int]:
     hash spread (``io.scan_min_parallel``: fires only when a fact file
     holds fewer row groups than the splits Spark planned, capped at the
     cores; structurally absent at production split counts). The tag is
-    not unique to the guard, though:
-    ``rollup.salted_repartition(num_partitions=...)`` carries it too, and
+    not unique to the guard, though: ``sketches.heavy_hitters``'
+    ``summary.repartition(1)`` (the Misra-Gries merge) carries it too, and
     so would any other numbered repartition in query code. Such a shuffle
     is counted here as guard, not data, so an audited query must not use
     one for real data movement without changing this rule.

@@ -21,9 +21,11 @@ Three execution paths, all producing bit-identical rolled-up points:
    the result is bit-identical to the kernel's ``np.add.reduceat``.
 
 Skew: no engine path repartitions its input — ``rollup_sequences`` is one
-``mapInArrow`` with no exchange. ``salted_repartition`` is a helper a caller
-may apply to a skewed input first: it spreads heavy ``source`` partitions
-over ``(source, pmod(xxhash64(doc_id), B))``.
+``mapInArrow`` with no exchange, and each doc's output depends on that doc
+alone, so the rows are the same under any input partitioning.
+``per_source_stats`` salts its first aggregation phase so a heavy source
+spreads over many reducers, and adaptive execution splits skewed join
+partitions at run time (``session.get_spark`` turns it on).
 """
 
 from __future__ import annotations
@@ -151,7 +153,7 @@ def rollup_sequences(df: DataFrame, window: int = BASE_WINDOW,
     Executes as ``mapInArrow``: token arrays are consumed as the Arrow list
     column's (flat values, offsets) pair — zero-copy NumPy slices per doc —
     instead of a pandas object column holding one materialized ndarray per
-    row. Measured 3.2× faster end-to-end than the mapInPandas form at equal
+    row. Measured 3.2× faster end-to-end than a pandas-batch map at equal
     pinned cores; values are bit-identical (same kernels, same floats).
     """
     return _map_docs(df, window, tiers, _assemble_points, ROLLUP_SCHEMA)
@@ -165,7 +167,7 @@ def rollup_grouped(df: DataFrame, window: int = BASE_WINDOW,
     shuffle this engine ever does), then the reassembled doc-per-row table goes
     through the SAME zero-shuffle batched-kernel path as rollup_sequences.
 
-    This shape beats a groupBy().applyInPandas reassembly by ~20×: that form
+    This shape beats a grouped pandas reassembly by ~20×: that form
     pays one Python invocation per GROUP (per doc), while here Python sees
     whole Arrow batches of reassembled docs — cf. the reference's grouped
     forward pass (SURVEY §3.2).
@@ -297,16 +299,6 @@ def decompress_rollup(df: DataFrame) -> DataFrame:
             yield pa.RecordBatch.from_arrays(arrs, names)
 
     return df.select(*packed).mapInArrow(run, ROLLUP_SCHEMA)
-
-
-def salted_repartition(df: DataFrame, buckets: int = 64,
-                       num_partitions: int | None = None) -> DataFrame:
-    """Balance Zipf-skewed sources: repartition on (source, hash-bucket of doc_id)
-    so one heavy source spreads over ``buckets`` tasks (north_rule skew handling)."""
-    salt = F.pmod(F.xxhash64("doc_id"), F.lit(buckets)).alias("_salt")
-    if num_partitions:
-        return df.repartition(num_partitions, F.col("source"), salt)
-    return df.repartition(F.col("source"), salt)
 
 
 def reaggregate_tier(child: DataFrame, parent_tier: str, parent_factor: int,
@@ -576,8 +568,7 @@ def read_routed(rolled: DataFrame, start_pos: int, end_pos: int,
     ``[start_pos, end_pos)`` — the read-path twin of the tier chain. The
     tier equality and window_start range land as plain column predicates,
     so a (tier, window_start)-partitioned/sorted store prunes partitions
-    and row groups for free (the zorder_layout/write_bucketed layouts
-    compose here); windows are tagged by their START position, so a
+    and row groups for free; windows are tagged by their START position, so a
     window straddling ``start_pos`` from before is excluded — the
     half-open bucket convention the tiers are built on.
 

@@ -52,10 +52,6 @@ def ohlc(events: DataFrame,
     note): in a fractional-offset local timezone, ``date_trunc`` hours sit
     on :30 boundaries while epoch-aligned tumbling windows don't.
 
-    The aggregation expressions live in :func:`ohlc_aggs` /
-    :func:`ohlc_finish`, SHARED with ``streaming.stream_ohlc`` — the
-    batch/stream panel parity is structural, not merely test-enforced.
-
     Output: series_cols…, bucket_ts, n (long), open_value, high_value,
     low_value, close_value (double), volume_cents (long).
     """
@@ -65,37 +61,25 @@ def ohlc(events: DataFrame,
         raise ValueError(f"unsupported bucket {bucket!r}")
     scols = list(series_cols)
     events = events.filter(F.col(value_col).isNotNull())
-    return (events
-            .groupBy(*scols, F.date_trunc(bucket, ts_col).alias("bucket_ts"))
-            .agg(*ohlc_aggs(ts_col, id_col, value_col))
-            .select(*scols, "bucket_ts", "n", *ohlc_finish()))
-
-
-def ohlc_aggs(ts_col: str = "ts", id_col: str = "event_id",
-              value_col: str = "value") -> list:
-    """The candlestick aggregate expressions (shared by the batch and
-    streaming OHLC operators): count, (ts, id, cents) struct extremes for
-    open/close, cents extremes for high/low, cents volume."""
     cents = (F.col(value_col).cast("decimal(18,2)") * 100).cast("long")
     pt = F.struct(F.col(ts_col).alias("t"), F.col(id_col).alias("i"),
                   cents.alias("c"))
-    return [F.count("*").cast("long").alias("n"),
-            F.min(pt).alias("_o"), F.max(pt).alias("_c"),
-            F.max(cents).alias("_hi"), F.min(cents).alias("_lo"),
-            F.sum(cents).cast("long").alias("volume_cents")]
 
+    def price(c: str):
+        return F.col(c).cast("double") / F.lit(100.0)
 
-def ohlc_finish() -> list:
-    """The candlestick output projection over :func:`ohlc_aggs` results."""
-    return [(F.col("_o.c").cast("double") / F.lit(100.0))
-            .alias("open_value"),
-            (F.col("_hi").cast("double") / F.lit(100.0))
-            .alias("high_value"),
-            (F.col("_lo").cast("double") / F.lit(100.0))
-            .alias("low_value"),
-            (F.col("_c.c").cast("double") / F.lit(100.0))
-            .alias("close_value"),
-            F.col("volume_cents")]
+    return (events
+            .groupBy(*scols, F.date_trunc(bucket, ts_col).alias("bucket_ts"))
+            .agg(F.count("*").cast("long").alias("n"),
+                 F.min(pt).alias("_o"), F.max(pt).alias("_c"),
+                 F.max(cents).alias("_hi"), F.min(cents).alias("_lo"),
+                 F.sum(cents).cast("long").alias("volume_cents"))
+            .select(*scols, "bucket_ts", "n",
+                    price("_o.c").alias("open_value"),
+                    price("_hi").alias("high_value"),
+                    price("_lo").alias("low_value"),
+                    price("_c.c").alias("close_value"),
+                    "volume_cents"))
 
 
 def state_agg(events: DataFrame,
